@@ -251,7 +251,6 @@ def tokenize_lists(texts: pd.Series) -> pd.Series:
 def term_frequencies(
     doc_ids: np.ndarray,
     texts: pd.Series,
-    bigrams: bool = False,
     term_transform=None,
     synonyms: "SynonymGraph | None" = None,
 ) -> tuple[pd.DataFrame, pd.DataFrame]:
@@ -271,35 +270,10 @@ def term_frequencies(
     Returns ``(triples, doc_lens)``:
       triples  — DataFrame(docid int64, term str[arrow], tf int64, doclen int64)
       doc_lens — DataFrame(docid int64, doclen int64)  (0 for empty docs)
-
-    ``bigrams=True`` additionally emits adjacent-token-pair triples with
-    term = "a b" (space-joined — unigram terms never contain a space, so
-    the two vocabularies share one postings table without collision).
-    Bigram tf counts EVERY adjacent occurrence, i.e. it equals the
-    two-term phrase frequency with overlaps — the positional-postings
-    stand-in that lets phrase queries skip content re-analysis
-    (Lucene stores positions; we store the 2-gram statistics instead).
     """
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    if bigrams and term_transform is not None:
-        # the bigram branch pairs RAW tokens; a dictionary-level transform
-        # would stem only the space-joined pair string (s_stem("merged
-        # windows") → "merged window", not "merge window"), leaving bigram
-        # keys no query can construct — fail loudly until per-token
-        # pre-pair stemming is implemented
-        raise ValueError(
-            "bigrams=True cannot be combined with a term_transform "
-            "analyzer (pair keys would be inconsistently stemmed)"
-        )
-    if bigrams and synonyms is not None:
-        # the bigram branch pairs ARRAY-adjacent tokens; injected
-        # synonym tokens appended out of stream order would create
-        # phantom adjacencies — the positional index is the synonym-aware
-        # phrase path (positions.position_lists handles injection with
-        # real flattened-graph positions)
-        raise ValueError("bigrams=True cannot be combined with synonyms")
     doc_ids = np.asarray(doc_ids, dtype=np.int64)
     n_docs = doc_ids.size
     flat, parent = tokenize_arrow(texts)
@@ -321,63 +295,33 @@ def term_frequencies(
             flat = _concat_tokens(flat, atoks)
             pos = np.concatenate([pos, apar])
 
-    def _count_runs(tokens_arr, tok_pos):
-        """(token, doc) pairs → unique (doc, term, tf) via dict-encode +
-        one combined-key sort + run-length (shared by uni- and bigrams)."""
-        # stems may collide after the dictionary-level transform; the
-        # run-length pass below merges their tfs.
-        codes, dictionary = dict_encode_terms(tokens_arr, term_transform)
-        k = np.int64(len(dictionary))
-        key = tok_pos * k + codes
-        key.sort()
-        change = np.empty(key.size, dtype=bool)
-        change[0] = True
-        np.not_equal(key[1:], key[:-1], out=change[1:])
-        starts = np.flatnonzero(change)
-        tf = np.diff(np.append(starts, key.size))
-        ukey = key[starts]
-        upos = ukey // k
-        term_col = pd.Series(
-            pd.arrays.ArrowExtensionArray(
-                pc.take(dictionary, pa.array((ukey % k), type=pa.int32()))
-            )
+    # (token, doc) pairs → unique (doc, term, tf) via dict-encode + one
+    # combined-key sort + run-length; stems may collide after the
+    # dictionary-level transform, and the run-length pass merges their tfs
+    codes, dictionary = dict_encode_terms(flat, term_transform)
+    k = np.int64(len(dictionary))
+    key = pos * k + codes
+    key.sort()
+    change = np.empty(key.size, dtype=bool)
+    change[0] = True
+    np.not_equal(key[1:], key[:-1], out=change[1:])
+    starts = np.flatnonzero(change)
+    tf = np.diff(np.append(starts, key.size))
+    ukey = key[starts]
+    upos = ukey // k
+    term_col = pd.Series(
+        pd.arrays.ArrowExtensionArray(
+            pc.take(dictionary, pa.array((ukey % k), type=pa.int32()))
         )
-        return pd.DataFrame(
-            {
-                "docid": doc_ids[upos],
-                "term": term_col,
-                "tf": tf.astype(np.int64),
-                "doclen": doclens[upos],
-            }
-        )
-
-    triples = _count_runs(flat, pos)
-    if bigrams:
-        if isinstance(flat, pa.ChunkedArray):
-            flat = flat.combine_chunks()
-        m = len(flat)
-        if m >= 2:
-            adj = pos[: m - 1] == pos[1:]
-            if adj.any():
-                grams = pc.binary_join_element_wise(
-                    flat.slice(0, m - 1), flat.slice(1, m - 1), " "
-                )
-                grams = pc.filter(grams, pa.array(adj))
-                gpos = pos[: m - 1][adj]
-                triples = pd.concat(
-                    [triples, _count_runs(grams, gpos)], ignore_index=True
-                )
-                # concat of two Arrow-backed columns yields a multi-chunk
-                # ChunkedArray; Spark's Arrow serializer needs one chunk
-                chunked = triples["term"].array._pa_array
-                triples["term"] = pd.Series(
-                    pd.arrays.ArrowExtensionArray(
-                        pa.concat_arrays(
-                            [c.cast(pa.string()) for c in chunked.chunks]
-                        )
-                    ),
-                    index=triples.index,
-                )
+    )
+    triples = pd.DataFrame(
+        {
+            "docid": doc_ids[upos],
+            "term": term_col,
+            "tf": tf.astype(np.int64),
+            "doclen": doclens[upos],
+        }
+    )
     doc_lens = pd.DataFrame({"docid": doc_ids, "doclen": doclens})
     return triples, doc_lens
 

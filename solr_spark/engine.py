@@ -25,7 +25,7 @@ from .indexer import IndexMeta, build_index
 from .kernel import dismax_search, search
 from .qparser import Query, parse
 
-ENGINE_VERSION = "v4"  # bump to invalidate cached gate indexes (v4: terms_rev)
+ENGINE_VERSION = "v5"  # bump to invalidate cached gate indexes (v5: bigram flag gone)
 
 
 def documents_as_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -59,19 +59,13 @@ def ensure_index(
     spark: SparkSession,
     sf_dir: str,
     bucket_docs: int = 512,
-    bigrams: bool = False,
     analyzer: str = "code",
-    positions: bool = True,
     synonyms: dict | None = None,
 ) -> IndexMeta:
     """Build (or reuse, via the indexer's resume manifest) the index for
-    one sf_dir under a content-addressed temp location. ``positions=True``
-    (the DEFAULT since round 3: positional postings are the phrase/
-    proximity plan of record — scan ∝ query-term postings, zero content
-    re-read) additionally builds the positional-postings table
-    (positions.py) in a SEPARATE cache dir; ``positions=False`` keeps a
-    position-free index for the two-phase content-verify fallback
-    paths."""
+    one sf_dir under a content-addressed temp location, including the
+    positional-postings table (positions.py) — the phrase/proximity plan:
+    scan ∝ query-term postings, zero content re-read."""
     syn_key = ""
     if synonyms:
         import json as _json
@@ -84,8 +78,7 @@ def ensure_index(
     key = hashlib.md5(
         (
             f"{ENGINE_VERSION}:{os.path.abspath(sf_dir)}:{bucket_docs}:"
-            f"{bigrams}:{analyzer}:{_source_signature(sf_dir)}"
-            + (":pos" if positions else "") + syn_key
+            f"{analyzer}:{_source_signature(sf_dir)}" + syn_key
         ).encode()
     ).hexdigest()[:12]
     out = os.path.join(tempfile.gettempdir(), f"solr_spark_gate_{key}")
@@ -95,11 +88,10 @@ def ensure_index(
         out,
         bucket_docs=bucket_docs,
         resume=True,
-        bigrams=bigrams,
         analyzer=analyzer,
         synonyms=synonyms,
     )
-    if positions and not getattr(meta, "has_positions", False):
+    if not meta.has_positions:
         from .positions import build_positions, default_payload_fn
 
         meta = build_positions(
@@ -271,7 +263,7 @@ def gate_search(
     (round(score, 6) desc, docid asc); emit (doc_id, score).
 
     Mixed queries ('"spark window" merge') combine the inverted-index
-    term kernel with the two-phase phrase verify: total score =
+    term kernel with positional phrase clauses: total score =
     term_score + phrase contributions (each a BM25 clause with
     tf = phrase frequency), candidates = OR of all clauses — Lucene
     BooleanQuery semantics with a PhraseQuery sub-clause
@@ -316,11 +308,11 @@ def gate_search(
                 "supported with a non-default analyzer"
             )
         if query.phrases:
-            # the two-phase phrase verify re-analyzes CONTENT with the
-            # default chain; stemmed phrase terms would never match it
+            # phrase terms skip the analyzer transform below, so they
+            # would never match the stemmed positional postings
             raise ValueError(
                 "phrase clauses are not supported with a non-default "
-                "analyzer (the content-verify chain is unstemmed)"
+                "analyzer (phrase terms are not stemmed)"
             )
         for attr in ("optional", "required"):
             src_counter = getattr(query, attr)
@@ -343,10 +335,7 @@ def gate_search(
         # final user-k TakeOrdered happens once at the end of this fn
         parts.append(search(spark, meta, query, unsorted=True))
     for toks in phrases:
-        comp = _phrase_component(
-            spark, meta, sf_dir, toks, dict(query.filters),
-            prefer_positions=True,
-        )
+        comp = _phrase_component(spark, meta, toks, dict(query.filters))
         parts.append(comp.select("docid", F.col("p_score").alias("score")))
     for mt in mterms:
         parts.append(_multiterm_component(spark, meta, mt, dict(query.filters)))
@@ -420,101 +409,33 @@ def gate_term_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _phrase_component(
     spark: SparkSession,
     meta: IndexMeta,
-    sf_dir: str,
     terms: list[str],
     filters: dict | None = None,
-    prefer_positions: bool = False,
 ) -> DataFrame:
-    """One phrase clause — two-phase, the classic positional-index
-    workaround for a positionless postings format:
-
-      1. candidate generation: conjunctive index search over the phrase's
-         terms (cheap pruning via the inverted index);
-      2. adjacency verify + phrase-frequency count by re-analyzing ONLY
-         the candidates' content (JVM-side array ops, overlapping
-         occurrences counted — Lucene PhraseQuery position semantics);
-      3. BM25 with tf = phrase frequency, df = docs containing the phrase
-         (PhraseQuery scoring: phraseFreq into the same tf-norm).
-
-    With a bigram-enabled index (build_index(bigrams=True) — the
-    positional-postings stand-in), a two-term phrase reads its frequency
-    straight from the "a b" postings row (bigram tf ≡ overlapping phrase
-    frequency) and NEVER touches content; longer phrases use the
-    conjunction of adjacent bigrams for a much tighter candidate set
-    before the re-analysis verify.
-
-    With ``prefer_positions=True`` on a positions-enabled index
-    (positions.build_positions — the Lucene .pos analog), the phrase
-    frequency for ANY length comes straight from positional postings
-    (positions.phrase_tf_frame): docid intersection + vectorized
-    adjacency over decoded position arrays, zero content access — the
-    scan is proportional to the phrase terms' postings, never the corpus.
+    """One phrase clause, answered from positional postings
+    (positions.phrase_tf_frame — the Lucene .pos analog): docid
+    intersection + vectorized adjacency over decoded position arrays,
+    overlapping occurrences counted (PhraseQuery position semantics),
+    zero content access at ANY phrase length. Scored as BM25 with
+    tf = phrase frequency, df = docs containing the phrase (PhraseQuery
+    scoring: phraseFreq into the same tf-norm).
 
     Returns (docid, doc_id, phrase_tf, p_score) for docs where the exact
     phrase occurs."""
-    from collections import Counter
+    from .positions import phrase_tf_frame
+    from .scoring import idf_col, tfnorm_col
 
-    from .functions import textfn
-    from .kernel import postings_rows
-
-    L = len(terms)
-    use_bigrams = bool(getattr(meta, "has_bigrams", False)) and L >= 2
     docs = spark.read.parquet(meta.docs_path).select("docid", "path", "doclen")
+    matched = (
+        phrase_tf_frame(spark, meta, terms)
+        .join(docs, "docid")
+        .withColumn("doc_id", F.col("path").cast("bigint"))
+        .select("docid", "doc_id", "phrase_tf", "doclen")
+    )
     # NOTE: the phrase df (BM25 idf input) is computed over ALL matching
     # docs BEFORE fq filters apply — fq never changes scoring statistics
     # (the reference's filter-vs-score separation; the term kernel's idf
     # is likewise global). Filters restrict only the emitted rows.
-    use_positions = prefer_positions and bool(getattr(meta, "has_positions", False))
-    if use_positions:
-        # zero content access at ANY phrase length: positional postings
-        from .positions import phrase_tf_frame
-
-        rows = phrase_tf_frame(spark, meta, terms)
-        matched = (
-            rows.join(docs, "docid")
-            .withColumn("doc_id", F.col("path").cast("bigint"))
-            .select("docid", "doc_id", "phrase_tf", "doclen")
-        )
-    elif use_bigrams and L == 2:
-        # zero content re-read: bigram postings ARE the phrase stats
-        rows = postings_rows(spark, meta, [f"{terms[0]} {terms[1]}"])
-        matched = (
-            rows.select("docid", F.col("tf").alias("phrase_tf"))
-            .join(docs, "docid")
-            .withColumn("doc_id", F.col("path").cast("bigint"))
-            .select("docid", "doc_id", "phrase_tf", "doclen")
-        )
-    else:
-        if use_bigrams:
-            # candidates: docs containing every adjacent bigram
-            clause = Counter(
-                f"{terms[i]} {terms[i + 1]}" for i in range(L - 1)
-            )
-        else:
-            clause = Counter(terms)
-        q = Query(required=clause)  # unfiltered: df must be filter-free
-        cand = search(spark, meta, q, unsorted=True).select("docid")
-        src = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
-            "doc_id", "text"
-        )
-        with_src = (
-            cand.join(docs, "docid")
-            .withColumn("doc_id", F.col("path").cast("bigint"))
-            .join(src, "doc_id")
-        )
-        toks = textfn.tokens(F.col("text"))
-        phrase_arr = F.array(*[F.lit(t) for t in terms])
-        n_pos = F.size(toks) - L + 1
-        hits = F.filter(
-            F.sequence(F.lit(1), F.greatest(n_pos, F.lit(1))),
-            lambda i: F.slice(toks, i, L) == phrase_arr,
-        )
-        ptf = F.when(n_pos >= 1, F.size(hits)).otherwise(F.lit(0))
-        matched = (
-            with_src.withColumn("phrase_tf", ptf.cast("bigint"))
-            .filter(F.col("phrase_tf") > 0)
-            .select("docid", "doc_id", "phrase_tf", "doclen")
-        )
     dfp = matched.agg(F.count(F.lit(1)).cast("double").alias("df_p"))
     if filters:
         fdocs = spark.read.parquet(meta.docs_path).select("docid", *sorted(filters))
@@ -522,20 +443,8 @@ def _phrase_component(
         for f_name, vals in sorted(filters.items()):
             matched = matched.filter(F.col(f_name).isin(list(vals)))
         matched = matched.select("docid", "doc_id", "phrase_tf", "doclen")
-    n = float(meta.n_docs)
-    avgdl = meta.avgdl
-    tf_d = F.col("phrase_tf").cast("double")
-    # exact literal shape mirrored by the oracle SQL (idf * tfnorm)
-    score = F.log(
-        F.lit(1.0) + (F.lit(n) - F.col("df_p") + F.lit(0.5)) / (F.col("df_p") + F.lit(0.5))
-    ) * (
-        tf_d
-        * (F.lit(1.2) + F.lit(1.0))
-        / (
-            tf_d
-            + F.lit(1.2)
-            * (F.lit(1.0) - F.lit(0.75) + F.lit(0.75) * F.col("doclen").cast("double") / F.lit(avgdl))
-        )
+    score = idf_col(F.col("df_p"), meta.n_docs) * tfnorm_col(
+        F.col("phrase_tf"), F.col("doclen"), meta.avgdl
     )
     return (
         matched.crossJoin(F.broadcast(dfp))
@@ -545,29 +454,20 @@ def _phrase_component(
 
 
 def gate_phrase(
-    spark: SparkSession, sf_dir: str, phrase: str, k: int = 10,
-    bigrams: bool = False, positions: bool | None = None
+    spark: SparkSession, sf_dir: str, phrase: str, k: int = 10
 ) -> DataFrame:
     """Exact phrase query (pure phrase clause) under the rounded-score
     ranking contract; output (doc_id, phrase_tf, score). Reference:
     phrase queries in the standard parser
     (solr/core/src/java/org/apache/solr/search/SolrQueryParser.java;
-    solr-ref-guide standard-query-parser.adoc).
-
-    Positional postings are the DEFAULT plan (zero content access at any
-    phrase length). ``bigrams=True`` runs against a bigram-enabled index
-    instead (the bigram stand-in, exercising the two-phase verify for
-    length>2); explicit ``positions=False`` forces the content-verify
-    fallback."""
+    solr-ref-guide standard-query-parser.adoc)."""
     from .analysis import analyze_query
 
-    if positions is None:
-        positions = not bigrams
-    meta = ensure_index(spark, sf_dir, bigrams=bigrams, positions=positions)
+    meta = ensure_index(spark, sf_dir)
     terms = analyze_query(phrase)
     if not terms:
         return spark.createDataFrame([], "doc_id bigint, phrase_tf bigint, score double")
-    comp = _phrase_component(spark, meta, sf_dir, terms, prefer_positions=positions)
+    comp = _phrase_component(spark, meta, terms)
     out = comp.withColumn("score", F.round(F.col("p_score"), 6))
     return (
         out.orderBy(F.desc("score"), F.asc("doc_id"))
@@ -800,9 +700,7 @@ def gate_edismax(
     if pf3_weight:
         shingled += [(pf3_weight, clauses[i : i + 3]) for i in range(len(clauses) - 2)]
     for j, (w, toks) in enumerate(shingled):
-        p = _phrase_component(
-            spark, meta, sf_dir, toks, prefer_positions=True
-        ).select(
+        p = _phrase_component(spark, meta, toks).select(
             "docid", F.col("p_score").alias(f"__p{j}")
         )
         scored = (
@@ -905,12 +803,6 @@ def gate_mlt(
 
 def _source_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-
-
-def _position_filter(toks, pred) -> "F.Column":
-    """Positions i in 1..len(toks) where pred(i) holds (SQL-portable
-    1-based position list — the building block for span verification)."""
-    return F.filter(F.sequence(F.lit(1), F.greatest(F.size(toks), F.lit(1))), pred)
 
 
 def gate_complexphrase(
@@ -1131,73 +1023,31 @@ def gate_proximity(
     slop: int,
     ordered: bool = True,
     k: int = 10,
-    positions: bool = True,
 ) -> DataFrame:
     """Surround-parser proximity query — `3w(a, b)` (ordered within
     distance) / `3n(a, b)` (unordered within distance)
     (solr/core/src/java/org/apache/solr/search/SurroundQParserPlugin.java:1;
     Lucene surround query language, solr-ref-guide other-parsers.adoc).
 
-    Two-phase: candidates = conjunctive index search on both terms (the
-    pruned postings path), then a span-distance verify on the candidates'
-    token arrays: ordered requires 0 < pos(b) − pos(a) ≤ slop; unordered
+    The span is verified from positional postings
+    (positions.span_match_frame — the Lucene SpanNearQuery execution
+    shape): ordered requires 0 < pos(b) − pos(a) ≤ slop; unordered
     requires |pos(a) − pos(b)| ≤ slop. Constant-score rewrite, tie-broken
-    (source, doc_id) — the same contract as the other multi-term paths.
+    (source, doc_id) — the same contract as the other multi-term paths."""
+    from .positions import span_match_frame
 
-    ``positions=True`` verifies the span from positional postings
-    (positions.span_match_frame) instead of re-analyzing candidate
-    content — the Lucene SpanNearQuery execution shape."""
-    from collections import Counter
-
-    from .functions import textfn
-
-    meta = ensure_index(spark, sf_dir, positions=positions)
+    meta = ensure_index(spark, sf_dir)
     a, b = term_a.lower(), term_b.lower()
-    if positions:
-        from .positions import span_match_frame
-
-        matched_ids = span_match_frame(spark, meta, a, b, slop, ordered)
-        # tie-break column comes from the INDEX docs table (repo := source
-        # under the corpus mapping) — zero source-table access on the
-        # positional plan
-        docs_p = spark.read.parquet(meta.docs_path).select(
-            "docid", "path", F.col("repo").alias("source")
-        )
-        return (
-            matched_ids.join(docs_p, "docid")
-            .withColumn("doc_id", F.col("path").cast("bigint"))
-            .select("doc_id", F.lit(1.0).alias("score"), "source")
-            .orderBy(F.asc("source"), F.asc("doc_id"))
-            .limit(k)
-            .select("doc_id", "score")
-        )
-    q = Query(required=Counter([a, b]))
-    cand = search(spark, meta, q, unsorted=True).select("docid")
-    docs = spark.read.parquet(meta.docs_path).select("docid", "path")
-    src = _source_docs(spark, sf_dir).select("doc_id", "text", "source")
-    with_src = (
-        cand.join(docs, "docid")
-        .withColumn("doc_id", F.col("path").cast("bigint"))
-        .join(src, "doc_id")
-    )
-    toks = textfn.tokens(F.col("text"))
-    pos_a = _position_filter(toks, lambda i: F.element_at(toks, i) == F.lit(a))
-    pos_b = _position_filter(toks, lambda i: F.element_at(toks, i) == F.lit(b))
-    if ordered:
-        pair_ok = lambda i: F.exists(  # noqa: E731
-            pos_b, lambda j: (j > i) & (j - i <= F.lit(slop))
-        )
-    else:
-        pair_ok = lambda i: F.exists(  # noqa: E731
-            pos_b, lambda j: (j != i) & (F.abs(j - i) <= F.lit(slop))
-        )
-    matched = (
-        with_src.withColumn("pa", pos_a)
-        .withColumn("hit", F.exists(F.col("pa"), pair_ok))
-        .filter(F.col("hit"))
+    matched_ids = span_match_frame(spark, meta, a, b, slop, ordered)
+    # tie-break column comes from the INDEX docs table (repo := source
+    # under the corpus mapping) — zero source-table access
+    docs_p = spark.read.parquet(meta.docs_path).select(
+        "docid", "path", F.col("repo").alias("source")
     )
     return (
-        matched.select("doc_id", F.lit(1.0).alias("score"), "source")
+        matched_ids.join(docs_p, "docid")
+        .withColumn("doc_id", F.col("path").cast("bigint"))
+        .select("doc_id", F.lit(1.0).alias("score"), "source")
         .orderBy(F.asc("source"), F.asc("doc_id"))
         .limit(k)
         .select("doc_id", "score")

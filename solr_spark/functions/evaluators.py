@@ -1352,7 +1352,8 @@ def recnum(df: DataFrame, order_by: str | list[str],
     auto-switches to relational.global_rank's range-shuffle (identical
     output, every stage parallel)."""
     cols = [order_by] if isinstance(order_by, str) else list(order_by)
-    if df.count() > RECNUM_WINDOW_MAX:
+    # bounded probe: reads at most RECNUM_WINDOW_MAX + 1 input rows
+    if df.limit(RECNUM_WINDOW_MAX + 1).count() > RECNUM_WINDOW_MAX:
         from ..operators.relational import global_rank
 
         ranked = global_rank(df, [F.asc(c) for c in cols], rank_col=out_col)

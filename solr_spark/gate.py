@@ -1257,7 +1257,7 @@ _PRIORITY = [
     # r4 triple-green rows and stay pinned by oracle_check) ----
     "a_percentile_digest", "a_geo_polygon", "t_exact_dups", "e_near_dup", "t_token_stats", "w_collapse", "w_ltr_linear",
     "t_classify", "a_convex_hull", "a_percentile_rank",
-    "fts_phrase_bigram", "a_cumulative_sum", "a_diff_lag", "fts_xmlquery",
+    "a_cumulative_sum", "a_diff_lag", "fts_xmlquery",
     "fts_suggest", "fts_proximity_un", "a_ema", "fts_mixed_wildcard",
     "fts_phrase_not", "fts_stemmed", "fts_edismax_pf2",
     "fts_phrase_pos",
@@ -1332,30 +1332,17 @@ def fts_phrase(spark, sf_dir):
     return gate_phrase(spark, sf_dir, "spark window", k=10)
 
 
-@entry("fts_phrase_bigram", _PHRASE_SQL)
-def fts_phrase_bigram(spark, sf_dir):
-    """Same phrase, bigram-indexed path: phrase frequency read straight
-    from the 'spark window' postings row — zero content re-analysis
-    (the positional-postings stand-in). Same oracle as fts_phrase proves
-    the two paths are score-identical."""
-    from solr_spark.engine import gate_phrase
-
-    return gate_phrase(spark, sf_dir, "spark window", k=10, bigrams=True)
-
-
 @entry("fts_phrase_pos", _PHRASE_SQL)
 def fts_phrase_pos(spark, sf_dir):
-    """Same phrase, TRUE positional-postings path (positions.py — the
-    Lucene .pos analog): docid intersection + vectorized adjacency over
-    decoded position deltas, zero content access. Same oracle as
-    fts_phrase proves all three phrase paths are score-identical."""
+    """Same phrase, named for its plan: positional postings (positions.py
+    — the Lucene .pos analog), docid intersection + vectorized adjacency
+    over decoded position deltas, zero content access."""
     from solr_spark.engine import gate_phrase
 
-    return gate_phrase(spark, sf_dir, "spark window", k=10, positions=True)
+    return gate_phrase(spark, sf_dir, "spark window", k=10)
 
 
-# 3-term phrase over positional postings — the length the bigram index
-# cannot answer without a content verify (oracle = same sliding-window
+# 3-term phrase over positional postings (oracle = same sliding-window
 # template as _PHRASE_SQL at L=3)
 _PHRASE3_SQL = f"""WITH dl AS (SELECT doc_id, len({TOKS_SQL}) AS doclen FROM documents),
 g AS (SELECT CAST(count(*) AS DOUBLE) AS n,
@@ -1385,7 +1372,7 @@ def fts_phrase3_pos(spark, sf_dir):
     """Three-term phrase answered entirely from positional postings."""
     from solr_spark.engine import gate_phrase
 
-    return gate_phrase(spark, sf_dir, "spark window merge", k=10, positions=True)
+    return gate_phrase(spark, sf_dir, "spark window merge", k=10)
 
 
 # payload queries: the gate payload of a surviving token at 0-based
@@ -2949,14 +2936,12 @@ def fts_proximity_un(spark, sf_dir):
 
 @entry("fts_proximity_pos", _PROX_SQL_ORDERED)
 def fts_proximity_pos(spark, sf_dir):
-    """Same ordered span, verified from positional postings
+    """Same ordered span, named for its plan: positional postings
     (positions.span_match_frame — the SpanNearQuery execution shape,
     zero content access). Same oracle as fts_proximity."""
     from solr_spark.engine import gate_proximity
 
-    return gate_proximity(
-        spark, sf_dir, "spark", "merge", slop=3, ordered=True, k=10, positions=True
-    )
+    return gate_proximity(spark, sf_dir, "spark", "merge", slop=3, ordered=True, k=10)
 
 
 @entry(
@@ -3332,7 +3317,7 @@ def fts_phrase_filtered(spark, sf_dir):
 @entry("fts_mixed_phrase", _MIXED_PHRASE_SQL)
 def fts_mixed_phrase(spark, sf_dir):
     """BooleanQuery with a PhraseQuery sub-clause: '"spark window" merge'
-    (SolrQueryParser.java) — term kernel + two-phase phrase verify
+    (SolrQueryParser.java) — term kernel + positional phrase clause
     combined in engine.gate_search."""
     return gate_search(spark, sf_dir, '"spark window" merge', k=10)
 

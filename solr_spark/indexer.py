@@ -48,7 +48,7 @@ import json
 import os
 import shutil
 import time
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass, field, fields
 from typing import Iterator
 
 import numpy as np
@@ -88,7 +88,6 @@ class IndexMeta:
     # delete masks / merge remap key on these, so they are part of the
     # persisted index contract, not just a build_index argument
     id_cols: list = field(default_factory=lambda: ["repo", "path", "commit"])
-    has_bigrams: bool = False  # adjacent-pair postings present (phrase path)
     has_positions: bool = False  # positional postings present (positions.py)
     has_payloads: bool = False  # per-position payloads present (positions.py)
     analyzer: str = "code"  # analysis.ANALYZERS key used at build time
@@ -140,13 +139,25 @@ class IndexMeta:
         return os.path.join(self.out_dir, "terms_ngrams")
 
     def save(self) -> None:
-        with open(os.path.join(self.out_dir, "meta.json"), "w") as f:
+        """Write meta.json atomically (temp file + os.replace): resume
+        trusts any meta.json it finds, so a torn write must never land
+        under that name."""
+        path = os.path.join(self.out_dir, "meta.json")
+        tmp = path + ".tmp"
+        with open(tmp, "w") as f:
             json.dump(asdict(self), f, indent=1)
+        os.replace(tmp, path)
 
     @classmethod
     def load(cls, out_dir: str) -> "IndexMeta":
         with open(os.path.join(out_dir, "meta.json")) as f:
             d = json.load(f)
+        unknown = sorted(set(d) - {f.name for f in fields(cls)})
+        if unknown:
+            raise ValueError(
+                f"{out_dir}/meta.json has unknown keys {unknown}; the index "
+                "was built by an incompatible engine version, rebuild it"
+            )
         d["out_dir"] = out_dir
         return cls(**d)
 
@@ -168,7 +179,6 @@ class _DictSumParam(AccumulatorParam):
 
 def _analyze_partitions(
     stats_acc=None,
-    bigrams: bool = False,
     term_transform=None,
     id_cols: tuple[str, ...] = ("repo", "path", "commit"),
     synonyms=None,
@@ -210,7 +220,7 @@ def _analyze_partitions(
                 else pdf["content"].map(pre_transform)
             )
             triples, doclens = term_frequencies(
-                ids, tok_text, bigrams=bigrams,
+                ids, tok_text,
                 term_transform=term_transform, synonyms=synonyms,
             )
             sum_doclen += int(doclens["doclen"].sum())
@@ -848,7 +858,6 @@ def build_index(
     overwrite: bool = False,
     resume: bool = True,
     docid_base: int = 0,
-    bigrams: bool = False,
     analyzer: str = "code",
     synonyms: dict | None = None,
 ) -> IndexMeta:
@@ -882,7 +891,7 @@ def build_index(
         syn_graph = SynonymGraph(synonyms)
         synonyms = syn_graph.to_meta()  # canonical persisted form
     meta = IndexMeta(
-        out_dir=out_dir, bucket_docs=bucket_docs, has_bigrams=bigrams,
+        out_dir=out_dir, bucket_docs=bucket_docs,
         analyzer=analyzer, id_cols=list(id_cols),
         synonyms=synonyms or None,
     )
@@ -906,7 +915,6 @@ def build_index(
         sorted_docs.mapInPandas(
             _analyze_partitions(
                 stats_acc,
-                bigrams=bigrams,
                 term_transform=term_transform,
                 id_cols=tuple(id_cols),
                 synonyms=syn_graph,

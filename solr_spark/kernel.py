@@ -32,8 +32,8 @@ from pyspark.sql import functions as F
 from .codec import decode_blocks, decode_postings
 from .indexer import IndexMeta, _done
 from .qparser import Query, parse
+from .scoring import accumulate, tfnorm, tfnorm_col, top_k
 from .scoring import idf as idf_fn
-from .scoring import tfnorm
 
 RESULT_SCHEMA = "docid bigint, score double"
 
@@ -66,15 +66,8 @@ def _bucket_kernel(
     mask requires every group satisfied; the conjunction prune path is
     disabled upstream for non-singleton groups."""
     scoring_terms = sorted(weights)          # fixed order -> deterministic fp sums
-    req_set = set(required)
-    n_req = len(req_set)
-    proh_set = set(prohibited)
-    groups = required_groups or []
-    # term -> indices of the groups it can satisfy
-    term_groups: dict[str, list[int]] = {}
-    for gi, g in enumerate(groups):
-        for t in g:
-            term_groups.setdefault(t, []).append(gi)
+    n_req = len(set(required))
+    groups = [set(g) for g in required_groups or []]
 
     def kern(post_pdf: pd.DataFrame, docs_pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame({"docid": np.array([], np.int64), "score": np.array([], np.float64)})
@@ -106,61 +99,43 @@ def _bucket_kernel(
 
         rows = {r["term"]: r for _, r in post_pdf.iterrows()}
 
-        # prohibited terms only kill candidates
-        for t in proh_set:
-            r = rows.get(t)
-            if r is not None:
-                d, _ = decode_postings(r["doc_bytes"], r["tf_bytes"], int(r["df"]), base)
-                alive[d - base] = False
+        def hit(t):
+            r = rows[t]
+            d, tf = decode_postings(r["doc_bytes"], r["tf_bytes"], int(r["df"]), base)
+            return d - base, tf
 
-        scores = np.zeros(B, dtype=np.float64)
-        matched = np.zeros(B, dtype=bool)
-        req_count = np.zeros(B, dtype=np.int16)
-        grp_hit = np.zeros((B, len(groups)), dtype=bool) if groups else None
+        # prohibited terms only kill candidates; dead before any branch,
+        # so the pruned paths' thresholds never count a prohibited doc
+        for t in prohibited:
+            if t in rows:
+                alive[hit(t)[0]] = False
 
         if prune and n_req == 0 and len(scoring_terms) == 1:
             t = scoring_terms[0]
             r = rows.get(t)
             if r is None:
                 return empty
+            scores = np.zeros(B, dtype=np.float64)
+            matched = np.zeros(B, dtype=bool)
             _score_single_pruned(r, t, idfs, weights, avgdl, base, dl, alive, scores, matched, k)
+            cand = np.flatnonzero(alive & matched)
+            sc = scores[cand]
         elif prune and n_req >= 2 and n_req == len(scoring_terms):
-            done = _score_conjunction_pruned(
-                rows, scoring_terms, idfs, weights, avgdl, base, dl, scores, matched, req_count
+            scores = np.zeros(B, dtype=np.float64)
+            cand = _score_conjunction_pruned(
+                rows, scoring_terms, idfs, weights, avgdl, base, dl, scores
             )
-            if not done:
-                return empty
+            cand = cand[alive[cand]]
+            sc = scores[cand]
         else:
-            for t in scoring_terms:
-                r = rows.get(t)
-                if r is None:
-                    continue
-                d, tf = decode_postings(r["doc_bytes"], r["tf_bytes"], int(r["df"]), base)
-                loc = d - base
-                w = weights[t] * idfs[t]
-                scores[loc] += w * tfnorm(tf, dl[loc], avgdl)
-                matched[loc] = True
-                if t in req_set:
-                    req_count[loc] += 1
-                if grp_hit is not None:
-                    for gi in term_groups.get(t, ()):
-                        grp_hit[loc, gi] = True
-
-        if grp_hit is not None:
-            mask = alive & matched & grp_hit.all(axis=1)
-        elif n_req:
-            mask = alive & (req_count == n_req)
-        else:
-            mask = alive & matched
-        cand = np.flatnonzero(mask)
+            hits = {t: hit(t) for t in scoring_terms if t in rows}
+            cand, sc = accumulate(
+                hits, weights, idfs, dl, avgdl, alive, required, groups=groups
+            )
+        cand, sc = top_k(cand, sc, k)
         if cand.size == 0:
             return empty
-        sc = scores[cand]
-        # exact local top-k with (score desc, docid asc); cand.size <= bucket_docs
-        sel = np.lexsort((cand, -sc))[:k]
-        return pd.DataFrame(
-            {"docid": (cand[sel] + base).astype(np.int64), "score": sc[sel]}
-        )
+        return pd.DataFrame({"docid": (cand + base).astype(np.int64), "score": sc})
 
     return kern
 
@@ -203,16 +178,18 @@ def _score_single_pruned(r, t, idfs, weights, avgdl, base, dl, alive, scores, ma
 
 
 def _score_conjunction_pruned(
-    rows, terms, idfs, weights, avgdl, base, dl, scores, matched, req_count
-) -> bool:
+    rows, terms, idfs, weights, avgdl, base, dl, scores
+) -> np.ndarray:
     """Pure-AND path: galloping posting-list intersection with block
     skipping. Decode the rarest term fully; for each further term decode
-    only blocks whose docid range intersects surviving candidates."""
+    only blocks whose docid range intersects surviving candidates.
+    Returns the bucket-local docids holding every term (ascending)."""
+    none = np.empty(0, np.int64)
     infos = []
     for t in terms:
         r = rows.get(t)
         if r is None:
-            return False  # a required term absent from bucket -> no matches
+            return none  # a required term absent from bucket -> no matches
         infos.append((int(r["df"]), t, r))
     infos.sort()
     df0, t0, r0 = infos[0]
@@ -220,7 +197,7 @@ def _score_conjunction_pruned(
     term_hits = {t0: (cand, tf0)}
     for dfi, ti, ri in infos[1:]:
         if cand.size == 0:
-            return False
+            return none
         last = np.asarray(ri["block_last"], dtype=np.int64)
         nb = len(last)
         first = np.empty(nb, dtype=np.int64)
@@ -242,20 +219,15 @@ def _score_conjunction_pruned(
         cand = cand[hit]
         # narrow all previous terms' hit arrays lazily at the end instead
         term_hits[ti] = (d, tf)
-    if cand.size == 0:
-        return False
+    loc = cand - base
     # alphabetical term order — identical fp accumulation order to the
     # unpruned path (exactness contract: prune on == prune off, bit-for-bit)
     for t in sorted(term_hits):
         d, tf = term_hits[t]
-        pos = np.searchsorted(d, cand)
-        sel_tf = tf[pos]
-        loc = cand - base
+        sel_tf = tf[np.searchsorted(d, cand)]
         w = weights[t] * idfs[t]
         scores[loc] += w * tfnorm(sel_tf, dl[loc], avgdl)
-        matched[loc] = True
-        req_count[loc] += 1
-    return True
+    return loc
 
 
 class Searcher:
@@ -268,8 +240,6 @@ class Searcher:
     cache. Postings stay uncached (pruned parquet scans per query)."""
 
     def __init__(self, spark: SparkSession, meta: IndexMeta, cache: bool = True):
-        import os
-
         self.spark = spark
         self.meta = meta
         self.terms = spark.read.parquet(meta.terms_path)
@@ -292,31 +262,8 @@ class Searcher:
         # actually queried, never the vocabulary) — the term-dictionary-
         # in-heap part of SolrIndexSearcher; absent terms cache df=0
         self._df_cache: dict[str, int] = {}
-        self._hot_terms: frozenset[str] | None = None
-        self._hot_postings: DataFrame | None = None
         self._local_norms: tuple | None = None
         self._local_postings: dict[str, tuple] = {}
-
-    def warm_terms(self, terms: list[str]) -> int:
-        """Pin the pruned postings for a HOT TERM SET in executor memory
-        (the warm-searcher path: SolrIndexSearcher's filterCache analog
-        for the query-term working set). Queries whose terms all fall in
-        the set scan the persisted frame instead of parquet — removing
-        file-scan latency from the per-query floor; everything else
-        takes the normal pruned-scan path. Memory is bounded by the
-        named terms' postings, never the corpus. Returns the number of
-        postings rows pinned."""
-        from pyspark import StorageLevel
-
-        toks = frozenset(t.lower() for t in terms)
-        hot = self.postings.filter(
-            F.col("term").isin(sorted(toks))
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        n = hot.count()  # materialize the pin
-        if self._hot_postings is not None:
-            self._hot_postings.unpersist()
-        self._hot_terms, self._hot_postings = toks, hot
-        return n
 
     def warm_local(self, terms: list[str]) -> dict:
         """Load a hot-term working set INTO THE DRIVER PROCESS for
@@ -327,8 +274,8 @@ class Searcher:
         file analog; 10.8 MB at 1.2M docs) plus the decoded postings of
         exactly the named terms. The distributed path remains the
         source of truth; local answers are bit-identical to it for the
-        supported query classes (pinned by test — same numpy formula,
-        same per-term accumulation order, same tie-break)."""
+        supported query classes (both score through scoring.accumulate
+        and scoring.top_k)."""
         toks = sorted({t.lower() for t in terms})
         if self._local_norms is None:
             pdf = self.docs.select("docid", "doclen").toPandas()
@@ -375,9 +322,9 @@ class Searcher:
         in the warm_local set; anything else (phrases, multiterm,
         filters, MUST groups, cold terms) transparently falls back to
         the distributed `search`. Returns [(docid, score)], score desc,
-        docid asc — identical values and order to the distributed
-        kernel (same formula, same sorted-term accumulation, same
-        lexsort tie-break)."""
+        docid asc (empty for k <= 0) — identical values and order to
+        the distributed kernel, which scores and selects through the
+        same scoring.accumulate and scoring.top_k."""
         query = parse(q) if isinstance(q, str) else q
         qterms = set(query.scoring) | query.prohibited
         eligible = (
@@ -395,59 +342,24 @@ class Searcher:
         for t in query.required:
             if dfm.get(t, 0) == 0:
                 return []
-        weights0 = dict(query.scoring)
-        present = [t for t in weights0 if dfm.get(t, 0) > 0]
+        present = [t for t in query.scoring if dfm.get(t, 0) > 0]
         if not present:
             return []
+        # clause weight = multiplicity x boost, as in search()
+        weights = {t: query.scoring[t] * query.boosts.get(t, 1.0) for t in present}
+        idfs = {t: float(idf_fn(dfm[t], self.meta.n_docs)) for t in present}
         dl, live = self._local_norms
-        n = self.meta.n_docs
-        scores = np.zeros(n, np.float64)
-        matched = np.zeros(n, bool)
-        reqc = np.zeros(n, np.int16)
-        req = set(query.required)
-        for t in sorted(present):  # kernel's fixed-order fp accumulation
-            d, tf = self._local_postings[t]
-            w = weights0[t] * query.boosts.get(t, 1.0) * float(idf_fn(dfm[t], n))
-            scores[d] += w * tfnorm(tf, dl[d], self.meta.avgdl)
-            matched[d] = True
-            if t in req:
-                reqc[d] += 1
-        alive = live.copy()
-        for t in query.prohibited:
-            d, _ = self._local_postings[t]
-            alive[d] = False
-        mask = alive & (reqc == len(req)) if req else alive & matched
-        cand = np.flatnonzero(mask)
-        if cand.size == 0:
-            return []
-        sc = scores[cand]
-        if cand.size > max(k, 1) * 4:
-            # exact top-k preselection: keep everything >= the k-th
-            # largest score (ties included), then lexsort the remnant —
-            # O(n) partition instead of an O(n log n) full sort over a
-            # hot term's candidate set
-            kth = np.partition(sc, cand.size - k)[cand.size - k] \
-                if cand.size > k else sc.min()
-            keep = sc >= kth
-            cand, sc = cand[keep], sc[keep]
-        sel = np.lexsort((cand, -sc))[:k]
-        return [(int(cand[i]), float(sc[i])) for i in sel]
-
-    def _frames_for(self, q) -> tuple:
-        if self._hot_terms is not None:
-            query = parse(q) if isinstance(q, str) else q
-            qterms = (set(query.optional) | set(query.required)
-                      | set(query.prohibited))
-            if (qterms and qterms <= self._hot_terms
-                    and not query.phrases and not query.multiterm):
-                return (self.terms, self._hot_postings, self.docs,
-                        self.bucket_stats)
-        return (self.terms, self.postings, self.docs, self.bucket_stats)
+        cand, sc = top_k(*accumulate(
+            self._local_postings, weights, idfs, dl, self.meta.avgdl, live,
+            query.required, query.prohibited,
+        ), k)
+        return [(int(d), float(v)) for d, v in zip(cand, sc)]
 
     def search(self, q: str | Query, k: int = 10, prune: bool = True,
                with_fields: bool = False) -> DataFrame:
         return search(self.spark, self.meta, q, k, prune, with_fields,
-                      _frames=self._frames_for(q),
+                      _frames=(self.terms, self.postings, self.docs,
+                               self.bucket_stats),
                       _df_cache=self._df_cache)
 
 
@@ -485,7 +397,7 @@ def search(
     if query.phrases:
         # Positionless postings cannot verify adjacency; the engine layer
         # (engine.gate_search / engine.gate_phrase) combines this kernel
-        # with the two-phase content verify. Failing loudly beats silently
+        # with positional postings. Failing loudly beats silently
         # scoring a phrase query as a bag of nothing.
         raise ValueError(
             "kernel.search does not execute phrase clauses; use "
@@ -503,8 +415,6 @@ def search(
         terms_df, postings_df, docs_df = _frames[0], _frames[1], _frames[2]
         bstats_df = _frames[3] if len(_frames) > 3 else None
     else:
-        import os
-
         terms_df = spark.read.parquet(meta.terms_path)
         postings_df = spark.read.parquet(meta.postings_path)
         docs_df = spark.read.parquet(meta.docs_path)
@@ -690,11 +600,9 @@ def postings_rows(
 def term_contributions(spark: SparkSession, meta: IndexMeta, terms: list[str]) -> DataFrame:
     """Per-(docid, term) BM25 contribution as a DataFrame column —
     idf precomputed driver-side (same np.log as the scoring kernel), the
-    tf-normalization evaluated as a Catalyst expression with the exact
-    literal shape of scoring.tfnorm, so values are bit-identical to the
-    fused kernel's contributions."""
-    from .scoring import idf as idf_fn
-
+    tf-normalization evaluated as scoring.tfnorm_col, the Catalyst twin
+    of scoring.tfnorm, so values are bit-identical to the fused kernel's
+    contributions."""
     stats = (
         spark.read.parquet(meta.terms_path).where(F.col("term").isin(terms)).collect()
     )
@@ -706,25 +614,12 @@ def term_contributions(spark: SparkSession, meta: IndexMeta, terms: list[str]) -
     idf_df = spark.createDataFrame(idf_rows, "term string, idf double")
     rows = postings_rows(spark, meta, present)
     doclens = spark.read.parquet(meta.docs_path).select("docid", "doclen")
-    avgdl = meta.avgdl
     return (
         rows.join(F.broadcast(idf_df), "term")
         .join(doclens, "docid")
         .withColumn(
             "contrib",
-            F.col("idf")
-            * (
-                F.col("tf").cast("double") * (F.lit(1.2) + F.lit(1.0))
-                / (
-                    F.col("tf").cast("double")
-                    + F.lit(1.2)
-                    * (
-                        F.lit(1.0)
-                        - F.lit(0.75)
-                        + F.lit(0.75) * F.col("doclen").cast("double") / F.lit(avgdl)
-                    )
-                )
-            ),
+            F.col("idf") * tfnorm_col(F.col("tf"), F.col("doclen"), meta.avgdl),
         )
         .select("docid", "term", "contrib")
     )

@@ -1,13 +1,9 @@
 """Positional postings — the Lucene ``.pos``-file analog.
 
 The base index stores (term, bucket) -> docid-delta + tf varint streams
-(indexer.py); phrase and span-proximity queries then verify candidates by
-re-analyzing ONLY the candidates' content (engine._phrase_component /
-gate_proximity), with a bigram index as a tighter stand-in. That is
-correct, but a common-bigram phrase at 100x corpus scale still re-reads a
-meaningful content fraction. Lucene solves this with a positions file:
-per (term, doc), the token positions, delta+varint encoded, consumed by
-PhraseQuery / SpanNearQuery (the reference consumes it via
+(indexer.py), which cannot verify adjacency. Lucene solves this with a
+positions file: per (term, doc), the token positions, delta+varint
+encoded, consumed by PhraseQuery / SpanNearQuery (the reference consumes it via
 ``org.apache.lucene:*=9.8.0``, /root/reference/versions.props; spans:
 solr/core/src/java/org/apache/solr/search/SurroundQParserPlugin.java:1).
 
@@ -19,8 +15,8 @@ This module adds the same structure as an ADDITIVE index stage:
                      a term never exceeds bucket_docs docs per group) ->
                      numpy delta+varint encode -> ``positions`` parquet
                      next to ``postings``, gated by _SUCCESS, resume-safe.
-                     The default build is untouched; meta.has_positions
-                     flags availability.
+                     meta.has_positions flags availability; the
+                     engine's gate index always carries it.
 
   phrase_tf_frame()  exact phrase frequency per doc for ANY phrase length
                      with ZERO content access: read the phrase terms'
@@ -36,9 +32,9 @@ This module adds the same structure as an ADDITIVE index stage:
 
 Position semantics are pinned to the analysis contract (analysis.py):
 position = index within the SURVIVING token stream (post stop-filter),
-identical to the adjacency definition of the two-phase content verify,
-the bigram index, and the DuckDB oracles -- all paths agree bit-for-bit
-(tests/test_positions.py proves equality).
+identical to the adjacency definition of the DuckDB oracles, which
+re-tokenize content independently (tests/test_positions.py pins the
+agreement).
 
 Scale shape: query cost is proportional to the queried terms' postings
 (the Lucene trade), never to corpus content. The build shuffles

@@ -9,8 +9,8 @@ SolrQueryParser.java; ref-guide standard-query-parser.adoc):
   -term           prohibited clause (never scores)
   term^2.5        boosted clause (weight multiplies the BM25 contribution,
                   SolrQueryParser boost syntax)
-  "a b"           quoted phrase clause (adjacency match; executed by the
-                  two-phase phrase path, engine.gate_phrase)
+  "a b"           quoted phrase clause (adjacency match; executed from
+                  positional postings, engine.gate_phrase)
   field:value     filter on a StrField-like doc column (lang:, repo:, ...)
                   — treated as fq (filter, NOT scored), per FIXTURES.md §2
 

@@ -16,11 +16,18 @@ Pinned deviations from Lucene internals (documented per SURVEY.md §4):
 Ties broken by ascending docid (mergeIds queue semantics,
 solr/core/src/java/org/apache/solr/handler/component/
 ShardFieldSortedHitQueue.java).
+
+The formula has one numpy form (idf, tfnorm, accumulate, top_k — used
+by the executor bucket kernel and the driver-local path alike) and one
+Catalyst form (idf_col, tfnorm_col — phrase clauses and per-term
+contribution columns). bm25_pandas_oracle is the independent reference.
 """
 
 from __future__ import annotations
 
 import numpy as np
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 K1 = 1.2
 B = 0.75
@@ -36,14 +43,93 @@ def tfnorm(tf: np.ndarray, dl: np.ndarray, avgdl: float, k1: float = K1, b: floa
     return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
 
 
-def bm25_sql_expr(term_col: str = "tf", dl_col: str = "doclen", df_col: str = "df",
-                  n: str = "n_docs", avgdl: str = "avgdl") -> str:
-    """The identical formula as an ANSI SQL expression fragment (works in
-    both Spark SQL and DuckDB — used to generate oracle queries)."""
-    return (
-        f"ln(1 + ({n} - {df_col} + 0.5) / ({df_col} + 0.5)) * "
-        f"({term_col} * (1.2 + 1) / ({term_col} + 1.2 * (1 - 0.75 + 0.75 * {dl_col} / {avgdl})))"
+def idf_col(df: Column, n_docs: int) -> Column:
+    """idf as a Catalyst expression — the literal shape the DuckDB phrase
+    oracles mirror (gate._PHRASE_SQL: ln(1.0 + (n - df + 0.5) / (df + 0.5)))."""
+    return F.log(
+        F.lit(1.0) + (F.lit(float(n_docs)) - df + F.lit(0.5)) / (df + F.lit(0.5))
     )
+
+
+def tfnorm_col(tf: Column, dl: Column, avgdl: float) -> Column:
+    """tfnorm as a Catalyst expression with the exact literal shape of
+    ``tfnorm`` and of the DuckDB oracles, so per-row values are
+    bit-identical to the numpy kernel's."""
+    tf = tf.cast("double")
+    return tf * (F.lit(K1) + F.lit(1.0)) / (
+        tf + F.lit(K1) * (F.lit(1.0) - F.lit(B) + F.lit(B) * dl.cast("double") / F.lit(avgdl))
+    )
+
+
+def accumulate(
+    hits: dict,
+    weights: dict[str, float],
+    idfs: dict[str, float],
+    dl: np.ndarray,
+    avgdl: float,
+    alive: np.ndarray,
+    required=(),
+    prohibited=(),
+    groups=(),
+) -> tuple[np.ndarray, np.ndarray]:
+    """Score one docid space (a bucket, or the whole index on the driver).
+
+    ``hits``: term -> (docid indices into ``dl``/``alive``, tfs) for the
+    terms present in this space; ``weights``: term -> multiplicity x
+    boost of the scoring clauses. Terms are summed in sorted order, so
+    the float accumulation order is fixed for every caller.
+
+    A doc is a candidate if it is alive, matched a scoring term, holds
+    every ``required`` term (or, with MUST ``groups``, at least one term
+    of every group) and no ``prohibited`` term. Returns (candidate
+    docids ascending, their scores)."""
+    scores = np.zeros(dl.size, np.float64)
+    matched = np.zeros(dl.size, bool)
+    req = set(required)
+    req_count = np.zeros(dl.size, np.int16) if req else None
+    grp_hit = np.zeros((dl.size, len(groups)), bool) if groups else None
+    for t in sorted(weights):
+        hit = hits.get(t)
+        if hit is None:
+            continue
+        d, tf = hit
+        w = weights[t] * idfs[t]
+        scores[d] += w * tfnorm(tf, dl[d], avgdl)
+        matched[d] = True
+        if t in req:
+            req_count[d] += 1
+        if grp_hit is not None:
+            for gi, g in enumerate(groups):
+                if t in g:
+                    grp_hit[d, gi] = True
+    if grp_hit is not None:
+        mask = alive & matched & grp_hit.all(axis=1)
+    elif req:
+        mask = alive & (req_count == len(req))
+    else:
+        mask = alive & matched
+    for t in prohibited:
+        hit = hits.get(t)
+        if hit is not None:
+            mask[hit[0]] = False
+    cand = np.flatnonzero(mask)
+    return cand, scores[cand]
+
+
+def top_k(cand: np.ndarray, scores: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """Exact top k of (cand, scores) by (score desc, docid asc); k <= 0
+    selects nothing."""
+    if k <= 0 or cand.size == 0:
+        return cand[:0], scores[:0]
+    if cand.size > 4 * k:
+        # keep everything >= the k-th largest score (ties included), then
+        # lexsort the remnant: an O(n) partition instead of an
+        # O(n log n) full sort over a hot term's candidate set
+        kth = np.partition(scores, cand.size - k)[cand.size - k]
+        keep = scores >= kth
+        cand, scores = cand[keep], scores[keep]
+    sel = np.lexsort((cand, -scores))[:k]
+    return cand[sel], scores[sel]
 
 
 def bm25_pandas_oracle(

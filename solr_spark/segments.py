@@ -147,10 +147,9 @@ def add_segment(
     seg_id = len(view.segments)
     base = view.segments[0]
     # deltas inherit the base segment's analysis config — a delta built
-    # with a different analyzer/bigram setting would be silently
-    # inconsistent with the shared dictionary
+    # with a different analyzer would be silently inconsistent with the
+    # shared dictionary
     kw.setdefault("analyzer", base.analyzer)
-    kw.setdefault("bigrams", base.has_bigrams)
     kw.setdefault("synonyms", getattr(base, "synonyms", None))
     meta = build_index(
         spark,
@@ -284,7 +283,6 @@ def merge_segments(
         bucket_docs=bucket_docs,
         analyzer=view.segments[0].analyzer,
         synonyms=getattr(view.segments[0], "synonyms", None),
-        has_bigrams=all(m.has_bigrams for m in view.segments),
         id_cols=ids,
     )
     ts = spark.read.parquet(terms_out).agg(

@@ -2177,9 +2177,10 @@ ES_STEP1: list[tuple[str, list]] = (
            lambda L: [([("R2", L)], ("del", L))])
 )
 
-# step 2a: y-verb suffixes, each preceded by u, everything in RV
+# step 2a: y-verb suffixes in RV, each preceded by a u that need not be
+# in RV
 ES_STEP2A: list[tuple[str, list]] = [
-    ("u" + y, [([("RV", len(y) + 1)], ("del", len(y)))])
+    ("u" + y, [([("RV", len(y))], ("del", len(y)))])
     for y in ["ya", "ye", "yan", "yen", "yeron", "yendo", "yo", "yó",
               "yas", "yes", "yais", "yamos"]
 ]
@@ -2200,9 +2201,10 @@ _ES_2B_REST = [
     "imos", "áramos", "iéramos", "iésemos", "ásemos",
 ]
 
+# a gu-preceded en/es/éis/emos in RV also loses the u, which need not be
+# in RV
 ES_STEP2B: list[tuple[str, list]] = (
-    [("gu" + x, [([("RV", len(x)), ("RV", len(x) + 1)], ("del", len(x) + 1)),
-                 ([("RV", len(x))], ("del", len(x)))])
+    [("gu" + x, [([("RV", len(x))], ("del", len(x) + 1))])
      for x in _ES_2B_GU]
     + _fr1(_ES_2B_GU, lambda L: [([("RV", L)], ("del", L))])
     + _fr1(_ES_2B_REST, lambda L: [([("RV", L)], ("del", L))])

@@ -40,25 +40,6 @@ def test_snake_and_camel():
     assert tokenize_lists(s).iloc[0] == ["getfoobar", "snake_case_id", "x9"]
 
 
-def test_bigram_frequencies():
-    """bigrams=True emits adjacent-pair triples whose tf equals the
-    overlapping two-term phrase frequency (post-stop-filter adjacency —
-    the same adjacency the phrase verify path uses)."""
-    import numpy as np
-    import pandas as pd
-
-    tr, _dl = term_frequencies(
-        np.array([0, 1]),
-        pd.Series(["spark window spark window spark", "the spark and window"]),
-        bigrams=True,
-    )
-    by = {(r["docid"], r["term"]): r["tf"] for _, r in tr.iterrows()}
-    assert by[(0, "spark window")] == 2 and by[(0, "window spark")] == 2
-    # stopwords removed BEFORE pairing: "the spark and window" -> spark window
-    assert by[(1, "spark window")] == 1
-    assert by[(0, "spark")] == 3  # unigrams unchanged
-
-
 def test_s_stem_rules():
     # Harman 1991 three-rule S-stemmer + the length guard
     assert s_stem("queries") == "query"

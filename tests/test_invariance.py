@@ -81,6 +81,47 @@ def test_resume_noop_when_complete(spark, small_corpus, small_index):
     assert meta.stages == small_index.stages
 
 
+def test_meta_save_torn_write_keeps_previous(tmp_path, monkeypatch):
+    """A save that dies partway through json.dump must leave the previous
+    meta.json loadable: resume trusts any meta.json it finds."""
+    import json
+
+    import pytest
+
+    from solr_spark.indexer import IndexMeta
+
+    IndexMeta(out_dir=str(tmp_path), n_docs=7).save()
+
+    def torn_dump(obj, f, **kw):
+        f.write('{"n_docs": 9, "sum_')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError):
+        IndexMeta(out_dir=str(tmp_path), n_docs=9).save()
+    monkeypatch.undo()
+    assert IndexMeta.load(str(tmp_path)).n_docs == 7
+
+
+def test_meta_load_names_unknown_keys(tmp_path):
+    """An index whose meta.json carries a field this engine no longer
+    knows (a flag of a retired index feature) is refused with the key
+    named, not a bare TypeError."""
+    import json
+
+    import pytest
+
+    from solr_spark.indexer import IndexMeta
+
+    IndexMeta(out_dir=str(tmp_path)).save()
+    path = tmp_path / "meta.json"
+    d = json.loads(path.read_text())
+    d["retired_flag"] = False
+    path.write_text(json.dumps(d))
+    with pytest.raises(ValueError, match="retired_flag"):
+        IndexMeta.load(str(tmp_path))
+
+
 def test_incremental_segments_equal_full_rebuild(spark, small_corpus, tmp_path_factory):
     """base + delta segments answer queries identically to a from-scratch
     rebuild (append-only: combined N/avgdl/df equal the full build's) —
@@ -226,7 +267,7 @@ def test_merge_reclaims_deletes_equals_live_rebuild(spark, small_corpus, tmp_pat
         assert got == want, q
 
 
-def test_add_segment_inherits_analyzer_and_bigrams(spark, small_corpus, tmp_path):
+def test_add_segment_inherits_analyzer(spark, small_corpus, tmp_path):
     from pyspark.sql import functions as F
 
     from solr_spark.segments import add_segment, open_base
@@ -234,14 +275,13 @@ def test_add_segment_inherits_analyzer_and_bigrams(spark, small_corpus, tmp_path
     docs = spark.read.parquet(small_corpus)
     view = open_base(
         spark, docs.filter(F.col("path") < "src/d8"), str(tmp_path / "v"),
-        bucket_docs=128, num_partitions=2, analyzer="code_stem", bigrams=False,
+        bucket_docs=128, num_partitions=2, analyzer="code_stem",
     )
     view = add_segment(
         spark, view, docs.filter(F.col("path") >= "src/d8"), str(tmp_path / "v"),
         num_partitions=2,
     )
     assert view.segments[1].analyzer == "code_stem"
-    assert view.segments[1].has_bigrams == view.segments[0].has_bigrams
 
 
 def test_verify_content_integrity(spark, small_corpus, small_index):

@@ -754,6 +754,8 @@ ES_SNOWBALL_VECTORS = {
     "llegue": "lleg",           # step3 gue: u in RV -> both dropped
     "áureo": "aure",            # spec RV example (RV = eo); step3 o
     "construyendo": "constru",  # 2a: uyendo with u in RV
+    "abuyan": "abu",            # 2a: RV = yan, the u before it is outside RV
+    "aguen": "ag",              # 2b: RV = en, gu outside RV, u still dropped
 }
 
 

@@ -112,16 +112,6 @@ def test_term_frequencies_discount_overlaps():
     assert dl_col == {0: 2, 1: 2}
 
 
-def test_bigrams_with_synonyms_raises():
-    from solr_spark.analysis import SynonymGraph, term_frequencies
-
-    with pytest.raises(ValueError):
-        term_frequencies(
-            np.array([0]), pd.Series(["a b"]), bigrams=True,
-            synonyms=SynonymGraph({"merge": ["join"]}),
-        )
-
-
 def test_injection_composes_with_stemmer():
     from solr_spark.analysis import ANALYZERS, SynonymGraph, term_frequencies
 
