@@ -1086,6 +1086,7 @@ def build_index(
     meta.stages["term_stats"] = round(time.time() - t0, 3)
 
     # ---- stage 5: meta + lineage -------------------------------------------
+    t0 = time.time()
     ts = spark.read.parquet(terms_out).agg(
         F.count("*").alias("n_terms"), F.max("df").alias("max_df"), F.avg("df").alias("mean_df")
     ).collect()[0]
@@ -1103,6 +1104,7 @@ def build_index(
         ).collect()[0]
         meta.postings_rows = int(pb["rows"] or 0)
         meta.postings_bytes = int(pb["bytes"] or 0)
+    meta.stages["meta"] = round(time.time() - t0, 3)
     meta.save()
     return meta
 

@@ -54,12 +54,18 @@ def _bucket_kernel(
     prune: bool,
     packed: bool = False,
     required_groups: list[list[str]] | None = None,
+    dead: dict[int, np.ndarray] | None = None,
 ):
     """Build the per-bucket cogrouped scoring function (pure numpy inside).
 
     ``packed``: the docs side is the bucket_stats table (one row per
     bucket, doclen/filter columns as position-indexed arrays) instead of
     per-row doc stats — see indexer stage 2b.
+
+    ``dead``: the live-docs mask, bucket -> sorted bucket-local docids
+    deleted in it (Lucene's liveDocs). They are cleared from ``alive``
+    as soon as the docs side is loaded, before any branch runs, so no
+    prune threshold, accumulation or count ever sees a deleted doc.
 
     ``required_groups``: MUST groups (each = "match >= 1 of these
     terms") — the SynonymQuery-in-MUST shape. When present, the matching
@@ -96,6 +102,8 @@ def _bucket_kernel(
             for f_name, vals in filters.items():
                 ok &= docs_pdf[f_name].isin(vals).to_numpy()
             alive[loc_docs[ok]] = True
+        if dead and bucket in dead:
+            alive[dead[bucket]] = False
 
         rows = {r["term"]: r for _, r in post_pdf.iterrows()}
 
@@ -230,6 +238,38 @@ def _score_conjunction_pruned(
     return loc
 
 
+def _lookup_df(terms_df: DataFrame, terms: list[str], cache: dict | None = None) -> dict[str, int]:
+    """df of each term (0 if absent). The fetched rows are summed per
+    term: a view's terms frame holds one row per (segment, term), and
+    summing them on the driver spares a groupBy shuffle. ``cache`` (the
+    searcher's term -> df map) is read first and filled with the misses."""
+    cache = {} if cache is None else cache
+    missing = [t for t in terms if t not in cache]
+    if missing:
+        fetched = dict.fromkeys(missing, 0)
+        for r in terms_df.where(F.col("term").isin(missing)).select("term", "df").collect():
+            fetched[r["term"]] += int(r["df"])
+        cache.update(fetched)
+    return {t: cache[t] for t in terms}
+
+
+def _decode_rows(pdf: pd.DataFrame, bucket_docs: int) -> tuple:
+    """Decode every postings row of ``pdf`` in row order →
+    (postings per row, docids, tfs), the last two concatenated."""
+    ds, tfs = [], []
+    for bucket, df, doc_b, tf_b in zip(
+        pdf["bucket"].to_numpy(np.int64), pdf["df"].to_numpy(np.int64),
+        pdf["doc_bytes"], pdf["tf_bytes"],
+    ):
+        d, f = decode_postings(doc_b, tf_b, int(df), int(bucket) * bucket_docs)
+        ds.append(d)
+        tfs.append(f)
+    if not ds:
+        return np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.int64)
+    lens = np.fromiter((len(d) for d in ds), np.int64, len(ds))
+    return lens, np.concatenate(ds), np.concatenate(tfs)
+
+
 class Searcher:
     """Warm query session over one index — holds the terms/postings/docs
     DataFrames (and optionally caches the small ones) so repeated queries
@@ -237,17 +277,30 @@ class Searcher:
     SolrIndexSearcher with its filter/document caches
     (solr/core/src/java/org/apache/solr/search/SolrIndexSearcher.java:894-986):
     term stats ≈ the term dictionary in heap, docs ≈ docValues pages in OS
-    cache. Postings stay uncached (pruned parquet scans per query)."""
+    cache. Postings stay uncached (pruned parquet scans per query).
 
-    def __init__(self, spark: SparkSession, meta: IndexMeta, cache: bool = True):
+    ``meta`` is one IndexMeta or a segments.IndexView; each table is read
+    across every segment in one multi-path scan (buckets never straddle
+    segments, so the kernel needs no merge logic). ``dead`` is the
+    view's live-docs mask (bucket -> sorted bucket-local deleted docids):
+    every query and the driver-local path apply it, nothing else does.
+    The df cache and the mask belong to this searcher alone — a view
+    that adds segments or deletes gets a new searcher."""
+
+    def __init__(self, spark: SparkSession, meta: IndexMeta, cache: bool = True,
+                 dead: dict[int, np.ndarray] | None = None):
         self.spark = spark
         self.meta = meta
-        self.terms = spark.read.parquet(meta.terms_path)
-        self.postings = spark.read.parquet(meta.postings_path)
-        self.docs = spark.read.parquet(meta.docs_path)
+        self.dead = dead or {}
+        segs = getattr(meta, "segments", [meta])
+        self._end_docid = max(m.docid_base + m.n_docs for m in segs)
+        self.terms = spark.read.parquet(*[m.terms_path for m in segs])
+        self.postings = spark.read.parquet(*[m.postings_path for m in segs])
+        self.docs = spark.read.parquet(*[m.docs_path for m in segs])
+        bs_paths = [m.bucket_stats_path for m in segs]
         self.bucket_stats = (
-            spark.read.parquet(meta.bucket_stats_path)
-            if _done(meta.bucket_stats_path)
+            spark.read.parquet(*bs_paths)
+            if all(_done(p) for p in bs_paths)
             else None
         )
         if cache:
@@ -270,20 +323,26 @@ class Searcher:
         millisecond-latency serving (`local_topk`) — the reference's own
         architecture for interactive queries: Lucene keeps norms and the
         hot postings resident in the searcher process. Memory bound:
-        one (doclen, live) pair per doc (9 bytes × n_docs — the norms
-        file analog; 10.8 MB at 1.2M docs) plus the decoded postings of
-        exactly the named terms. The distributed path remains the
-        source of truth; local answers are bit-identical to it for the
-        supported query classes (both score through scoring.accumulate
-        and scoring.top_k)."""
+        one (doclen, live) pair per docid up to the last segment's end
+        (9 bytes × docids — the norms file analog; 10.8 MB at 1.2M docs)
+        plus the decoded postings of exactly the named terms. Deleted
+        docs are not live. The distributed path remains the source of
+        truth; local answers are bit-identical to it for the supported
+        query classes (both score through scoring.accumulate and
+        scoring.top_k)."""
         toks = sorted({t.lower() for t in terms})
+        B = self.meta.bucket_docs
         if self._local_norms is None:
             pdf = self.docs.select("docid", "doclen").toPandas()
-            dl = np.zeros(self.meta.n_docs, np.float64)
-            live = np.zeros(self.meta.n_docs, bool)
+            # indexed by docid: a delta segment's docids start at its
+            # docid_base, so n_docs alone would be too short
+            dl = np.zeros(self._end_docid, np.float64)
+            live = np.zeros(self._end_docid, bool)
             ids = pdf["docid"].to_numpy(np.int64)
             dl[ids] = pdf["doclen"].to_numpy(np.float64)
             live[ids] = True
+            for bucket, locs in self.dead.items():
+                live[bucket * B + locs] = False
             self._local_norms = (dl, live)
         rows = (
             self.postings.filter(F.col("term").isin(toks))
@@ -292,24 +351,8 @@ class Searcher:
         )
         for t in toks:
             grp = rows[rows["term"] == t].sort_values("bucket")
-            ds, tfs = [], []
-            for _, r in grp.iterrows():
-                d, f = decode_postings(
-                    r["doc_bytes"], r["tf_bytes"], int(r["df"]),
-                    int(r["bucket"]) * self.meta.bucket_docs,
-                )
-                ds.append(d)
-                tfs.append(f)
-            self._local_postings[t] = (
-                np.concatenate(ds) if ds else np.empty(0, np.int64),
-                np.concatenate(tfs) if tfs else np.empty(0, np.int64),
-            )
-        missing = [t for t in toks if t not in self._df_cache]
-        if missing:
-            stats = self.terms.where(F.col("term").isin(missing)).collect()
-            fetched = {r["term"]: int(r["df"]) for r in stats}
-            for t in missing:
-                self._df_cache[t] = fetched.get(t, 0)
+            self._local_postings[t] = _decode_rows(grp, B)[1:]
+        _lookup_df(self.terms, toks, self._df_cache)
         return {
             "terms": len(toks),
             "postings": int(sum(len(v[0]) for v in self._local_postings.values())),
@@ -356,11 +399,12 @@ class Searcher:
         return [(int(d), float(v)) for d, v in zip(cand, sc)]
 
     def search(self, q: str | Query, k: int = 10, prune: bool = True,
-               with_fields: bool = False) -> DataFrame:
+               with_fields: bool = False, unsorted: bool = False) -> DataFrame:
         return search(self.spark, self.meta, q, k, prune, with_fields,
                       _frames=(self.terms, self.postings, self.docs,
                                self.bucket_stats),
-                      _df_cache=self._df_cache)
+                      _df_cache=self._df_cache, unsorted=unsorted,
+                      _dead=self.dead)
 
 
 def search(
@@ -374,6 +418,7 @@ def search(
     _count_only: bool = False,
     _df_cache: dict | None = None,
     unsorted: bool = False,
+    _dead: dict | None = None,
 ) -> DataFrame:
     """Top-k BM25 search. Returns DataFrame(docid, score) ordered by
     (score desc, docid asc), limited to k; with_fields joins doc columns.
@@ -427,17 +472,7 @@ def search(
     all_terms = sorted(set(weights) | query.prohibited)
     if not weights:
         return _empty()
-    if _df_cache is not None:
-        missing = [t for t in all_terms if t not in _df_cache]
-        if missing:
-            stats = terms_df.where(F.col("term").isin(missing)).collect()
-            fetched = {r["term"]: int(r["df"]) for r in stats}
-            for t in missing:
-                _df_cache[t] = fetched.get(t, 0)  # absent term: df=0
-        df_map = {t: _df_cache[t] for t in all_terms}
-    else:
-        stats = terms_df.where(F.col("term").isin(all_terms)).collect()
-        df_map = {r["term"]: int(r["df"]) for r in stats}
+    df_map = _lookup_df(terms_df, all_terms, _df_cache)
     groups = [list(g) for g in (query.required_groups or [])]
     if groups:
         # a MUST group dies only if EVERY alternative is absent
@@ -491,6 +526,7 @@ def search(
         prune and not groups,
         packed=use_packed,
         required_groups=groups or None,
+        dead=_dead,
     )
     scored = (
         postings.groupby("bucket")
@@ -565,11 +601,12 @@ def decode_posting_frame(postings_df: DataFrame, bucket_docs: int) -> DataFrame:
     surface AND the segment merge (one decode loop, never copies)."""
 
     def explode(batches):
-        for pdf in batches:
-            for _, r in pdf.iterrows():
-                base = int(r["bucket"]) * bucket_docs
-                d, tf = decode_postings(r["doc_bytes"], r["tf_bytes"], int(r["df"]), base)
-                yield pd.DataFrame({"term": r["term"], "docid": d, "tf": tf})
+        for pdf in batches:  # one output frame per input batch, row order kept
+            if len(pdf) == 0:
+                continue
+            lens, d, tf = _decode_rows(pdf, bucket_docs)
+            terms = np.repeat(pdf["term"].to_numpy(object), lens)
+            yield pd.DataFrame({"term": terms, "docid": d, "tf": tf})
 
     return postings_df.mapInPandas(explode, POSTING_ROWS_SCHEMA)
 

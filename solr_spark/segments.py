@@ -12,20 +12,25 @@ counting them until segments merge).
 Spark shape: each delta batch is a full build_index run with a
 bucket-aligned ``docid_base``, so a docid bucket never spans segments and
 every per-(term,bucket) postings row lives in exactly one segment — the
-query kernel needs no merge logic at all. The combined view is:
+query kernel needs no merge logic at all. A view is searched through one
+kernel.Searcher that reads each table across all segments:
 
-  postings    = union of segment postings dirs (one multi-path scan)
-  terms       = groupBy(term).sum(df, cf) over segment term tables
-                (exact global IDF across segments, the ExactStatsCache
-                analog — stronger than Lucene's per-segment stats)
-  docs        = union of segment docs dirs, minus the delete list
-  n/avgdl     = summed totals (additions are append-only, so the
-                combined stats equal a from-scratch rebuild's exactly —
-                the invariant the gate entry u_incremental_index checks)
+  postings     = union of segment postings dirs (one multi-path scan)
+  terms        = union of segment term tables, one row per (segment,
+                 term); the searcher sums df per query term on the
+                 driver (exact global IDF across segments, the
+                 ExactStatsCache analog — stronger than Lucene's
+                 per-segment stats), no groupBy shuffle
+  docs, bucket_stats = union of segment dirs, deleted docs included
+  n/avgdl      = summed totals (additions are append-only, so the
+                 combined stats equal a from-scratch rebuild's exactly —
+                 the invariant the gate entry u_incremental_index checks)
 
-Deletes route queries down the per-row docs path (the packed
-bucket_stats arrays are immutable snapshots), anti-joining the delete
-keys — the live-docs bitmask as a join.
+Deletes are Lucene's liveDocs: the view resolves its delete keys to
+docids once (one left-semi join of the docs tables), and the scoring
+kernel clears them from its per-bucket ``alive`` mask before any
+pruning or scoring. The packed bucket_stats path stays on, and n_docs,
+avgdl and df keep counting deleted docs until a merge reclaims them.
 """
 
 from __future__ import annotations
@@ -33,18 +38,23 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .indexer import IndexMeta, _done, build_index
+from .indexer import IndexMeta, build_index
 
 
 @dataclass
 class IndexView:
-    """Queryable union of a base segment and any number of deltas."""
+    """Queryable union of a base segment and any number of deltas. A view
+    is a value: add_segment and delete_by_keys return new views, so the
+    searcher (df cache and live-docs mask) built for one view never
+    serves another."""
 
     segments: list[IndexMeta]
     delete_keys: list[tuple] = field(default_factory=list)  # id_cols tuples
+    _searcher: object = field(default=None, init=False, repr=False, compare=False)
 
     @property
     def bucket_docs(self) -> int:
@@ -83,33 +93,42 @@ class IndexView:
         b = self.bucket_docs
         return ((end + b - 1) // b) * b
 
-    def frames(self, spark: SparkSession):
-        """(terms, postings, docs, bucket_stats) frames for kernel.search.
-
-        With deletes present, bucket_stats is None (forces the per-row
-        docs path where the anti-join mask applies)."""
-        terms = (
-            spark.read.parquet(*[m.terms_path for m in self.segments])
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-        )
-        postings = spark.read.parquet(*[m.postings_path for m in self.segments])
+    def dead_docids(self, spark: SparkSession) -> dict[int, np.ndarray]:
+        """The live-docs mask: bucket -> sorted bucket-local docids of the
+        deleted docs. A key deletes every doc that carries it."""
+        if not self.delete_keys:
+            return {}
         docs = spark.read.parquet(*[m.docs_path for m in self.segments])
-        bstats = None
-        if self.delete_keys:
-            docs = docs.join(
-                F.broadcast(self._delete_frame(spark)), self.id_cols,
-                "left_anti",
+        hit = docs.join(
+            F.broadcast(self._delete_frame(spark)), self.id_cols, "left_semi"
+        ).select("docid").collect()
+        ids = np.sort(np.fromiter((r["docid"] for r in hit), np.int64, len(hit)))
+        B = self.bucket_docs
+        buckets, starts = np.unique(ids // B, return_index=True)
+        return {
+            int(b): part - int(b) * B
+            for b, part in zip(buckets, np.split(ids, starts[1:]))
+        }
+
+    def searcher(self, spark: SparkSession):
+        """This view's kernel.Searcher, built on first use: each table read
+        once across all segments, the delete keys resolved once to the
+        live-docs mask, and one df cache for every query on the view."""
+        if self._searcher is None or self._searcher.spark is not spark:
+            from .kernel import Searcher
+
+            self._searcher = Searcher(
+                spark, self, cache=False, dead=self.dead_docids(spark)
             )
-        else:
-            bs_paths = [
-                m.bucket_stats_path
-                for m in self.segments
-                if _done(m.bucket_stats_path)
-            ]
-            if len(bs_paths) == len(self.segments):
-                bstats = spark.read.parquet(*bs_paths)
-        return terms, postings, docs, bstats
+        return self._searcher
+
+    def frames(self, spark: SparkSession):
+        """(terms, postings, docs, bucket_stats) frames for kernel.search,
+        read once per view. terms holds one row per (segment, term), and
+        docs and bucket_stats still hold the deleted docs: the searcher's
+        live-docs mask removes them inside the scoring kernel."""
+        s = self.searcher(spark)
+        return s.terms, s.postings, s.docs, s.bucket_stats
 
     def search(
         self,
@@ -119,17 +138,7 @@ class IndexView:
         prune: bool = True,
         unsorted: bool = False,
     ) -> DataFrame:
-        from .kernel import search
-
-        return search(
-            spark, self, q, k=k, prune=prune, unsorted=unsorted,
-            _frames=self.frames(spark),
-        )
-
-    # kernel.search duck-types these off IndexMeta
-    @property
-    def docs_path(self) -> str:  # pragma: no cover - only hit without _frames
-        raise AttributeError("IndexView is multi-segment; use frames()")
+        return self.searcher(spark).search(q, k, prune, unsorted=unsorted)
 
 
 def open_base(spark: SparkSession, docs: DataFrame, out_dir: str, **kw) -> IndexView:
@@ -159,7 +168,9 @@ def add_segment(
         docid_base=view.next_docid_base,
         **kw,
     )
-    return IndexView(segments=view.segments + [meta], delete_keys=view.delete_keys)
+    return IndexView(
+        segments=view.segments + [meta], delete_keys=list(view.delete_keys)
+    )
 
 
 def merge_segments(

@@ -135,6 +135,11 @@ def test_meta_stats(small_index):
     assert small_index.postings_bytes > 0
     assert len(small_index.lineage) >= 1
     assert small_index.skew_ratio > 1  # Zipf vocab must show skew
+    # every build stage is timed, stage 5 (meta + lineage) included
+    assert set(small_index.stages) == {
+        "analyze", "doc_stats", "bucket_stats", "postings_3a", "postings",
+        "term_stats", "meta",
+    }
 
 
 def test_hit_count_contract(spark, small_index):

@@ -1,0 +1,140 @@
+"""Deletes are a live-docs mask inside the scoring kernel.
+
+A view with deletes keeps the packed bucket_stats cogroup; the kernel
+clears deleted docids from its ``alive`` mask before any prune, so every
+query shape drops exactly the deleted docs and the survivors keep their
+exact scores (statistics count deleted docs until a merge)."""
+
+import pytest
+from pyspark.sql import functions as F
+
+from solr_spark.codec import decode_postings
+from solr_spark.corpus import RARE1
+from solr_spark.kernel import Searcher, decode_posting_frame
+from solr_spark.segments import add_segment, delete_by_keys, open_base
+
+K = 10
+
+
+@pytest.fixture(scope="module")
+def view(spark, small_corpus, tmp_path_factory):
+    """Base + one delta segment over the 600-doc corpus, 128-doc buckets."""
+    docs = spark.read.parquet(small_corpus)
+    out = str(tmp_path_factory.mktemp("livedocs") / "view")
+    v = open_base(
+        spark, docs.filter(F.col("path") < "src/d8"), out,
+        bucket_docs=128, num_partitions=4,
+    )
+    return add_segment(
+        spark, v, docs.filter(F.col("path") >= "src/d8"), out, num_partitions=4
+    )
+
+
+def _hits(df):
+    return [(int(r["docid"]), float(r["score"])) for r in df.collect()]
+
+
+def _key(spark, view, docid):
+    docs = spark.read.parquet(*[m.docs_path for m in view.segments])
+    r = docs.where(F.col("docid") == docid).collect()[0]
+    return tuple(r[c] for c in view.id_cols)
+
+
+def _path_filter_query(spark, view):
+    """``license`` restricted to the paths of its top hits: a ``path``
+    filter has no packed column, so it forces the per-row docs path."""
+    top = [d for d, _ in _hits(view.search(spark, "license", k=5))]
+    docs = spark.read.parquet(*[m.docs_path for m in view.segments])
+    paths = [r["path"] for r in docs.where(F.col("docid").isin(top)).collect()]
+    return " ".join(f"path:{p}" for p in sorted(paths)) + " license"
+
+
+@pytest.mark.parametrize("shape", [
+    "license",            # single term: block-max prune
+    "+int +license",      # pure AND: conjunction prune
+    "license int public",  # OR: accumulate
+    "lang:java license",  # packed filter
+    "path",               # per-row docs path (query built below)
+])
+def test_deleted_top_hit_never_returned(spark, view, shape):
+    q = _path_filter_query(spark, view) if shape == "path" else shape
+    before = _hits(view.search(spark, q, k=K + 1))
+    assert len(before) >= 2, q
+    victim = before[0][0]
+    dview = delete_by_keys(view, [_key(spark, view, victim)])
+    after = _hits(dview.search(spark, q, k=K))
+    assert victim not in {d for d, _ in after}, q
+    assert after == [h for h in before if h[0] != victim][:K], q
+    # the old view is a value: its own searcher still returns the doc
+    assert _hits(view.search(spark, q, k=K + 1)) == before, q
+
+
+def test_deleted_doc_absent_in_unsorted_mode(spark, view):
+    every = set(_hits(view.search(spark, "license int", unsorted=True)))
+    victim = max(every, key=lambda h: (h[1], -h[0]))[0]
+    dview = delete_by_keys(view, [_key(spark, view, victim)])
+    got = set(_hits(dview.search(spark, "license int", unsorted=True)))
+    assert got == {h for h in every if h[0] != victim}
+
+
+def test_view_with_deletes_keeps_packed_bucket_stats(spark, view):
+    victim = _hits(view.search(spark, "license", k=1))[0][0]
+    dview = delete_by_keys(view, [_key(spark, view, victim)])
+    assert dview.frames(spark)[3] is not None
+    dead = dview.dead_docids(spark)
+    B = view.bucket_docs
+    assert {b: list(v) for b, v in dead.items()} == {victim // B: [victim % B]}
+    # a new view never reuses the old view's searcher
+    assert dview.searcher(spark) is not view.searcher(spark)
+    assert view.searcher(spark).dead == {}
+
+
+def test_local_topk_on_view_carries_the_mask(spark, view):
+    terms = ["license", "int", "public"]
+    victim = _hits(view.search(spark, "license", k=1))[0][0]
+    dview = delete_by_keys(view, [_key(spark, view, victim)])
+    s = dview.searcher(spark)
+    s.warm_local(terms)
+    for q in ["license", "license int public", "+int +license", "int -public"]:
+        dist = _hits(s.search(q, K))
+        assert s.local_topk(q, K) == dist, q
+        assert victim not in {d for d, _ in dist}, q
+
+
+def test_local_topk_on_delta_segment(spark, view):
+    """Driver arrays are indexed by docid, so a delta segment (docids
+    from its docid_base) must size them by its end docid."""
+    seg = view.segments[-1]
+    assert seg.docid_base > 0
+    s = Searcher(spark, seg, cache=False)
+    s.warm_local(["license", "int", "public"])
+    for q in ["license", "license int public", "+int +license"]:
+        assert s.local_topk(q, K) == _hits(s.search(q, K)), q
+
+
+def test_decode_posting_frame_equals_per_row_decode(spark, small_index):
+    """The batched decode yields exactly the per-row decode_postings
+    output: same rows, same order, across several arrow batches."""
+    postings = spark.read.parquet(small_index.postings_path).where(
+        F.col("term").isin(["license", "int", "public", RARE1.lower()])
+    )
+    want = []
+    for r in postings.collect():
+        d, tf = decode_postings(
+            r["doc_bytes"], r["tf_bytes"], int(r["df"]),
+            int(r["bucket"]) * small_index.bucket_docs,
+        )
+        want += [(r["term"], int(x), int(y)) for x, y in zip(d, tf)]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        got = [
+            (r["term"], r["docid"], r["tf"])
+            for r in decode_posting_frame(postings, small_index.bucket_docs).collect()
+        ]
+    finally:
+        spark.conf.set(key, old)
+    assert len(want) > 1000
+    assert got == want
+    assert len({t for t, _, _ in got}) == 4
