@@ -340,7 +340,7 @@ def gate_search(
     for mt in mterms:
         parts.append(_multiterm_component(spark, meta, mt, dict(query.filters)))
     if not parts:
-        return spark.createDataFrame([], "doc_id bigint, score double")
+        return spark.createDataFrame([], "doc_id bigint, score double").limit(0)
     res = parts[0]
     for p in parts[1:]:
         # defined accumulation order: term kernel fold first, then each
@@ -466,7 +466,7 @@ def gate_phrase(
     meta = ensure_index(spark, sf_dir)
     terms = analyze_query(phrase)
     if not terms:
-        return spark.createDataFrame([], "doc_id bigint, phrase_tf bigint, score double")
+        return spark.createDataFrame([], "doc_id bigint, phrase_tf bigint, score double").limit(0)
     comp = _phrase_component(spark, meta, terms)
     out = comp.withColumn("score", F.round(F.col("p_score"), 6))
     return (
@@ -632,7 +632,7 @@ def gate_edismax(
     from .kernel import term_contributions
     from .qparser import calculate_mm
 
-    empty = spark.createDataFrame([], "doc_id bigint, score double")
+    empty = spark.createDataFrame([], "doc_id bigint, score double").limit(0)
     meta = ensure_index(spark, sf_dir)
     clauses = analyze_query(q)
     if not clauses:
@@ -754,7 +754,7 @@ def gate_mlt(
     from .analysis import tokenize_lists
     from .kernel import term_contributions
 
-    empty = spark.createDataFrame([], "doc_id bigint, score double")
+    empty = spark.createDataFrame([], "doc_id bigint, score double").limit(0)
     meta = ensure_index(spark, sf_dir)
     seed = (
         spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
@@ -826,7 +826,7 @@ def gate_complexphrase(
     meta = ensure_index(spark, sf_dir)
     slots = [t for t in phrase.lower().split() if t]
     if not slots:
-        return spark.createDataFrame([], "doc_id bigint, score double")
+        return spark.createDataFrame([], "doc_id bigint, score double").limit(0)
     concrete = [t for t in slots if "*" not in t and "?" not in t]
 
     # --- phase 1: index-pruned candidates --------------------------------
@@ -1094,7 +1094,7 @@ def gate_payload_check(
     meta = ensure_index(spark, sf_dir)
     terms = analyze_query(phrase)
     if not terms:
-        return spark.createDataFrame([], "doc_id bigint, score double")
+        return spark.createDataFrame([], "doc_id bigint, score double").limit(0)
     res = payload_check_frame(spark, meta, terms, payloads)
     docs = spark.read.parquet(meta.docs_path).select(
         "docid", "path", F.col("repo").alias("source")

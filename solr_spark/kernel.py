@@ -18,11 +18,22 @@ The Spark shape of the reference's two-phase distributed search
            the reference's second PURPOSE_GET_FIELDS phase, so content-sized
            columns never ride the scoring path
 
+A sorted top-k query whose work (its postings plus the doc slots of the
+buckets they touch) fits DRIVER_MAX_POSTINGS runs stages 2-3 in the
+driver, as the reference scores a shard inside its searcher process:
+stage 1's rows are collected (one Spark job, which also yields the exact
+df), the same kernel runs per touched bucket on the same docs frames,
+scoring.top_k picks the global winners, and the result is a local
+relation. Unsorted/count-only queries, which need every match to
+stay distributed, and over-bound ones run the cogroup above.
+
 Exactness contract: results (docids AND float64 scores) are identical with
 pruning on or off, at any parallelism — tested in tests/test_kernel.py.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -36,6 +47,18 @@ from .scoring import accumulate, tfnorm, tfnorm_col, top_k
 from .scoring import idf as idf_fn
 
 RESULT_SCHEMA = "docid bigint, score double"
+
+# Work a sorted top-k query may do in the driver: its postings plus the
+# doc slots (bucket_docs each) of the buckets they touch. Postings are
+# bounded before the scan (by df), the docs side before it is fetched;
+# over the bound the query runs the cogroup. Also the driver-memory bound
+# of one query, and of a searcher's bucket-row cache. Up to this work
+# every measured driver query beat the cogroup's fastest query by over
+# 0.2 s, a floor (a job and a Python-worker stage) that more executors
+# do not lower; at 2.2M work the margin was 0.07 s on a 118-bucket index
+# (BASELINE.md, "Where the driver path and the cogroup cross";
+# scripts/driver_crossover.py).
+DRIVER_MAX_POSTINGS = 1_000_000
 
 
 # filter field -> packed array column in bucket_stats
@@ -270,6 +293,22 @@ def _decode_rows(pdf: pd.DataFrame, bucket_docs: int) -> tuple:
     return lens, np.concatenate(ds), np.concatenate(tfs)
 
 
+@dataclass
+class QueryTrace:
+    """What one ``Searcher.search`` call did: the path that scored it
+    ("driver" or "cogroup"), why it took the cogroup (``None``,
+    "unsorted", "postings bound", or "docs bound" when the postings fit
+    but the docs of the buckets they touch do not), the postings rows
+    fetched into the driver, and the buckets scored there and how many
+    of those the bucket-row cache served (0 on the cogroup path)."""
+
+    path: str = "driver"
+    reason: str | None = None
+    postings_rows: int = 0
+    buckets: int = 0
+    cached_buckets: int = 0
+
+
 class Searcher:
     """Warm query session over one index — holds the terms/postings/docs
     DataFrames (and optionally caches the small ones) so repeated queries
@@ -284,8 +323,18 @@ class Searcher:
     segments, so the kernel needs no merge logic). ``dead`` is the
     view's live-docs mask (bucket -> sorted bucket-local deleted docids):
     every query and the driver-local path apply it, nothing else does.
-    The df cache and the mask belong to this searcher alone — a view
-    that adds segments or deletes gets a new searcher."""
+
+    Two driver caches serve the bounded top-k path of ``search``: the df
+    of every term queried so far, and the ``bucket_stats`` rows of the
+    buckets recent queries touched (one row per bucket: ``bucket_docs``
+    doclens plus the packed filter columns). The bucket-row cache drops
+    its least recently used rows beyond DRIVER_MAX_POSTINGS doc slots
+    (DRIVER_MAX_POSTINGS // bucket_docs rows), so it never holds more
+    than one over-bound query could fetch; with ``cache=True`` Spark
+    also caches the whole table, so those rows are held twice. Both
+    caches and the mask belong to this searcher alone — a view that
+    adds segments or deletes gets a new searcher. ``last_trace`` is the
+    QueryTrace of the latest ``search``."""
 
     def __init__(self, spark: SparkSession, meta: IndexMeta, cache: bool = True,
                  dead: dict[int, np.ndarray] | None = None):
@@ -315,6 +364,8 @@ class Searcher:
         # actually queried, never the vocabulary) — the term-dictionary-
         # in-heap part of SolrIndexSearcher; absent terms cache df=0
         self._df_cache: dict[str, int] = {}
+        self._bucket_rows: dict[int, pd.DataFrame] = {}
+        self.last_trace: QueryTrace | None = None
         self._local_norms: tuple | None = None
         self._local_postings: dict[str, tuple] = {}
 
@@ -344,15 +395,10 @@ class Searcher:
             for bucket, locs in self.dead.items():
                 live[bucket * B + locs] = False
             self._local_norms = (dl, live)
-        rows = (
-            self.postings.filter(F.col("term").isin(toks))
-            .select("term", "bucket", "df", "doc_bytes", "tf_bytes")
-            .toPandas()
-        )
+        rows = self._fetch_postings(toks)
         for t in toks:
             grp = rows[rows["term"] == t].sort_values("bucket")
             self._local_postings[t] = _decode_rows(grp, B)[1:]
-        _lookup_df(self.terms, toks, self._df_cache)
         return {
             "terms": len(toks),
             "postings": int(sum(len(v[0]) for v in self._local_postings.values())),
@@ -399,12 +445,208 @@ class Searcher:
         return [(int(d), float(v)) for d, v in zip(cand, sc)]
 
     def search(self, q: str | Query, k: int = 10, prune: bool = True,
-               with_fields: bool = False, unsorted: bool = False) -> DataFrame:
-        return search(self.spark, self.meta, q, k, prune, with_fields,
-                      _frames=(self.terms, self.postings, self.docs,
-                               self.bucket_stats),
-                      _df_cache=self._df_cache, unsorted=unsorted,
-                      _dead=self.dead)
+               with_fields: bool = False, unsorted: bool = False,
+               _count_only: bool = False) -> DataFrame:
+        """Top-k BM25 search. Returns DataFrame(docid, score) ordered by
+        (score desc, docid asc), limited to k; with_fields joins doc columns.
+        ``unsorted=True`` (and the internal ``_count_only``, hit_count's
+        path) returns ALL scored matches UNSORTED and UNLIMITED — the
+        component mode for candidate generation and score folds, where the
+        downstream join/union discards order anyway. A sorted k=n_docs call
+        would compile to orderBy().limit(n_docs) — a corpus-sized
+        TakeOrderedAndProject funneling every match through ONE task at
+        scale; unsorted mode keeps the result distributed.
+
+        A sorted query whose postings and touched buckets' doc slots fit
+        DRIVER_MAX_POSTINGS is scored in the driver: one pruned postings
+        scan, the kernel per touched bucket, the global top k, and a
+        local result relation. Unsorted and over-bound queries run the
+        postings x docs cogroup. Both paths call one _bucket_kernel
+        closure on the same per-bucket frames, so their results are
+        equal."""
+        query = parse(q) if isinstance(q, str) else q
+        spark, meta = self.spark, self.meta
+        full = unsorted or _count_only
+        if full:
+            # no global sort → pruning must keep every match; k only feeds
+            # the block-max WAND heap, so pin it corpus-sized (no-op prune)
+            k = meta.n_docs
+        if query.multiterm:
+            raise ValueError(
+                "kernel.search does not expand multi-term clauses "
+                "(prefix/wildcard/fuzzy); use engine.gate_search"
+            )
+        if query.phrases:
+            # Positionless postings cannot verify adjacency; the engine layer
+            # (engine.gate_search / engine.gate_phrase) combines this kernel
+            # with positional postings. Failing loudly beats silently
+            # scoring a phrase query as a bag of nothing.
+            raise ValueError(
+                "kernel.search does not execute phrase clauses; use "
+                "engine.gate_search (mixed) or engine.gate_phrase (pure phrase)"
+            )
+        trace = self.last_trace = QueryTrace("cogroup", "unsorted") if full else QueryTrace()
+        weights = dict(query.scoring)
+
+        def _empty():
+            # limit(0) folds to an empty LocalRelation: no Spark job
+            e = spark.createDataFrame([], RESULT_SCHEMA).limit(0)
+            if with_fields:
+                e = e.join(self.docs.drop("bucket", "doclen"), "docid", "left")
+            return e
+
+        all_terms = sorted(set(weights) | query.prohibited)
+        if not weights or k <= 0:
+            return _empty()
+        rows = None  # the query's postings rows, once fetched into the driver
+        # a df-cold query learns df from its postings scan; df <= n_docs
+        # bounds that scan before any df is known
+        cold = any(t not in self._df_cache for t in all_terms)
+        if cold and not full and sum(
+            self._df_cache.get(t, meta.n_docs) for t in all_terms
+        ) <= DRIVER_MAX_POSTINGS:
+            rows = self._fetch_postings(all_terms)
+            trace.postings_rows = len(rows)
+        df_map = _lookup_df(self.terms, all_terms, self._df_cache)
+        groups = [list(g) for g in (query.required_groups or [])]
+        if groups:
+            # a MUST group dies only if EVERY alternative is absent
+            for g in groups:
+                if all(df_map.get(t, 0) == 0 for t in g):
+                    return _empty()
+        else:
+            for t in query.required:
+                if df_map.get(t, 0) == 0:
+                    return _empty()
+        present = [t for t in weights if df_map.get(t, 0) > 0]
+        if not present:
+            return _empty()
+        # clause weight = multiplicity x boost (SolrQueryParser term^boost)
+        weights = {t: weights[t] * query.boosts.get(t, 1.0) for t in present}
+        idfs = {t: float(idf_fn(df_map[t], meta.n_docs)) for t in present}
+        needed = sorted(set(present) | {t for t in query.prohibited if df_map.get(t, 0) > 0})
+        if rows is None and not full and sum(df_map[t] for t in needed) <= DRIVER_MAX_POSTINGS:
+            rows = self._fetch_postings(needed)
+            trace.postings_rows = len(rows)
+
+        use_packed = self.bucket_stats is not None and all(
+            f in _PACKED_FILTER_COLS for f in query.filters
+        )
+        doc_cols = None
+        if not use_packed:
+            available = set(self.docs.columns)
+            unknown = sorted(set(query.filters) - available)
+            if unknown:
+                # e.g. 'source': a gate-table alias the engine layer remaps
+                # onto 'repo' — fail with the valid field list instead of an
+                # opaque AnalysisException from the select below
+                raise ValueError(
+                    f"unknown filter field(s) {unknown}; docs table columns: "
+                    f"{sorted(available)}"
+                )
+            doc_cols = ["docid", "bucket", "doclen"] + sorted(query.filters)
+        kern = _bucket_kernel(
+            idfs, weights, sorted(query.required), sorted(query.prohibited),
+            {f: list(v) for f, v in query.filters.items()},
+            meta.avgdl, meta.bucket_docs, k,
+            # the conjunction-prune path assumes plain AND over required
+            # terms; MUST groups need the general matching mask
+            prune and not groups,
+            packed=use_packed,
+            required_groups=groups or None,
+            dead=self.dead,
+        )
+        reason = "postings bound"
+        if rows is not None and (
+            rows["df"].sum() + rows["bucket"].nunique() * meta.bucket_docs
+            > DRIVER_MAX_POSTINGS
+        ):
+            # the postings fit, the docs of the buckets they touch do not
+            rows, reason = None, "docs bound"
+        if rows is not None:
+            top = self._score_in_driver(kern, rows, doc_cols, k)
+            if len(top) == 0:
+                return _empty()
+            # a pandas frame becomes a local relation: no job on collect
+            out = spark.createDataFrame(top, RESULT_SCHEMA)
+        else:
+            if not full:
+                trace.path, trace.reason = "cogroup", reason
+            postings = self.postings.where(F.col("term").isin(needed))
+            # prune the docs scan to buckets that contain at least one query term
+            buckets = F.broadcast(postings.select("bucket").distinct())
+            if use_packed:
+                # packed per-bucket arrays: the cogroup's docs side is one row
+                # per touched bucket, not one row per doc (indexer stage 2b)
+                doc_stats = self.bucket_stats.join(buckets, "bucket", "left_semi")
+            else:
+                doc_stats = self.docs.select(*doc_cols).join(buckets, "bucket", "left_semi")
+            scored = (
+                postings.groupby("bucket")
+                .cogroup(doc_stats.groupby("bucket"))
+                .applyInPandas(kern, RESULT_SCHEMA)
+            )
+            if full:
+                if with_fields and not _count_only:
+                    # loud guard: the unsorted component frame deliberately
+                    # skips the stored-fields join (it feeds other components,
+                    # not a result page) — silently returning (docid, score)
+                    # would break callers expecting doc columns
+                    raise ValueError("with_fields is not supported with unsorted=True")
+                return scored
+            out = scored.orderBy(F.desc("score"), F.asc("docid")).limit(k)
+        if with_fields:
+            docs_full = self.docs.drop("bucket", "doclen")
+            out = (
+                out.join(docs_full, "docid", "left")
+                .orderBy(F.desc("score"), F.asc("docid"))
+            )
+        return out
+
+    def _fetch_postings(self, terms: list[str]) -> pd.DataFrame:
+        """Every postings row of ``terms``, in the driver (one pruned
+        scan). A row carries its (term, bucket) df and a term's df is the
+        sum of its rows (indexer.write_term_stats), so the scan also
+        fills the df cache exactly; absent terms get 0."""
+        rows = self.postings.where(F.col("term").isin(terms)).toPandas()
+        df_sums = rows.groupby("term")["df"].sum()
+        self._df_cache.update({t: int(df_sums.get(t, 0)) for t in terms})
+        return rows
+
+    def _score_in_driver(self, kern, rows: pd.DataFrame, doc_cols: list[str] | None,
+                         k: int) -> pd.DataFrame:
+        """Stages 2-3 in the driver: ``kern`` on each touched bucket's
+        postings rows and the docs frame the cogroup would hand it —
+        the cached bucket_stats row (packed, ``doc_cols`` None) or the
+        bucket's ``doc_cols`` rows — then the global top k over every
+        bucket's winners."""
+        post = {int(b): g for b, g in rows.groupby("bucket")}
+        buckets = sorted(post)
+        self.last_trace.buckets = len(buckets)
+        if doc_cols is None:
+            docs = self._bucket_rows
+            missing = [b for b in buckets if b not in docs]
+            self.last_trace.cached_buckets = len(buckets) - len(missing)
+            if missing:
+                got = self.bucket_stats.where(F.col("bucket").isin(missing)).toPandas()
+                docs.update({int(b): g for b, g in got.groupby("bucket")})
+            for b in buckets:  # most recently used last
+                docs[b] = docs.pop(b, pd.DataFrame())
+            # a query's buckets fit the cap (the docs bound), so only
+            # older rows are dropped
+            cap = max(1, DRIVER_MAX_POSTINGS // self.meta.bucket_docs)
+            for b in list(docs)[:max(0, len(docs) - cap)]:
+                del docs[b]
+        else:
+            got = self.docs.select(*doc_cols).where(F.col("bucket").isin(buckets)).toPandas()
+            docs = {int(b): g for b, g in got.groupby("bucket")}
+        parts = [kern(post[b], docs.get(b, pd.DataFrame())) for b in buckets]
+        docid, score = top_k(
+            np.concatenate([p["docid"].to_numpy(np.int64) for p in parts]),
+            np.concatenate([p["score"].to_numpy(np.float64) for p in parts]),
+            k,
+        )
+        return pd.DataFrame({"docid": docid, "score": score})
 
 
 def search(
@@ -414,141 +656,13 @@ def search(
     k: int = 10,
     prune: bool = True,
     with_fields: bool = False,
-    _frames: tuple | None = None,
-    _count_only: bool = False,
-    _df_cache: dict | None = None,
     unsorted: bool = False,
-    _dead: dict | None = None,
+    _count_only: bool = False,
 ) -> DataFrame:
-    """Top-k BM25 search. Returns DataFrame(docid, score) ordered by
-    (score desc, docid asc), limited to k; with_fields joins doc columns.
-    ``unsorted=True`` (and the internal ``_count_only``, hit_count's
-    path) returns ALL scored matches UNSORTED and UNLIMITED — the
-    component mode for candidate generation and score folds, where the
-    downstream join/union discards order anyway. A sorted k=n_docs call
-    would compile to orderBy().limit(n_docs) — a corpus-sized
-    TakeOrderedAndProject funneling every match through ONE task at
-    scale; unsorted mode keeps the result distributed."""
-    query = parse(q) if isinstance(q, str) else q
-    if unsorted or _count_only:
-        # no global sort → pruning must keep every match; k only feeds
-        # the block-max WAND heap, so pin it corpus-sized (no-op prune)
-        k = meta.n_docs
-    if query.multiterm:
-        raise ValueError(
-            "kernel.search does not expand multi-term clauses "
-            "(prefix/wildcard/fuzzy); use engine.gate_search"
-        )
-    if query.phrases:
-        # Positionless postings cannot verify adjacency; the engine layer
-        # (engine.gate_search / engine.gate_phrase) combines this kernel
-        # with positional postings. Failing loudly beats silently
-        # scoring a phrase query as a bag of nothing.
-        raise ValueError(
-            "kernel.search does not execute phrase clauses; use "
-            "engine.gate_search (mixed) or engine.gate_phrase (pure phrase)"
-        )
-    weights = dict(query.scoring)
-
-    def _empty():
-        e = spark.createDataFrame([], RESULT_SCHEMA)
-        if with_fields:
-            docs_full = docs_df.drop("bucket", "doclen")
-            e = e.join(docs_full, "docid", "left")
-        return e
-    if _frames:
-        terms_df, postings_df, docs_df = _frames[0], _frames[1], _frames[2]
-        bstats_df = _frames[3] if len(_frames) > 3 else None
-    else:
-        terms_df = spark.read.parquet(meta.terms_path)
-        postings_df = spark.read.parquet(meta.postings_path)
-        docs_df = spark.read.parquet(meta.docs_path)
-        bstats_df = (
-            spark.read.parquet(meta.bucket_stats_path)
-            if _done(meta.bucket_stats_path)
-            else None
-        )
-
-    all_terms = sorted(set(weights) | query.prohibited)
-    if not weights:
-        return _empty()
-    df_map = _lookup_df(terms_df, all_terms, _df_cache)
-    groups = [list(g) for g in (query.required_groups or [])]
-    if groups:
-        # a MUST group dies only if EVERY alternative is absent
-        for g in groups:
-            if all(df_map.get(t, 0) == 0 for t in g):
-                return _empty()
-    else:
-        for t in query.required:
-            if df_map.get(t, 0) == 0:
-                return _empty()
-    present = [t for t in weights if df_map.get(t, 0) > 0]
-    if not present:
-        return _empty()
-    # clause weight = multiplicity x boost (SolrQueryParser term^boost)
-    weights = {t: weights[t] * query.boosts.get(t, 1.0) for t in present}
-    idfs = {t: float(idf_fn(df_map[t], meta.n_docs)) for t in present}
-    needed = sorted(set(present) | {t for t in query.prohibited if df_map.get(t, 0) > 0})
-
-    postings = postings_df.where(F.col("term").isin(needed))
-    # prune the docs scan to buckets that contain at least one query term
-    buckets = postings.select("bucket").distinct()
-    use_packed = bstats_df is not None and all(
-        f in _PACKED_FILTER_COLS for f in query.filters
+    """One query on a fresh uncached Searcher (see Searcher.search)."""
+    return Searcher(spark, meta, cache=False).search(
+        q, k, prune, with_fields, unsorted, _count_only
     )
-    if use_packed:
-        # packed per-bucket arrays: the cogroup's docs side is one row
-        # per touched bucket, not one row per doc (indexer stage 2b)
-        doc_stats = bstats_df.join(F.broadcast(buckets), "bucket", "left_semi")
-    else:
-        available = set(docs_df.columns)
-        unknown = sorted(set(query.filters) - available)
-        if unknown:
-            # e.g. 'source': a gate-table alias the engine layer remaps
-            # onto 'repo' — fail with the valid field list instead of an
-            # opaque AnalysisException from the select below
-            raise ValueError(
-                f"unknown filter field(s) {unknown}; docs table columns: "
-                f"{sorted(available)}"
-            )
-        doc_cols = ["docid", "bucket", "doclen"] + sorted(query.filters)
-        doc_stats = docs_df.select(*doc_cols).join(
-            F.broadcast(buckets), "bucket", "left_semi"
-        )
-
-    kern = _bucket_kernel(
-        idfs, weights, sorted(query.required), sorted(query.prohibited),
-        {f: list(v) for f, v in query.filters.items()},
-        meta.avgdl, meta.bucket_docs, k,
-        # the conjunction-prune path assumes plain AND over required
-        # terms; MUST groups need the general matching mask
-        prune and not groups,
-        packed=use_packed,
-        required_groups=groups or None,
-        dead=_dead,
-    )
-    scored = (
-        postings.groupby("bucket")
-        .cogroup(doc_stats.groupby("bucket"))
-        .applyInPandas(kern, RESULT_SCHEMA)
-    )
-    if _count_only or unsorted:
-        if with_fields and not _count_only:
-            # loud guard: the unsorted component frame deliberately skips
-            # the stored-fields join (it feeds other components, not a
-            # result page) — silently returning (docid, score) would break
-            # callers expecting doc columns
-            raise ValueError("with_fields is not supported with unsorted=True")
-        return scored
-    out = scored.orderBy(F.desc("score"), F.asc("docid")).limit(k)
-    if with_fields:
-        docs_full = docs_df.drop("bucket", "doclen")
-        out = (
-            out.join(docs_full, "docid", "left")
-            .orderBy(F.desc("score"), F.asc("docid"))
-        )
-    return out
 
 
 def hit_count(
@@ -646,7 +760,7 @@ def term_contributions(spark: SparkSession, meta: IndexMeta, terms: list[str]) -
     df_map = {r["term"]: int(r["df"]) for r in stats}
     present = [t for t in terms if df_map.get(t, 0) > 0]
     if not present:
-        return spark.createDataFrame([], "docid bigint, term string, contrib double")
+        return spark.createDataFrame([], "docid bigint, term string, contrib double").limit(0)
     idf_rows = [(t, float(idf_fn(df_map[t], meta.n_docs))) for t in present]
     idf_df = spark.createDataFrame(idf_rows, "term string, idf double")
     rows = postings_rows(spark, meta, present)

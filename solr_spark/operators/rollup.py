@@ -129,7 +129,7 @@ def facet_queries(df: DataFrame, queries: dict[str, Column]) -> DataFrame:
     computed in ONE aggregation pass (conditional counts), not one scan
     per query."""
     if not queries:
-        return df.sparkSession.createDataFrame([], "bucket string, count bigint")
+        return df.sparkSession.createDataFrame([], "bucket string, count bigint").limit(0)
     aggs = [
         F.count(F.when(cond, 1)).alias(f"__q{i}")
         for i, (_name, cond) in enumerate(sorted(queries.items()))

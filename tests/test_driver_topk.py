@@ -1,0 +1,260 @@
+"""Bounded sorted top-k queries are scored in the driver.
+
+A sorted query whose work — postings plus the doc slots of the buckets
+they touch — fits ``kernel.DRIVER_MAX_POSTINGS`` runs one pruned postings
+scan and the same ``_bucket_kernel`` closure per touched
+bucket in the driver; forcing the bound to 0 sends it through the
+postings x docs cogroup instead. Both must return equal (docid, score)
+lists for every query shape, and the driver path must cost one Spark job.
+"""
+
+import pytest
+from pyspark.sql import functions as F
+
+from solr_spark import kernel
+from solr_spark.corpus import RARE1
+from solr_spark.kernel import Searcher
+from solr_spark.qparser import expand_synonyms, parse
+from solr_spark.segments import add_segment, delete_by_keys, open_base
+from test_index_search import QUERIES
+
+MUST_GROUP = expand_synonyms(parse("+license int"), {"license": ["public"]})
+
+
+def _hits(df):
+    return [(int(r["docid"]), float(r["score"])) for r in df.collect()]
+
+
+def _phys(df) -> str:
+    return str(df._jdf.queryExecution().executedPlan().toString())
+
+
+def _jobs(spark, tag, fn):
+    """(fn(), number of Spark jobs fn ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(tag))
+
+
+def _both(monkeypatch, searcher, q, k=10, prune=True):
+    """(driver hits, cogroup hits) of one query on one searcher."""
+    drv = _hits(searcher.search(q, k, prune))
+    drv_trace = searcher.last_trace
+    with monkeypatch.context() as m:
+        m.setattr(kernel, "DRIVER_MAX_POSTINGS", 0)
+        cog = _hits(searcher.search(q, k, prune))
+        cog_trace = searcher.last_trace
+    if drv:
+        assert drv_trace.path == "driver" and drv_trace.reason is None, q
+        assert (cog_trace.path, cog_trace.reason) == ("cogroup", "postings bound"), q
+    return drv, cog
+
+
+@pytest.fixture(scope="module")
+def searcher(spark, small_index):
+    return Searcher(spark, small_index)
+
+
+def _path_filter_query(searcher):
+    """``license`` restricted to its top hits' paths: ``path`` has no
+    packed column, so the docs side is the per-row docs table."""
+    top = [d for d, _ in _hits(searcher.search("license", 5))]
+    paths = [r["path"] for r in searcher.docs.where(F.col("docid").isin(top)).collect()]
+    return " ".join(f"path:{p}" for p in sorted(paths)) + " license"
+
+
+@pytest.mark.parametrize("q", QUERIES + [
+    "lang:java license",        # packed bucket_stats docs side
+    "path",                     # per-row docs side (query built below)
+    "license^2 int",            # boosts
+    "int^3 -public license",    # boost + prohibited
+    "must_group",               # SynonymQuery in a MUST clause
+])
+def test_driver_equals_cogroup(monkeypatch, searcher, q):
+    if q == "path":
+        q = _path_filter_query(searcher)
+    elif q == "must_group":
+        assert MUST_GROUP.required_groups
+        q = MUST_GROUP
+    drv, cog = _both(monkeypatch, searcher, q)
+    assert drv == cog, q
+
+
+@pytest.mark.parametrize("k", [0, 1, 10, 1000])
+def test_driver_equals_cogroup_any_k(monkeypatch, searcher, k):
+    for q in ["license int", f"+license +{RARE1}", "lang:java license"]:
+        drv, cog = _both(monkeypatch, searcher, q, k)
+        assert drv == cog, (q, k)
+        if k == 0:
+            assert drv == []
+    # k beyond the match count returns every match
+    every = _hits(searcher.search(f"+license +{RARE1}", unsorted=True))
+    assert 0 < len(every) < 1000
+    assert sorted(every, key=lambda h: (-h[1], h[0])) == _both(
+        monkeypatch, searcher, f"+license +{RARE1}", 1000)[0]
+
+
+def test_driver_equals_cogroup_on_score_ties(monkeypatch, spark, tmp_path):
+    """The tie corpus of test_wand_prune_exact_on_score_ties: 300 docs in
+    one bucket, all but one with the same score."""
+    from solr_spark.indexer import build_index
+
+    rows = [("r", f"f{i:05d}", "0", "en", "spark spark" if i == 150 else "spark x")
+            for i in range(300)]
+    docs = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string"
+    )
+    meta = build_index(spark, docs, str(tmp_path / "tieidx"), bucket_docs=512,
+                       num_partitions=1)
+    s = Searcher(spark, meta, cache=False)
+    for k in (2, 5, 130):
+        for prune in (True, False):
+            drv, cog = _both(monkeypatch, s, "spark", k, prune)
+            assert drv == cog, (k, prune)
+            assert len(drv) == k
+
+
+def test_driver_equals_cogroup_on_view_with_deletes(monkeypatch, spark, small_corpus,
+                                                    tmp_path_factory):
+    """The live-docs mask is applied inside the kernel on both paths."""
+    docs = spark.read.parquet(small_corpus)
+    out = str(tmp_path_factory.mktemp("drvview") / "view")
+    view = open_base(spark, docs.filter(F.col("path") < "src/d8"), out,
+                     bucket_docs=128, num_partitions=4)
+    view = add_segment(spark, view, docs.filter(F.col("path") >= "src/d8"), out,
+                       num_partitions=4)
+    victims = [d for d, _ in _hits(view.search(spark, "license int", k=3))]
+    seg_docs = spark.read.parquet(*[m.docs_path for m in view.segments])
+    keys = [tuple(r[c] for c in view.id_cols)
+            for r in seg_docs.where(F.col("docid").isin(victims)).collect()]
+    dview = delete_by_keys(view, keys)
+    s = dview.searcher(spark)
+    assert s.dead
+    for q in ["license", "license int", "+int +license", "lang:java license",
+              "int -public"]:
+        drv, cog = _both(monkeypatch, s, q)
+        assert drv == cog, q
+        assert not {d for d, _ in drv} & set(victims), q
+
+
+def test_with_fields_equal_on_both_paths(monkeypatch, searcher):
+    drv = [tuple(r) for r in searcher.search("license int", 5, with_fields=True).collect()]
+    with monkeypatch.context() as m:
+        m.setattr(kernel, "DRIVER_MAX_POSTINGS", 0)
+        cog = [tuple(r) for r in searcher.search("license int", 5, with_fields=True).collect()]
+    assert drv == cog and len(drv) == 5
+
+
+def test_bounded_query_is_one_spark_job(spark, small_index):
+    s = Searcher(spark, small_index)
+    s.search("license int", 10).collect()  # fills the df and bucket-row caches
+    (rows, plan), n = _jobs(spark, "drv-warm", lambda: (
+        lambda df: (_hits(df), _phys(df)))(s.search("license int", 10)))
+    assert n == 1 and len(rows) == 10
+    assert "LocalTableScan" in plan
+    assert "FlatMapCoGroupsInPandas" not in plan and "TakeOrdered" not in plan
+    assert s.last_trace.path == "driver"
+    assert s.last_trace.postings_rows > 0 and s.last_trace.buckets > 0
+    # df-cold, under the bound: the one postings scan also yields df
+    assert "public" not in s._df_cache
+    rows, n = _jobs(spark, "drv-cold", lambda: _hits(s.search("public", 10)))
+    assert n == 1 and rows
+    assert s._df_cache["public"] > 0
+
+
+def test_cold_bound_over_limit_uses_exact_df(monkeypatch, spark, small_index):
+    """A df-cold query bounds its scan by n_docs per term; past the limit
+    it looks df up, and still scores in the driver if its exact work —
+    postings plus touched buckets x bucket_docs — fits."""
+    s = Searcher(spark, small_index, cache=False)
+    # a term in one bucket: its work stays under the n_docs pre-bound
+    term, df = s.postings.groupBy("term").agg(
+        F.count("*").alias("n"), F.sum("df").alias("df")
+    ).where("n = 1").orderBy("df", "term").select("term", "df").first()
+    work = df + small_index.bucket_docs
+    assert 0 < df < work < small_index.n_docs
+    monkeypatch.setattr(kernel, "DRIVER_MAX_POSTINGS", work)
+    drv, n = _jobs(spark, "exact-df", lambda: _hits(s.search(term, 10)))
+    assert s.last_trace.path == "driver" and drv
+    assert n == 3  # df lookup, postings scan, bucket_stats rows
+    for bound, reason in ((work - 1, "docs bound"), (df - 1, "postings bound")):
+        monkeypatch.setattr(kernel, "DRIVER_MAX_POSTINGS", bound)
+        assert _hits(s.search(term, 10)) == drv
+        assert (s.last_trace.path, s.last_trace.reason) == ("cogroup", reason)
+
+
+def test_per_row_docs_side_is_bounded(monkeypatch, searcher):
+    """A ``path:`` query fetches its touched buckets' docs rows into the
+    driver; when those doc slots overflow the bound (its postings still
+    fit), it runs the cogroup with equal results."""
+    q = _path_filter_query(searcher)
+    drv = _hits(searcher.search(q, 10))
+    assert searcher.last_trace.path == "driver" and drv
+    postings = searcher._df_cache["license"]
+    with monkeypatch.context() as m:
+        m.setattr(kernel, "DRIVER_MAX_POSTINGS", postings)
+        assert _hits(searcher.search(q, 10)) == drv
+        assert (searcher.last_trace.path, searcher.last_trace.reason) == (
+            "cogroup", "docs bound")
+
+
+def test_bucket_row_cache_is_capped(monkeypatch, spark, tmp_path):
+    """The bucket-row cache keeps at most DRIVER_MAX_POSTINGS //
+    bucket_docs rows, dropping the least recently used."""
+    from solr_spark.indexer import build_index
+
+    words = ["apple", "banana", "cherry"]  # one word per 4-doc bucket
+    rows = [("r", f"f{i:05d}", "0", "en", f"{words[i // 4]} x") for i in range(12)]
+    docs = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string"
+    )
+    meta = build_index(spark, docs, str(tmp_path / "lru"), bucket_docs=4,
+                       num_partitions=1)
+    s = Searcher(spark, meta, cache=False)
+    want = {}
+    with monkeypatch.context() as m:
+        m.setattr(kernel, "DRIVER_MAX_POSTINGS", 0)
+        for w in words:
+            want[w] = _hits(s.search(w, 10))
+    # one query's work is 4 postings + 4 doc slots; the cap is 2 buckets
+    monkeypatch.setattr(kernel, "DRIVER_MAX_POSTINGS", 8)
+    for i, w in enumerate(words + words[:1]):
+        assert _hits(s.search(w, 10)) == want[w] and len(want[w]) == 4
+        assert s.last_trace.path == "driver" and s.last_trace.buckets == 1
+        assert len(s._bucket_rows) == min(i + 1, 2)
+    # apple's row was dropped by the third query, so its second query
+    # missed; a third one hits
+    assert s.last_trace.cached_buckets == 0
+    s.search("apple", 10)
+    assert s.last_trace.cached_buckets == 1
+
+
+def test_absent_term_collects_nothing_without_a_job(spark, small_index):
+    s = Searcher(spark, small_index)
+    assert _hits(s.search("zz_never_indexed", 10)) == []  # caches df = 0
+    rows, n = _jobs(spark, "absent", lambda: _hits(s.search("zz_never_indexed", 10)))
+    assert rows == [] and n == 0
+
+
+def test_trace_reasons(monkeypatch, searcher):
+    searcher.search("license", 10)
+    assert searcher.last_trace.path == "driver"
+    with monkeypatch.context() as m:
+        m.setattr(kernel, "DRIVER_MAX_POSTINGS", 0)
+        searcher.search("license", 10)
+        assert (searcher.last_trace.path, searcher.last_trace.reason) == (
+            "cogroup", "postings bound")
+    searcher.search("license", unsorted=True)
+    assert (searcher.last_trace.path, searcher.last_trace.reason) == ("cogroup", "unsorted")
+
+
+def test_unsorted_returns_every_match(searcher, small_index):
+    every = _hits(searcher.search("license int", unsorted=True))
+    top_all = _hits(searcher.search("license int", small_index.n_docs))
+    assert searcher.last_trace.path == "driver"
+    assert len(every) == len(top_all) > 10
+    assert set(every) == set(top_all)

@@ -6,7 +6,9 @@ TakeOrderedAndProject — a single-task funnel at scale whose ordering the
 downstream docs join discards anyway. Since round 3 they use the
 kernel's unsorted component mode; these tests pin that the compiled
 physical plan carries no TakeOrdered/GlobalLimit node at all in
-full-result mode (and still does when an explicit user-k is given).
+full-result mode. An explicit user-k returns the ordered head of the
+result: chosen in the driver for a bounded query, by TakeOrdered past
+kernel.DRIVER_MAX_POSTINGS.
 """
 
 import pytest
@@ -34,10 +36,28 @@ def test_incremental_full_result_is_not_a_takeordered_funnel(incr_frames):
     assert "GlobalLimit" not in phys
 
 
-def test_incremental_explicit_k_still_takeorders(incr_frames):
-    _, topk = incr_frames
-    assert "TakeOrderedAndProject" in _phys(topk)
-    assert topk.count() <= 5
+def test_incremental_explicit_k_still_takeorders(monkeypatch, spark, incr_frames):
+    """An explicit k returns at most k rows, the head of the full result
+    in (score desc, doc_id asc) order, never the unsorted component
+    frame. A bounded query picks its k rows in the driver (the plan
+    scans a local relation); an over-bound one still TakeOrders."""
+    from solr_spark import kernel
+    from solr_spark.engine import gate_incremental
+
+    full, topk = incr_frames
+    assert "FlatMapCoGroupsInPandas" not in _phys(topk)
+
+    def ordered(df):
+        return sorted(((r["doc_id"], r["score"]) for r in df.collect()),
+                      key=lambda h: (-h[1], h[0]))
+
+    got, every = ordered(topk), ordered(full)
+    assert len(got) == min(5, len(every))
+    assert got == every[: len(got)]
+    monkeypatch.setattr(kernel, "DRIVER_MAX_POSTINGS", 0)
+    forced = gate_incremental(spark, SF, "spark merge", splits=(200, 400), k=5)
+    assert "TakeOrderedAndProject" in _phys(forced)
+    assert ordered(forced) == got
 
 
 def test_incremental_full_equals_sorted_full(spark, incr_frames):
