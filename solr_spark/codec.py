@@ -212,7 +212,7 @@ class FlatEncodedRuns:
     """Columnar form of MANY encoded posting runs — flat arrays indexed by
     run (plus contiguous byte streams with per-run offset vectors), the
     zero-copy shape the Arrow encode stage turns straight into a
-    RecordBatch (indexer._encode_partition_arrow) without creating one
+    RecordBatch (indexer._encode_sorted) without creating one
     Python object per run."""
 
     lens: np.ndarray          # int64[G] df per run

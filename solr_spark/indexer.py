@@ -22,7 +22,8 @@ ordinary parquet tables:
                      checkpointed under _stage/runs
                 [3b] range exchange of the COMPACT runs on (term, bucket),
                      JVM sort by (term, bucket, min_docid), then a
-                     vectorized decode→merge→re-encode pass producing
+                     vectorized decode pass feeding the ONE postings
+                     writer (_encode_sorted, which segment merge shares):
                      delta+varint blocks with block-max metadata —
                      byte-identical to encoding raw triples, at a shuffle
                      cost of ~postings bytes instead of ~raw-triple rows.
@@ -35,6 +36,7 @@ ordinary parquet tables:
                 than the reference's default per-shard IDF
                 (solr/core/src/java/org/apache/solr/search/stats/ExactStatsCache.java:61)
   [5] meta.json config + global stats + per-stage & per-partition lineage
+                (_finish_meta, which segment merge shares)
 
 Every stage is idempotent (mode=overwrite) and gated on its _SUCCESS
 marker, so a killed build resumes without recomputing completed stages —
@@ -493,249 +495,150 @@ def _binary_stream(pa, arr):
     return data, offs
 
 
-def _merge_runs_arrow(bucket_docs: int, enc_acc=None, chunk_rows: int = 256 * 1024):
+# Postings per encode pass of the shared writer (_encode_sorted): bounds
+# its memory whatever the partition size, and amortizes the numpy pass.
+ENCODE_CHUNK_POSTINGS = 512 * 1024
+
+
+def _encode_sorted(chunks, bucket_docs: int, enc_acc, chunk_postings: int):
+    """The one streaming postings writer, shared by build stage 3b and
+    segment merge (the reference flushes and merges segments through one
+    postings consumer; lucene/core/.../index/FreqProxTermsWriter).
+
+    ``chunks`` yields ``(term, bucket, n, docid, tf, doclen)``: per row a
+    term (pa.Array), bucket and posting count n, then the rows' postings
+    back to back. Rows arrive sorted by (term, bucket, docid), so each
+    (term, bucket) group is contiguous and in docid order. Once
+    ``chunk_postings`` postings are pending, their complete groups are
+    encoded in ONE codec.encode_posting_runs_flat pass and emitted as a
+    POSTINGS_SCHEMA batch assembled zero-copy (_flat_to_batch). The last
+    group may continue in the next chunk, so it is held back as the
+    carry: one (term, bucket) group, at most bucket_docs postings. Groups
+    never straddle an encode pass, so the output bytes do not depend on
+    the chunking. ``chunk_postings`` is ENCODE_CHUNK_POSTINGS as the driver
+    read it when it built the closure: a Python worker re-imports this
+    module with its own globals."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from .codec import encode_posting_runs_flat
+
+    def encode(parts, final: bool):
+        term = pa.concat_arrays([p[0] for p in parts])
+        bucket, n, docid, tf, doclen = (
+            np.concatenate([p[i] for p in parts]) for i in range(1, 6)
+        )
+        R = len(bucket)
+        change = np.ones(R, dtype=bool)
+        if R > 1:
+            change[1:] = pc.not_equal(
+                term.slice(1), term.slice(0, R - 1)
+            ).to_numpy(zero_copy_only=False) | (bucket[1:] != bucket[:-1])
+        gstarts = np.flatnonzero(change)
+        vstarts = np.zeros(R + 1, dtype=np.int64)
+        np.cumsum(n, out=vstarts[1:])
+        carry = None
+        if not final:
+            R, gstarts = int(gstarts[-1]), gstarts[:-1]
+            v = vstarts[R]
+            carry = (term.slice(R), bucket[R:], n[R:], docid[v:], tf[v:], doclen[v:])
+            docid, tf, doclen = docid[:v], tf[:v], doclen[:v]
+        if not len(gstarts):
+            return None, carry
+        f = encode_posting_runs_flat(
+            docid, tf, doclen,
+            vstarts[gstarts], vstarts[np.append(gstarts[1:], R)],
+            bucket[gstarts] * bucket_docs,
+        )
+        if enc_acc is not None:
+            enc_acc.add({0: (len(gstarts), int(f.stream_d.size + f.stream_t.size))})
+        return _flat_to_batch(pa, pc.take(term, pa.array(gstarts)), bucket[gstarts], f), carry
+
+    pend, pend_n = [], 0
+    for chunk in chunks:
+        pend.append(chunk)
+        pend_n += len(chunk[3])
+        if pend_n >= chunk_postings:
+            out, carry = encode(pend, final=False)
+            pend, pend_n = [carry], len(carry[3])
+            if out is not None:
+                yield out
+    if pend:
+        out, _ = encode(pend, final=True)
+        if out is not None:
+            yield out
+
+
+def _merge_runs_arrow(bucket_docs: int, enc_acc=None):
     """mapInArrow closure for stage 3b: the reduce side of the sorted-merge
     shuffle. Input rows are partial runs (PARTIAL_RUNS_SCHEMA) range-
     partitioned on (term, bucket) and sorted by (term, bucket, min_docid)
     within the partition, so each (term, bucket) group's runs arrive
     contiguous and in docid order (map tasks own disjoint docid ranges,
-    so runs never interleave). The whole chunk is decoded in ONE
-    vectorized varint pass (the three streams are back-to-back in the
-    Arrow value buffers), docids are rebased with a segmented cumsum, and
-    the merged runs are re-encoded with codec.encode_posting_runs_flat —
-    byte-identical to encoding the raw triples directly, at a shuffle
-    cost of ~compressed-postings bytes instead of ~raw-triple rows."""
+    so runs never interleave). A partial run is always a whole row, so
+    each Arrow batch decodes exactly on its own: ONE varint pass per
+    stream (a batch's runs are back-to-back in the Arrow value buffers)
+    and a segmented cumsum to rebase docids. The runs then reach the
+    shared writer as rows of n = df postings — byte-identical to encoding
+    the raw triples, at a shuffle cost of ~compressed-postings bytes
+    instead of ~raw-triple rows."""
     import pyarrow as pa
 
-    from .codec import encode_posting_runs_flat, varint_decode
+    from .codec import varint_decode
 
-    def fn(batches):
-        import pyarrow.compute as pc
+    chunk = ENCODE_CHUNK_POSTINGS
 
-        carry: tuple | None = None  # (term pa.Array, bucket, min_docid, df, cf, 3×(data, offs))
-        pend: list = []
-        pend_rows = 0
-
-        def drain(final: bool):
-            nonlocal carry, pend, pend_rows
-            if carry is None and not pend:
-                return None
-            col = lambda b, name: b.column(b.schema.get_field_index(name))  # noqa: E731
-            term = pa.concat_arrays(
-                ([carry[0]] if carry is not None else [])
-                + [col(b, "term") for b in pend]
+    def runs(b):
+        d, tf, dl = (
+            varint_decode(data[offs[0] : offs[-1]]).astype(np.int64)
+            for data, offs in (
+                _binary_stream(pa, b[c]) for c in ("doc_bytes", "tf_bytes", "dl_bytes")
             )
-            nums = {}
-            for i, name in enumerate(("bucket", "min_docid", "df", "cf")):
-                nums[name] = np.concatenate(
-                    ([carry[1 + i]] if carry is not None else [])
-                    + [col(b, name).to_numpy() for b in pend]
-                ) if len(term) else np.empty(0, np.int64)
-            bins = {}
-            for j, name in enumerate(("doc_bytes", "tf_bytes", "dl_bytes")):
-                parts = ([carry[5 + j]] if carry is not None else []) + [
-                    _binary_stream(pa, col(b, name)) for b in pend
-                ]
-                datas = [d[o[0] : o[-1]] for d, o in parts]
-                offs = [o - o[0] for _, o in parts]
-                base = np.cumsum([0] + [d.size for d in datas[:-1]])
-                bins[name] = (
-                    np.concatenate(datas) if datas else np.empty(0, np.uint8),
-                    np.concatenate(
-                        [offs[0]] + [o[1:] + b for o, b in zip(offs[1:], base[1:])]
-                    ) if datas else np.zeros(1, np.int64),
-                )
-            pend, pend_rows = [], 0
-            carry = None
-            R = len(term)
-            if R == 0:
-                return None
-            bucket = nums["bucket"]
-            change = np.empty(R, dtype=bool)
-            change[0] = True
-            if R > 1:
-                tdiff = pc.not_equal(term.slice(1), term.slice(0, R - 1)).to_numpy(
-                    zero_copy_only=False
-                )
-                change[1:] = tdiff | (bucket[1:] != bucket[:-1])
-            gstarts = np.flatnonzero(change)
-            if not final:
-                if len(gstarts) <= 1:
-                    carry = (
-                        term, bucket, nums["min_docid"], nums["df"], nums["cf"],
-                        bins["doc_bytes"], bins["tf_bytes"], bins["dl_bytes"],
-                    )
-                    return None
-                cut = int(gstarts[-1])
-                cut_bins = {}
-                for name in ("doc_bytes", "tf_bytes", "dl_bytes"):
-                    d, o = bins[name]
-                    cut_bins[name] = (d[: o[cut]], o[: cut + 1])
-                    bins[name] = (d[o[cut] :], o[cut:] - o[cut])
-                carry = (
-                    term.slice(cut), bucket[cut:], nums["min_docid"][cut:],
-                    nums["df"][cut:], nums["cf"][cut:],
-                    bins["doc_bytes"], bins["tf_bytes"], bins["dl_bytes"],
-                )
-                term = term.slice(0, cut)
-                bucket = bucket[:cut]
-                for name in ("df", "cf", "min_docid"):
-                    nums[name] = nums[name][:cut]
-                bins = cut_bins
-                gstarts = gstarts[:-1]
-                R = cut
-            df = nums["df"]
-            vstarts = np.zeros(R + 1, dtype=np.int64)
-            np.cumsum(df, out=vstarts[1:])
+        )
+        # within run r the deltas chain from base_r + first_delta; one
+        # global cumsum plus a per-run correction (repeated across the
+        # run) rebases all runs at once
+        bucket, df = b["bucket"].to_numpy(), b["df"].to_numpy()
+        vstarts = np.zeros(len(df) + 1, dtype=np.int64)
+        np.cumsum(df, out=vstarts[1:])
+        c = np.cumsum(d)
+        first_abs = d[vstarts[:-1]] + bucket * bucket_docs
+        docid = c + np.repeat(first_abs - c[vstarts[:-1]], df)
+        return b["term"], bucket, df, docid, tf + 1, dl
 
-            d_data, _ = bins["doc_bytes"]
-            t_data, _ = bins["tf_bytes"]
-            l_data, _ = bins["dl_bytes"]
-            d = varint_decode(d_data).astype(np.int64)
-            tfs = varint_decode(t_data).astype(np.int64) + 1
-            dls = varint_decode(l_data).astype(np.int64)
-            # segmented docid reconstruction: within run r the deltas
-            # chain from base_r + first_delta; a single global cumsum plus
-            # a per-run correction (repeated across the run) rebases all
-            # runs at once
-            first_abs = d[vstarts[:-1]] + bucket * bucket_docs
-            c = np.cumsum(d)
-            corr = np.repeat(first_abs - c[vstarts[:-1]], df)
-            docids = c + corr
-
-            gends = np.append(gstarts[1:], R)
-            f = encode_posting_runs_flat(
-                docids, tfs, dls,
-                vstarts[gstarts], vstarts[gends],
-                bucket[gstarts] * bucket_docs,
-            )
-            if enc_acc is not None:
-                enc_acc.add(
-                    {0: (len(gstarts), int(f.stream_d.size + f.stream_t.size))}
-                )
-            return _flat_to_batch(
-                pa, pc.take(term, pa.array(gstarts)), bucket[gstarts], f
-            )
-
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            pend.append(b)
-            pend_rows += b.num_rows
-            if pend_rows + (len(carry[1]) if carry is not None else 0) >= chunk_rows:
-                out = drain(final=False)
-                if out is not None:
-                    yield out
-        out = drain(final=True)
-        if out is not None:
-            yield out
-
-    return fn
+    return lambda batches: _encode_sorted(map(runs, batches), bucket_docs, enc_acc, chunk)
 
 
-def _encode_partition_arrow(bucket_docs: int, enc_acc=None, chunk_rows: int = 512 * 1024):
-    """mapInArrow closure: vectorized posting-run encoder over PRESORTED
-    input — the upstream exchange must be
+def _encode_partition_arrow(bucket_docs: int, enc_acc=None):
+    """mapInArrow closure for segment merge: raw (term, docid, tf, doclen,
+    bucket) triples, PRESORTED by the upstream
     ``repartitionByRange(P, "term", "bucket").sortWithinPartitions("term",
-    "bucket", "docid")`` so the sort happens JVM-side (Tungsten radix
-    sort, parallel and spill-capable) and groups arrive contiguous.
+    "bucket", "docid")`` (the sort happens JVM-side: Tungsten radix sort,
+    parallel and spill-capable), reach the shared writer as rows of n = 1
+    posting."""
+    chunk = ENCODE_CHUNK_POSTINGS
 
-    The Python side is then a pure streaming group-detector + ONE numpy
-    varint pass per ~chunk_rows rows (codec.encode_posting_runs_flat),
-    with the output RecordBatch assembled zero-copy from the flat arrays:
-    the binary columns reuse the contiguous byte streams via
-    Array.from_buffers and the block-metadata list columns reuse the flat
-    block vectors via ListArray.from_arrays — no per-run Python objects
-    at all (the reference's DocumentsWriterPerThread flush writes its
-    postings in one sequential pass the same way;
-    lucene/core/.../index/FreqProxTermsWriter). Memory stays bounded at
-    ~chunk_rows triples regardless of partition size; the carried tail
-    (an unfinished (term,bucket) group) is ≤ bucket_docs rows by
-    construction."""
-    import pyarrow as pa
+    def triples(b):
+        return (
+            b["term"], b["bucket"].to_numpy(), np.ones(b.num_rows, dtype=np.int64),
+            b["docid"].to_numpy(), b["tf"].to_numpy(), b["doclen"].to_numpy(),
+        )
 
-    from .codec import encode_posting_runs_flat
+    return lambda batches: _encode_sorted(map(triples, batches), bucket_docs, enc_acc, chunk)
 
-    def fn(batches):
-        import pyarrow.compute as pc
 
-        carry: tuple | None = None  # (term pa.Array, docid, tf, doclen, bucket)
-        pend: list = []
-        pend_rows = 0
-
-        def drain(final: bool):
-            nonlocal carry, pend, pend_rows
-            if carry is None and not pend:
-                return None
-            terms_parts = ([carry[0]] if carry is not None else []) + [
-                b.column(b.schema.get_field_index("term")) for b in pend
-            ]
-            np_parts = lambda name, i: ([carry[i]] if carry is not None else []) + [  # noqa: E731
-                b.column(b.schema.get_field_index(name)).to_numpy() for b in pend
-            ]
-            term = pa.concat_arrays([a.combine_chunks() if isinstance(a, pa.ChunkedArray) else a for a in terms_parts])
-            docid = np.concatenate(np_parts("docid", 1)) if terms_parts else np.empty(0, np.int64)
-            tf = np.concatenate(np_parts("tf", 2)) if terms_parts else np.empty(0, np.int64)
-            doclen = np.concatenate(np_parts("doclen", 3)) if terms_parts else np.empty(0, np.int64)
-            bucket = np.concatenate(np_parts("bucket", 4)) if terms_parts else np.empty(0, np.int64)
-            pend, pend_rows = [], 0
-            carry = None
-            n = len(term)
-            if n == 0:
-                return None
-            change = np.empty(n, dtype=bool)
-            change[0] = True
-            if n > 1:
-                tdiff = pc.not_equal(term.slice(1), term.slice(0, n - 1)).to_numpy(
-                    zero_copy_only=False
-                )
-                change[1:] = tdiff | (bucket[1:] != bucket[:-1])
-            starts = np.flatnonzero(change)
-            if not final:
-                if len(starts) <= 1:
-                    # one unfinished group: keep accumulating (≤ bucket_docs rows)
-                    carry = (term, docid, tf, doclen, bucket)
-                    return None
-                cut = int(starts[-1])
-                carry = (
-                    term.slice(cut),
-                    docid[cut:], tf[cut:], doclen[cut:], bucket[cut:],
-                )
-                term = term.slice(0, cut)
-                docid, tf, doclen, bucket = (
-                    docid[:cut], tf[:cut], doclen[:cut], bucket[:cut],
-                )
-                starts = starts[:-1]
-                n = cut
-            ends = np.append(starts[1:], n)
-            f = encode_posting_runs_flat(
-                docid.astype(np.int64), tf.astype(np.int64),
-                doclen.astype(np.int64), starts, ends,
-                bucket[starts] * bucket_docs,
-            )
-            if enc_acc is not None:
-                enc_acc.add(
-                    {0: (len(starts), int(f.stream_d.size + f.stream_t.size))}
-                )
-            return _flat_to_batch(
-                pa, pc.take(term, pa.array(starts, type=pa.int64())),
-                bucket[starts], f,
-            )
-
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            pend.append(b)
-            pend_rows += b.num_rows
-            if pend_rows + (len(carry[1]) if carry is not None else 0) >= chunk_rows:
-                out = drain(final=False)
-                if out is not None:
-                    yield out
-        out = drain(final=True)
-        if out is not None:
-            yield out
-
-    return fn
+def write_docs(docs_df: DataFrame, out_path: str, P: int) -> None:
+    """Stage 2 writer: the doc table range-laid on docid, so each output
+    file covers a contiguous docid (= bucket) span and the per-query bucket
+    semi-join in kernel.search prunes whole files via row-group min/max
+    (shared by build_index and segment merge so the layout cannot
+    desynchronize)."""
+    (
+        docs_df.repartitionByRange(max(P // 2, 1), "docid")
+        .sortWithinPartitions("docid")
+        .write.mode("overwrite")
+        .parquet(out_path)
+    )
 
 
 def write_bucket_stats(docs_df: DataFrame, out_path: str, P: int,
@@ -846,6 +749,36 @@ def _accumulators_exact(spark: SparkSession) -> bool:
     return master.startswith("local") and max_failures <= 1 and not speculation
 
 
+def _finish_meta(spark: SparkSession, meta: IndexMeta, enc_acc) -> IndexMeta:
+    """Stage 5, shared by build_index and segment merge: vocabulary and
+    skew stats from the terms table, postings rows/bytes, then the atomic
+    meta.json write. Rows/bytes come from the writer's accumulator when
+    this run encoded the postings (``enc_acc`` is not None) and the runtime
+    runs each task exactly once — the rule stage 1 follows for its stats
+    (_accumulators_exact) — and otherwise from one aggregation over the
+    postings table."""
+    t0 = time.time()
+    ts = spark.read.parquet(meta.terms_path).agg(
+        F.count("*").alias("n_terms"), F.max("df").alias("max_df"), F.avg("df").alias("mean_df")
+    ).collect()[0]
+    meta.n_terms = int(ts["n_terms"] or 0)
+    meta.skew_max_df = int(ts["max_df"] or 0)
+    meta.skew_ratio = float(ts["max_df"] / ts["mean_df"]) if ts["mean_df"] else 0.0
+    acc = enc_acc.value if enc_acc is not None and _accumulators_exact(spark) else {}
+    if acc:
+        meta.postings_rows, meta.postings_bytes = (int(x) for x in acc[0])
+    else:
+        pb = spark.read.parquet(meta.postings_path).agg(
+            F.count("*").alias("rows"),
+            F.sum(F.length("doc_bytes") + F.length("tf_bytes")).alias("bytes"),
+        ).collect()[0]
+        meta.postings_rows = int(pb["rows"] or 0)
+        meta.postings_bytes = int(pb["bytes"] or 0)
+    meta.stages["meta"] = round(time.time() - t0, 3)
+    meta.save()
+    return meta
+
+
 def build_index(
     spark: SparkSession,
     docs: DataFrame,
@@ -936,25 +869,13 @@ def build_index(
         else {}
     )
     if not pstats:
-        metrics = stage.where(F.col("kind") == 2).collect()
-        pstats = {}
-        legacy_pids = []
-        for r in metrics:
-            parts = str(r["term"]).split(_META_SEP)
-            sd = int(parts[1]) if len(parts) > 1 else -1
-            pstats[int(r["pid"])] = (int(r["local_idx"]), sd, int(r["tf"]), int(r["doclen"]))
-            if sd < 0:
-                legacy_pids.append(int(r["pid"]))
-        if legacy_pids:  # staging written by an older build: one extra scan
-            sums = (
-                stage.where(F.col("kind") == 0)
-                .groupBy("pid")
-                .agg(F.sum("doclen").alias("s"))
-                .collect()
+        pstats = {
+            int(r["pid"]): (
+                int(r["local_idx"]), int(r["term"].split(_META_SEP)[1]),
+                int(r["tf"]), int(r["doclen"]),
             )
-            for r in sums:
-                nd, _sd, np_, ms = pstats[int(r["pid"])]
-                pstats[int(r["pid"])] = (nd, int(r["s"] or 0), np_, ms)
+            for r in stage.where(F.col("kind") == 2).collect()
+        }
     offsets, acc = {}, docid_base
     for pid in sorted(pstats):
         offsets[pid] = acc
@@ -980,7 +901,7 @@ def build_index(
         meta_parts = F.split(F.col("term"), _META_SEP)
         n_ids = len(id_cols)
         id_out = [meta_parts.getItem(i).alias(c) for i, c in enumerate(id_cols)]
-        (
+        write_docs(
             stage.where(F.col("kind") == 0)
             .join(offs_df, "pid")
             .withColumn("docid", F.col("offset") + F.col("local_idx"))
@@ -992,14 +913,8 @@ def build_index(
                 meta_parts.getItem(n_ids).alias("lang"),
                 meta_parts.getItem(n_ids + 1).alias("sha256"),
                 "doclen",
-            )
-            # range layout on docid: each output file covers a contiguous
-            # docid (=bucket) span, so the per-query bucket semi-join in
-            # kernel.search prunes whole files via row-group min/max
-            .repartitionByRange(max(P // 2, 1), "docid")
-            .sortWithinPartitions("docid")
-            .write.mode("overwrite")
-            .parquet(docs_out)
+            ),
+            docs_out, P,
         )
     meta.stages["doc_stats"] = round(time.time() - t0, 3)
 
@@ -1076,37 +991,15 @@ def build_index(
         )
     meta.stages["postings"] = round(time.time() - t0, 3)
 
-    postings = spark.read.parquet(post_out)
-
     # ---- stage 4: term_stats ----------------------------------------------
     t0 = time.time()
     terms_out = os.path.join(out_dir, "terms")
     if not (resume and _done(terms_out)):
-        write_term_stats(postings, terms_out, P)
+        write_term_stats(spark.read.parquet(post_out), terms_out, P)
     meta.stages["term_stats"] = round(time.time() - t0, 3)
 
     # ---- stage 5: meta + lineage -------------------------------------------
-    t0 = time.time()
-    ts = spark.read.parquet(terms_out).agg(
-        F.count("*").alias("n_terms"), F.max("df").alias("max_df"), F.avg("df").alias("mean_df")
-    ).collect()[0]
-    meta.n_terms = int(ts["n_terms"] or 0)
-    meta.skew_max_df = int(ts["max_df"] or 0)
-    meta.skew_ratio = float(ts["max_df"] / ts["mean_df"]) if ts["mean_df"] else 0.0
-    if ran_stage3 and enc_acc.value:
-        rows_bytes = enc_acc.value.get(0, (0, 0))
-        meta.postings_rows = int(rows_bytes[0])
-        meta.postings_bytes = int(rows_bytes[1])
-    else:
-        pb = postings.agg(
-            F.count("*").alias("rows"),
-            F.sum(F.length("doc_bytes") + F.length("tf_bytes")).alias("bytes"),
-        ).collect()[0]
-        meta.postings_rows = int(pb["rows"] or 0)
-        meta.postings_bytes = int(pb["bytes"] or 0)
-    meta.stages["meta"] = round(time.time() - t0, 3)
-    meta.save()
-    return meta
+    return _finish_meta(spark, meta, enc_acc if ran_stage3 else None)
 
 
 def verify_content_integrity(

@@ -5,6 +5,7 @@
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from solr_spark.indexer import build_index
@@ -24,9 +25,21 @@ def _postings_fingerprint(spark, meta):
     )
 
 
-def test_parallelism_invariance(spark, small_corpus, small_index, tmp_path):
+@pytest.mark.parametrize("chunk", [None, 7], ids=["default_chunk", "tiny_chunk"])
+def test_parallelism_invariance(
+    spark, small_corpus, small_index, tmp_path, monkeypatch, chunk
+):
     """Index built at 2 partitions == index built at 4 partitions:
-    identical docids, identical encoded postings bytes, identical top-k."""
+    identical docids, identical encoded postings bytes, identical top-k.
+    A merge_segments run over the 2-partition build writes the same
+    postings again. With a 7-posting chunk the shared postings writer
+    holds back (carries) a group at almost every encode pass, in build
+    stage 3b and in the merge alike, and the bytes must not move."""
+    from solr_spark import indexer
+    from solr_spark.segments import IndexView, merge_segments
+
+    if chunk is not None:
+        monkeypatch.setattr(indexer, "ENCODE_CHUNK_POSTINGS", chunk)
     out2 = str(tmp_path / "idx2")
     meta2 = build_index(
         spark, spark.read.parquet(small_corpus), out2, bucket_docs=256, num_partitions=2
@@ -38,6 +51,11 @@ def test_parallelism_invariance(spark, small_corpus, small_index, tmp_path):
     b = _postings_fingerprint(spark, meta2)
     assert len(a) == len(b)
     assert (a.to_numpy() == b.to_numpy()).all()
+
+    merged = merge_segments(
+        spark, IndexView(segments=[meta2]), str(tmp_path / "merged"), num_partitions=3
+    )
+    assert _postings_fingerprint(spark, merged.segments[0]).equals(a)
 
     for q in ["license", "+int +license", "getFooBar license"]:
         ra = [(r["docid"], r["score"]) for r in search(spark, small_index, q, k=10).collect()]
@@ -79,6 +97,26 @@ def test_resume_noop_when_complete(spark, small_corpus, small_index):
     )
     assert meta.n_docs == small_index.n_docs
     assert meta.stages == small_index.stages
+
+
+def test_meta_without_accumulators_equals_default(
+    spark, small_corpus, small_index, tmp_path, monkeypatch
+):
+    """On a runtime that may retry tasks, a build trusts no accumulator:
+    stage 1 re-derives its per-partition stats from the staged metrics
+    rows and stage 5 aggregates the postings table. Its meta equals the
+    accumulator build's."""
+    from solr_spark import indexer
+
+    assert indexer._accumulators_exact(spark)  # small_index used them
+    monkeypatch.setattr(indexer, "_accumulators_exact", lambda spark: False)
+    meta = build_index(
+        spark, spark.read.parquet(small_corpus), str(tmp_path / "idx"),
+        bucket_docs=256, num_partitions=4,
+    )
+    fields = ("n_docs", "sum_doclen", "postings_rows", "postings_bytes")
+    assert [getattr(meta, f) for f in fields] == [getattr(small_index, f) for f in fields]
+    assert [p["n_docs"] for p in meta.lineage] == [p["n_docs"] for p in small_index.lineage]
 
 
 def test_meta_save_torn_write_keeps_previous(tmp_path, monkeypatch):
@@ -197,10 +235,12 @@ def test_incremental_segments_equal_full_rebuild(spark, small_corpus, tmp_path_f
 
 def test_merge_reclaims_deletes_equals_live_rebuild(spark, small_corpus, tmp_path_factory):
     """Segment merge: base + delta + delete-mask merged into one segment
-    is BIT-IDENTICAL (docids, scores, doc table) to a from-scratch
-    rebuild over the surviving documents — Lucene merge semantics:
-    deleted docs leave postings AND statistics; and the merge never
-    touches content (pure postings-level remap + re-encode)."""
+    is BIT-IDENTICAL to a from-scratch rebuild over the surviving
+    documents — docids, scores, every table row for row (docs, postings
+    with their block metadata, bucket_stats, terms, terms_rev,
+    terms_ngrams) and the meta counts. Lucene merge semantics: deleted
+    docs leave postings AND statistics; and the merge never touches
+    content (pure postings-level remap + re-encode)."""
     from pyspark.sql import functions as F
 
     from solr_spark.indexer import build_index
@@ -242,8 +282,23 @@ def test_merge_reclaims_deletes_equals_live_rebuild(spark, small_corpus, tmp_pat
     fresh_dir = str(tmp_path_factory.mktemp("mrgfresh") / "idx")
     fresh = build_index(spark, live, fresh_dir, bucket_docs=128, num_partitions=4)
 
-    assert m.n_docs == fresh.n_docs and m.sum_doclen == fresh.sum_doclen
-    assert m.n_terms == fresh.n_terms
+    for f in (
+        "n_docs", "sum_doclen", "avgdl", "n_terms", "postings_rows",
+        "postings_bytes", "skew_max_df", "skew_ratio",
+    ):
+        assert getattr(m, f) == getattr(fresh, f), f
+    for table, keys in (
+        ("postings", ["term", "bucket"]),
+        ("bucket_stats", ["bucket"]),
+        ("terms", ["term"]),
+        ("terms_rev", ["rev"]),
+        ("terms_ngrams", ["gram", "term", "tlen"]),
+    ):
+        rows = lambda meta: (  # noqa: E731
+            spark.read.parquet(os.path.join(meta.out_dir, table))
+            .orderBy(*keys).collect()
+        )
+        assert rows(m) == rows(fresh), table
 
     md = {
         r["docid"]: (r["repo"], r["path"], r["sha256"], r["doclen"])
