@@ -70,7 +70,7 @@ def main() -> None:
     default_bound = kernel.DRIVER_MAX_POSTINGS
 
     searcher = kernel.Searcher(spark, meta)
-    by_df = (searcher.terms.groupBy("term").agg(F.sum("df").alias("df"))
+    by_df = (spark.read.parquet(meta.terms_path).select("term", "df")
              .orderBy(F.desc("df")).toPandas())
     hot = by_df["term"].tolist()
     queries = []

@@ -309,41 +309,3 @@ def encode_posting_runs_flat(
         block_max_tf=block_max_tf,
         block_min_dl=block_min_dl,
     )
-
-
-def encode_posting_runs(
-    docids: np.ndarray,
-    tfs: np.ndarray,
-    doclens: np.ndarray,
-    starts: np.ndarray,
-    ends: np.ndarray,
-    bases: np.ndarray,
-) -> list[EncodedPostings]:
-    """Per-run object form of encode_posting_runs_flat (bit-identical to
-    encode_postings run by run) — kept for callers that want one
-    EncodedPostings per run; the hot build path consumes the flat form
-    directly."""
-    n = docids.size
-    G = starts.size
-    if n == 0 or G == 0:
-        return []
-    f = encode_posting_runs_flat(docids, tfs, doclens, starts, ends, bases)
-    db = f.stream_d.tobytes()
-    tb = f.stream_t.tobytes()
-    out: list[EncodedPostings] = []
-    for g in range(G):
-        b0, b1 = f.cum_nb[g], f.cum_nb[g + 1]
-        out.append(
-            EncodedPostings(
-                df=int(f.lens[g]),
-                cf=int(f.cfs[g]),
-                doc_bytes=db[f.run_offs_d[g] : f.run_offs_d[g + 1]],
-                tf_bytes=tb[f.run_offs_t[g] : f.run_offs_t[g + 1]],
-                block_offs_doc=f.offs_d[b0:b1],
-                block_offs_tf=f.offs_t[b0:b1],
-                block_last=f.block_last[b0:b1],
-                block_max_tf=f.block_max_tf[b0:b1],
-                block_min_dl=f.block_min_dl[b0:b1],
-            )
-        )
-    return out

@@ -150,27 +150,23 @@ def fuzzy_candidates(
     generator behind fuzzy queries and spellcheck.
 
     Accelerated path (the engine's alternative to Lucene's Levenshtein
-    automata, DirectSpellChecker/FuzzyQuery): when the index carries the
-    bigram inverted dictionary (IndexMeta.terms_ngrams_path) and the
-    pattern is long enough for the q-gram bound to be non-degenerate
-    (|p| >= 2k+2 so every admissible term must share >= 1 bigram),
-    candidates come from a pushed-down IN scan of the pattern's bigrams
-    + an occurrence-count filter shared >= max(|t|,|p|)-1-2k (Ukkonen's
+    automata, DirectSpellChecker/FuzzyQuery): when the pattern is long
+    enough for the q-gram bound to be non-degenerate (|p| >= 2k+2 so
+    every admissible term must share >= 1 bigram), candidates come from
+    the bigram inverted dictionary (IndexMeta.terms_ngrams_path): a
+    pushed-down IN scan of the pattern's bigrams + an occurrence-count
+    filter shared >= max(|t|,|p|)-1-2k (Ukkonen's
     q-gram lower bound, q=2 — counts can only overcount the multiset
     intersection, so the prefilter admits a superset and the final
     Levenshtein filter keeps results IDENTICAL to the scan). Cost ∝
-    terms sharing a pattern bigram, not vocabulary. Short patterns and
-    older indexes fall back to the length-prefiltered dictionary scan."""
-    import os as _os
-
+    terms sharing a pattern bigram, not vocabulary. Short patterns take
+    the length-prefiltered dictionary scan."""
     terms_df = spark.read.parquet(meta.terms_path)
     p = pattern.lower()
     plen = len(p)
     dist_ok = F.levenshtein(F.col("term"), F.lit(p)) <= max_edits
     len_ok = F.abs(F.length("term") - F.lit(plen)) <= max_edits
-    if plen >= 2 * max_edits + 2 and _os.path.exists(
-        _os.path.join(meta.terms_ngrams_path, "_SUCCESS")
-    ):
+    if plen >= 2 * max_edits + 2:
         grams = sorted({p[i : i + 2] for i in range(plen - 1)})
         cand = (
             spark.read.parquet(meta.terms_ngrams_path)
@@ -202,7 +198,6 @@ def _multiterm_component(
     never a driver-side term list."""
     from .kernel import postings_rows
 
-    import os as _os
     import re as _re
 
     terms_df = spark.read.parquet(meta.terms_path)
@@ -218,12 +213,10 @@ def _multiterm_component(
         # StartsWith predicate pushes into the parquet scan of the
         # rev-sorted table (min/max row-group pruning), so scan cost is
         # ∝ matching-suffix range, not ∝ vocabulary — then the full LIKE
-        # verifies. Indexes without the table fall back to the LIKE scan.
+        # verifies.
         wc_parts = _re.split(r"[*?]", mt.pattern)
         tail = wc_parts[-1]
-        if not wc_parts[0] and tail and _os.path.exists(
-            _os.path.join(meta.terms_rev_path, "_SUCCESS")
-        ):
+        if not wc_parts[0] and tail:
             rev_df = spark.read.parquet(meta.terms_rev_path)
             expanded = (
                 rev_df.filter(F.col("rev").startswith(tail[::-1]))
@@ -232,8 +225,8 @@ def _multiterm_component(
             )
     else:  # fuzzy: classic Levenshtein (documented deviation from
         # Lucene's Damerau-Levenshtein, see qparser.MultiTermClause) —
-        # candidates via the bigram-dictionary prefilter when available
-        # (fuzzy_candidates; results identical to the dictionary scan)
+        # candidates via fuzzy_candidates (results identical to the
+        # dictionary scan)
         expanded = fuzzy_candidates(
             spark, meta, mt.pattern, mt.max_edits
         ).select("term")
@@ -626,11 +619,10 @@ def gate_edismax(
     candidates. Scoring/accumulation order is pinned (clauses in query
     order, then pf2 pairs, then pf3 trigrams) and mirrored literally by
     oracle.edismax_oracle_sql."""
-    import math
-
     from .analysis import analyze_query
     from .kernel import term_contributions
     from .qparser import calculate_mm
+    from .scoring import idf
 
     empty = spark.createDataFrame([], "doc_id bigint, score double").limit(0)
     meta = ensure_index(spark, sf_dir)
@@ -649,7 +641,6 @@ def gate_edismax(
         "docid", *[F.col(f"`{t}`").alias(tcol_name[t]) for t in uniq]
     )
     docs = spark.read.parquet(meta.docs_path).select("docid", "repo", "doclen")
-    n = float(meta.n_docs)
     use_source = qf_source != 0.0
     src_idf: dict[str, float] = {}
     if use_source:
@@ -659,9 +650,7 @@ def gate_edismax(
             .agg(F.count(F.lit(1)).alias("dfs"))
             .collect()
         )
-        for r in src_counts:
-            dfs = float(r["dfs"])
-            src_idf[r["repo"]] = math.log(1.0 + (n - dfs + 0.5) / (dfs + 0.5))
+        src_idf = {r["repo"]: float(idf(r["dfs"], meta.n_docs)) for r in src_counts}
     cand = wide.select("docid")
     if src_idf:
         cand = cand.unionByName(
@@ -753,6 +742,7 @@ def gate_mlt(
 
     from .analysis import tokenize_lists
     from .kernel import term_contributions
+    from .operators.graph import more_like_this_terms
 
     empty = spark.createDataFrame([], "doc_id bigint, score double").limit(0)
     meta = ensure_index(spark, sf_dir)
@@ -768,25 +758,16 @@ def gate_mlt(
     tfs = Counter(tokenize_lists(pd.Series([seed[0]["text"] or ""])).iloc[0])
     if not tfs:
         return empty
-    seed_df = spark.createDataFrame(
-        [(t, int(c)) for t, c in sorted(tfs.items())], "term string, tf bigint"
+    # the seed's term vector as (docid, term, tf) triples of docid 0
+    seed = spark.createDataFrame(
+        [(0, t, int(c)) for t, c in sorted(tfs.items())],
+        "docid bigint, term string, tf bigint",
     )
     stats = spark.read.parquet(meta.terms_path).where(
         F.col("term").isin(sorted(tfs))
     )
-    n = float(meta.n_docs)
-    mlt_score = F.col("tf").cast("double") * F.log(
-        F.lit(1.0) + (F.lit(n) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
-    picked = (
-        stats.join(F.broadcast(seed_df), "term")
-        .filter(F.col("df") >= min_df)
-        .withColumn("mlt_score", mlt_score)
-        .orderBy(F.desc("mlt_score"), F.asc("term"))
-        .limit(top_terms)
-        .collect()
-    )
-    terms = [r["term"] for r in picked]
+    picked = more_like_this_terms(seed, stats, 0, meta.n_docs, top_terms, min_df)
+    terms = [r["term"] for r in picked.collect()]
     if not terms:
         return empty
     contribs = term_contributions(spark, meta, terms)
@@ -956,9 +937,9 @@ def gate_spellcheck(
     — Lucene DirectSpellChecker over the live term dictionary; classic
     edit distance is the documented deviation from its Damerau variant,
     same as the fuzzy-query path). Distributed shape: candidates via
-    the bigram-dictionary prefilter when the index carries it
-    (engine.fuzzy_candidates — cost ∝ terms sharing a pattern bigram),
-    else one length-prefiltered scan of the terms table
+    the bigram-dictionary prefilter (engine.fuzzy_candidates — cost ∝
+    terms sharing a pattern bigram), or, for a pattern too short for
+    it, one length-prefiltered scan of the terms table
     (vocabulary-sized, not corpus-sized)."""
     meta = ensure_index(spark, sf_dir)
     d = F.levenshtein(F.col("term"), F.lit(word.lower()))

@@ -452,10 +452,10 @@ def docfreq_frame(spark, meta, terms: list[str]):
 def idf_frame(spark, meta, terms: list[str]):
     """idf(field,term): the exact BM25 idf the scorer uses
     (scoring.idf — ln(1 + (N - df + 0.5) / (df + 0.5)))."""
-    n = float(meta.n_docs)
-    d = F.col("docfreq").cast("double")
+    from solr_spark.scoring import idf_col
+
     return docfreq_frame(spark, meta, terms).withColumn(
-        "idf", F.log((F.lit(n) - d + F.lit(0.5)) / (d + F.lit(0.5)) + F.lit(1.0))
+        "idf", idf_col(F.col("docfreq").cast("double"), meta.n_docs)
     )
 
 

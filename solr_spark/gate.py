@@ -1240,7 +1240,7 @@ _PRIORITY = [
     "t_stem_vocab", "fts_stemmed_porter", "fts_stemmed_french",
     "e_knn_ivfpq", "e_knn_ivf", "e_knn_brute",
     # positions.py gained the int32-offset guards — re-evidence the
-    # positional plans that ride _per_row_varints/_binary_cells
+    # positional plans that ride _per_row_varints/_binary_stream
     "fts_phrase", "fts_payload_score", "fts_payload_check",
     "fts_proximity_pos", "fts_synonyms_index",
     # -- (c) representatives: one strong row per family ------------------

@@ -124,9 +124,7 @@ class IndexMeta:
     @property
     def terms_rev_path(self) -> str:
         """Reversed term dictionary (sorted by reversed term) — the
-        leading-wildcard prefix-scan table; may be absent on indexes
-        built before it existed (query path falls back to a LIKE
-        scan)."""
+        leading-wildcard prefix-scan table."""
         return os.path.join(self.out_dir, "terms_rev")
 
     @property
@@ -137,7 +135,7 @@ class IndexMeta:
         to Lucene's Levenshtein automata): a pattern's candidates are
         the terms sharing >= max(|t|,|p|)-1-2k bigrams, a pushed-down
         IN scan + count instead of a full-vocabulary edit-distance
-        pass. May be absent on older indexes (fallback: scan)."""
+        pass."""
         return os.path.join(self.out_dir, "terms_ngrams")
 
     def save(self) -> None:
@@ -485,13 +483,19 @@ def _partial_runs_fn(offsets: dict, bucket_docs: int):
 def _binary_stream(pa, arr):
     """View an Arrow binary column as (data uint8, row byte offsets int64)
     — row i's bytes are data[offs[i]:offs[i+1]]; rows are back-to-back,
-    so data[offs[0]:offs[-1]] is the concatenation of every row."""
+    so data[offs[0]:offs[-1]] is the concatenation of every row, and a
+    sorted column's run [s:e) concatenates by pure slicing."""
     arr = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
+    if not pa.types.is_binary(arr.type):
+        # large_binary carries int64 offsets; reading them as int32 below
+        # would silently produce garbage slices — fail loudly instead.
+        raise TypeError(f"expected binary (int32-offset) column, got {arr.type}")
     bufs = arr.buffers()
     offs = np.frombuffer(bufs[1], dtype=np.int32)[
         arr.offset : arr.offset + len(arr) + 1
     ].astype(np.int64)
-    data = np.frombuffer(bufs[2], dtype=np.uint8)
+    # an all-empty column has no data buffer
+    data = np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] is not None else np.empty(0, np.uint8)
     return data, offs
 
 
@@ -993,9 +997,11 @@ def build_index(
 
     # ---- stage 4: term_stats ----------------------------------------------
     t0 = time.time()
-    terms_out = os.path.join(out_dir, "terms")
-    if not (resume and _done(terms_out)):
-        write_term_stats(spark.read.parquet(post_out), terms_out, P)
+    # write_term_stats writes terms, terms_rev, terms_ngrams in turn:
+    # the stage is done only when all three are
+    vocab = (meta.terms_path, meta.terms_rev_path, meta.terms_ngrams_path)
+    if not (resume and all(_done(p) for p in vocab)):
+        write_term_stats(spark.read.parquet(post_out), meta.terms_path, P)
     meta.stages["term_stats"] = round(time.time() - t0, 3)
 
     # ---- stage 5: meta + lineage -------------------------------------------

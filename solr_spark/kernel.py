@@ -24,11 +24,16 @@ driver, as the reference scores a shard inside its searcher process:
 stage 1's rows are collected (one Spark job, which also yields the exact
 df), the same kernel runs per touched bucket on the same docs frames,
 scoring.top_k picks the global winners, and the result is a local
-relation. Unsorted/count-only queries, which need every match to
-stay distributed, and over-bound ones run the cogroup above.
+relation. Unsorted queries, which need every match to stay
+distributed, and over-bound ones run the cogroup above.
+
+Stage 1 is also the only df source: a postings row carries its
+(term, bucket) df, and a term's df is the sum of its rows. Every index
+has every table, so the searcher probes for none.
 
 Exactness contract: results (docids AND float64 scores) are identical with
-pruning on or off, at any parallelism — tested in tests/test_kernel.py.
+pruning on or off, at any parallelism — tested in
+tests/test_index_search.py::test_prune_equals_noprune.
 """
 
 from __future__ import annotations
@@ -41,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .codec import decode_blocks, decode_postings
-from .indexer import IndexMeta, _done
+from .indexer import IndexMeta
 from .qparser import Query, parse
 from .scoring import accumulate, tfnorm, tfnorm_col, top_k
 from .scoring import idf as idf_fn
@@ -261,21 +266,6 @@ def _score_conjunction_pruned(
     return loc
 
 
-def _lookup_df(terms_df: DataFrame, terms: list[str], cache: dict | None = None) -> dict[str, int]:
-    """df of each term (0 if absent). The fetched rows are summed per
-    term: a view's terms frame holds one row per (segment, term), and
-    summing them on the driver spares a groupBy shuffle. ``cache`` (the
-    searcher's term -> df map) is read first and filled with the misses."""
-    cache = {} if cache is None else cache
-    missing = [t for t in terms if t not in cache]
-    if missing:
-        fetched = dict.fromkeys(missing, 0)
-        for r in terms_df.where(F.col("term").isin(missing)).select("term", "df").collect():
-            fetched[r["term"]] += int(r["df"])
-        cache.update(fetched)
-    return {t: cache[t] for t in terms}
-
-
 def _decode_rows(pdf: pd.DataFrame, bucket_docs: int) -> tuple:
     """Decode every postings row of ``pdf`` in row order →
     (postings per row, docids, tfs), the last two concatenated."""
@@ -310,19 +300,20 @@ class QueryTrace:
 
 
 class Searcher:
-    """Warm query session over one index — holds the terms/postings/docs
-    DataFrames (and optionally caches the small ones) so repeated queries
-    skip plan re-creation and re-scans. The reference analog is
-    SolrIndexSearcher with its filter/document caches
+    """Warm query session over one index — holds the postings/docs/
+    bucket_stats DataFrames (and optionally caches the docs sides) so
+    repeated queries skip plan re-creation and re-scans. The reference
+    analog is SolrIndexSearcher with its filter/document caches
     (solr/core/src/java/org/apache/solr/search/SolrIndexSearcher.java:894-986):
-    term stats ≈ the term dictionary in heap, docs ≈ docValues pages in OS
-    cache. Postings stay uncached (pruned parquet scans per query).
+    docs ≈ docValues pages in OS cache. Postings stay uncached (pruned
+    parquet scans per query) and are the only df source.
 
     ``meta`` is one IndexMeta or a segments.IndexView; each table is read
     across every segment in one multi-path scan (buckets never straddle
-    segments, so the kernel needs no merge logic). ``dead`` is the
-    view's live-docs mask (bucket -> sorted bucket-local deleted docids):
-    every query and the driver-local path apply it, nothing else does.
+    segments, so the kernel needs no merge logic). Given a view, it
+    resolves the view's delete keys once to ``dead``, the live-docs mask
+    (bucket -> sorted bucket-local deleted docids) that every query and
+    the driver-local path apply.
 
     Two driver caches serve the bounded top-k path of ``search``: the df
     of every term queried so far, and the ``bucket_stats`` rows of the
@@ -336,30 +327,21 @@ class Searcher:
     adds segments or deletes gets a new searcher. ``last_trace`` is the
     QueryTrace of the latest ``search``."""
 
-    def __init__(self, spark: SparkSession, meta: IndexMeta, cache: bool = True,
-                 dead: dict[int, np.ndarray] | None = None):
+    def __init__(self, spark: SparkSession, meta: IndexMeta, cache: bool = True):
         self.spark = spark
         self.meta = meta
-        self.dead = dead or {}
         segs = getattr(meta, "segments", [meta])
+        dead_docids = getattr(meta, "dead_docids", None)  # views only
+        self.dead = dead_docids(spark) if dead_docids else {}
         self._end_docid = max(m.docid_base + m.n_docs for m in segs)
-        self.terms = spark.read.parquet(*[m.terms_path for m in segs])
         self.postings = spark.read.parquet(*[m.postings_path for m in segs])
         self.docs = spark.read.parquet(*[m.docs_path for m in segs])
-        bs_paths = [m.bucket_stats_path for m in segs]
-        self.bucket_stats = (
-            spark.read.parquet(*bs_paths)
-            if all(_done(p) for p in bs_paths)
-            else None
-        )
+        self.bucket_stats = spark.read.parquet(*[m.bucket_stats_path for m in segs])
         if cache:
-            self.terms = self.terms.cache()
             self.docs = self.docs.cache()
-            self.terms.count()  # materialize
-            self.docs.count()
-            if self.bucket_stats is not None:
-                self.bucket_stats = self.bucket_stats.cache()
-                self.bucket_stats.count()
+            self.bucket_stats = self.bucket_stats.cache()
+            self.docs.count()  # materialize
+            self.bucket_stats.count()
         # driver-side df cache for QUERY terms only (bounded by the terms
         # actually queried, never the vocabulary) — the term-dictionary-
         # in-heap part of SolrIndexSearcher; absent terms cache df=0
@@ -445,14 +427,13 @@ class Searcher:
         return [(int(d), float(v)) for d, v in zip(cand, sc)]
 
     def search(self, q: str | Query, k: int = 10, prune: bool = True,
-               with_fields: bool = False, unsorted: bool = False,
-               _count_only: bool = False) -> DataFrame:
+               with_fields: bool = False, unsorted: bool = False) -> DataFrame:
         """Top-k BM25 search. Returns DataFrame(docid, score) ordered by
         (score desc, docid asc), limited to k; with_fields joins doc columns.
-        ``unsorted=True`` (and the internal ``_count_only``, hit_count's
-        path) returns ALL scored matches UNSORTED and UNLIMITED — the
-        component mode for candidate generation and score folds, where the
-        downstream join/union discards order anyway. A sorted k=n_docs call
+        ``unsorted=True`` returns ALL scored matches UNSORTED and
+        UNLIMITED — the component mode for candidate generation, score
+        folds and hit counts, where the downstream join/union discards
+        order anyway. A sorted k=n_docs call
         would compile to orderBy().limit(n_docs) — a corpus-sized
         TakeOrderedAndProject funneling every match through ONE task at
         scale; unsorted mode keeps the result distributed.
@@ -463,11 +444,15 @@ class Searcher:
         local result relation. Unsorted and over-bound queries run the
         postings x docs cogroup. Both paths call one _bucket_kernel
         closure on the same per-bucket frames, so their results are
-        equal."""
+        equal.
+
+        df comes from the postings scan: a df-cold query whose terms'
+        postings (df <= n_docs each) fit the bound fetches its rows once,
+        and learns df from them; any other df-cold query first runs the
+        same pruned scan over the (term, df) columns alone."""
         query = parse(q) if isinstance(q, str) else q
         spark, meta = self.spark, self.meta
-        full = unsorted or _count_only
-        if full:
+        if unsorted:
             # no global sort → pruning must keep every match; k only feeds
             # the block-max WAND heap, so pin it corpus-sized (no-op prune)
             k = meta.n_docs
@@ -485,7 +470,7 @@ class Searcher:
                 "kernel.search does not execute phrase clauses; use "
                 "engine.gate_search (mixed) or engine.gate_phrase (pure phrase)"
             )
-        trace = self.last_trace = QueryTrace("cogroup", "unsorted") if full else QueryTrace()
+        trace = self.last_trace = QueryTrace("cogroup", "unsorted") if unsorted else QueryTrace()
         weights = dict(query.scoring)
 
         def _empty():
@@ -501,13 +486,15 @@ class Searcher:
         rows = None  # the query's postings rows, once fetched into the driver
         # a df-cold query learns df from its postings scan; df <= n_docs
         # bounds that scan before any df is known
-        cold = any(t not in self._df_cache for t in all_terms)
-        if cold and not full and sum(
+        cold = [t for t in all_terms if t not in self._df_cache]
+        if cold and not unsorted and sum(
             self._df_cache.get(t, meta.n_docs) for t in all_terms
         ) <= DRIVER_MAX_POSTINGS:
             rows = self._fetch_postings(all_terms)
             trace.postings_rows = len(rows)
-        df_map = _lookup_df(self.terms, all_terms, self._df_cache)
+        elif cold:
+            self._fetch_postings(cold, cols=["term", "df"])
+        df_map = {t: self._df_cache[t] for t in all_terms}
         groups = [list(g) for g in (query.required_groups or [])]
         if groups:
             # a MUST group dies only if EVERY alternative is absent
@@ -525,13 +512,11 @@ class Searcher:
         weights = {t: weights[t] * query.boosts.get(t, 1.0) for t in present}
         idfs = {t: float(idf_fn(df_map[t], meta.n_docs)) for t in present}
         needed = sorted(set(present) | {t for t in query.prohibited if df_map.get(t, 0) > 0})
-        if rows is None and not full and sum(df_map[t] for t in needed) <= DRIVER_MAX_POSTINGS:
+        if rows is None and not unsorted and sum(df_map[t] for t in needed) <= DRIVER_MAX_POSTINGS:
             rows = self._fetch_postings(needed)
             trace.postings_rows = len(rows)
 
-        use_packed = self.bucket_stats is not None and all(
-            f in _PACKED_FILTER_COLS for f in query.filters
-        )
+        use_packed = all(f in _PACKED_FILTER_COLS for f in query.filters)
         doc_cols = None
         if not use_packed:
             available = set(self.docs.columns)
@@ -570,7 +555,7 @@ class Searcher:
             # a pandas frame becomes a local relation: no job on collect
             out = spark.createDataFrame(top, RESULT_SCHEMA)
         else:
-            if not full:
+            if not unsorted:
                 trace.path, trace.reason = "cogroup", reason
             postings = self.postings.where(F.col("term").isin(needed))
             # prune the docs scan to buckets that contain at least one query term
@@ -586,8 +571,8 @@ class Searcher:
                 .cogroup(doc_stats.groupby("bucket"))
                 .applyInPandas(kern, RESULT_SCHEMA)
             )
-            if full:
-                if with_fields and not _count_only:
+            if unsorted:
+                if with_fields:
                     # loud guard: the unsorted component frame deliberately
                     # skips the stored-fields join (it feeds other components,
                     # not a result page) — silently returning (docid, score)
@@ -603,12 +588,14 @@ class Searcher:
             )
         return out
 
-    def _fetch_postings(self, terms: list[str]) -> pd.DataFrame:
+    def _fetch_postings(self, terms: list[str], cols: list[str] | None = None) -> pd.DataFrame:
         """Every postings row of ``terms``, in the driver (one pruned
-        scan). A row carries its (term, bucket) df and a term's df is the
-        sum of its rows (indexer.write_term_stats), so the scan also
-        fills the df cache exactly; absent terms get 0."""
-        rows = self.postings.where(F.col("term").isin(terms)).toPandas()
+        scan; ``cols`` prunes its columns). A row carries its
+        (term, bucket) df and a term's df is the sum of its rows
+        (indexer.write_term_stats), so the scan also fills the df cache
+        exactly; absent terms get 0."""
+        rows = self.postings.where(F.col("term").isin(terms))
+        rows = (rows.select(*cols) if cols else rows).toPandas()
         df_sums = rows.groupby("term")["df"].sum()
         self._df_cache.update({t: int(df_sums.get(t, 0)) for t in terms})
         return rows
@@ -657,12 +644,9 @@ def search(
     prune: bool = True,
     with_fields: bool = False,
     unsorted: bool = False,
-    _count_only: bool = False,
 ) -> DataFrame:
     """One query on a fresh uncached Searcher (see Searcher.search)."""
-    return Searcher(spark, meta, cache=False).search(
-        q, k, prune, with_fields, unsorted, _count_only
-    )
+    return Searcher(spark, meta, cache=False).search(q, k, prune, with_fields, unsorted)
 
 
 def hit_count(
@@ -702,7 +686,7 @@ def hit_count(
         n = len(search(spark, meta, query, k=min_exact_count).collect())
         return (n, "EQ" if n < min_exact_count else "GTE")
     # exact count: aggregate the scored matches, no global sort/limit
-    n = search(spark, meta, query, k=meta.n_docs, _count_only=True).count()
+    n = search(spark, meta, query, unsorted=True).count()
     return (n, "EQ")
 
 

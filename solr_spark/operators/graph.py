@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..scoring import idf_col
+
 
 def graph_expand(
     edges: DataFrame,
@@ -122,13 +124,7 @@ def more_like_this_terms(
     scored = (
         doc_terms.join(F.broadcast(term_stats.select("term", "df")), "term")
         .filter(F.col("df") >= min_df)
-        .withColumn(
-            "mlt_score",
-            F.col("tf")
-            * F.log(
-                1.0 + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ),
-        )
+        .withColumn("mlt_score", F.col("tf") * idf_col(F.col("df"), n_docs))
     )
     return (
         scored.orderBy(F.desc("mlt_score"), F.asc("term"))

@@ -54,7 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .codec import _varint_sizes, varint_decode, varint_encode
-from .indexer import IndexMeta, _done
+from .indexer import IndexMeta, _binary_stream, _done
 
 POSITIONS_SCHEMA = (
     "term string, bucket bigint, df bigint, "
@@ -219,7 +219,7 @@ def encode_position_runs(
     by (term, bucket, docid), into one output row per (term, bucket) run.
     Positions per doc are strictly ascending; encoding is docid-delta and
     position-delta LEB128, both varint-encoded in ONE whole-partition
-    numpy pass and byte-sliced per run (the encode_posting_runs shape).
+    numpy pass and byte-sliced per run (the encode_posting_runs_flat shape).
     ``flat_pay`` (aligned 1:1 with flat_pos) adds a per-position payload
     stream — plain varint, no delta (payloads are small non-monotonic
     values) — the Lucene .pay-file analog.
@@ -444,24 +444,6 @@ _ENC_COLS = ["term", "bucket", "df", "doc_bytes", "pos_counts", "pos_bytes",
              "pay_bytes"]
 
 
-def _binary_cells(pa, col):
-    """(data uint8, row byte offsets int64) view of a binary column — row
-    i's bytes are data[offs[i]:offs[i+1]]; rows are back-to-back, so a
-    sorted column's run [s:e) concatenates by pure slicing (the
-    indexer._binary_stream trick)."""
-    arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
-    if not pa.types.is_binary(arr.type):
-        # large_binary carries int64 offsets; reading them as int32 below
-        # would silently produce garbage slices — fail loudly instead.
-        raise TypeError(f"expected binary (int32-offset) column, got {arr.type}")
-    bufs = arr.buffers()
-    offs = np.frombuffer(bufs[1], dtype=np.int32)[
-        arr.offset : arr.offset + len(arr) + 1
-    ].astype(np.int64)
-    data = np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] is not None else np.empty(0, np.uint8)
-    return data, offs
-
-
 def _encode_pos_partition(bucket_docs: int, with_payloads: bool = False):
     """mapInPandas closure: the reduce side of the positions build. Input
     rows carry MAP-SIDE-ENCODED per-doc varint streams (see
@@ -485,9 +467,9 @@ def _encode_pos_partition(bucket_docs: int, with_payloads: bool = False):
         buckets = pdf["bucket"].to_numpy(np.int64)
         docids = pdf["docid"].to_numpy(np.int64)
         counts = pdf["count"].to_numpy(np.int64)
-        pos_data, pos_offs = _binary_cells(pa, pa.array(pdf["pos_bytes"]))
+        pos_data, pos_offs = _binary_stream(pa, pa.array(pdf["pos_bytes"]))
         if with_payloads:
-            pay_data, pay_offs = _binary_cells(pa, pa.array(pdf["pay_bytes"]))
+            pay_data, pay_offs = _binary_stream(pa, pa.array(pdf["pay_bytes"]))
 
         n = len(pdf)
         change = np.empty(n, dtype=bool)
@@ -650,6 +632,47 @@ def _doc_pos_keys(docids, counts, positions, common):
     return _doc_pos_keys_and_mask(docids, counts, positions, common)[0]
 
 
+def _phrase_starts(rows: dict, terms: list[str], bucket_docs: int, payloads=None):
+    """Intersect-and-chain of the phrase ``terms`` over one bucket's
+    rows (``_bucket_rows``) -> (common, starts), or None if nothing
+    matches. ``common`` is the sorted docids holding every term; each
+    key in ``starts`` (doc index into ``common`` * _KEY_SHIFT +
+    position) is one occurrence of the whole phrase, one key per
+    start position. ``payloads`` (one per slot) keeps a slot's
+    positions only where the payload equals the slot's."""
+    uniq = sorted(set(terms))
+    if any(t not in rows for t in uniq):
+        return None
+    # cheap phase first: docid-only decode + intersection — a bucket
+    # missing any co-occurrence exits without paying the (dominant)
+    # position-stream decode of common terms
+    docs = {t: decode_run_docids(rows[t], bucket_docs) for t in uniq}
+    common = docs[uniq[0]]
+    for t in uniq[1:]:
+        common = np.intersect1d(common, docs[t], assume_unique=True)
+    if common.size == 0:
+        return None
+    keys, pays = {}, {}
+    for t in uniq:
+        counts, positions = decode_run_positions(rows[t])
+        keys[t], tok_ok = _doc_pos_keys_and_mask(docs[t], counts, positions, common)
+        if payloads is not None:
+            pays[t] = decode_run_payloads(rows[t])[tok_ok]
+
+    def slot(i):
+        # the SAME term may require different payloads at different
+        # slots, so the payload filter is per slot
+        k = keys[terms[i]]
+        return k if payloads is None else k[pays[terms[i]] == payloads[i]]
+
+    starts = slot(0)
+    for i in range(1, len(terms)):
+        if starts.size == 0:
+            return None
+        starts = starts[np.isin(starts + np.int64(i), slot(i))]
+    return (common, starts) if starts.size else None
+
+
 def phrase_tf_frame(
     spark: SparkSession, meta: IndexMeta, terms: list[str]
 ) -> DataFrame:
@@ -663,35 +686,14 @@ def phrase_tf_frame(
         raise ValueError("phrase_tf_frame requires at least one term")
     uniq = sorted(set(terms))
     bucket_docs = meta.bucket_docs
-    L = len(terms)
     terms_l = list(terms)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"docid": pd.Series([], dtype="int64"),
-                              "phrase_tf": pd.Series([], dtype="int64")})
-        rows = _bucket_rows(pdf)
-        if any(t not in rows for t in uniq):
-            return empty
-        # cheap phase first: docid-only decode + intersection — a bucket
-        # missing any co-occurrence exits without paying the (dominant)
-        # position-stream decode of common terms
-        docs = {t: decode_run_docids(rows[t], bucket_docs) for t in uniq}
-        common = docs[uniq[0]]
-        for t in uniq[1:]:
-            common = np.intersect1d(common, docs[t], assume_unique=True)
-        if common.size == 0:
-            return empty
-        keys = {}
-        for t in uniq:
-            counts, positions = decode_run_positions(rows[t])
-            keys[t] = _doc_pos_keys(docs[t], counts, positions, common)
-        cand = keys[terms_l[0]]
-        for i in range(1, L):
-            if cand.size == 0:
-                return empty
-            cand = cand[np.isin(cand + np.int64(i), keys[terms_l[i]])]
-        if cand.size == 0:
-            return empty
+        hit = _phrase_starts(_bucket_rows(pdf), terms_l, bucket_docs)
+        if hit is None:
+            return pd.DataFrame({"docid": pd.Series([], dtype="int64"),
+                                 "phrase_tf": pd.Series([], dtype="int64")})
+        common, cand = hit
         tf = np.bincount((cand // _KEY_SHIFT).astype(np.int64),
                          minlength=len(common))
         nz = np.flatnonzero(tf)
@@ -832,35 +834,12 @@ def payload_check_frame(
     bucket_docs = meta.bucket_docs
     terms_l = list(terms)
     pays_l = [int(p) for p in payloads]
-    L = len(terms_l)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"docid": pd.Series([], dtype="int64")})
-        rows = _bucket_rows(pdf)
-        if any(t not in rows for t in uniq):
-            return empty
-        docs = {t: decode_run_docids(rows[t], bucket_docs) for t in uniq}
-        common = docs[uniq[0]]
-        for t in uniq[1:]:
-            common = np.intersect1d(common, docs[t], assume_unique=True)
-        if common.size == 0:
-            return empty
-        keys, pays = {}, {}
-        for t in uniq:
-            counts, positions = decode_run_positions(rows[t])
-            k, tok_ok = _doc_pos_keys_and_mask(docs[t], counts, positions, common)
-            keys[t] = k
-            pays[t] = decode_run_payloads(rows[t])[tok_ok]
-        # slot-filtered chain: the SAME term may require different
-        # payloads at different slots, so the payload filter is per slot
-        cand = keys[terms_l[0]][pays[terms_l[0]] == pays_l[0]]
-        for i in range(1, L):
-            if cand.size == 0:
-                return empty
-            ki = keys[terms_l[i]][pays[terms_l[i]] == pays_l[i]]
-            cand = cand[np.isin(cand + np.int64(i), ki)]
-        if cand.size == 0:
-            return empty
+        hit = _phrase_starts(_bucket_rows(pdf), terms_l, bucket_docs, pays_l)
+        if hit is None:
+            return pd.DataFrame({"docid": pd.Series([], dtype="int64")})
+        common, cand = hit
         idx = np.unique((cand // _KEY_SHIFT).astype(np.int64))
         return pd.DataFrame({"docid": common[idx]})
 

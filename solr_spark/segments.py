@@ -15,21 +15,20 @@ every per-(term,bucket) postings row lives in exactly one segment — the
 query kernel needs no merge logic at all. A view is searched through one
 kernel.Searcher that reads each table across all segments:
 
-  postings     = union of segment postings dirs (one multi-path scan)
-  terms        = union of segment term tables, one row per (segment,
-                 term); the searcher sums df per query term on the
-                 driver (exact global IDF across segments, the
-                 ExactStatsCache analog — stronger than Lucene's
+  postings     = union of segment postings dirs (one multi-path scan);
+                 the searcher sums a query term's df over its postings
+                 rows on the driver (exact global IDF across segments,
+                 the ExactStatsCache analog — stronger than Lucene's
                  per-segment stats), no groupBy shuffle
   docs, bucket_stats = union of segment dirs, deleted docs included
   n/avgdl      = summed totals (additions are append-only, so the
                  combined stats equal a from-scratch rebuild's exactly —
                  the invariant the gate entry u_incremental_index checks)
 
-Deletes are Lucene's liveDocs: the view resolves its delete keys to
-docids once (one left-semi join of the docs tables), and the scoring
-kernel clears them from its per-bucket ``alive`` mask before any
-pruning or scoring. The packed bucket_stats path stays on, and n_docs,
+Deletes are Lucene's liveDocs: any searcher over the view resolves its
+delete keys to docids once (one left-semi join of the docs tables), and
+the scoring kernel clears them from its per-bucket ``alive`` mask before
+any pruning or scoring. The packed bucket_stats path stays on, and n_docs,
 avgdl and df keep counting deleted docs until a merge reclaims them.
 """
 
@@ -113,22 +112,22 @@ class IndexView:
     def searcher(self, spark: SparkSession):
         """This view's kernel.Searcher, built on first use: each table read
         once across all segments, the delete keys resolved once to the
-        live-docs mask, and one df cache for every query on the view."""
+        live-docs mask (by the searcher), and one df cache for every
+        query on the view."""
         if self._searcher is None or self._searcher.spark is not spark:
             from .kernel import Searcher
 
-            self._searcher = Searcher(
-                spark, self, cache=False, dead=self.dead_docids(spark)
-            )
+            self._searcher = Searcher(spark, self, cache=False)
         return self._searcher
 
     def frames(self, spark: SparkSession):
-        """(terms, postings, docs, bucket_stats) frames for kernel.search,
-        read once per view. terms holds one row per (segment, term), and
-        docs and bucket_stats still hold the deleted docs: the searcher's
-        live-docs mask removes them inside the scoring kernel."""
+        """(terms, postings, docs, bucket_stats) frames over every segment:
+        the view searcher's last three, and terms (one row per (segment,
+        term)) read here. docs and bucket_stats still hold the deleted
+        docs: the searcher's live-docs mask removes them in the kernel."""
         s = self.searcher(spark)
-        return s.terms, s.postings, s.docs, s.bucket_stats
+        terms = spark.read.parquet(*[m.terms_path for m in self.segments])
+        return terms, s.postings, s.docs, s.bucket_stats
 
     def search(
         self,

@@ -72,11 +72,12 @@ def test_partial_block_decode_matches_full():
 
 
 def test_batch_encoder_matches_single():
-    """encode_posting_runs (partition-batch path) is bit-identical to
-    encode_postings run per group — the indexer's hot path contract."""
+    """encode_posting_runs_flat (the indexer's partition-batch encoder)
+    sliced per run is bit-identical to encode_postings run per group —
+    the indexer's hot path contract."""
     import numpy as np
 
-    from solr_spark.codec import encode_posting_runs, encode_postings
+    from solr_spark.codec import encode_posting_runs_flat, encode_postings
 
     rng = np.random.default_rng(0)
     docids, tfs, dls, starts, ends, bases = [], [], [], [], [], []
@@ -93,16 +94,21 @@ def test_batch_encoder_matches_single():
         ends.append(pos)
         bases.append(base)
     docids, tfs, dls = map(np.concatenate, (docids, tfs, dls))
-    encs = encode_posting_runs(
+    f = encode_posting_runs_flat(
         docids, tfs, dls, np.array(starts), np.array(ends), np.array(bases)
     )
-    for g, enc in enumerate(encs):
+    assert len(f.lens) == len(starts)
+    db, tb = f.stream_d.tobytes(), f.stream_t.tobytes()
+    for g in range(len(starts)):
         s, e = starts[g], ends[g]
         ref = encode_postings(docids[s:e], tfs[s:e], dls[s:e], base=bases[g])
-        assert enc.doc_bytes == ref.doc_bytes and enc.tf_bytes == ref.tf_bytes
-        assert enc.df == ref.df and enc.cf == ref.cf
-        for f in (
-            "block_offs_doc", "block_offs_tf", "block_last",
-            "block_max_tf", "block_min_dl",
+        assert db[f.run_offs_d[g] : f.run_offs_d[g + 1]] == ref.doc_bytes
+        assert tb[f.run_offs_t[g] : f.run_offs_t[g + 1]] == ref.tf_bytes
+        assert f.lens[g] == ref.df and f.cfs[g] == ref.cf
+        b0, b1 = f.cum_nb[g], f.cum_nb[g + 1]
+        for name, flat in (
+            ("block_offs_doc", f.offs_d), ("block_offs_tf", f.offs_t),
+            ("block_last", f.block_last), ("block_max_tf", f.block_max_tf),
+            ("block_min_dl", f.block_min_dl),
         ):
-            assert np.array_equal(getattr(enc, f), getattr(ref, f)), (g, f)
+            assert np.array_equal(flat[b0:b1], getattr(ref, name)), (g, name)

@@ -272,11 +272,8 @@ def test_search_unsorted_with_fields_raises(spark, small_index):
 
 def test_leading_wildcard_reversed_scan(spark, tmp_path):
     """A leading-wildcard clause resolves through the rev-sorted terms
-    table (prefix scan, pushed into the parquet read), matches the
-    brute LIKE fallback exactly, and falls back cleanly when the rev
-    table is absent (pre-upgrade indexes)."""
-    import shutil
-
+    table (prefix scan, pushed into the parquet read) and matches the
+    brute LIKE semantics exactly."""
     from pyspark.sql import functions as F
 
     from solr_spark import kernel
@@ -327,11 +324,6 @@ def test_leading_wildcard_reversed_scan(spark, tmp_path):
                                      max_edits=0, boost=1.0)
     )._jdf.queryExecution().executedPlan().toString()
     assert "StartsWith(rev" in plan, plan
-
-    # fallback: remove the rev table -> same results through LIKE scan
-    shutil.rmtree(meta.terms_rev_path)
-    assert search("*dow") == {"a", "b", "d"}
-    assert search("*ad?w") == {"a", "b"}
 
 
 def test_fuzzy_candidates_ngram_path_identical(spark, small_index):

@@ -88,6 +88,19 @@ def test_resume_skips_completed_stages(spark, small_corpus, small_index, tmp_pat
     rb = [(r["docid"], r["score"]) for r in search(spark, meta, "license", k=5).collect()]
     assert ra == rb
 
+    # a crash inside stage 4: terms written, terms_rev and terms_ngrams
+    # not yet — the resume rewrites both, row for row as the clean build
+    os.remove(os.path.join(out, "meta.json"))
+    shutil.rmtree(meta.terms_rev_path)
+    shutil.rmtree(meta.terms_ngrams_path)
+    meta = build_index(
+        spark, spark.read.parquet(small_corpus), out, bucket_docs=256, num_partitions=4
+    )
+    for table in ("terms", "terms_rev", "terms_ngrams"):
+        clean = spark.read.parquet(os.path.join(small_index.out_dir, table)).collect()
+        resumed = spark.read.parquet(os.path.join(out, table)).collect()
+        assert resumed == clean, table
+
 
 def test_resume_noop_when_complete(spark, small_corpus, small_index):
     """A finished index returns instantly from meta.json."""

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from solr_spark.codec import decode_postings
 from solr_spark.corpus import RARE1
+from solr_spark import kernel
 from solr_spark.kernel import Searcher, decode_posting_frame
 from solr_spark.segments import add_segment, delete_by_keys, open_base
 
@@ -65,6 +66,9 @@ def test_deleted_top_hit_never_returned(spark, view, shape):
     after = _hits(dview.search(spark, q, k=K))
     assert victim not in {d for d, _ in after}, q
     assert after == [h for h in before if h[0] != victim][:K], q
+    # every entry point over the view applies its live-docs mask
+    assert _hits(kernel.search(spark, dview, q, K)) == after, q
+    assert _hits(Searcher(spark, dview, cache=False).search(q, K)) == after, q
     # the old view is a value: its own searcher still returns the doc
     assert _hits(view.search(spark, q, k=K + 1)) == before, q
 
