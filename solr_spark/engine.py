@@ -21,7 +21,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .indexer import IndexMeta, build_index
+from .indexer import IndexMeta, build_index, index_table
 from .kernel import dismax_search, search
 from .qparser import Query, parse
 
@@ -104,9 +104,68 @@ def ensure_index(
 
 
 def _with_doc_id(spark: SparkSession, meta: IndexMeta, res: DataFrame) -> DataFrame:
-    docs = spark.read.parquet(meta.docs_path).select("docid", "path")
+    docs = index_table(spark, meta, "docs").select("docid", "path")
     return res.join(docs, "docid").withColumn(
         "doc_id", F.col("path").cast("bigint")
+    )
+
+
+def _ranked(spark: SparkSession, meta: IndexMeta, res: DataFrame, k: int,
+            score: str = "score") -> DataFrame:
+    """The oracle's ranking contract on scored (docid, ``score``) rows:
+    the top k by (round(score, 6) desc, docid asc) as (doc_id, score)."""
+    out = _with_doc_id(spark, meta, res).withColumn("score", F.round(F.col(score), 6))
+    return out.orderBy(F.desc("score"), F.asc("docid")).limit(k).select("doc_id", "score")
+
+
+def _constant_ranked(
+    spark: SparkSession, meta: IndexMeta, docids: DataFrame, k: int
+) -> DataFrame:
+    """Constant-score rewrite of matched ``docids``: score 1.0, the first
+    k by (source, doc_id) as (doc_id, score). The tie-break comes from
+    the index docs table (repo := source under the corpus mapping), so
+    no source table is read."""
+    docs = index_table(spark, meta, "docs").select(
+        "docid", "path", F.col("repo").alias("source")
+    )
+    return (
+        docids.join(docs, "docid")
+        .withColumn("doc_id", F.col("path").cast("bigint"))
+        .select("doc_id", F.lit(1.0).alias("score"), "source")
+        .orderBy(F.asc("source"), F.asc("doc_id"))
+        .limit(k)
+        .select("doc_id", "score")
+    )
+
+
+def _filtered(
+    spark: SparkSession, meta: IndexMeta, rows: DataFrame, filters: dict | None
+) -> DataFrame:
+    """``rows`` (keyed by docid) restricted to docs whose every
+    ``filters`` field holds one of its listed values (fq restricts the
+    emitted rows, never the scoring statistics)."""
+    if not filters:
+        return rows
+    fdocs = index_table(spark, meta, "docs").select("docid", *sorted(filters))
+    out = rows.join(fdocs, "docid")
+    for f_name, vals in sorted(filters.items()):
+        out = out.filter(F.col(f_name).isin(list(vals)))
+    return out.select(*rows.columns)
+
+
+def _view_hits(spark: SparkSession, view, q: str, k: int | None) -> DataFrame:
+    """``view``'s hits for ``q`` as (doc_id, round(score, 6)). k=None is
+    the full-result mode the oracle diffs: every match, as the unsorted
+    component frame rather than a corpus-sized orderBy().limit(n_docs).
+    k < 1 is rejected rather than silently returning an empty frame."""
+    if k is not None and k < 1:
+        raise ValueError("k must be >= 1 (or None for every match)")
+    if k is None:
+        res = view.search(spark, parse(q), unsorted=True)
+    else:
+        res = view.search(spark, parse(q), k=k)
+    return _with_doc_id(spark, view, res).select(
+        "doc_id", F.round(F.col("score"), 6).alias("score")
     )
 
 
@@ -161,7 +220,7 @@ def fuzzy_candidates(
     Levenshtein filter keeps results IDENTICAL to the scan). Cost ∝
     terms sharing a pattern bigram, not vocabulary. Short patterns take
     the length-prefiltered dictionary scan."""
-    terms_df = spark.read.parquet(meta.terms_path)
+    terms_df = index_table(spark, meta, "terms")
     p = pattern.lower()
     plen = len(p)
     dist_ok = F.levenshtein(F.col("term"), F.lit(p)) <= max_edits
@@ -169,7 +228,7 @@ def fuzzy_candidates(
     if plen >= 2 * max_edits + 2:
         grams = sorted({p[i : i + 2] for i in range(plen - 1)})
         cand = (
-            spark.read.parquet(meta.terms_ngrams_path)
+            index_table(spark, meta, "terms_ngrams")
             .filter(F.col("gram").isin(grams))
             .filter(F.abs(F.col("tlen") - F.lit(plen)) <= max_edits)
             .groupBy("term")
@@ -200,7 +259,7 @@ def _multiterm_component(
 
     import re as _re
 
-    terms_df = spark.read.parquet(meta.terms_path)
+    terms_df = index_table(spark, meta, "terms")
     expanded = None
     if mt.kind == "prefix":
         pred = F.col("term").startswith(mt.pattern[:-1])
@@ -217,7 +276,7 @@ def _multiterm_component(
         wc_parts = _re.split(r"[*?]", mt.pattern)
         tail = wc_parts[-1]
         if not wc_parts[0] and tail:
-            rev_df = spark.read.parquet(meta.terms_rev_path)
+            rev_df = index_table(spark, meta, "terms_rev")
             expanded = (
                 rev_df.filter(F.col("rev").startswith(tail[::-1]))
                 .filter(pred)
@@ -233,13 +292,7 @@ def _multiterm_component(
     if expanded is None:
         expanded = terms_df.filter(pred).select("term")
     rows = postings_rows(spark, meta, expanded)
-    out = rows.select("docid").dropDuplicates(["docid"])
-    if filters:
-        fdocs = spark.read.parquet(meta.docs_path).select("docid", *sorted(filters))
-        out = out.join(fdocs, "docid")
-        for f_name, vals in sorted(filters.items()):
-            out = out.filter(F.col(f_name).isin(list(vals)))
-        out = out.select("docid")
+    out = _filtered(spark, meta, rows.select("docid").dropDuplicates(["docid"]), filters)
     return out.withColumn("score", F.lit(float(mt.boost)))
 
 
@@ -365,14 +418,7 @@ def gate_search(
             .dropDuplicates(["docid"])
         )
         res = res.join(proh, "docid", "left_anti")
-    out = _with_doc_id(spark, meta, res).withColumn(
-        "score", F.round(F.col("score"), 6)
-    )
-    return (
-        out.orderBy(F.desc("score"), F.asc("docid"))
-        .limit(k)
-        .select("doc_id", "score")
-    )
+    return _ranked(spark, meta, res, k)
 
 
 def gate_dismax(
@@ -380,15 +426,7 @@ def gate_dismax(
 ) -> DataFrame:
     """DisMax ranking under the same rounded-score contract."""
     meta = ensure_index(spark, sf_dir)
-    res = dismax_search(spark, meta, terms, tie=tie, unsorted=True)
-    out = _with_doc_id(spark, meta, res).withColumn(
-        "score", F.round(F.col("score"), 6)
-    )
-    return (
-        out.orderBy(F.desc("score"), F.asc("docid"))
-        .limit(k)
-        .select("doc_id", "score")
-    )
+    return _ranked(spark, meta, dismax_search(spark, meta, terms, tie=tie, unsorted=True), k)
 
 
 def gate_term_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -396,7 +434,7 @@ def gate_term_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats (stronger than the reference's default per-shard IDF;
     solr/core/src/java/org/apache/solr/search/stats/ExactStatsCache.java:61)."""
     meta = ensure_index(spark, sf_dir)
-    return spark.read.parquet(meta.terms_path).select("term", "df", "cf")
+    return index_table(spark, meta, "terms").select("term", "df", "cf")
 
 
 def _phrase_component(
@@ -418,7 +456,7 @@ def _phrase_component(
     from .positions import phrase_tf_frame
     from .scoring import idf_col, tfnorm_col
 
-    docs = spark.read.parquet(meta.docs_path).select("docid", "path", "doclen")
+    docs = index_table(spark, meta, "docs").select("docid", "path", "doclen")
     matched = (
         phrase_tf_frame(spark, meta, terms)
         .join(docs, "docid")
@@ -430,12 +468,7 @@ def _phrase_component(
     # (the reference's filter-vs-score separation; the term kernel's idf
     # is likewise global). Filters restrict only the emitted rows.
     dfp = matched.agg(F.count(F.lit(1)).cast("double").alias("df_p"))
-    if filters:
-        fdocs = spark.read.parquet(meta.docs_path).select("docid", *sorted(filters))
-        matched = matched.join(fdocs, "docid")
-        for f_name, vals in sorted(filters.items()):
-            matched = matched.filter(F.col(f_name).isin(list(vals)))
-        matched = matched.select("docid", "doc_id", "phrase_tf", "doclen")
+    matched = _filtered(spark, meta, matched, filters)
     score = idf_col(F.col("df_p"), meta.n_docs) * tfnorm_col(
         F.col("phrase_tf"), F.col("doclen"), meta.avgdl
     )
@@ -503,25 +536,7 @@ def gate_incremental(
     view = add_segment(
         spark, view, corpus.filter(F.col("path") >= s1), out_dir, resume=True
     )
-    # full-result mode (k=None) emits every match for the oracle diff —
-    # unsorted component frame, not a corpus-sized TakeOrdered funnel
-    # (the join below discards order; the driver compare sorts by hash).
-    # k=0 is rejected rather than silently returning an empty frame
-    if k is not None and k < 1:
-        raise ValueError("k must be >= 1 (or None for every match)")
-    if k is None:
-        res = view.search(spark, parse(q), unsorted=True)
-    else:
-        res = view.search(spark, parse(q), k=k)
-    docs = spark.read.parquet(*[m.docs_path for m in view.segments]).select(
-        "docid", "path"
-    )
-    return (
-        res.join(docs, "docid")
-        .withColumn("doc_id", F.col("path").cast("bigint"))
-        .withColumn("score", F.round(F.col("score"), 6))
-        .select("doc_id", "score")
-    )
+    return _view_hits(spark, view, q, k)
 
 
 def gate_merge(
@@ -569,23 +584,7 @@ def gate_merge(
         keys = [(r["source"], f"{int(r['doc_id']):08d}", "0") for r in victims]
         view = delete_by_keys(view, keys)
         merged = merge_segments(spark, view, os.path.join(out_dir, "merged"))
-    m = merged.segments[0]
-    # same full-result contract as gate_incremental: unsorted component
-    # frame instead of orderBy().limit(n_docs) when every match is wanted;
-    # k=0 is rejected rather than silently returning an empty frame
-    if k is not None and k < 1:
-        raise ValueError("k must be >= 1 (or None for every match)")
-    if k is None:
-        res = merged.search(spark, parse(q), unsorted=True)
-    else:
-        res = merged.search(spark, parse(q), k=k)
-    docs = spark.read.parquet(m.docs_path).select("docid", "path")
-    return (
-        res.join(docs, "docid")
-        .withColumn("doc_id", F.col("path").cast("bigint"))
-        .withColumn("score", F.round(F.col("score"), 6))
-        .select("doc_id", "score")
-    )
+    return _view_hits(spark, merged, q, k)
 
 
 def gate_edismax(
@@ -640,7 +639,7 @@ def gate_edismax(
     wide = wide.select(
         "docid", *[F.col(f"`{t}`").alias(tcol_name[t]) for t in uniq]
     )
-    docs = spark.read.parquet(meta.docs_path).select("docid", "repo", "doclen")
+    docs = index_table(spark, meta, "docs").select("docid", "repo", "doclen")
     use_source = qf_source != 0.0
     src_idf: dict[str, float] = {}
     if use_source:
@@ -701,14 +700,7 @@ def gate_edismax(
             )
             .drop(f"__p{j}")
         )
-    out = _with_doc_id(spark, meta, scored).withColumn(
-        "score", F.round(F.col("score"), 6)
-    )
-    return (
-        out.orderBy(F.desc("score"), F.asc("docid"))
-        .limit(k)
-        .select("doc_id", "score")
-    )
+    return _ranked(spark, meta, scored, k)
 
 
 def gate_mlt(
@@ -763,9 +755,7 @@ def gate_mlt(
         [(0, t, int(c)) for t, c in sorted(tfs.items())],
         "docid bigint, term string, tf bigint",
     )
-    stats = spark.read.parquet(meta.terms_path).where(
-        F.col("term").isin(sorted(tfs))
-    )
+    stats = index_table(spark, meta, "terms").where(F.col("term").isin(sorted(tfs)))
     picked = more_like_this_terms(seed, stats, 0, meta.n_docs, top_terms, min_df)
     terms = [r["term"] for r in picked.collect()]
     if not terms:
@@ -819,12 +809,12 @@ def gate_complexphrase(
     else:
         # all-wildcard phrase: candidates = docs matching the first slot's
         # dictionary expansion (still index-pruned, no full scan)
-        terms_df = spark.read.parquet(meta.terms_path)
+        terms_df = index_table(spark, meta, "terms")
         pat = _like_pattern(slots[0])
         rows = postings_rows(spark, meta, terms_df.filter(F.col("term").like(pat)).select("term"))
         cand = rows.select("docid").dropDuplicates(["docid"])
 
-    docs = spark.read.parquet(meta.docs_path).select("docid", "path")
+    docs = index_table(spark, meta, "docs").select("docid", "path")
     src = _source_docs(spark, sf_dir).select("doc_id", "text")
     with_src = (
         cand.join(docs, "docid")
@@ -850,17 +840,8 @@ def gate_complexphrase(
         return cond
 
     hits = F.filter(F.sequence(F.lit(1), F.greatest(n_pos, F.lit(1))), pos_ok)
-    matched = with_src.withColumn(
-        "ok", (n_pos >= 1) & (F.size(hits) > 0)
-    ).filter(F.col("ok"))
-    out = matched.join(
-        _source_docs(spark, sf_dir).select("doc_id", "source"), "doc_id"
-    ).select("doc_id", F.lit(1.0).alias("score"), "source")
-    return (
-        out.orderBy(F.asc("source"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", "score")
-    )
+    matched = with_src.filter((n_pos >= 1) & (F.size(hits) > 0)).select("docid")
+    return _constant_ranked(spark, meta, matched, k)
 
 
 def gate_highlight(
@@ -919,7 +900,7 @@ def gate_suggest(
     predicate prunes to one file via row-group min/max — a dictionary
     range scan, never a corpus pass."""
     meta = ensure_index(spark, sf_dir)
-    terms = spark.read.parquet(meta.terms_path)
+    terms = index_table(spark, meta, "terms")
     return (
         terms.filter(F.col("term").startswith(prefix.lower()))
         .orderBy(F.desc("df"), F.asc("term"))
@@ -967,7 +948,7 @@ def gate_spellcheck_collate(
     from pyspark.sql import Window
 
     meta = ensure_index(spark, sf_dir)
-    terms_df = spark.read.parquet(meta.terms_path)
+    terms_df = index_table(spark, meta, "terms")
     qterms = analyze_query(q)
     stats = terms_df.where(F.col("term").isin(sorted(set(qterms)))).collect()
     present = {r["term"] for r in stats}
@@ -1019,20 +1000,7 @@ def gate_proximity(
 
     meta = ensure_index(spark, sf_dir)
     a, b = term_a.lower(), term_b.lower()
-    matched_ids = span_match_frame(spark, meta, a, b, slop, ordered)
-    # tie-break column comes from the INDEX docs table (repo := source
-    # under the corpus mapping) — zero source-table access
-    docs_p = spark.read.parquet(meta.docs_path).select(
-        "docid", "path", F.col("repo").alias("source")
-    )
-    return (
-        matched_ids.join(docs_p, "docid")
-        .withColumn("doc_id", F.col("path").cast("bigint"))
-        .select("doc_id", F.lit(1.0).alias("score"), "source")
-        .orderBy(F.asc("source"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", "score")
-    )
+    return _constant_ranked(spark, meta, span_match_frame(spark, meta, a, b, slop, ordered), k)
 
 
 def gate_payload_score(
@@ -1049,14 +1017,7 @@ def gate_payload_score(
 
     meta = ensure_index(spark, sf_dir)
     res = payload_score_frame(spark, meta, term.lower(), func)
-    out = _with_doc_id(spark, meta, res).withColumn(
-        "score", F.round(F.col("payload_score"), 6)
-    )
-    return (
-        out.orderBy(F.desc("score"), F.asc("docid"))
-        .limit(k)
-        .select("doc_id", "score")
-    )
+    return _ranked(spark, meta, res, k, score="payload_score")
 
 
 def gate_payload_check(
@@ -1076,15 +1037,4 @@ def gate_payload_check(
     terms = analyze_query(phrase)
     if not terms:
         return spark.createDataFrame([], "doc_id bigint, score double").limit(0)
-    res = payload_check_frame(spark, meta, terms, payloads)
-    docs = spark.read.parquet(meta.docs_path).select(
-        "docid", "path", F.col("repo").alias("source")
-    )
-    return (
-        res.join(docs, "docid")
-        .withColumn("doc_id", F.col("path").cast("bigint"))
-        .select("doc_id", F.lit(1.0).alias("score"), "source")
-        .orderBy(F.asc("source"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", "score")
-    )
+    return _constant_ranked(spark, meta, payload_check_frame(spark, meta, terms, payloads), k)

@@ -439,9 +439,12 @@ REGISTRY["agg_percentile"] = lambda c, pct: F.percentile(
 
 def docfreq_frame(spark, meta, terms: list[str]):
     """docfreq(field,term) per term: one pruned scan of the terms
-    dictionary (PushedFilters: In(term, ...)); absent terms → df 0."""
+    dictionary (PushedFilters: In(term, ...)); absent terms → df 0.
+    Deleted docs count until a merge."""
+    from solr_spark.indexer import index_table
+
     got = (
-        spark.read.parquet(meta.terms_path)
+        index_table(spark, meta, "terms")
         .where(F.col("term").isin(sorted(set(terms))))
         .select("term", F.col("df").cast("long").alias("docfreq"))
     )
@@ -488,10 +491,14 @@ def tf_frame(spark, meta, terms: list[str]):
 def norm_frame(spark, meta):
     """norm(field): the reference decodes Lucene's lossy 1-byte length
     norm; our docs table keeps the EXACT doclen (norm's information
-    content, losslessly), so norm is a 2-column scan."""
-    return spark.read.parquet(meta.docs_path).select(
+    content, losslessly), so norm is a 2-column scan (of live docs)."""
+    from solr_spark.indexer import index_table
+    from solr_spark.kernel import live_rows
+
+    norms = index_table(spark, meta, "docs").select(
         "docid", F.col("doclen").cast("long").alias("norm")
     )
+    return live_rows(spark, meta, norms)
 
 
 def maxdoc_value(meta) -> Column:
@@ -501,9 +508,9 @@ def maxdoc_value(meta) -> Column:
 
 
 def numdocs_value(meta) -> Column:
-    """numdocs(): maxdoc minus deletions; base-segment metas carry no
-    live-docs mask (segments.py overlays deletes), so this equals
-    maxdoc here."""
+    """numdocs(): maxdoc minus deletions. A literal cannot resolve a
+    view's delete keys (a docs scan), so this is maxdoc for an index and
+    a view alike — a deviation on a view with deletes."""
     return F.lit(int(meta.n_docs))
 
 

@@ -1517,7 +1517,7 @@ def u_copyfield(spark, sf_dir):
 
     from . import kernel
     from .engine import ENGINE_VERSION, _source_signature
-    from .indexer import build_index
+    from .indexer import build_index, index_table
     from .qparser import parse
     from .schema import SchemaSpec, apply_schema
 
@@ -1547,7 +1547,7 @@ def u_copyfield(spark, sf_dir):
         out_dir, bucket_docs=512, resume=True,
     )
     res = kernel.search(spark, meta, parse("src6 merge"), k=10)
-    doc_map = spark.read.parquet(meta.docs_path).select("docid", "path")
+    doc_map = index_table(spark, meta, "docs").select("docid", "path")
     return (
         res.join(doc_map, "docid")
         .withColumn("doc_id", F.col("path").cast("bigint"))
@@ -3111,10 +3111,11 @@ def u_content_integrity(spark, sf_dir):
     solr/core/src/java/org/apache/solr/handler/admin/SegmentsInfoRequestHandler.java).
     Aggregate form for operational use: indexer.verify_content_integrity."""
     from solr_spark.engine import ensure_index
+    from solr_spark.indexer import index_table
 
     meta = ensure_index(spark, sf_dir)
     return (
-        spark.read.parquet(meta.docs_path)
+        index_table(spark, meta, "docs")
         .select(F.col("path").cast("bigint").alias("doc_id"), "sha256")
         .orderBy("doc_id")
     )

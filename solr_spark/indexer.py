@@ -138,6 +138,12 @@ class IndexMeta:
         pass."""
         return os.path.join(self.out_dir, "terms_ngrams")
 
+    delete_keys = ()  # an index is a one-segment view with no deletes
+
+    @property
+    def segments(self) -> list["IndexMeta"]:
+        return [self]
+
     def save(self) -> None:
         """Write meta.json atomically (temp file + os.replace): resume
         trusts any meta.json it finds, so a torn write must never land
@@ -160,6 +166,21 @@ class IndexMeta:
             )
         d["out_dir"] = out_dir
         return cls(**d)
+
+
+def index_table(spark: SparkSession, index, name: str) -> DataFrame:
+    """Table ``name`` (docs, postings, terms, positions, ...) of an
+    IndexMeta or a segments.IndexView: one multi-path scan over every
+    segment. Buckets never straddle segments, so a view's table is the
+    union of its segments' rows; its terms table sums each term's stats.
+    Deleted docs stay in every table (kernel.live_rows drops them)."""
+    segs = index.segments
+    table = spark.read.parquet(*[os.path.join(m.out_dir, name) for m in segs])
+    if name == "terms" and len(segs) > 1:
+        table = table.groupBy("term").agg(
+            *[F.sum(c).alias(c) for c in ("df", "cf", "n_buckets")]
+        )
+    return table
 
 
 class _DictSumParam(AccumulatorParam):
@@ -674,18 +695,18 @@ def write_bucket_stats(docs_df: DataFrame, out_path: str, P: int,
     )
 
 
-def write_term_stats(postings_df: DataFrame, out_path: str, P: int) -> None:
-    """Stage 4 writer: global (df, cf, n_buckets) per term, range-sorted
-    (shared by build_index and segment merge). Alongside the stats table
-    it writes ``<out_path>_rev``: the REVERSED term dictionary, range-
-    sorted by the reversed form — the ReversedWildcardFilterFactory
+def write_term_stats(spark: SparkSession, meta: IndexMeta, P: int) -> None:
+    """Stage 4 writer: global (df, cf, n_buckets) per term of ``meta``'s
+    postings, range-sorted (shared by build_index and segment merge).
+    Alongside the stats table it writes ``terms_rev``: the REVERSED term
+    dictionary, range-sorted by the reversed form — the ReversedWildcardFilterFactory
     capability (reference text_general_rev fieldType;
     CORE/analysis/ReversedWildcardFilterFactory.java): a leading-wildcard
     query becomes a PREFIX scan on this table (parquet min/max row-group
     pruning applies) instead of a full dictionary LIKE scan. Cost ∝
     vocabulary (two narrow columns), negligible next to postings."""
     (
-        postings_df.groupBy("term")
+        index_table(spark, meta, "postings").groupBy("term")
         .agg(
             F.sum("df").alias("df"),
             F.sum("cf").alias("cf"),
@@ -694,15 +715,15 @@ def write_term_stats(postings_df: DataFrame, out_path: str, P: int) -> None:
         .repartitionByRange(max(P // 4, 1), "term")
         .sortWithinPartitions("term")
         .write.mode("overwrite")
-        .parquet(out_path)
+        .parquet(meta.terms_path)
     )
     (
-        spark_read_parquet_same_session(postings_df, out_path)
+        index_table(spark, meta, "terms")
         .select(F.reverse(F.col("term")).alias("rev"), "term")
         .repartitionByRange(max(P // 8, 1), "rev")
         .sortWithinPartitions("rev")
         .write.mode("overwrite")
-        .parquet(out_path + "_rev")
+        .parquet(meta.terms_rev_path)
     )
     # bigram inverted index over the dictionary (one row per gram
     # OCCURRENCE — the occurrence count can only overcount the multiset
@@ -711,7 +732,7 @@ def write_term_stats(postings_df: DataFrame, out_path: str, P: int) -> None:
     # query side's IN(<pattern grams>) prunes row groups. Cost ∝
     # vocabulary × avg term length — the same posture as terms_rev.
     (
-        spark_read_parquet_same_session(postings_df, out_path)
+        index_table(spark, meta, "terms")
         .select(
             "term",
             F.length("term").alias("tlen"),
@@ -727,14 +748,8 @@ def write_term_stats(postings_df: DataFrame, out_path: str, P: int) -> None:
         .repartitionByRange(max(P // 8, 1), "gram")
         .sortWithinPartitions("gram", "term")
         .write.mode("overwrite")
-        .parquet(out_path + "_ngrams")
+        .parquet(meta.terms_ngrams_path)
     )
-
-
-def spark_read_parquet_same_session(df: DataFrame, path: str) -> DataFrame:
-    """Read ``path`` with the session that produced ``df`` (write_term_stats
-    is called with a DataFrame, not a session handle)."""
-    return df.sparkSession.read.parquet(path)
 
 
 def _done(path: str) -> bool:
@@ -762,7 +777,7 @@ def _finish_meta(spark: SparkSession, meta: IndexMeta, enc_acc) -> IndexMeta:
     (_accumulators_exact) — and otherwise from one aggregation over the
     postings table."""
     t0 = time.time()
-    ts = spark.read.parquet(meta.terms_path).agg(
+    ts = index_table(spark, meta, "terms").agg(
         F.count("*").alias("n_terms"), F.max("df").alias("max_df"), F.avg("df").alias("mean_df")
     ).collect()[0]
     meta.n_terms = int(ts["n_terms"] or 0)
@@ -772,7 +787,7 @@ def _finish_meta(spark: SparkSession, meta: IndexMeta, enc_acc) -> IndexMeta:
     if acc:
         meta.postings_rows, meta.postings_bytes = (int(x) for x in acc[0])
     else:
-        pb = spark.read.parquet(meta.postings_path).agg(
+        pb = index_table(spark, meta, "postings").agg(
             F.count("*").alias("rows"),
             F.sum(F.length("doc_bytes") + F.length("tf_bytes")).alias("bytes"),
         ).collect()[0]
@@ -934,7 +949,7 @@ def build_index(
     bs_out = os.path.join(out_dir, "bucket_stats")
     if not (resume and _done(bs_out)):
         write_bucket_stats(
-            spark.read.parquet(docs_out), bs_out, P, first_id_col=id_cols[0]
+            index_table(spark, meta, "docs"), bs_out, P, first_id_col=id_cols[0]
         )
     meta.stages["bucket_stats"] = round(time.time() - t0, 3)
 
@@ -1001,7 +1016,7 @@ def build_index(
     # the stage is done only when all three are
     vocab = (meta.terms_path, meta.terms_rev_path, meta.terms_ngrams_path)
     if not (resume and all(_done(p) for p in vocab)):
-        write_term_stats(spark.read.parquet(post_out), meta.terms_path, P)
+        write_term_stats(spark, meta, P)
     meta.stages["term_stats"] = round(time.time() - t0, 3)
 
     # ---- stage 5: meta + lineage -------------------------------------------
@@ -1025,7 +1040,7 @@ def verify_content_integrity(
     (n_docs, n_matched, n_sha_mismatch, n_missing_in_index,
     n_missing_in_source); a clean build has n_docs == n_matched and
     zeros elsewhere."""
-    docs = spark.read.parquet(meta.docs_path).select(*id_cols, "sha256")
+    docs = index_table(spark, meta, "docs").select(*id_cols, "sha256")
     src = source.select(
         *id_cols, F.sha2(F.coalesce(F.col(content_col), F.lit("")), 256).alias("__sha")
     )

@@ -31,6 +31,12 @@ Stage 1 is also the only df source: a postings row carries its
 (term, bucket) df, and a term's df is the sum of its rows. Every index
 has every table, so the searcher probes for none.
 
+Every entry point takes an IndexMeta or a segments.IndexView and reads
+its tables through indexer.index_table, across every segment. As in the
+reference's searcher, a view's deleted docs stop matching at once (no
+per-doc output holds them) while df, idf, n_docs, avgdl and the
+term-frequency totals count them until a merge.
+
 Exactness contract: results (docids AND float64 scores) are identical with
 pruning on or off, at any parallelism — tested in
 tests/test_index_search.py::test_prune_equals_noprune.
@@ -46,7 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .codec import decode_blocks, decode_postings
-from .indexer import IndexMeta
+from .indexer import IndexMeta, index_table
 from .qparser import Query, parse
 from .scoring import accumulate, tfnorm, tfnorm_col, top_k
 from .scoring import idf as idf_fn
@@ -309,11 +315,12 @@ class Searcher:
     parquet scans per query) and are the only df source.
 
     ``meta`` is one IndexMeta or a segments.IndexView; each table is read
-    across every segment in one multi-path scan (buckets never straddle
-    segments, so the kernel needs no merge logic). Given a view, it
-    resolves the view's delete keys once to ``dead``, the live-docs mask
-    (bucket -> sorted bucket-local deleted docids) that every query and
-    the driver-local path apply.
+    through indexer.index_table, one multi-path scan across every
+    segment (buckets never straddle segments, so the kernel needs no
+    merge logic). Given delete keys, it resolves them once to ``dead``,
+    the live-docs mask (bucket -> sorted bucket-local deleted docids)
+    that every query and the driver-local path apply; an IndexMeta has
+    none and resolves nothing.
 
     Two driver caches serve the bounded top-k path of ``search``: the df
     of every term queried so far, and the ``bucket_stats`` rows of the
@@ -330,13 +337,11 @@ class Searcher:
     def __init__(self, spark: SparkSession, meta: IndexMeta, cache: bool = True):
         self.spark = spark
         self.meta = meta
-        segs = getattr(meta, "segments", [meta])
-        dead_docids = getattr(meta, "dead_docids", None)  # views only
-        self.dead = dead_docids(spark) if dead_docids else {}
-        self._end_docid = max(m.docid_base + m.n_docs for m in segs)
-        self.postings = spark.read.parquet(*[m.postings_path for m in segs])
-        self.docs = spark.read.parquet(*[m.docs_path for m in segs])
-        self.bucket_stats = spark.read.parquet(*[m.bucket_stats_path for m in segs])
+        self.dead = meta.dead_docids(spark) if meta.delete_keys else {}
+        self._end_docid = max(m.docid_base + m.n_docs for m in meta.segments)
+        self.postings = index_table(spark, meta, "postings")
+        self.docs = index_table(spark, meta, "docs")
+        self.bucket_stats = index_table(spark, meta, "bucket_stats")
         if cache:
             self.docs = self.docs.cache()
             self.bucket_stats = self.bucket_stats.cache()
@@ -660,8 +665,8 @@ def hit_count(
     Lucene's TotalHits relation: returns (count, relation) with relation
     'EQ' (exact) or 'GTE' (lower bound after early termination).
 
-    - single optional term, no filters/prohibited: answered from the term
-      dictionary alone (df is exact; zero postings scanned);
+    - single optional term, no filters/prohibited/deletes: answered from
+      the terms table alone (df is exact; zero postings scanned);
     - min_exact_count set: matches are scored only up to that many; if the
       budget fills, the count is reported as a 'GTE' lower bound —
       the caller opted out of an exact count, exactly the reference's
@@ -671,13 +676,14 @@ def hit_count(
     terms = list(query.scoring)
     if (
         len(terms) == 1
+        and not meta.delete_keys
         and not query.filters
         and not query.prohibited
         and not query.phrases
         and not query.multiterm
     ):
         stats = (
-            spark.read.parquet(meta.terms_path)
+            index_table(spark, meta, "terms")
             .where(F.col("term") == terms[0])
             .collect()
         )
@@ -723,13 +729,23 @@ def postings_rows(
     ``terms`` may be a literal list (pruned isin scan) or a single-column
     DataFrame of terms (broadcast semi-join) — the DataFrame form keeps
     dictionary-driven expansions (prefix/wildcard/fuzzy) fully
-    distributed, no term list ever reaching the driver."""
-    postings = spark.read.parquet(meta.postings_path)
+    distributed, no term list ever reaching the driver. A view's deleted
+    docs get no rows."""
+    postings = index_table(spark, meta, "postings")
     if isinstance(terms, DataFrame):
         postings = postings.join(F.broadcast(terms.select("term")), "term", "left_semi")
     else:
         postings = postings.where(F.col("term").isin(terms))
-    return decode_posting_frame(postings, meta.bucket_docs)
+    return live_rows(spark, meta, decode_posting_frame(postings, meta.bucket_docs))
+
+
+def live_rows(spark: SparkSession, meta: IndexMeta, rows: DataFrame) -> DataFrame:
+    """``rows`` (with a docid column) without the docs ``meta`` deletes;
+    without delete keys, ``rows`` itself and no scan."""
+    if not meta.delete_keys:
+        return rows
+    dead = F.broadcast(meta.deleted(spark))
+    return rows.join(dead, "docid", "left_anti").select(*rows.columns)
 
 
 def term_contributions(spark: SparkSession, meta: IndexMeta, terms: list[str]) -> DataFrame:
@@ -737,9 +753,9 @@ def term_contributions(spark: SparkSession, meta: IndexMeta, terms: list[str]) -
     idf precomputed driver-side (same np.log as the scoring kernel), the
     tf-normalization evaluated as scoring.tfnorm_col, the Catalyst twin
     of scoring.tfnorm, so values are bit-identical to the fused kernel's
-    contributions."""
+    contributions. A view's deleted docs get no rows."""
     stats = (
-        spark.read.parquet(meta.terms_path).where(F.col("term").isin(terms)).collect()
+        index_table(spark, meta, "terms").where(F.col("term").isin(terms)).collect()
     )
     df_map = {r["term"]: int(r["df"]) for r in stats}
     present = [t for t in terms if df_map.get(t, 0) > 0]
@@ -748,7 +764,7 @@ def term_contributions(spark: SparkSession, meta: IndexMeta, terms: list[str]) -
     idf_rows = [(t, float(idf_fn(df_map[t], meta.n_docs))) for t in present]
     idf_df = spark.createDataFrame(idf_rows, "term string, idf double")
     rows = postings_rows(spark, meta, present)
-    doclens = spark.read.parquet(meta.docs_path).select("docid", "doclen")
+    doclens = index_table(spark, meta, "docs").select("docid", "doclen")
     return (
         rows.join(F.broadcast(idf_df), "term")
         .join(doclens, "docid")
@@ -776,8 +792,11 @@ def dismax_search(
 
     Implemented by pivoting per-term contributions wide and combining with
     greatest() — deterministic float evaluation order (sorted terms left
-    to right), mirrored exactly by the DuckDB oracle."""
+    to right), mirrored exactly by the DuckDB oracle. No terms, or a
+    sorted call with k <= 0, return search's empty result."""
     terms = sorted(set(terms))
+    if not terms or (k <= 0 and not unsorted):
+        return spark.createDataFrame([], RESULT_SCHEMA).limit(0)
     contribs = term_contributions(spark, meta, terms)
     # pivot emits one column PER TERM VALUE — group under an alias the
     # tokenizer can never produce, or a query term spelled "docid" would
@@ -812,8 +831,12 @@ def total_term_freq(
     TotalTermFreqValueSource): corpus-wide occurrence count per term.
     One pruned postings scan (PushedFilters: In(term, ...)) feeding the
     same varint decode kernel the scorer uses; the per-term sum is a
-    partial-aggregated groupBy — no doc rows reach the driver."""
-    rows = postings_rows(spark, meta, sorted(set(terms)))
+    partial-aggregated groupBy — no doc rows reach the driver. Deleted
+    docs count until a merge."""
+    postings = index_table(spark, meta, "postings").where(
+        F.col("term").isin(sorted(set(terms)))
+    )
+    rows = decode_posting_frame(postings, meta.bucket_docs)
     return rows.groupBy("term").agg(F.sum("tf").alias("ttf"))
 
 
@@ -827,7 +850,8 @@ def explain_hits(
     hit's BM25 score. Contribs come from kernel.term_contributions (the
     exact literal shape of the scoring kernel), weights are the query's
     per-term clause multiplicities; the join is broadcast on the k-row
-    hit set, so explain touches only the hits' postings."""
+    hit set, so explain touches only the hits' postings. A view's
+    deleted docs are never hits."""
     query = parse(q) if isinstance(q, str) else q
     res = search(spark, meta, query, k=k)
     # materialize the k hits once: res is the whole scoring pipeline and is
@@ -886,6 +910,6 @@ def sum_total_term_freq(spark: SparkSession, meta: IndexMeta) -> DataFrame:
     every term of the field = Σ doclen over the docs table — computed
     from the 1-column doc-stats scan, NOT by decoding all postings (at
     100 TB the docs table is ~1e9 rows of one long vs postings in the
-    trillions)."""
-    docs = spark.read.parquet(meta.docs_path)
+    trillions). Deleted docs count until a merge."""
+    docs = index_table(spark, meta, "docs")
     return docs.agg(F.sum("doclen").cast("long").alias("sttf"))

@@ -54,7 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .codec import _varint_sizes, varint_decode, varint_encode
-from .indexer import IndexMeta, _binary_stream, _done
+from .indexer import IndexMeta, _binary_stream, _done, index_table
 
 POSITIONS_SCHEMA = (
     "term string, bucket bigint, df bigint, "
@@ -82,10 +82,6 @@ def default_payload_fn(tokens, positions: np.ndarray) -> np.ndarray:
 
     lens = pc.utf8_length(tokens).to_numpy().astype(np.int64)
     return (lens + positions) % 16
-
-
-def positions_path(meta: IndexMeta) -> str:
-    return os.path.join(meta.out_dir, "positions")
 
 
 # ---------------------------------------------------------------------------
@@ -531,21 +527,16 @@ def build_positions(
     payload_score/payload_check consume it). Idempotent and resume-safe
     (_SUCCESS gate); sets meta.has_positions (and has_payloads) and
     re-saves meta.json."""
-    out = positions_path(meta)
-    if (
-        _done(out)
-        and getattr(meta, "has_positions", False)
-        and (payload_fn is None or getattr(meta, "has_payloads", False))
-    ):
+    out = os.path.join(meta.out_dir, "positions")
+    if _done(out) and meta.has_positions and (payload_fn is None or meta.has_payloads):
         return meta
     t0 = time.time()
     P = num_partitions or spark.sparkContext.defaultParallelism
     from .analysis import ANALYZERS, PRE_TRANSFORMS, SynonymGraph
 
-    term_transform = ANALYZERS[getattr(meta, "analyzer", "code")]
-    pre_transform = PRE_TRANSFORMS.get(getattr(meta, "analyzer", "code"))
-    syn_rules = getattr(meta, "synonyms", None)
-    synonyms = SynonymGraph(syn_rules) if syn_rules else None
+    term_transform = ANALYZERS[meta.analyzer]
+    pre_transform = PRE_TRANSFORMS.get(meta.analyzer)
+    synonyms = SynonymGraph(meta.synonyms) if meta.synonyms else None
     # resume safety: meta.json may be stale/absent relative to the table
     # (_SUCCESS written, crash before meta.save()), so derive the payload
     # stream's ACTUAL presence from the table — never from this call's
@@ -554,7 +545,7 @@ def build_positions(
     table_has_payloads = False
     if have_table:
         table_has_payloads = (
-            spark.read.parquet(out)
+            index_table(spark, meta, "positions")
             .where(F.col("pay_bytes").isNotNull())
             .limit(1)
             .count()
@@ -565,7 +556,7 @@ def build_positions(
             # without them — rebuild (idempotent overwrite)
             have_table = False
     if not have_table:
-        docs_tbl = spark.read.parquet(meta.docs_path).select(
+        docs_tbl = index_table(spark, meta, "docs").select(
             "docid", *[F.col(c).cast("string").alias(c) for c in id_cols]
         )
         src = source.select(
@@ -604,12 +595,28 @@ def build_positions(
 # query kernels
 
 
-def _bucket_rows(pdf: pd.DataFrame) -> dict:
-    """All encoded rows of ONE bucket -> {term: row}, decoded lazily by
-    the kernels (docids first, positions only when the docid intersection
-    survives). The range layout makes (term, bucket) groups complete and
-    unique per partition, so each term maps to exactly one row."""
-    return {row["term"]: row for _, row in pdf.iterrows()}
+def _positional_scan(
+    spark: SparkSession, meta: IndexMeta, terms: list[str], kernel, schema: str,
+    payloads: bool = False,
+) -> DataFrame:
+    """The one positional plan: check the index has positions (or
+    payloads), read the ``terms``' rows of its positions table (a
+    term-pruned scan, the same row-group pruning as postings), and run
+    ``kernel`` on each bucket's rows as {term: row}, decoded lazily by
+    the kernel (docids first, positions only when the docid
+    intersection survives). The range layout makes (term, bucket) groups
+    complete and unique per partition, so each term maps to exactly one
+    row. A segments.IndexView has no positions table."""
+    if payloads and not getattr(meta, "has_payloads", False):
+        raise ValueError("index has no payload stream (build_positions payload_fn)")
+    if not getattr(meta, "has_positions", False):
+        raise ValueError("index has no positions table (build_positions)")
+
+    def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
+        return kernel({row["term"]: row for _, row in pdf.iterrows()})
+
+    pos = index_table(spark, meta, "positions").where(F.col("term").isin(sorted(set(terms))))
+    return pos.groupBy("bucket").applyInPandas(per_bucket, schema)
 
 
 _KEY_SHIFT = np.int64(1) << np.int64(40)  # doc index < 4096 (bucket_docs),
@@ -628,17 +635,13 @@ def _doc_pos_keys_and_mask(docids, counts, positions, common):
     return doc_idx.astype(np.int64) * _KEY_SHIFT + positions[tok_ok], tok_ok
 
 
-def _doc_pos_keys(docids, counts, positions, common):
-    return _doc_pos_keys_and_mask(docids, counts, positions, common)[0]
-
-
 def _phrase_starts(rows: dict, terms: list[str], bucket_docs: int, payloads=None):
     """Intersect-and-chain of the phrase ``terms`` over one bucket's
-    rows (``_bucket_rows``) -> (common, starts), or None if nothing
-    matches. ``common`` is the sorted docids holding every term; each
-    key in ``starts`` (doc index into ``common`` * _KEY_SHIFT +
-    position) is one occurrence of the whole phrase, one key per
-    start position. ``payloads`` (one per slot) keeps a slot's
+    rows ({term: row}, see _positional_scan) -> (common, starts), or
+    None if nothing matches. ``common`` is the sorted docids holding
+    every term; each key in ``starts`` (doc index into ``common`` *
+    _KEY_SHIFT + position) is one occurrence of the whole phrase, one
+    key per start position. ``payloads`` (one per slot) keeps a slot's
     positions only where the payload equals the slot's."""
     uniq = sorted(set(terms))
     if any(t not in rows for t in uniq):
@@ -680,16 +683,13 @@ def phrase_tf_frame(
     content access, any phrase length, overlapping occurrences counted
     (Lucene PhraseQuery position semantics). Returns
     DataFrame(docid bigint, phrase_tf bigint), phrase_tf > 0 only."""
-    if not getattr(meta, "has_positions", False):
-        raise ValueError("index has no positions table (build_positions)")
     if not terms:
         raise ValueError("phrase_tf_frame requires at least one term")
-    uniq = sorted(set(terms))
     bucket_docs = meta.bucket_docs
     terms_l = list(terms)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        hit = _phrase_starts(_bucket_rows(pdf), terms_l, bucket_docs)
+    def kernel(rows: dict) -> pd.DataFrame:
+        hit = _phrase_starts(rows, terms_l, bucket_docs)
         if hit is None:
             return pd.DataFrame({"docid": pd.Series([], dtype="int64"),
                                  "phrase_tf": pd.Series([], dtype="int64")})
@@ -699,10 +699,7 @@ def phrase_tf_frame(
         nz = np.flatnonzero(tf)
         return pd.DataFrame({"docid": common[nz], "phrase_tf": tf[nz].astype(np.int64)})
 
-    pos = spark.read.parquet(positions_path(meta)).where(F.col("term").isin(uniq))
-    return pos.groupBy("bucket").applyInPandas(
-        kernel, "docid bigint, phrase_tf bigint"
-    )
+    return _positional_scan(spark, meta, terms_l, kernel, "docid bigint, phrase_tf bigint")
 
 
 def span_match_frame(
@@ -716,15 +713,11 @@ def span_match_frame(
     """Docs where a span of (a, b) exists within ``slop`` — the surround
     parser's Nw (ordered) / Nn (unordered) verification over positional
     postings. Returns DataFrame(docid bigint)."""
-    if not getattr(meta, "has_positions", False):
-        raise ValueError("index has no positions table (build_positions)")
     a, b = term_a, term_b
-    uniq = sorted({a, b})
     bucket_docs = meta.bucket_docs
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(rows: dict) -> pd.DataFrame:
         empty = pd.DataFrame({"docid": pd.Series([], dtype="int64")})
-        rows = _bucket_rows(pdf)
         if a not in rows or b not in rows:
             return empty
         da = decode_run_docids(rows[a], bucket_docs)
@@ -733,12 +726,12 @@ def span_match_frame(
         if common.size == 0:
             return empty
         ca, fa = decode_run_positions(rows[a])
-        ka = _doc_pos_keys(da, ca, fa, common)
+        ka = _doc_pos_keys_and_mask(da, ca, fa, common)[0]
         if b == a:
             kb = ka
         else:
             cb, fb = decode_run_positions(rows[b])
-            kb = _doc_pos_keys(db, cb, fb, common)
+            kb = _doc_pos_keys_and_mask(db, cb, fb, common)[0]
         # ka/kb are sorted ((doc, position) keys ascend within a run), so
         # one searchsorted window pair answers every slop at once instead
         # of 2*slop full isin passes. Windows can't leak across docs:
@@ -759,8 +752,7 @@ def span_match_frame(
         docs = np.unique((ka[hit] // _KEY_SHIFT).astype(np.int64))
         return pd.DataFrame({"docid": common[docs]})
 
-    pos = spark.read.parquet(positions_path(meta)).where(F.col("term").isin(uniq))
-    return pos.groupBy("bucket").applyInPandas(kernel, "docid bigint")
+    return _positional_scan(spark, meta, [a, b], kernel, "docid bigint")
 
 
 # ---------------------------------------------------------------------------
@@ -780,16 +772,13 @@ def payload_score_frame(
     DataFrame(docid bigint, payload_score double). Scan ∝ the ONE term's
     postings (term-pruned parquet read), aggregation per bucket in numpy
     reduceat — no per-doc Python loop."""
-    if not getattr(meta, "has_payloads", False):
-        raise ValueError("index has no payload stream (build_positions payload_fn)")
     if func not in PAYLOAD_FUNCS:
         raise ValueError(f"unknown payload func {func!r}; one of {PAYLOAD_FUNCS}")
     bucket_docs = meta.bucket_docs
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(rows: dict) -> pd.DataFrame:
         empty = pd.DataFrame({"docid": pd.Series([], dtype="int64"),
                               "payload_score": pd.Series([], dtype="float64")})
-        rows = _bucket_rows(pdf)
         if term not in rows:
             return empty
         row = rows[term]
@@ -811,9 +800,8 @@ def payload_score_frame(
             val = pay[seg]
         return pd.DataFrame({"docid": docids, "payload_score": val})
 
-    pos = spark.read.parquet(positions_path(meta)).where(F.col("term") == term)
-    return pos.groupBy("bucket").applyInPandas(
-        kernel, "docid bigint, payload_score double"
+    return _positional_scan(
+        spark, meta, [term], kernel, "docid bigint, payload_score double", payloads=True
     )
 
 
@@ -826,22 +814,18 @@ def payload_check_frame(
     SpanPayloadCheckQuery). Same cogrouped shape as phrase_tf_frame with
     each slot's (doc, position) keys pre-filtered by payload equality.
     Returns DataFrame(docid bigint)."""
-    if not getattr(meta, "has_payloads", False):
-        raise ValueError("index has no payload stream (build_positions payload_fn)")
     if len(terms) != len(payloads):
         raise ValueError("payload_check needs one payload per phrase slot")
-    uniq = sorted(set(terms))
     bucket_docs = meta.bucket_docs
     terms_l = list(terms)
     pays_l = [int(p) for p in payloads]
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        hit = _phrase_starts(_bucket_rows(pdf), terms_l, bucket_docs, pays_l)
+    def kernel(rows: dict) -> pd.DataFrame:
+        hit = _phrase_starts(rows, terms_l, bucket_docs, pays_l)
         if hit is None:
             return pd.DataFrame({"docid": pd.Series([], dtype="int64")})
         common, cand = hit
         idx = np.unique((cand // _KEY_SHIFT).astype(np.int64))
         return pd.DataFrame({"docid": common[idx]})
 
-    pos = spark.read.parquet(positions_path(meta)).where(F.col("term").isin(uniq))
-    return pos.groupBy("bucket").applyInPandas(kernel, "docid bigint")
+    return _positional_scan(spark, meta, terms_l, kernel, "docid bigint", payloads=True)

@@ -12,14 +12,17 @@ counting them until segments merge).
 Spark shape: each delta batch is a full build_index run with a
 bucket-aligned ``docid_base``, so a docid bucket never spans segments and
 every per-(term,bucket) postings row lives in exactly one segment — the
-query kernel needs no merge logic at all. A view is searched through one
-kernel.Searcher that reads each table across all segments:
+query kernel needs no merge logic at all. Every reader takes a view (or
+an IndexMeta, a one-segment view with no deletes) through
+indexer.index_table, which reads each table across all segments:
 
   postings     = union of segment postings dirs (one multi-path scan);
                  the searcher sums a query term's df over its postings
                  rows on the driver (exact global IDF across segments,
                  the ExactStatsCache analog — stronger than Lucene's
                  per-segment stats), no groupBy shuffle
+  terms        = each term's df/cf/n_buckets summed over the segments'
+                 terms tables
   docs, bucket_stats = union of segment dirs, deleted docs included
   n/avgdl      = summed totals (additions are append-only, so the
                  combined stats equal a from-scratch rebuild's exactly —
@@ -28,8 +31,9 @@ kernel.Searcher that reads each table across all segments:
 Deletes are Lucene's liveDocs: any searcher over the view resolves its
 delete keys to docids once (one left-semi join of the docs tables), and
 the scoring kernel clears them from its per-bucket ``alive`` mask before
-any pruning or scoring. The packed bucket_stats path stays on, and n_docs,
-avgdl and df keep counting deleted docs until a merge reclaims them.
+any pruning or scoring; DataFrame readers anti-join the same docids
+(kernel.live_rows). The packed bucket_stats path stays on, and the
+statistics keep counting deleted docs until a merge reclaims them.
 """
 
 from __future__ import annotations
@@ -41,7 +45,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .indexer import IndexMeta, build_index
+from .indexer import IndexMeta, build_index, index_table
 
 
 @dataclass
@@ -65,12 +69,6 @@ class IndexView:
         # segments inherit it via add_segment, so segment 0 is canonical)
         return list(self.segments[0].id_cols)
 
-    def _delete_frame(self, spark: SparkSession):
-        ids = self.id_cols
-        return spark.createDataFrame(
-            self.delete_keys, ", ".join(f"{c} string" for c in ids)
-        )
-
     @property
     def n_docs(self) -> int:
         # live-docs semantics: stats keep counting deleted docs (they are
@@ -92,15 +90,20 @@ class IndexView:
         b = self.bucket_docs
         return ((end + b - 1) // b) * b
 
+    def deleted(self, spark: SparkSession) -> DataFrame:
+        """The docids of the deleted docs: a key deletes every doc that
+        carries it."""
+        keys = spark.createDataFrame(
+            self.delete_keys, ", ".join(f"{c} string" for c in self.id_cols)
+        )
+        return index_table(spark, self, "docs").join(
+            F.broadcast(keys), self.id_cols, "left_semi"
+        ).select("docid")
+
     def dead_docids(self, spark: SparkSession) -> dict[int, np.ndarray]:
         """The live-docs mask: bucket -> sorted bucket-local docids of the
-        deleted docs. A key deletes every doc that carries it."""
-        if not self.delete_keys:
-            return {}
-        docs = spark.read.parquet(*[m.docs_path for m in self.segments])
-        hit = docs.join(
-            F.broadcast(self._delete_frame(spark)), self.id_cols, "left_semi"
-        ).select("docid").collect()
+        deleted docs."""
+        hit = self.deleted(spark).collect()
         ids = np.sort(np.fromiter((r["docid"] for r in hit), np.int64, len(hit)))
         B = self.bucket_docs
         buckets, starts = np.unique(ids // B, return_index=True)
@@ -122,12 +125,11 @@ class IndexView:
 
     def frames(self, spark: SparkSession):
         """(terms, postings, docs, bucket_stats) frames over every segment:
-        the view searcher's last three, and terms (one row per (segment,
-        term)) read here. docs and bucket_stats still hold the deleted
-        docs: the searcher's live-docs mask removes them in the kernel."""
+        the view searcher's last three, and the view's terms table read
+        here. docs and bucket_stats still hold the deleted docs: the
+        searcher's live-docs mask removes them in the kernel."""
         s = self.searcher(spark)
-        terms = spark.read.parquet(*[m.terms_path for m in self.segments])
-        return terms, s.postings, s.docs, s.bucket_stats
+        return index_table(spark, self, "terms"), s.postings, s.docs, s.bucket_stats
 
     def search(
         self,
@@ -158,7 +160,7 @@ def add_segment(
     # with a different analyzer would be silently inconsistent with the
     # shared dictionary
     kw.setdefault("analyzer", base.analyzer)
-    kw.setdefault("synonyms", getattr(base, "synonyms", None))
+    kw.setdefault("synonyms", base.synonyms)
     meta = build_index(
         spark,
         new_docs,
@@ -209,7 +211,7 @@ def merge_segments(
         write_docs,
         write_term_stats,
     )
-    from .kernel import decode_posting_frame
+    from .kernel import decode_posting_frame, live_rows
     from .operators.relational import global_rank
 
     P = num_partitions or spark.sparkContext.defaultParallelism
@@ -220,15 +222,11 @@ def merge_segments(
         out_dir=out_dir,
         bucket_docs=bucket_docs,
         analyzer=view.segments[0].analyzer,
-        synonyms=getattr(view.segments[0], "synonyms", None),
+        synonyms=view.segments[0].synonyms,
         id_cols=ids,
     )
 
-    docs = spark.read.parquet(*[m.docs_path for m in view.segments])
-    if view.delete_keys:
-        docs = docs.join(
-            F.broadcast(view._delete_frame(spark)), ids, "left_anti"
-        )
+    docs = live_rows(spark, view, index_table(spark, view, "docs"))
 
     # 1. dense new docids in id_cols order — the fresh-build docid
     # contract, so merged == rebuilt exactly
@@ -249,7 +247,7 @@ def merge_segments(
         ),
         meta.docs_path, P,
     )
-    new_docs = spark.read.parquet(meta.docs_path)
+    new_docs = index_table(spark, meta, "docs")
     st = new_docs.agg(F.count("*").alias("n"), F.sum("doclen").alias("s")).collect()[0]
     meta.n_docs, meta.sum_doclen = int(st["n"]), int(st["s"] or 0)
     meta.avgdl = meta.sum_doclen / meta.n_docs if meta.n_docs else 0.0
@@ -258,7 +256,7 @@ def merge_segments(
     # through build stage 3b's writer (decode_posting_frame is the same
     # kernel the function-query surface uses — one decode loop shared
     # across the codebase)
-    postings = spark.read.parquet(*[m.postings_path for m in view.segments])
+    postings = index_table(spark, view, "postings")
     triples = decode_posting_frame(postings, bucket_docs).withColumnRenamed(
         "docid", "old_docid"
     )
@@ -289,7 +287,7 @@ def merge_segments(
     # 3. stats tables and meta — the SAME writers and finish build_index
     # uses (stages 2b/4/5), so the layouts cannot desynchronize
     write_bucket_stats(new_docs, meta.bucket_stats_path, P, first_id_col=ids[0])
-    write_term_stats(spark.read.parquet(meta.postings_path), meta.terms_path, P)
+    write_term_stats(spark, meta, P)
     return IndexView(segments=[_finish_meta(spark, meta, enc_acc)])
 
 

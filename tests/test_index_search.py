@@ -255,6 +255,23 @@ def test_dismax_term_named_docid(spark, small_index):
     assert rows and set(rows[0].asDict()) == {"docid", "score"}
 
 
+@pytest.mark.parametrize("terms,k", [([], 10), ([], -1), (["license"], -1), (["license"], 0)])
+def test_dismax_edge_inputs_match_search(spark, small_index, terms, k):
+    """No terms, or k <= 0, give search's empty result: a local relation
+    that runs no Spark job."""
+    from solr_spark.kernel import dismax_search
+
+    sc, tag = spark.sparkContext, f"dismax_edge_{len(terms)}_{k}"
+    sc.setJobGroup(tag, tag)
+    try:
+        res = dismax_search(spark, small_index, terms, k=k)
+        assert res.columns == ["docid", "score"] and res.collect() == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(tag) == []
+    assert search(spark, small_index, " ".join(terms), k=k).collect() == []
+
+
 def test_search_unsorted_with_fields_raises(spark, small_index):
     """unsorted=True deliberately skips the stored-fields join; asking for
     both must fail loudly instead of silently dropping the doc columns."""

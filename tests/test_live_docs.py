@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from solr_spark.codec import decode_postings
 from solr_spark.corpus import RARE1
 from solr_spark import kernel
+from solr_spark.indexer import build_index
 from solr_spark.kernel import Searcher, decode_posting_frame
 from solr_spark.segments import add_segment, delete_by_keys, open_base
 
@@ -114,6 +115,82 @@ def test_local_topk_on_delta_segment(spark, view):
     s.warm_local(["license", "int", "public"])
     for q in ["license", "license int public", "+int +license"]:
         assert s.local_topk(q, K) == _hits(s.search(q, K)), q
+
+
+# -- every reader takes a view ---------------------------------------------
+
+TERMS = ["license", "int", "zz_definitely_absent"]
+
+
+def _readers():
+    from solr_spark.functions import funcquery as fq
+
+    return {
+        "hit_count": lambda s, i: kernel.hit_count(s, i, "license"),
+        "explain_hits": lambda s, i: kernel.explain_hits(s, i, "license int", k=600),
+        "term_contributions": lambda s, i: kernel.term_contributions(s, i, TERMS),
+        "postings_rows": lambda s, i: kernel.postings_rows(s, i, TERMS),
+        "total_term_freq": lambda s, i: kernel.total_term_freq(s, i, TERMS),
+        "dismax_search": lambda s, i: kernel.dismax_search(s, i, TERMS, tie=0.1, unsorted=True),
+        "sum_total_term_freq": lambda s, i: kernel.sum_total_term_freq(s, i),
+        "docfreq_frame": lambda s, i: fq.docfreq_frame(s, i, TERMS),
+        "idf_frame": lambda s, i: fq.idf_frame(s, i, TERMS),
+        "termfreq_frame": lambda s, i: fq.termfreq_frame(s, i, TERMS),
+        "tf_frame": lambda s, i: fq.tf_frame(s, i, TERMS),
+        "norm_frame": lambda s, i: fq.norm_frame(s, i),
+    }
+
+
+@pytest.fixture(scope="module")
+def fresh(spark, small_corpus, tmp_path_factory):
+    """The view's 600 docs built as one index at the same bucket size."""
+    out = str(tmp_path_factory.mktemp("livedocs_fresh") / "idx")
+    return build_index(
+        spark, spark.read.parquet(small_corpus), out, bucket_docs=128, num_partitions=4
+    )
+
+
+def _keyed(spark, segments, res):
+    """A reader's result as sorted rows, docid replaced by the doc's
+    (repo, path, commit) key: a delta segment's docids start at a bucket
+    boundary, so the same doc has another docid in a fresh build."""
+    if isinstance(res, tuple):  # hit_count
+        return res
+    if "docid" not in res.columns:
+        return sorted(tuple(r) for r in res.collect())
+    ids = list(segments[0].id_cols)
+    docs = spark.read.parquet(*[m.docs_path for m in segments]).select("docid", *ids)
+    cols = [c for c in res.columns if c != "docid"] + ids
+    return sorted(tuple(r) for r in res.join(docs, "docid").select(*cols).collect())
+
+
+@pytest.mark.parametrize("name", sorted(_readers()))
+def test_reader_on_view_equals_fresh_build(spark, view, fresh, name):
+    """Additions are append-only, so the view's statistics equal the
+    fresh build's and every score is ``==``."""
+    read = _readers()[name]
+    got = _keyed(spark, view.segments, read(spark, view))
+    assert got and got == _keyed(spark, [fresh], read(spark, fresh)), name
+
+
+def test_readers_on_view_with_deletes(spark, view):
+    """A deleted doc stops matching in every per-doc reader at once;
+    the statistics keep counting it until a merge."""
+    victim = _hits(view.search(spark, "license", k=1))[0][0]
+    dview = delete_by_keys(view, [_key(spark, view, victim)])
+    n = dview.search(spark, "license", unsorted=True).count()
+    assert kernel.hit_count(spark, dview, "license") == (n, "EQ")
+    assert kernel.hit_count(spark, view, "license") == (n + 1, "EQ")
+    for name, read in _readers().items():
+        if name == "hit_count":
+            continue
+        before, after = read(spark, view), read(spark, dview)
+        if name in ("total_term_freq", "sum_total_term_freq", "docfreq_frame", "idf_frame"):
+            assert sorted(after.collect()) == sorted(before.collect()), name
+            continue
+        want = sorted(r for r in before.collect() if r["docid"] != victim)
+        assert len(want) < before.count(), name
+        assert sorted(after.collect()) == want, name
 
 
 def test_decode_posting_frame_equals_per_row_decode(spark, small_index):
