@@ -38,10 +38,20 @@ ordinary parquet tables:
   [5] meta.json config + global stats + per-stage & per-partition lineage
                 (_finish_meta, which segment merge shares)
 
+Every statistic in meta.json is read back from a committed table: the
+per-partition counts and lineage from stage 1's metrics rows, the
+postings rows/bytes from the postings table. Parquet task commit makes
+those exactly-once on any runtime, retries and speculation included, so
+a local build and a cluster build take the same path.
+
 Every stage is idempotent (mode=overwrite) and gated on its _SUCCESS
 marker, so a killed build resumes without recomputing completed stages —
 the analog of the reference's transaction-log replay
 (solr/core/src/java/org/apache/solr/update/UpdateLog.java:131-133,1194).
+A resume refuses a call whose build config differs from the stored one.
+
+Every table is read with its declared schema (index_table, STAGE_SCHEMA,
+PARTIAL_RUNS_SCHEMA), so no read runs a Spark job to infer one.
 """
 
 from __future__ import annotations
@@ -55,7 +65,6 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -74,6 +83,18 @@ POSTINGS_SCHEMA = (
     "block_offs_doc array<int>, block_offs_tf array<int>, "
     "block_last array<bigint>, block_max_tf array<int>, block_min_dl array<int>"
 )
+
+# declared schemas of the fixed-schema index tables (docs and positions:
+# _table_schema)
+_TABLE_SCHEMAS = {
+    "postings": POSTINGS_SCHEMA,
+    "bucket_stats": (
+        "bucket bigint, doclens array<bigint>, repos array<string>, langs array<string>"
+    ),
+    "terms": "term string, df bigint, cf bigint, n_buckets bigint",
+    "terms_rev": "rev string, term string",
+    "terms_ngrams": "gram string, term string, tlen int",
+}
 
 DEFAULT_BUCKET_DOCS = 4096
 
@@ -168,14 +189,32 @@ class IndexMeta:
         return cls(**d)
 
 
+def _table_schema(index, name: str) -> str:
+    """The declared schema of index table ``name``: what its writer
+    writes (tests/test_invariance.py pins the two together) and what
+    index_table reads with. The docs table carries the index's id_cols."""
+    if name == "docs":
+        ids = "".join(f"`{c}` string, " for c in index.id_cols)
+        return f"docid bigint, bucket bigint, {ids}lang string, sha256 string, doclen bigint"
+    if name == "positions":
+        from .positions import POSITIONS_SCHEMA
+
+        return POSITIONS_SCHEMA
+    return _TABLE_SCHEMAS[name]
+
+
 def index_table(spark: SparkSession, index, name: str) -> DataFrame:
     """Table ``name`` (docs, postings, terms, positions, ...) of an
     IndexMeta or a segments.IndexView: one multi-path scan over every
-    segment. Buckets never straddle segments, so a view's table is the
-    union of its segments' rows; its terms table sums each term's stats.
-    Deleted docs stay in every table (kernel.live_rows drops them)."""
+    segment, read with the table's declared schema, so opening a table
+    runs no Spark job. Buckets never straddle segments, so a view's table
+    is the union of its segments' rows; its terms table sums each term's
+    stats. Deleted docs stay in every table (kernel.live_rows drops
+    them)."""
     segs = index.segments
-    table = spark.read.parquet(*[os.path.join(m.out_dir, name) for m in segs])
+    table = spark.read.schema(_table_schema(index, name)).parquet(
+        *[os.path.join(m.out_dir, name) for m in segs]
+    )
     if name == "terms" and len(segs) > 1:
         table = table.groupBy("term").agg(
             *[F.sum(c).alias(c) for c in ("df", "cf", "n_buckets")]
@@ -183,23 +222,7 @@ def index_table(spark: SparkSession, index, name: str) -> DataFrame:
     return table
 
 
-class _DictSumParam(AccumulatorParam):
-    """Accumulator merging {key: tuple-of-numbers} by element-wise sum."""
-
-    def zero(self, value):
-        return {}
-
-    def addInPlace(self, a, b):
-        for k, v in b.items():
-            if k in a:
-                a[k] = tuple(x + y for x, y in zip(a[k], v))
-            else:
-                a[k] = v
-        return a
-
-
 def _analyze_partitions(
-    stats_acc=None,
     term_transform=None,
     id_cols: tuple[str, ...] = ("repo", "path", "commit"),
     synonyms=None,
@@ -208,15 +231,11 @@ def _analyze_partitions(
     """mapInPandas closure: tokenize + hash one sorted partition, emitting
     union-typed rows. local_idx is the row ordinal within the partition.
 
-    ``stats_acc`` (optional _DictSumParam accumulator) collects
-    {pid: (n_docs, sum_doclen, n_postings, millis)} with the stage job
-    itself — this replaces three follow-up aggregation jobs on the driver
-    (offsets, global doclen stats, lineage). Accumulator updates in
-    transformations are not exactly-once under task retries/speculation,
-    so build_index only trusts them when _accumulators_exact(spark) says
-    the runtime cannot retry (local master, maxFailures=1, no
-    speculation); otherwise it re-derives the stats from the staged
-    kind=2 metrics rows, which ARE exactly-once (parquet task commit)."""
+    Each partition ends with one kind=2 metrics row carrying its
+    (n_docs, sum_doclen, n_postings, millis). build_index reads them back
+    from the committed staging table for the docid offsets, the global
+    doclen stats and the lineage: parquet task commit keeps exactly one
+    attempt's rows per partition, whatever the runtime retries."""
     import hashlib
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -287,18 +306,14 @@ def _analyze_partitions(
                     }
                 )
         if pid >= 0:  # per-partition lineage metrics row
-            if stats_acc is not None:
-                stats_acc.add(
-                    {pid: (n_docs, sum_doclen, n_postings, int((time.time() - t0) * 1000))}
-                )
             yield pd.DataFrame(
                 {
                     "kind": [np.int8(2)],
                     "pid": [np.int32(pid)],
                     "local_idx": [np.int64(n_docs)],
-                    # sum_doclen rides in the free string column, so the
-                    # no-accumulator path recovers ALL stats from kind=2
-                    # rows alone (no second scan of the doc rows)
+                    # sum_doclen rides in the free string column, so
+                    # build_index recovers ALL stats from kind=2 rows alone
+                    # (no second scan of the doc rows)
                     "term": [f"_metrics{_META_SEP}{sum_doclen}"],
                     "tf": [np.int64(n_postings)],
                     "doclen": [np.int64((time.time() - t0) * 1000)],
@@ -353,7 +368,7 @@ def _flat_to_batch(pa, term_arr, buckets, f):
 
 
 def _strip_file_scheme(path: str) -> str:
-    """file:-scheme URIs (Spark's input_file_name form) -> local paths;
+    """file:-scheme URIs (DataFrame.inputFiles' form) -> local paths;
     other schemes pass through for pyarrow.fs to resolve."""
     if path.startswith("file://"):
         return path[7:]
@@ -525,7 +540,7 @@ def _binary_stream(pa, arr):
 ENCODE_CHUNK_POSTINGS = 512 * 1024
 
 
-def _encode_sorted(chunks, bucket_docs: int, enc_acc, chunk_postings: int):
+def _encode_sorted(chunks, bucket_docs: int, chunk_postings: int):
     """The one streaming postings writer, shared by build stage 3b and
     segment merge (the reference flushes and merges segments through one
     postings consumer; lucene/core/.../index/FreqProxTermsWriter).
@@ -575,8 +590,6 @@ def _encode_sorted(chunks, bucket_docs: int, enc_acc, chunk_postings: int):
             vstarts[gstarts], vstarts[np.append(gstarts[1:], R)],
             bucket[gstarts] * bucket_docs,
         )
-        if enc_acc is not None:
-            enc_acc.add({0: (len(gstarts), int(f.stream_d.size + f.stream_t.size))})
         return _flat_to_batch(pa, pc.take(term, pa.array(gstarts)), bucket[gstarts], f), carry
 
     pend, pend_n = [], 0
@@ -594,7 +607,7 @@ def _encode_sorted(chunks, bucket_docs: int, enc_acc, chunk_postings: int):
             yield out
 
 
-def _merge_runs_arrow(bucket_docs: int, enc_acc=None):
+def _merge_runs_arrow(bucket_docs: int):
     """mapInArrow closure for stage 3b: the reduce side of the sorted-merge
     shuffle. Input rows are partial runs (PARTIAL_RUNS_SCHEMA) range-
     partitioned on (term, bucket) and sorted by (term, bucket, min_docid)
@@ -631,10 +644,10 @@ def _merge_runs_arrow(bucket_docs: int, enc_acc=None):
         docid = c + np.repeat(first_abs - c[vstarts[:-1]], df)
         return b["term"], bucket, df, docid, tf + 1, dl
 
-    return lambda batches: _encode_sorted(map(runs, batches), bucket_docs, enc_acc, chunk)
+    return lambda batches: _encode_sorted(map(runs, batches), bucket_docs, chunk)
 
 
-def _encode_partition_arrow(bucket_docs: int, enc_acc=None):
+def _encode_partition_arrow(bucket_docs: int):
     """mapInArrow closure for segment merge: raw (term, docid, tf, doclen,
     bucket) triples, PRESORTED by the upstream
     ``repartitionByRange(P, "term", "bucket").sortWithinPartitions("term",
@@ -649,7 +662,7 @@ def _encode_partition_arrow(bucket_docs: int, enc_acc=None):
             b["docid"].to_numpy(), b["tf"].to_numpy(), b["doclen"].to_numpy(),
         )
 
-    return lambda batches: _encode_sorted(map(triples, batches), bucket_docs, enc_acc, chunk)
+    return lambda batches: _encode_sorted(map(triples, batches), bucket_docs, chunk)
 
 
 def write_docs(docs_df: DataFrame, out_path: str, P: int) -> None:
@@ -756,26 +769,11 @@ def _done(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
-def _accumulators_exact(spark: SparkSession) -> bool:
-    """True iff accumulator updates inside transformations are exactly-once
-    on this runtime: no task retries (maxFailures <= 1) and no speculative
-    duplicates. Cluster masters default to maxFailures=4, so they fall
-    back to the metrics-row scan (see _analyze_partitions docstring)."""
-    conf = spark.sparkContext.getConf()
-    master = conf.get("spark.master", "")
-    max_failures = int(conf.get("spark.task.maxFailures", "1" if master.startswith("local") and "," not in master else "4"))
-    speculation = conf.get("spark.speculation", "false").lower() == "true"
-    return master.startswith("local") and max_failures <= 1 and not speculation
-
-
-def _finish_meta(spark: SparkSession, meta: IndexMeta, enc_acc) -> IndexMeta:
+def _finish_meta(spark: SparkSession, meta: IndexMeta) -> IndexMeta:
     """Stage 5, shared by build_index and segment merge: vocabulary and
-    skew stats from the terms table, postings rows/bytes, then the atomic
-    meta.json write. Rows/bytes come from the writer's accumulator when
-    this run encoded the postings (``enc_acc`` is not None) and the runtime
-    runs each task exactly once — the rule stage 1 follows for its stats
-    (_accumulators_exact) — and otherwise from one aggregation over the
-    postings table."""
+    skew stats from the terms table, postings rows/bytes from one
+    aggregation over the postings table, then the atomic meta.json
+    write."""
     t0 = time.time()
     ts = index_table(spark, meta, "terms").agg(
         F.count("*").alias("n_terms"), F.max("df").alias("max_df"), F.avg("df").alias("mean_df")
@@ -783,16 +781,12 @@ def _finish_meta(spark: SparkSession, meta: IndexMeta, enc_acc) -> IndexMeta:
     meta.n_terms = int(ts["n_terms"] or 0)
     meta.skew_max_df = int(ts["max_df"] or 0)
     meta.skew_ratio = float(ts["max_df"] / ts["mean_df"]) if ts["mean_df"] else 0.0
-    acc = enc_acc.value if enc_acc is not None and _accumulators_exact(spark) else {}
-    if acc:
-        meta.postings_rows, meta.postings_bytes = (int(x) for x in acc[0])
-    else:
-        pb = index_table(spark, meta, "postings").agg(
-            F.count("*").alias("rows"),
-            F.sum(F.length("doc_bytes") + F.length("tf_bytes")).alias("bytes"),
-        ).collect()[0]
-        meta.postings_rows = int(pb["rows"] or 0)
-        meta.postings_bytes = int(pb["bytes"] or 0)
+    pb = index_table(spark, meta, "postings").agg(
+        F.count("*").alias("rows"),
+        F.sum(F.length("doc_bytes") + F.length("tf_bytes")).alias("bytes"),
+    ).collect()[0]
+    meta.postings_rows = int(pb["rows"] or 0)
+    meta.postings_bytes = int(pb["bytes"] or 0)
     meta.stages["meta"] = round(time.time() - t0, 3)
     meta.save()
     return meta
@@ -820,22 +814,13 @@ def build_index(
     (repo,path,commit) sort — content-independent and parallelism-invariant
     (SURVEY.md §7). ``docid_base`` is used by delta segments
     (segments.add_segment) and must be bucket-aligned so a docid bucket
-    never spans two segments."""
+    never spans two segments.
+
+    A resume of a finished index returns its stored meta, and raises
+    ValueError naming each field if this call's build config
+    (bucket_docs, analyzer, synonyms, id_cols, docid_base) differs."""
     if docid_base % bucket_docs != 0:
         raise ValueError("docid_base must be a multiple of bucket_docs")
-    if overwrite and os.path.exists(out_dir):
-        shutil.rmtree(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-    meta_path = os.path.join(out_dir, "meta.json")
-    if resume and os.path.exists(meta_path):
-        return IndexMeta.load(out_dir)
-
-    P = num_partitions or spark.sparkContext.defaultParallelism
-    stage_dir = os.path.join(out_dir, "_stage", "tokens")
-    from .analysis import ANALYZERS, PRE_TRANSFORMS
-
-    term_transform = ANALYZERS[analyzer]
-    pre_transform = PRE_TRANSFORMS.get(analyzer)
     syn_graph = None
     if synonyms:
         from .analysis import SynonymGraph
@@ -843,18 +828,39 @@ def build_index(
         syn_graph = SynonymGraph(synonyms)
         synonyms = syn_graph.to_meta()  # canonical persisted form
     meta = IndexMeta(
-        out_dir=out_dir, bucket_docs=bucket_docs,
+        out_dir=out_dir, bucket_docs=bucket_docs, docid_base=docid_base,
         analyzer=analyzer, id_cols=list(id_cols),
         synonyms=synonyms or None,
     )
+    if overwrite and os.path.exists(out_dir):
+        shutil.rmtree(out_dir)
+    os.makedirs(out_dir, exist_ok=True)
+    if resume and os.path.exists(os.path.join(out_dir, "meta.json")):
+        stored = IndexMeta.load(out_dir)
+        config = ("bucket_docs", "analyzer", "synonyms", "id_cols", "docid_base")
+        diff = [
+            f"{f} (stored {getattr(stored, f)!r}, given {getattr(meta, f)!r})"
+            for f in config if getattr(stored, f) != getattr(meta, f)
+        ]
+        if diff:
+            raise ValueError(
+                f"{out_dir} holds an index built with a different config: "
+                + "; ".join(diff) + ". Rebuild it with overwrite=True."
+            )
+        return stored
+
+    P = num_partitions or spark.sparkContext.defaultParallelism
+    stage_dir = os.path.join(out_dir, "_stage", "tokens")
+    from .analysis import ANALYZERS, PRE_TRANSFORMS
+
+    term_transform = ANALYZERS[analyzer]
+    pre_transform = PRE_TRANSFORMS.get(analyzer)
     cols = {c.lower() for c in docs.columns}
     lang_col = F.col("lang") if "lang" in cols else F.lit(None).cast("string")
 
     # ---- stage 1: analyze (single content scan) --------------------------
     t0 = time.time()
-    stats_acc = spark.sparkContext.accumulator({}, _DictSumParam())
-    ran_stage1 = not (resume and _done(stage_dir))
-    if ran_stage1:
+    if not (resume and _done(stage_dir)):
         src = docs.select(
             *[F.col(c) for c in id_cols], lang_col.alias("lang"),
             F.col(content_col).alias("content"),
@@ -866,7 +872,6 @@ def build_index(
         )
         sorted_docs.mapInPandas(
             _analyze_partitions(
-                stats_acc,
                 term_transform=term_transform,
                 id_cols=tuple(id_cols),
                 synonyms=syn_graph,
@@ -876,30 +881,21 @@ def build_index(
         ).write.mode("overwrite").parquet(stage_dir)
     meta.stages["analyze"] = round(time.time() - t0, 3)
 
-    stage = spark.read.parquet(stage_dir)
+    stage = spark.read.schema(STAGE_SCHEMA).parquet(stage_dir)
 
-    # partition offsets -> global docid. Fresh runs on retry-free runtimes
-    # get per-partition stats for free from the stage-1 accumulator;
-    # resumed runs and retry-capable clusters re-derive them with one scan
-    # of the staging metrics rows (kind=2), which are exactly-once.
-    pstats = (
-        dict(stats_acc.value)
-        if ran_stage1 and _accumulators_exact(spark)
-        else {}
-    )
-    if not pstats:
-        pstats = {
-            int(r["pid"]): (
-                int(r["local_idx"]), int(r["term"].split(_META_SEP)[1]),
-                int(r["tf"]), int(r["doclen"]),
-            )
-            for r in stage.where(F.col("kind") == 2).collect()
-        }
+    # partition offsets -> global docid, from one scan of the committed
+    # staging metrics rows (kind=2; see _analyze_partitions)
+    pstats = {
+        int(r["pid"]): (
+            int(r["local_idx"]), int(r["term"].split(_META_SEP)[1]),
+            int(r["tf"]), int(r["doclen"]),
+        )
+        for r in stage.where(F.col("kind") == 2).collect()
+    }
     offsets, acc = {}, docid_base
     for pid in sorted(pstats):
         offsets[pid] = acc
         acc += pstats[pid][0]
-    meta.docid_base = docid_base
     meta.n_docs = acc - docid_base
     meta.sum_doclen = sum(v[1] for v in pstats.values())
     meta.avgdl = meta.sum_doclen / meta.n_docs if meta.n_docs else 0.0
@@ -955,30 +951,16 @@ def build_index(
 
     # ---- stage 3: postings (term,bucket)-keyed sorted merge ---------------
     t0 = time.time()
-    enc_acc = spark.sparkContext.accumulator({}, _DictSumParam())
     post_out = os.path.join(out_dir, "postings")
-    ran_stage3 = not (resume and _done(post_out))
-    if ran_stage3:
+    if not (resume and _done(post_out)):
         # --- 3a: map-side partial posting runs (its own _SUCCESS-gated
         # checkpoint, so a killed build resumes past it). One task per
-        # staging file; the triples are read with pyarrow directly — see
+        # staging file, listed from the staging read's file index (no
+        # Spark job); the triples are read with pyarrow directly — see
         # _partial_runs_fn for why the JVM→Python row pipe is avoided.
         runs_dir = os.path.join(out_dir, "_stage", "runs")
         if not (resume and _done(runs_dir)):
-            files = (
-                sorted(
-                    os.path.join(stage_dir, f_)
-                    for f_ in os.listdir(stage_dir)
-                    if f_.endswith(".parquet")
-                )
-                if os.path.isdir(stage_dir)
-                else []
-            )
-            if not files:  # non-local staging: list through Spark instead
-                files = sorted(
-                    r[0]
-                    for r in stage.select(F.input_file_name()).distinct().collect()
-                )
+            files = sorted(stage.inputFiles())
             paths_df = spark.createDataFrame(
                 [(p,) for p in files], "path string"
             ).repartition(max(len(files), 1))  # round-robin: one file per task
@@ -1000,11 +982,11 @@ def build_index(
         # term never exceeds bucket_docs postings per (term,bucket)
         # group, and a group never holds more runs than stage-1
         # partitions. The row sort rides the exchange JVM-side.
-        runs = spark.read.parquet(os.path.join(out_dir, "_stage", "runs"))
+        runs = spark.read.schema(PARTIAL_RUNS_SCHEMA).parquet(runs_dir)
         (
             runs.repartitionByRange(P, "term", "bucket")
             .sortWithinPartitions("term", "bucket", "min_docid")
-            .mapInArrow(_merge_runs_arrow(bucket_docs, enc_acc), POSTINGS_SCHEMA)
+            .mapInArrow(_merge_runs_arrow(bucket_docs), POSTINGS_SCHEMA)
             .write.mode("overwrite")
             .parquet(post_out)
         )
@@ -1020,7 +1002,7 @@ def build_index(
     meta.stages["term_stats"] = round(time.time() - t0, 3)
 
     # ---- stage 5: meta + lineage -------------------------------------------
-    return _finish_meta(spark, meta, enc_acc if ran_stage3 else None)
+    return _finish_meta(spark, meta)
 
 
 def verify_content_integrity(

@@ -204,7 +204,6 @@ def merge_segments(
     from .indexer import (
         POSTINGS_SCHEMA,
         IndexMeta,
-        _DictSumParam,
         _encode_partition_arrow,
         _finish_meta,
         write_bucket_stats,
@@ -271,11 +270,10 @@ def merge_segments(
             F.expr(f"docid DIV {bucket_docs}").alias("bucket"),
         )
     )
-    enc_acc = spark.sparkContext.accumulator({}, _DictSumParam())
     (
         merged.repartitionByRange(P, "term", "bucket")
         .sortWithinPartitions("term", "bucket", "docid")
-        .mapInArrow(_encode_partition_arrow(bucket_docs, enc_acc), POSTINGS_SCHEMA)
+        .mapInArrow(_encode_partition_arrow(bucket_docs), POSTINGS_SCHEMA)
         .write.mode("overwrite")
         .parquet(meta.postings_path)
     )
@@ -288,7 +286,7 @@ def merge_segments(
     # uses (stages 2b/4/5), so the layouts cannot desynchronize
     write_bucket_stats(new_docs, meta.bucket_stats_path, P, first_id_col=ids[0])
     write_term_stats(spark, meta, P)
-    return IndexView(segments=[_finish_meta(spark, meta, enc_acc)])
+    return IndexView(segments=[_finish_meta(spark, meta)])
 
 
 def save_view(view: IndexView, out_dir: str, batch_ids: list[int] | None = None) -> None:

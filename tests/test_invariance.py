@@ -5,6 +5,7 @@
 import os
 import shutil
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -112,24 +113,106 @@ def test_resume_noop_when_complete(spark, small_corpus, small_index):
     assert meta.stages == small_index.stages
 
 
-def test_meta_without_accumulators_equals_default(
-    spark, small_corpus, small_index, tmp_path, monkeypatch
-):
-    """On a runtime that may retry tasks, a build trusts no accumulator:
-    stage 1 re-derives its per-partition stats from the staged metrics
-    rows and stage 5 aggregates the postings table. Its meta equals the
-    accumulator build's."""
-    from solr_spark import indexer
+@pytest.fixture(scope="module")
+def merged_index(spark, small_index, tmp_path_factory):
+    """small_index merged with five deleted docs: the merge writers'
+    tables next to the build's."""
+    from solr_spark.segments import IndexView, merge_segments
 
-    assert indexer._accumulators_exact(spark)  # small_index used them
-    monkeypatch.setattr(indexer, "_accumulators_exact", lambda spark: False)
-    meta = build_index(
-        spark, spark.read.parquet(small_corpus), str(tmp_path / "idx"),
-        bucket_docs=256, num_partitions=4,
+    victims = (
+        spark.read.parquet(small_index.docs_path)
+        .orderBy("docid").limit(5).select("repo", "path", "commit").collect()
     )
-    fields = ("n_docs", "sum_doclen", "postings_rows", "postings_bytes")
-    assert [getattr(meta, f) for f in fields] == [getattr(small_index, f) for f in fields]
-    assert [p["n_docs"] for p in meta.lineage] == [p["n_docs"] for p in small_index.lineage]
+    view = IndexView(segments=[small_index], delete_keys=[tuple(r) for r in victims])
+    out = str(tmp_path_factory.mktemp("merged") / "seg")
+    return merge_segments(spark, view, out, num_partitions=3).segments[0]
+
+
+def test_meta_counts_equal_written_tables(small_index, merged_index):
+    """meta.json's counts are the committed tables' counts, read here with
+    pyarrow (independent of the Spark aggregations that produced them):
+    docs and doclens from the docs table, rows and bytes from the
+    postings table, and per partition the build lineage's doc and
+    posting counts from the staged doc rows and the postings' df sum."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    for meta in (small_index, merged_index):
+        docs = pq.read_table(meta.docs_path, columns=["doclen"])
+        post = pq.read_table(meta.postings_path, columns=["df", "doc_bytes", "tf_bytes"])
+        nbytes = sum(
+            pc.sum(pc.binary_length(post[c])).as_py() for c in ("doc_bytes", "tf_bytes")
+        )
+        assert meta.n_docs == docs.num_rows == 600 - 5 * (meta is merged_index)
+        assert meta.sum_doclen == pc.sum(docs["doclen"]).as_py()
+        assert (meta.postings_rows, meta.postings_bytes) == (post.num_rows, nbytes)
+
+    staged = pq.read_table(
+        os.path.join(small_index.out_dir, "_stage", "tokens"),
+        columns=["pid"], filters=[("kind", "=", 0)],
+    )
+    pids, counts = np.unique(staged["pid"].to_numpy(), return_counts=True)
+    lineage = small_index.lineage
+    assert [(p["pid"], p["n_docs"]) for p in lineage] == list(zip(pids.tolist(), counts.tolist()))
+    post = pq.read_table(small_index.postings_path, columns=["df"])
+    assert sum(p["n_postings"] for p in lineage) == pc.sum(post["df"]).as_py()
+
+
+_TABLES = ("docs", "postings", "bucket_stats", "terms", "terms_rev", "terms_ngrams")
+
+
+def _jobs(spark, tag, fn):
+    """(fn(), number of Spark jobs fn ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(tag))
+
+
+@pytest.mark.parametrize("table", _TABLES)
+def test_index_tables_have_declared_schema(spark, small_index, merged_index, table):
+    """What the build and merge writers write is what index_table
+    declares: the schema Spark infers from the written files equals the
+    declared one."""
+    from solr_spark.indexer import index_table
+
+    for meta in (small_index, merged_index):
+        written = spark.read.parquet(os.path.join(meta.out_dir, table)).schema
+        assert written == index_table(spark, meta, table).schema, meta.out_dir
+
+
+def test_index_table_and_searcher_run_no_jobs(spark, small_index, merged_index):
+    """Opening any index table, of an index or of a two-segment view, and
+    a Searcher without a df cache run no Spark job: the reader knows
+    each table's schema and infers none."""
+    from solr_spark.indexer import index_table
+    from solr_spark.kernel import Searcher
+    from solr_spark.segments import IndexView
+
+    view = IndexView(segments=[small_index, merged_index])
+    for index in (small_index, view):
+        for table in _TABLES:
+            _, n = _jobs(spark, f"open_{table}_{len(index.segments)}",
+                         lambda: index_table(spark, index, table))
+            assert n == 0, table
+    _, n = _jobs(spark, "searcher_init", lambda: Searcher(spark, small_index, cache=False))
+    assert n == 0
+
+
+@pytest.mark.parametrize(
+    "change,named",
+    [({"bucket_docs": 128}, "bucket_docs"), ({"analyzer": "code_stem"}, "analyzer")],
+    ids=["bucket_docs", "analyzer"],
+)
+def test_resume_refuses_changed_config(spark, small_corpus, small_index, change, named):
+    """A resume of a finished index with a different build config raises
+    and names the field, instead of returning the stored meta."""
+    kw = {"bucket_docs": 256, "num_partitions": 4, **change}
+    with pytest.raises(ValueError, match=named):
+        build_index(spark, spark.read.parquet(small_corpus), small_index.out_dir, **kw)
 
 
 def test_meta_save_torn_write_keeps_previous(tmp_path, monkeypatch):

@@ -210,6 +210,23 @@ def planted_pay_index(spark, tmp_path_factory):
     return meta
 
 
+def test_positions_table_has_declared_schema(spark, planted_index, planted_pay_index):
+    """The positions writer writes the schema index_table declares, with
+    and without payloads, and opening the table runs no Spark job."""
+    from solr_spark.indexer import index_table
+
+    sc = spark.sparkContext
+    for meta in (planted_index, planted_pay_index):
+        written = spark.read.parquet(os.path.join(meta.out_dir, "positions")).schema
+        tag = f"open_positions_{meta.has_payloads}"
+        sc.setJobGroup(tag, tag)
+        try:
+            assert index_table(spark, meta, "positions").schema == written
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(tag) == []
+
+
 def test_payload_score_planted(spark, planted_pay_index):
     from solr_spark.positions import payload_score_frame
 
