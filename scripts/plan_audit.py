@@ -145,7 +145,7 @@ def main() -> None:
         "fts_synonyms_index",
         "u_copyfield",
         "t_stem_vocab",
-        # round-4: reversed-dictionary leading-wildcard scan
+        # round-4: leading-wildcard term-dictionary scan
         "fts_leading_wildcard",
         # round-5 additions: full Snowball French chain, Thai dictionary
         # segmentation, DateRangeField interval predicates, IVF-PQ

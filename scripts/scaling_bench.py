@@ -30,6 +30,8 @@ import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+from solr_spark.session import driver_heap  # noqa: E402
 
 RUN_SNIPPET = r"""
 import json, os, shutil, sys, time
@@ -128,7 +130,7 @@ def main() -> None:
                "pinned": bool(args.pin),
                # identical for both arms; JVM startup (incl. AlwaysPreTouch
                # of this heap) is outside the measured build wall
-               "driver_mem": os.environ.get("SOLR_SPARK_DRIVER_MEM", "8g"),
+               "driver_mem": os.environ.get("SOLR_SPARK_DRIVER_MEM") or driver_heap(),
                "runs": []}
     tput: dict[int, list[float]] = {args.n: [], 4 * args.n: []}
     for r in range(args.runs):

@@ -521,12 +521,11 @@ ANALYZER_EXCLUSIONS: dict[str, str] = {
     # the supported tokenization
     "text_ws": "whitespace tokenization conflicts with the pinned "
                "token-space contract",
-    # ReversedWildcardFilter chain: leading-wildcard acceleration is
-    # provided by the term-dictionary reversed-prefix scan instead
-    # (kernel multiterm component) — a separate indexed field is the
-    # Lucene mechanism, not the capability
-    "text_general_rev": "leading wildcards served by the reversed-prefix "
-                        "term-dictionary scan, not a second indexed field",
+    # ReversedWildcardFilter chain: leading wildcards expand by a LIKE
+    # scan of the term dictionary (engine._multiterm_component) — a
+    # separate indexed field is the Lucene mechanism, not the capability
+    "text_general_rev": "leading wildcards served by a term-dictionary "
+                        "scan, not a second indexed field",
 }
 
 # text_en_splitting: WordDelimiterGraph pre-transform (PRE_TRANSFORMS

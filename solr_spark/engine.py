@@ -206,43 +206,18 @@ def fuzzy_candidates(
 ) -> DataFrame:
     """Terms within ``max_edits`` classic Levenshtein of ``pattern``
     (columns of the terms table, exact-filtered) — the shared candidate
-    generator behind fuzzy queries and spellcheck.
-
-    Accelerated path (the engine's alternative to Lucene's Levenshtein
-    automata, DirectSpellChecker/FuzzyQuery): when the pattern is long
-    enough for the q-gram bound to be non-degenerate (|p| >= 2k+2 so
-    every admissible term must share >= 1 bigram), candidates come from
-    the bigram inverted dictionary (IndexMeta.terms_ngrams_path): a
-    pushed-down IN scan of the pattern's bigrams + an occurrence-count
-    filter shared >= max(|t|,|p|)-1-2k (Ukkonen's
-    q-gram lower bound, q=2 — counts can only overcount the multiset
-    intersection, so the prefilter admits a superset and the final
-    Levenshtein filter keeps results IDENTICAL to the scan). Cost ∝
-    terms sharing a pattern bigram, not vocabulary. Short patterns take
-    the length-prefiltered dictionary scan."""
-    terms_df = index_table(spark, meta, "terms")
+    generator behind fuzzy queries and spellcheck (the engine's
+    alternative to Lucene's Levenshtein automata, DirectSpellChecker/
+    FuzzyQuery): one scan of the term dictionary, length-prefiltered
+    (a term more than ``max_edits`` longer or shorter cannot match)
+    before the edit distance is computed. Cost ∝ vocabulary, not
+    corpus."""
     p = pattern.lower()
-    plen = len(p)
-    dist_ok = F.levenshtein(F.col("term"), F.lit(p)) <= max_edits
-    len_ok = F.abs(F.length("term") - F.lit(plen)) <= max_edits
-    if plen >= 2 * max_edits + 2:
-        grams = sorted({p[i : i + 2] for i in range(plen - 1)})
-        cand = (
-            index_table(spark, meta, "terms_ngrams")
-            .filter(F.col("gram").isin(grams))
-            .filter(F.abs(F.col("tlen") - F.lit(plen)) <= max_edits)
-            .groupBy("term")
-            .agg(F.count(F.lit(1)).alias("__shared"),
-                 F.first("tlen").alias("__tlen"))
-            .filter(
-                F.col("__shared")
-                >= F.greatest(F.col("__tlen"), F.lit(plen))
-                - F.lit(1 + 2 * max_edits)
-            )
-            .select("term")
-        )
-        return cand.join(terms_df, "term").filter(dist_ok)
-    return terms_df.filter(len_ok).filter(dist_ok)
+    return (
+        index_table(spark, meta, "terms")
+        .filter(F.abs(F.length("term") - F.lit(len(p))) <= max_edits)
+        .filter(F.levenshtein(F.col("term"), F.lit(p)) <= max_edits)
+    )
 
 
 def _multiterm_component(
@@ -250,48 +225,23 @@ def _multiterm_component(
 ) -> DataFrame:
     """One prefix/wildcard/fuzzy clause: expand against the term
     dictionary (sorted terms table — a prefix predicate is a pushed-down
-    range scan), decode the expanded terms' postings, emit each matching
-    doc once with the clause's constant score (Lucene CONSTANT_SCORE
-    rewrite; PrefixQParserPlugin.java, standard-query-parser.adoc fuzzy/
-    wildcard). Fully distributed: the expansion is a broadcast semi-join,
+    range scan, any other pattern a filtered dictionary scan), decode
+    the expanded terms' postings, emit each matching doc once with the
+    clause's constant score (Lucene CONSTANT_SCORE rewrite;
+    PrefixQParserPlugin.java, standard-query-parser.adoc fuzzy/wildcard).
+    Fully distributed: the expansion is a broadcast semi-join,
     never a driver-side term list."""
     from .kernel import postings_rows
 
-    import re as _re
-
     terms_df = index_table(spark, meta, "terms")
-    expanded = None
     if mt.kind == "prefix":
-        pred = F.col("term").startswith(mt.pattern[:-1])
+        expanded = terms_df.filter(F.col("term").startswith(mt.pattern[:-1]))
     elif mt.kind == "wildcard":
-        pred = F.col("term").like(_like_pattern(mt.pattern))
-        # ReversedWildcard capability (the reference's text_general_rev
-        # ReversedWildcardFilterFactory slot): a LEADING-wildcard pattern
-        # with a literal tail ('*foo', '?bar', '*mid?dle_tail') rewrites
-        # to a PREFIX scan of the reversed term dictionary — the
-        # StartsWith predicate pushes into the parquet scan of the
-        # rev-sorted table (min/max row-group pruning), so scan cost is
-        # ∝ matching-suffix range, not ∝ vocabulary — then the full LIKE
-        # verifies.
-        wc_parts = _re.split(r"[*?]", mt.pattern)
-        tail = wc_parts[-1]
-        if not wc_parts[0] and tail:
-            rev_df = index_table(spark, meta, "terms_rev")
-            expanded = (
-                rev_df.filter(F.col("rev").startswith(tail[::-1]))
-                .filter(pred)
-                .select("term")
-            )
+        expanded = terms_df.filter(F.col("term").like(_like_pattern(mt.pattern)))
     else:  # fuzzy: classic Levenshtein (documented deviation from
-        # Lucene's Damerau-Levenshtein, see qparser.MultiTermClause) —
-        # candidates via fuzzy_candidates (results identical to the
-        # dictionary scan)
-        expanded = fuzzy_candidates(
-            spark, meta, mt.pattern, mt.max_edits
-        ).select("term")
-    if expanded is None:
-        expanded = terms_df.filter(pred).select("term")
-    rows = postings_rows(spark, meta, expanded)
+        # Lucene's Damerau-Levenshtein, see qparser.MultiTermClause)
+        expanded = fuzzy_candidates(spark, meta, mt.pattern, mt.max_edits)
+    rows = postings_rows(spark, meta, expanded.select("term"))
     out = _filtered(spark, meta, rows.select("docid").dropDuplicates(["docid"]), filters)
     return out.withColumn("score", F.lit(float(mt.boost)))
 
@@ -918,10 +868,8 @@ def gate_spellcheck(
     — Lucene DirectSpellChecker over the live term dictionary; classic
     edit distance is the documented deviation from its Damerau variant,
     same as the fuzzy-query path). Distributed shape: candidates via
-    the bigram-dictionary prefilter (engine.fuzzy_candidates — cost ∝
-    terms sharing a pattern bigram), or, for a pattern too short for
-    it, one length-prefiltered scan of the terms table
-    (vocabulary-sized, not corpus-sized)."""
+    engine.fuzzy_candidates, one length-prefiltered scan of the terms
+    table (vocabulary-sized, not corpus-sized)."""
     meta = ensure_index(spark, sf_dir)
     d = F.levenshtein(F.col("term"), F.lit(word.lower()))
     return (

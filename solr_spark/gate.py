@@ -3191,14 +3191,11 @@ LIMIT 10"""
 
 @entry("fts_leading_wildcard", _LEADING_WILDCARD_SQL)
 def fts_leading_wildcard(spark, sf_dir):
-    """q='*ow': a LEADING-wildcard clause (constant-score WildcardQuery).
-    The engine serves it from the REVERSED term dictionary — a prefix
-    scan of the rev-sorted terms_rev table (StartsWith pushed into the
-    parquet read; the ReversedWildcardFilterFactory capability of the
-    reference's text_general_rev fieldType,
-    CORE/analysis/ReversedWildcardFilterFactory.java) — so scan cost is
-    ∝ the matching-suffix range, not ∝ vocabulary. Oracle recomputes via
-    a brute LIKE '%ow' over every analyzed token."""
+    """q='*ow': a LEADING-wildcard clause (constant-score WildcardQuery;
+    the capability of the reference's text_general_rev fieldType). The
+    engine expands it with one LIKE scan of the term dictionary, a
+    vocabulary-sized table, never the corpus. Oracle recomputes via a
+    brute LIKE '%ow' over every analyzed token."""
     return gate_search(spark, sf_dir, "*ow", k=10)
 
 

@@ -34,9 +34,11 @@ ordinary parquet tables:
                 solrj/src/java/org/apache/solr/common/cloud/CompositeIdRouter.java:136-148).
   [4] term_stats global (df, cf) per term — exact global IDF, stronger
                 than the reference's default per-shard IDF
-                (solr/core/src/java/org/apache/solr/search/stats/ExactStatsCache.java:61)
+                (solr/core/src/java/org/apache/solr/search/stats/ExactStatsCache.java:61);
+                the one term-sorted table is also the term dictionary
   [5] meta.json config + global stats + per-stage & per-partition lineage
-                (_finish_meta, which segment merge shares)
+                (_finish_meta, which segment merge shares); then the
+                _stage scratch (staging tokens, partial runs) is removed
 
 Every statistic in meta.json is read back from a committed table: the
 per-partition counts and lineage from stage 1's metrics rows, the
@@ -48,7 +50,8 @@ Every stage is idempotent (mode=overwrite) and gated on its _SUCCESS
 marker, so a killed build resumes without recomputing completed stages —
 the analog of the reference's transaction-log replay
 (solr/core/src/java/org/apache/solr/update/UpdateLog.java:131-133,1194).
-A resume refuses a call whose build config differs from the stored one.
+A resume refuses a call whose build config differs from the stored one:
+meta.json's once the index commits, _stage/config.json's before that.
 
 Every table is read with its declared schema (index_table, STAGE_SCHEMA,
 PARTIAL_RUNS_SCHEMA), so no read runs a Spark job to infer one.
@@ -92,8 +95,6 @@ _TABLE_SCHEMAS = {
         "bucket bigint, doclens array<bigint>, repos array<string>, langs array<string>"
     ),
     "terms": "term string, df bigint, cf bigint, n_buckets bigint",
-    "terms_rev": "rev string, term string",
-    "terms_ngrams": "gram string, term string, tlen int",
 }
 
 DEFAULT_BUCKET_DOCS = 4096
@@ -141,23 +142,6 @@ class IndexMeta:
     @property
     def terms_path(self) -> str:
         return os.path.join(self.out_dir, "terms")
-
-    @property
-    def terms_rev_path(self) -> str:
-        """Reversed term dictionary (sorted by reversed term) — the
-        leading-wildcard prefix-scan table."""
-        return os.path.join(self.out_dir, "terms_rev")
-
-    @property
-    def terms_ngrams_path(self) -> str:
-        """Bigram inverted index over the term dictionary (gram, term,
-        tlen; one row per gram OCCURRENCE, range-sorted by gram) — the
-        fuzzy/spellcheck candidate prefilter (the engine's alternative
-        to Lucene's Levenshtein automata): a pattern's candidates are
-        the terms sharing >= max(|t|,|p|)-1-2k bigrams, a pushed-down
-        IN scan + count instead of a full-vocabulary edit-distance
-        pass."""
-        return os.path.join(self.out_dir, "terms_ngrams")
 
     delete_keys = ()  # an index is a one-segment view with no deletes
 
@@ -710,14 +694,11 @@ def write_bucket_stats(docs_df: DataFrame, out_path: str, P: int,
 
 def write_term_stats(spark: SparkSession, meta: IndexMeta, P: int) -> None:
     """Stage 4 writer: global (df, cf, n_buckets) per term of ``meta``'s
-    postings, range-sorted (shared by build_index and segment merge).
-    Alongside the stats table it writes ``terms_rev``: the REVERSED term
-    dictionary, range-sorted by the reversed form — the ReversedWildcardFilterFactory
-    capability (reference text_general_rev fieldType;
-    CORE/analysis/ReversedWildcardFilterFactory.java): a leading-wildcard
-    query becomes a PREFIX scan on this table (parquet min/max row-group
-    pruning applies) instead of a full dictionary LIKE scan. Cost ∝
-    vocabulary (two narrow columns), negligible next to postings."""
+    postings, range-sorted by term (shared by build_index and segment
+    merge). This one sorted table is the term dictionary every
+    prefix, wildcard and fuzzy clause and spellcheck expands over: a
+    prefix is a pushed-down range scan, any other pattern a filtered
+    scan of a vocabulary-sized table."""
     (
         index_table(spark, meta, "postings").groupBy("term")
         .agg(
@@ -730,39 +711,28 @@ def write_term_stats(spark: SparkSession, meta: IndexMeta, P: int) -> None:
         .write.mode("overwrite")
         .parquet(meta.terms_path)
     )
-    (
-        index_table(spark, meta, "terms")
-        .select(F.reverse(F.col("term")).alias("rev"), "term")
-        .repartitionByRange(max(P // 8, 1), "rev")
-        .sortWithinPartitions("rev")
-        .write.mode("overwrite")
-        .parquet(meta.terms_rev_path)
-    )
-    # bigram inverted index over the dictionary (one row per gram
-    # OCCURRENCE — the occurrence count can only overcount the multiset
-    # q-gram intersection, keeping the count-filter prefilter lossless;
-    # see IndexMeta.terms_ngrams_path). Range-sorted by gram so the
-    # query side's IN(<pattern grams>) prunes row groups. Cost ∝
-    # vocabulary × avg term length — the same posture as terms_rev.
-    (
-        index_table(spark, meta, "terms")
-        .select(
-            "term",
-            F.length("term").alias("tlen"),
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, greatest(length(term) - 1, 1)),"
-                    " i -> substr(term, i, 2))"
-                )
-            ).alias("gram"),
+
+
+# the build config a resume must match: stored in meta.json once the
+# index commits, and in _stage/config.json while it is partly built
+_CONFIG = ("bucket_docs", "analyzer", "synonyms", "id_cols", "docid_base")
+
+
+def _check_config(out_dir: str, stored: dict | None, given: dict) -> None:
+    """Raise ValueError naming each build-config field in which the
+    ``stored`` config (None: not recorded) differs from ``given``."""
+    if stored is None:
+        diff = ["none recorded (no _stage/config.json)"]
+    else:
+        diff = [
+            f"{f} (stored {stored.get(f)!r}, given {v!r})"
+            for f, v in given.items() if stored.get(f) != v
+        ]
+    if diff:
+        raise ValueError(
+            f"{out_dir} holds an index built with a different config: "
+            + "; ".join(diff) + ". Rebuild it with overwrite=True."
         )
-        .filter(F.length("gram") == 2)
-        .select("gram", "term", "tlen")
-        .repartitionByRange(max(P // 8, 1), "gram")
-        .sortWithinPartitions("gram", "term")
-        .write.mode("overwrite")
-        .parquet(meta.terms_ngrams_path)
-    )
 
 
 def _done(path: str) -> bool:
@@ -818,7 +788,11 @@ def build_index(
 
     A resume of a finished index returns its stored meta, and raises
     ValueError naming each field if this call's build config
-    (bucket_docs, analyzer, synonyms, id_cols, docid_base) differs."""
+    (bucket_docs, analyzer, synonyms, id_cols, docid_base) differs. A
+    resume of a partly built index checks the same fields against
+    ``_stage/config.json``, written before stage 1; a ``_stage`` without
+    it is refused. The committed index holds no ``_stage``: it is removed
+    once meta.json is written."""
     if docid_base % bucket_docs != 0:
         raise ValueError("docid_base must be a multiple of bucket_docs")
     syn_graph = None
@@ -835,22 +809,26 @@ def build_index(
     if overwrite and os.path.exists(out_dir):
         shutil.rmtree(out_dir)
     os.makedirs(out_dir, exist_ok=True)
+    scratch = os.path.join(out_dir, "_stage")
+    config = {f: getattr(meta, f) for f in _CONFIG}
     if resume and os.path.exists(os.path.join(out_dir, "meta.json")):
         stored = IndexMeta.load(out_dir)
-        config = ("bucket_docs", "analyzer", "synonyms", "id_cols", "docid_base")
-        diff = [
-            f"{f} (stored {getattr(stored, f)!r}, given {getattr(meta, f)!r})"
-            for f in config if getattr(stored, f) != getattr(meta, f)
-        ]
-        if diff:
-            raise ValueError(
-                f"{out_dir} holds an index built with a different config: "
-                + "; ".join(diff) + ". Rebuild it with overwrite=True."
-            )
+        _check_config(out_dir, {f: getattr(stored, f) for f in _CONFIG}, config)
         return stored
+    config_path = os.path.join(scratch, "config.json")
+    if resume and os.path.exists(scratch):
+        stored = None
+        if os.path.exists(config_path):
+            with open(config_path) as f:
+                stored = json.load(f)
+        _check_config(out_dir, stored, config)
+    os.makedirs(scratch, exist_ok=True)
+    with open(config_path + ".tmp", "w") as f:
+        json.dump(config, f)
+    os.replace(config_path + ".tmp", config_path)
 
     P = num_partitions or spark.sparkContext.defaultParallelism
-    stage_dir = os.path.join(out_dir, "_stage", "tokens")
+    stage_dir = os.path.join(scratch, "tokens")
     from .analysis import ANALYZERS, PRE_TRANSFORMS
 
     term_transform = ANALYZERS[analyzer]
@@ -958,7 +936,7 @@ def build_index(
         # staging file, listed from the staging read's file index (no
         # Spark job); the triples are read with pyarrow directly — see
         # _partial_runs_fn for why the JVM→Python row pipe is avoided.
-        runs_dir = os.path.join(out_dir, "_stage", "runs")
+        runs_dir = os.path.join(scratch, "runs")
         if not (resume and _done(runs_dir)):
             files = sorted(stage.inputFiles())
             paths_df = spark.createDataFrame(
@@ -994,15 +972,16 @@ def build_index(
 
     # ---- stage 4: term_stats ----------------------------------------------
     t0 = time.time()
-    # write_term_stats writes terms, terms_rev, terms_ngrams in turn:
-    # the stage is done only when all three are
-    vocab = (meta.terms_path, meta.terms_rev_path, meta.terms_ngrams_path)
-    if not (resume and all(_done(p) for p in vocab)):
+    if not (resume and _done(meta.terms_path)):
         write_term_stats(spark, meta, P)
     meta.stages["term_stats"] = round(time.time() - t0, 3)
 
     # ---- stage 5: meta + lineage -------------------------------------------
-    return _finish_meta(spark, meta)
+    _finish_meta(spark, meta)
+    # committed: a resume now returns meta.json, so nothing reads the
+    # staging tables again
+    shutil.rmtree(scratch)
+    return meta
 
 
 def verify_content_integrity(

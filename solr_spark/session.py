@@ -53,6 +53,16 @@ def ship_package(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(zpath)
 
 
+def driver_heap(phys_bytes: int | None = None) -> str:
+    """Default driver heap: a quarter of physical memory, at most 8g.
+    The heap is pre-touched at JVM start (get_spark), so every session
+    holds all of it resident whatever the data size; a fixed 8g left a
+    16 GB host no room for a second session."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(phys_bytes // 4 >> 20, 8192)}m"
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "solr_spark",
@@ -76,6 +86,7 @@ def get_spark(
     for k, v in MALLOC_ENV.items():
         os.environ.setdefault(k, v)
 
+    heap = os.environ.get("SOLR_SPARK_DRIVER_MEM") or driver_heap()
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -91,14 +102,11 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SOLR_SPARK_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", heap)
         # commit + pre-touch the whole heap at JVM start: G1 otherwise
         # uncommits regions whose re-faulting costs ~100s/GB on this VM
         # class (see MALLOC_ENV) — pay the fault cost once, up front
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:+AlwaysPreTouch -Xms" + os.environ.get("SOLR_SPARK_DRIVER_MEM", "8g"),
-        )
+        .config("spark.driver.extraJavaOptions", "-XX:+AlwaysPreTouch -Xms" + heap)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # smaller input splits: scan parallelism must exceed the core

@@ -64,23 +64,57 @@ def test_parallelism_invariance(
         assert ra == rb
 
 
-def test_resume_skips_completed_stages(spark, small_corpus, small_index, tmp_path):
-    """Kill-and-rerun: completed stages are not recomputed (mtime proof),
-    missing stages are rebuilt, final index identical."""
+@pytest.fixture(scope="module")
+def stopped_build(spark, small_corpus, tmp_path_factory):
+    """small_index's build stopped in stage 4: staging, docs,
+    bucket_stats and postings committed, no terms table, no meta.json.
+    Tests that resume it work on a copy."""
+    from solr_spark import indexer
+
+    def crash(*a, **kw):
+        raise RuntimeError("stopped in stage 4")
+
+    out = str(tmp_path_factory.mktemp("stopped") / "idx")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(indexer, "write_term_stats", crash)
+        with pytest.raises(RuntimeError, match="stage 4"):
+            build_index(
+                spark, spark.read.parquet(small_corpus), out,
+                bucket_docs=256, num_partitions=4,
+            )
+    assert not os.path.exists(os.path.join(out, "meta.json"))
+    return out
+
+
+def test_resume_skips_completed_stages(
+    spark, small_corpus, small_index, stopped_build, tmp_path, monkeypatch
+):
+    """Kill-and-rerun: a build stopped in stage 4 resumes without
+    recomputing its completed stages (mtime proof), writes the missing
+    terms table, and ends identical to a clean build."""
+    from solr_spark import indexer
+
     out = str(tmp_path / "idx_resume")
-    shutil.copytree(small_index.out_dir, out)
-    # simulate a crash after the postings stage: meta + term_stats missing
-    os.remove(os.path.join(out, "meta.json"))
-    shutil.rmtree(os.path.join(out, "terms"))
+    shutil.copytree(stopped_build, out)
     post_marker = os.path.join(out, "postings", "_SUCCESS")
     stage_marker = os.path.join(out, "_stage", "tokens", "_SUCCESS")
     m_post, m_stage = os.path.getmtime(post_marker), os.path.getmtime(stage_marker)
 
+    # the committed index holds no staging, so its marker is read while
+    # stage 4 runs
+    seen = {}
+    write_term_stats = indexer.write_term_stats
+
+    def spy(spark, meta, P):
+        seen["stage"] = os.path.getmtime(stage_marker)
+        write_term_stats(spark, meta, P)
+
+    monkeypatch.setattr(indexer, "write_term_stats", spy)
     meta = build_index(
         spark, spark.read.parquet(small_corpus), out, bucket_docs=256, num_partitions=4
     )
     assert os.path.getmtime(post_marker) == m_post      # not recomputed
-    assert os.path.getmtime(stage_marker) == m_stage    # not recomputed
+    assert seen["stage"] == m_stage                      # not recomputed
     assert os.path.exists(os.path.join(out, "terms", "_SUCCESS"))  # rebuilt
     assert meta.n_docs == small_index.n_docs
     assert meta.postings_bytes == small_index.postings_bytes
@@ -89,18 +123,21 @@ def test_resume_skips_completed_stages(spark, small_corpus, small_index, tmp_pat
     rb = [(r["docid"], r["score"]) for r in search(spark, meta, "license", k=5).collect()]
     assert ra == rb
 
-    # a crash inside stage 4: terms written, terms_rev and terms_ngrams
-    # not yet — the resume rewrites both, row for row as the clean build
-    os.remove(os.path.join(out, "meta.json"))
-    shutil.rmtree(meta.terms_rev_path)
-    shutil.rmtree(meta.terms_ngrams_path)
-    meta = build_index(
-        spark, spark.read.parquet(small_corpus), out, bucket_docs=256, num_partitions=4
-    )
-    for table in ("terms", "terms_rev", "terms_ngrams"):
-        clean = spark.read.parquet(os.path.join(small_index.out_dir, table)).collect()
-        resumed = spark.read.parquet(os.path.join(out, table)).collect()
-        assert resumed == clean, table
+
+def test_resume_of_stopped_build_refuses_changed_config(
+    spark, small_corpus, stopped_build, tmp_path
+):
+    """A resume of a partly built index (no meta.json yet) checks its
+    config against _stage/config.json instead of reusing 256-doc tables
+    under a 128-doc meta, and refuses a _stage that records none."""
+    out = str(tmp_path / "idx")
+    shutil.copytree(stopped_build, out)
+    docs = spark.read.parquet(small_corpus)
+    with pytest.raises(ValueError, match="bucket_docs"):
+        build_index(spark, docs, out, bucket_docs=128, num_partitions=4)
+    os.remove(os.path.join(out, "_stage", "config.json"))
+    with pytest.raises(ValueError, match="config"):
+        build_index(spark, docs, out, bucket_docs=256, num_partitions=4)
 
 
 def test_resume_noop_when_complete(spark, small_corpus, small_index):
@@ -128,12 +165,16 @@ def merged_index(spark, small_index, tmp_path_factory):
     return merge_segments(spark, view, out, num_partitions=3).segments[0]
 
 
-def test_meta_counts_equal_written_tables(small_index, merged_index):
+def test_meta_counts_equal_written_tables(
+    spark, small_corpus, small_index, merged_index, stopped_build, tmp_path
+):
     """meta.json's counts are the committed tables' counts, read here with
     pyarrow (independent of the Spark aggregations that produced them):
     docs and doclens from the docs table, rows and bytes from the
     postings table, and per partition the build lineage's doc and
-    posting counts from the staged doc rows and the postings' df sum."""
+    posting counts from the staged doc rows and the postings' df sum.
+    A committed index holds no staging, so the lineage is checked on a
+    build stopped in stage 4 and then resumed."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
@@ -148,17 +189,22 @@ def test_meta_counts_equal_written_tables(small_index, merged_index):
         assert (meta.postings_rows, meta.postings_bytes) == (post.num_rows, nbytes)
 
     staged = pq.read_table(
-        os.path.join(small_index.out_dir, "_stage", "tokens"),
+        os.path.join(stopped_build, "_stage", "tokens"),
         columns=["pid"], filters=[("kind", "=", 0)],
     )
     pids, counts = np.unique(staged["pid"].to_numpy(), return_counts=True)
-    lineage = small_index.lineage
+    out = str(tmp_path / "idx")
+    shutil.copytree(stopped_build, out)
+    resumed = build_index(
+        spark, spark.read.parquet(small_corpus), out, bucket_docs=256, num_partitions=4
+    )
+    lineage = resumed.lineage
     assert [(p["pid"], p["n_docs"]) for p in lineage] == list(zip(pids.tolist(), counts.tolist()))
-    post = pq.read_table(small_index.postings_path, columns=["df"])
+    post = pq.read_table(resumed.postings_path, columns=["df"])
     assert sum(p["n_postings"] for p in lineage) == pc.sum(post["df"]).as_py()
 
 
-_TABLES = ("docs", "postings", "bucket_stats", "terms", "terms_rev", "terms_ngrams")
+_TABLES = ("docs", "postings", "bucket_stats", "terms")
 
 
 def _jobs(spark, tag, fn):
@@ -170,6 +216,13 @@ def _jobs(spark, tag, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return out, len(sc.statusTracker().getJobIdsForGroup(tag))
+
+
+def test_index_dir_holds_only_index_tables(small_index, merged_index):
+    """A finished build and a merge leave the index tables and meta.json
+    in the index directory, and no build scratch."""
+    for meta in (small_index, merged_index):
+        assert sorted(os.listdir(meta.out_dir)) == sorted(_TABLES + ("meta.json",))
 
 
 @pytest.mark.parametrize("table", _TABLES)
@@ -200,6 +253,34 @@ def test_index_table_and_searcher_run_no_jobs(spark, small_index, merged_index):
             assert n == 0, table
     _, n = _jobs(spark, "searcher_init", lambda: Searcher(spark, small_index, cache=False))
     assert n == 0
+
+
+def test_build_add_merge_job_counts(spark, small_corpus, tmp_path):
+    """Jobs per write operation on the 600-doc corpus, pinned at their
+    measured counts: a build of 391 docs and an add_segment of the other
+    209 23 each, a merge of the two segments with 5 deletes 26. Stage 4
+    writes the one terms table, and no read infers a schema."""
+    from solr_spark.segments import IndexView, add_segment, delete_by_keys, merge_segments
+
+    docs = spark.read.parquet(small_corpus)
+    out = str(tmp_path / "view")
+    base, n_build = _jobs(spark, "count_build", lambda: build_index(
+        spark, docs.filter(F.col("path") < "src/d5"), os.path.join(out, "seg_0"),
+        bucket_docs=128, num_partitions=4,
+    ))
+    view, n_add = _jobs(spark, "count_add", lambda: add_segment(
+        spark, IndexView(segments=[base]), docs.filter(F.col("path") >= "src/d5"),
+        out, num_partitions=4,
+    ))
+    victims = (
+        spark.read.parquet(base.docs_path)
+        .orderBy("docid").limit(5).select("repo", "path", "commit").collect()
+    )
+    view = delete_by_keys(view, [tuple(r) for r in victims])
+    _, n_merge = _jobs(spark, "count_merge", lambda: merge_segments(
+        spark, view, str(tmp_path / "merged"), num_partitions=4
+    ))
+    assert n_build <= 23 and n_add <= 23 and n_merge <= 26, (n_build, n_add, n_merge)
 
 
 @pytest.mark.parametrize(
@@ -333,8 +414,7 @@ def test_merge_reclaims_deletes_equals_live_rebuild(spark, small_corpus, tmp_pat
     """Segment merge: base + delta + delete-mask merged into one segment
     is BIT-IDENTICAL to a from-scratch rebuild over the surviving
     documents — docids, scores, every table row for row (docs, postings
-    with their block metadata, bucket_stats, terms, terms_rev,
-    terms_ngrams) and the meta counts. Lucene merge semantics: deleted
+    with their block metadata, bucket_stats, terms) and the meta counts. Lucene merge semantics: deleted
     docs leave postings AND statistics; and the merge never touches
     content (pure postings-level remap + re-encode)."""
     from pyspark.sql import functions as F
@@ -387,8 +467,6 @@ def test_merge_reclaims_deletes_equals_live_rebuild(spark, small_corpus, tmp_pat
         ("postings", ["term", "bucket"]),
         ("bucket_stats", ["bucket"]),
         ("terms", ["term"]),
-        ("terms_rev", ["rev"]),
-        ("terms_ngrams", ["gram", "term", "tlen"]),
     ):
         rows = lambda meta: (  # noqa: E731
             spark.read.parquet(os.path.join(meta.out_dir, table))

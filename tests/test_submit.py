@@ -86,5 +86,5 @@ def test_spark_submit_py_files(tmp_path):
     scores = [h["score"] for h in report["hits"]]
     assert scores == sorted(scores, reverse=True)
     # the shipped build is a complete index layout on disk
-    for part in ("postings", "docs", "bucket_stats", "terms", "terms_rev", "meta.json"):
+    for part in ("postings", "docs", "bucket_stats", "terms", "meta.json"):
         assert os.path.exists(os.path.join(out, part)), part
