@@ -104,7 +104,7 @@ def main() -> None:
     )
 
     meta = ensure_index(spark, SF_DIR)
-    searcher = Searcher(spark, meta, cache=False)
+    searcher = Searcher(spark, meta)
 
     audits = {
         "fts_topk_bm25 (Searcher.search k=10)": searcher.search(

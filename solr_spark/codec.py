@@ -169,6 +169,24 @@ def decode_postings(
     return docids, tfs
 
 
+def decode_runs(
+    doc_stream: np.ndarray | bytes, tf_stream: np.ndarray | bytes,
+    lens: np.ndarray, bases: np.ndarray,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Decode many posting runs stored back to back -> (docids int64,
+    tfs int64), concatenated in run order. Run r's streams hold exactly
+    lens[r] varints, its delta chain starting at bases[r]: one varint
+    pass per stream, then a segmented cumsum (one global cumsum plus a
+    per-run correction) rebases every run at once."""
+    d = varint_decode(doc_stream).astype(np.int64)
+    tfs = varint_decode(tf_stream).astype(np.int64) + 1
+    if not d.size:
+        return d, tfs
+    starts = np.cumsum(lens) - lens
+    c = np.cumsum(d)
+    return c + np.repeat(d[starts] + bases - c[starts], lens), tfs
+
+
 def decode_blocks(
     doc_bytes: bytes,
     tf_bytes: bytes,

@@ -606,27 +606,20 @@ def _merge_runs_arrow(bucket_docs: int):
     instead of ~raw-triple rows."""
     import pyarrow as pa
 
-    from .codec import varint_decode
+    from .codec import decode_runs, varint_decode
 
     chunk = ENCODE_CHUNK_POSTINGS
 
     def runs(b):
-        d, tf, dl = (
-            varint_decode(data[offs[0] : offs[-1]]).astype(np.int64)
+        doc, tf, dl = (
+            data[offs[0] : offs[-1]]
             for data, offs in (
                 _binary_stream(pa, b[c]) for c in ("doc_bytes", "tf_bytes", "dl_bytes")
             )
         )
-        # within run r the deltas chain from base_r + first_delta; one
-        # global cumsum plus a per-run correction (repeated across the
-        # run) rebases all runs at once
         bucket, df = b["bucket"].to_numpy(), b["df"].to_numpy()
-        vstarts = np.zeros(len(df) + 1, dtype=np.int64)
-        np.cumsum(df, out=vstarts[1:])
-        c = np.cumsum(d)
-        first_abs = d[vstarts[:-1]] + bucket * bucket_docs
-        docid = c + np.repeat(first_abs - c[vstarts[:-1]], df)
-        return b["term"], bucket, df, docid, tf + 1, dl
+        docid, tf = decode_runs(doc, tf, df, bucket * bucket_docs)
+        return b["term"], bucket, df, docid, tf, varint_decode(dl).astype(np.int64)
 
     return lambda batches: _encode_sorted(map(runs, batches), bucket_docs, chunk)
 

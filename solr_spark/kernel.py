@@ -19,13 +19,16 @@ The Spark shape of the reference's two-phase distributed search
            columns never ride the scoring path
 
 A sorted top-k query whose work (its postings plus the doc slots of the
-buckets they touch) fits DRIVER_MAX_POSTINGS runs stages 2-3 in the
-driver, as the reference scores a shard inside its searcher process:
-stage 1's rows are collected (one Spark job, which also yields the exact
-df), the same kernel runs per touched bucket on the same docs frames,
-scoring.top_k picks the global winners, and the result is a local
-relation. Unsorted queries, which need every match to stay
-distributed, and over-bound ones run the cogroup above.
+buckets they touch) fits DRIVER_MAX_POSTINGS runs in the driver, as the
+reference scores a shard inside its searcher process, and runs no Spark
+job: stage 1 is a pyarrow read of the postings files Spark lists for
+the table (DataFrame.inputFiles, metadata only; the same filesystem
+assumption as build stage 3a, whose tasks read staging files with
+pyarrow), which also yields the exact df; the docs side is read the
+same way; the same kernel runs per touched bucket on the same docs
+frames, scoring.top_k picks the global winners, and the result is a
+local relation. Unsorted queries, which need every match to stay
+distributed, and over-bound ones run the Spark plan above.
 
 Stage 1 is also the only df source: a postings row carries its
 (term, bucket) df, and a term's df is the sum of its rows. Every index
@@ -48,11 +51,12 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .codec import decode_blocks, decode_postings
-from .indexer import IndexMeta, index_table
+from .codec import decode_blocks, decode_postings, decode_runs
+from .indexer import IndexMeta, _strip_file_scheme, index_table
 from .qparser import Query, parse
 from .scoring import accumulate, tfnorm, tfnorm_col, top_k
 from .scoring import idf as idf_fn
@@ -274,19 +278,25 @@ def _score_conjunction_pruned(
 
 def _decode_rows(pdf: pd.DataFrame, bucket_docs: int) -> tuple:
     """Decode every postings row of ``pdf`` in row order →
-    (postings per row, docids, tfs), the last two concatenated."""
-    ds, tfs = [], []
-    for bucket, df, doc_b, tf_b in zip(
-        pdf["bucket"].to_numpy(np.int64), pdf["df"].to_numpy(np.int64),
-        pdf["doc_bytes"], pdf["tf_bytes"],
-    ):
-        d, f = decode_postings(doc_b, tf_b, int(df), int(bucket) * bucket_docs)
-        ds.append(d)
-        tfs.append(f)
-    if not ds:
-        return np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.int64)
-    lens = np.fromiter((len(d) for d in ds), np.int64, len(ds))
-    return lens, np.concatenate(ds), np.concatenate(tfs)
+    (postings per row, docids, tfs), the last two concatenated: the
+    rows' streams back to back through one codec.decode_runs."""
+    lens = pdf["df"].to_numpy(np.int64)
+    d, tf = decode_runs(
+        b"".join(pdf["doc_bytes"]), b"".join(pdf["tf_bytes"]),
+        lens, pdf["bucket"].to_numpy(np.int64) * bucket_docs,
+    )
+    return lens, d, tf
+
+
+def _isin(col: str, values: list):
+    """pyarrow filter ``col in values``. The explicit [min, max] range
+    lets the parquet row-group statistics of the term- and
+    bucket-sorted tables prune the read; pyarrow prunes nothing for a
+    bare ``isin``."""
+    f = ds.field(col)
+    if not values:
+        return f.isin(values)
+    return (f >= min(values)) & (f <= max(values)) & f.isin(values)
 
 
 @dataclass
@@ -306,21 +316,26 @@ class QueryTrace:
 
 
 class Searcher:
-    """Warm query session over one index — holds the postings/docs/
-    bucket_stats DataFrames (and optionally caches the docs sides) so
-    repeated queries skip plan re-creation and re-scans. The reference
-    analog is SolrIndexSearcher with its filter/document caches
-    (solr/core/src/java/org/apache/solr/search/SolrIndexSearcher.java:894-986):
-    docs ≈ docValues pages in OS cache. Postings stay uncached (pruned
-    parquet scans per query) and are the only df source.
+    """Warm query session over one index. The reference analog is
+    SolrIndexSearcher, which reads its postings in-process
+    (solr/core/src/java/org/apache/solr/search/SolrIndexSearcher.java:894-986).
 
     ``meta`` is one IndexMeta or a segments.IndexView; each table is read
     through indexer.index_table, one multi-path scan across every
     segment (buckets never straddle segments, so the kernel needs no
-    merge logic). Given delete keys, it resolves them once to ``dead``,
-    the live-docs mask (bucket -> sorted bucket-local deleted docids)
-    that every query and the driver-local path apply; an IndexMeta has
-    none and resolves nothing.
+    merge logic). ``postings``, ``docs`` and ``bucket_stats`` are those
+    Spark DataFrames, which the cogroup reads. Opening the searcher also
+    lists their files once (``DataFrame.inputFiles``, metadata only), and
+    the driver path reads those files with pyarrow (``_read``), the
+    filesystem assumption of build stage 3a: a bounded query runs no
+    Spark job. Postings rows are the only df source. Given delete keys,
+    the searcher resolves them once to ``dead``, the live-docs mask
+    (bucket -> sorted bucket-local deleted docids) that every query and
+    the driver-local path apply; an IndexMeta has none and resolves
+    nothing. ``cache`` is accepted for existing callers and changes
+    nothing: Spark caching a table would hide its files from
+    ``inputFiles`` for every later reader in the session, and a
+    searcher opened while a frame of its tables is cached raises.
 
     Two driver caches serve the bounded top-k path of ``search``: the df
     of every term queried so far, and the ``bucket_stats`` rows of the
@@ -328,11 +343,10 @@ class Searcher:
     doclens plus the packed filter columns). The bucket-row cache drops
     its least recently used rows beyond DRIVER_MAX_POSTINGS doc slots
     (DRIVER_MAX_POSTINGS // bucket_docs rows), so it never holds more
-    than one over-bound query could fetch; with ``cache=True`` Spark
-    also caches the whole table, so those rows are held twice. Both
-    caches and the mask belong to this searcher alone — a view that
-    adds segments or deletes gets a new searcher. ``last_trace`` is the
-    QueryTrace of the latest ``search``."""
+    than one over-bound query could fetch. Both caches and the mask
+    belong to this searcher alone — a view that adds segments or
+    deletes gets a new searcher. ``last_trace`` is the QueryTrace of
+    the latest ``search``."""
 
     def __init__(self, spark: SparkSession, meta: IndexMeta, cache: bool = True):
         self.spark = spark
@@ -342,11 +356,17 @@ class Searcher:
         self.postings = index_table(spark, meta, "postings")
         self.docs = index_table(spark, meta, "docs")
         self.bucket_stats = index_table(spark, meta, "bucket_stats")
-        if cache:
-            self.docs = self.docs.cache()
-            self.bucket_stats = self.bucket_stats.cache()
-            self.docs.count()  # materialize
-            self.bucket_stats.count()
+        self._tables = {}
+        for t in ("postings", "docs", "bucket_stats"):
+            files = getattr(self, t).inputFiles()
+            if not files:
+                # inputFiles() lists nothing for a table Spark holds cached
+                raise ValueError(
+                    f"Spark lists no {t} files; unpersist any cached frame of "
+                    "this index's tables before opening a Searcher"
+                )
+            self._tables[t] = ds.dataset([_strip_file_scheme(f) for f in files],
+                                         format="parquet")
         # driver-side df cache for QUERY terms only (bounded by the terms
         # actually queried, never the vocabulary) — the term-dictionary-
         # in-heap part of SolrIndexSearcher; absent terms cache df=0
@@ -371,7 +391,7 @@ class Searcher:
         toks = sorted({t.lower() for t in terms})
         B = self.meta.bucket_docs
         if self._local_norms is None:
-            pdf = self.docs.select("docid", "doclen").toPandas()
+            pdf = self._read("docs", columns=["docid", "doclen"])
             # indexed by docid: a delta segment's docids start at its
             # docid_base, so n_docs alone would be too short
             dl = np.zeros(self._end_docid, np.float64)
@@ -444,17 +464,17 @@ class Searcher:
         scale; unsorted mode keeps the result distributed.
 
         A sorted query whose postings and touched buckets' doc slots fit
-        DRIVER_MAX_POSTINGS is scored in the driver: one pruned postings
-        scan, the kernel per touched bucket, the global top k, and a
-        local result relation. Unsorted and over-bound queries run the
-        postings x docs cogroup. Both paths call one _bucket_kernel
-        closure on the same per-bucket frames, so their results are
-        equal.
+        DRIVER_MAX_POSTINGS is scored in the driver with no Spark job:
+        one pruned pyarrow read of its postings rows, the kernel per
+        touched bucket, the global top k, and a local result relation.
+        Unsorted and over-bound queries run the postings x docs
+        cogroup. Both paths call one _bucket_kernel closure on the same
+        per-bucket frames, so their results are equal.
 
-        df comes from the postings scan: a df-cold query whose terms'
-        postings (df <= n_docs each) fit the bound fetches its rows once,
-        and learns df from them; any other df-cold query first runs the
-        same pruned scan over the (term, df) columns alone."""
+        df comes from the postings rows: a df-cold query whose terms'
+        postings (df <= n_docs each) fit the bound reads its rows once,
+        and learns df from them; any other df-cold query first reads the
+        same rows' (term, df) columns alone."""
         query = parse(q) if isinstance(q, str) else q
         spark, meta = self.spark, self.meta
         if unsorted:
@@ -521,7 +541,12 @@ class Searcher:
             rows = self._fetch_postings(needed)
             trace.postings_rows = len(rows)
 
-        use_packed = all(f in _PACKED_FILTER_COLS for f in query.filters)
+        # bucket_stats packs id_cols[0] as ``repos``: a repo filter reads
+        # it only when that column is repo, else the docs rows' own column
+        use_packed = all(
+            f in _PACKED_FILTER_COLS and (f != "repo" or meta.id_cols[0] == "repo")
+            for f in query.filters
+        )
         doc_cols = None
         if not use_packed:
             available = set(self.docs.columns)
@@ -594,16 +619,22 @@ class Searcher:
         return out
 
     def _fetch_postings(self, terms: list[str], cols: list[str] | None = None) -> pd.DataFrame:
-        """Every postings row of ``terms``, in the driver (one pruned
-        scan; ``cols`` prunes its columns). A row carries its
-        (term, bucket) df and a term's df is the sum of its rows
-        (indexer.write_term_stats), so the scan also fills the df cache
+        """Every postings row of ``terms``, read in the driver with
+        pyarrow (``_read``; ``_isin`` lets the term-sorted files'
+        row-group statistics prune it, ``cols`` prunes its columns). A
+        row carries its (term, bucket) df and a term's df is the sum of its rows
+        (indexer.write_term_stats), so the read also fills the df cache
         exactly; absent terms get 0."""
-        rows = self.postings.where(F.col("term").isin(terms))
-        rows = (rows.select(*cols) if cols else rows).toPandas()
+        rows = self._read("postings", _isin("term", terms), cols)
         df_sums = rows.groupby("term")["df"].sum()
         self._df_cache.update({t: int(df_sums.get(t, 0)) for t in terms})
         return rows
+
+    def _read(self, table: str, filter=None, columns: list[str] | None = None) -> pd.DataFrame:
+        """The rows of ``table`` matching the pyarrow expression
+        ``filter``, read in the driver from the files listed when the
+        searcher opened: no Spark job."""
+        return self._tables[table].to_table(columns=columns, filter=filter).to_pandas()
 
     def _score_in_driver(self, kern, rows: pd.DataFrame, doc_cols: list[str] | None,
                          k: int) -> pd.DataFrame:
@@ -620,7 +651,7 @@ class Searcher:
             missing = [b for b in buckets if b not in docs]
             self.last_trace.cached_buckets = len(buckets) - len(missing)
             if missing:
-                got = self.bucket_stats.where(F.col("bucket").isin(missing)).toPandas()
+                got = self._read("bucket_stats", _isin("bucket", missing))
                 docs.update({int(b): g for b, g in got.groupby("bucket")})
             for b in buckets:  # most recently used last
                 docs[b] = docs.pop(b, pd.DataFrame())
@@ -630,7 +661,7 @@ class Searcher:
             for b in list(docs)[:max(0, len(docs) - cap)]:
                 del docs[b]
         else:
-            got = self.docs.select(*doc_cols).where(F.col("bucket").isin(buckets)).toPandas()
+            got = self._read("docs", _isin("bucket", buckets), doc_cols)
             docs = {int(b): g for b, g in got.groupby("bucket")}
         parts = [kern(post[b], docs.get(b, pd.DataFrame())) for b in buckets]
         docid, score = top_k(
@@ -650,8 +681,8 @@ def search(
     with_fields: bool = False,
     unsorted: bool = False,
 ) -> DataFrame:
-    """One query on a fresh uncached Searcher (see Searcher.search)."""
-    return Searcher(spark, meta, cache=False).search(q, k, prune, with_fields, unsorted)
+    """One query on a fresh Searcher (see Searcher.search)."""
+    return Searcher(spark, meta).search(q, k, prune, with_fields, unsorted)
 
 
 def hit_count(

@@ -120,7 +120,7 @@ class IndexView:
         if self._searcher is None or self._searcher.spark is not spark:
             from .kernel import Searcher
 
-            self._searcher = Searcher(spark, self, cache=False)
+            self._searcher = Searcher(spark, self)
         return self._searcher
 
     def frames(self, spark: SparkSession):

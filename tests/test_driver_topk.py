@@ -1,11 +1,12 @@
 """Bounded sorted top-k queries are scored in the driver.
 
 A sorted query whose work — postings plus the doc slots of the buckets
-they touch — fits ``kernel.DRIVER_MAX_POSTINGS`` runs one pruned postings
-scan and the same ``_bucket_kernel`` closure per touched
-bucket in the driver; forcing the bound to 0 sends it through the
-postings x docs cogroup instead. Both must return equal (docid, score)
-lists for every query shape, and the driver path must cost one Spark job.
+they touch — fits ``kernel.DRIVER_MAX_POSTINGS`` reads its postings and
+docs rows with pyarrow in the driver and runs the same ``_bucket_kernel``
+closure per touched bucket there; forcing the bound to 0 sends it
+through the postings x docs cogroup instead. Both must return equal
+(docid, score) lists for every query shape, and the driver path must run
+no Spark job.
 """
 
 import pytest
@@ -15,7 +16,7 @@ from solr_spark import kernel
 from solr_spark.corpus import RARE1
 from solr_spark.kernel import Searcher
 from solr_spark.qparser import expand_synonyms, parse
-from solr_spark.segments import add_segment, delete_by_keys, open_base
+from solr_spark.segments import IndexView, add_segment, delete_by_keys, open_base
 from test_index_search import QUERIES
 
 MUST_GROUP = expand_synonyms(parse("+license int"), {"license": ["public"]})
@@ -75,6 +76,8 @@ def _path_filter_query(searcher):
     "must_group",               # SynonymQuery in a MUST clause
 ])
 def test_driver_equals_cogroup(monkeypatch, searcher, q):
+    # 4 build partitions: the driver's pyarrow read spans several files
+    assert len(searcher._tables["postings"].files) > 1
     if q == "path":
         q = _path_filter_query(searcher)
     elif q == "must_group":
@@ -118,9 +121,9 @@ def test_driver_equals_cogroup_on_score_ties(monkeypatch, spark, tmp_path):
             assert len(drv) == k
 
 
-def test_driver_equals_cogroup_on_view_with_deletes(monkeypatch, spark, small_corpus,
-                                                    tmp_path_factory):
-    """The live-docs mask is applied inside the kernel on both paths."""
+@pytest.fixture(scope="module")
+def dview(spark, small_corpus, tmp_path_factory):
+    """(two-segment view with 3 deleted docs, their docids)."""
     docs = spark.read.parquet(small_corpus)
     out = str(tmp_path_factory.mktemp("drvview") / "view")
     view = open_base(spark, docs.filter(F.col("path") < "src/d8"), out,
@@ -131,11 +134,19 @@ def test_driver_equals_cogroup_on_view_with_deletes(monkeypatch, spark, small_co
     seg_docs = spark.read.parquet(*[m.docs_path for m in view.segments])
     keys = [tuple(r[c] for c in view.id_cols)
             for r in seg_docs.where(F.col("docid").isin(victims)).collect()]
-    dview = delete_by_keys(view, keys)
-    s = dview.searcher(spark)
+    return delete_by_keys(view, keys), victims
+
+
+def test_driver_equals_cogroup_on_view_with_deletes(monkeypatch, spark, dview):
+    """The live-docs mask is applied inside the kernel on both paths."""
+    view, victims = dview
+    s = view.searcher(spark)
     assert s.dead
+    assert len(s._tables["postings"].files) > 2  # read across both segments
     for q in ["license", "license int", "+int +license", "lang:java license",
-              "int -public"]:
+              "int -public", "license int public", "path", "+license +int -public"]:
+        if q == "path":
+            q = _path_filter_query(s)
         drv, cog = _both(monkeypatch, s, q)
         assert drv == cog, q
         assert not {d for d, _ in drv} & set(victims), q
@@ -149,21 +160,67 @@ def test_with_fields_equal_on_both_paths(monkeypatch, searcher):
     assert drv == cog and len(drv) == 5
 
 
-def test_bounded_query_is_one_spark_job(spark, small_index):
-    s = Searcher(spark, small_index)
-    s.search("license int", 10).collect()  # fills the df and bucket-row caches
-    (rows, plan), n = _jobs(spark, "drv-warm", lambda: (
-        lambda df: (_hits(df), _phys(df)))(s.search("license int", 10)))
-    assert n == 1 and len(rows) == 10
-    assert "LocalTableScan" in plan
+def test_driver_read_prunes_by_statistics(searcher):
+    """A one-term read opens only the postings row groups whose term
+    range holds the term, not every file of the table."""
+    d = searcher._tables["postings"]
+    f = kernel._isin("term", ["license"])
+    kept = sum(len(fr.split_by_row_group(f)) for fr in d.get_fragments(filter=f))
+    assert 0 < kept < sum(fr.num_row_groups for fr in d.get_fragments())
+
+
+def test_searcher_refuses_a_cached_table(spark, small_index):
+    """Spark lists no files for a table it holds cached: opening a
+    searcher then fails by name, not later on an empty read."""
+    from solr_spark.indexer import index_table
+
+    docs = index_table(spark, small_index, "docs").cache()
+    try:
+        with pytest.raises(ValueError, match="no docs files"):
+            Searcher(spark, small_index)
+    finally:
+        docs.unpersist()
+    assert Searcher(spark, small_index)._tables["docs"].files
+
+
+def _driver_query(spark, s, q, tag):
+    """Hits of one query on ``s``, after asserting it ran on the driver
+    path as a local relation in no Spark job, plan and collect included."""
+    (rows, plan), n = _jobs(spark, tag, lambda: (
+        lambda df: (_hits(df), _phys(df)))(s.search(q, 10)))
+    assert n == 0 and rows, (tag, q)
+    assert "LocalTableScan" in plan, (tag, q)
     assert "FlatMapCoGroupsInPandas" not in plan and "TakeOrdered" not in plan
     assert s.last_trace.path == "driver"
     assert s.last_trace.postings_rows > 0 and s.last_trace.buckets > 0
-    # df-cold, under the bound: the one postings scan also yields df
+    return rows
+
+
+def test_bounded_query_runs_no_spark_job(spark, small_index):
+    s = Searcher(spark, small_index)
+    s.search("license int", 10).collect()  # fills the df and bucket-row caches
+    assert len(_driver_query(spark, s, "license int", "drv-warm")) == 10
+    # df-cold, under the bound: the one postings read also yields df
     assert "public" not in s._df_cache
-    rows, n = _jobs(spark, "drv-cold", lambda: _hits(s.search("public", 10)))
-    assert n == 1 and rows
+    _driver_query(spark, s, "public", "drv-cold")
     assert s._df_cache["public"] > 0
+
+
+def test_driver_reads_run_no_spark_job(spark, small_index, dview):
+    """A per-row docs side (``path:``), a bucket-row cache miss and the
+    second query on a two-segment view with deletes read their rows with
+    pyarrow: no Spark job."""
+    q = _path_filter_query(Searcher(spark, small_index))
+    s = Searcher(spark, small_index)
+    _driver_query(spark, s, q, "drv-path")
+    assert not s._bucket_rows  # the path query read docs rows, not bucket rows
+    _driver_query(spark, s, "license int", "drv-miss")
+    assert s.last_trace.cached_buckets == 0
+    view = IndexView(segments=dview[0].segments, delete_keys=dview[0].delete_keys)
+    view.search(spark, "license int", 10).collect()  # resolves the deletes
+    assert view.searcher(spark).dead
+    for i, q in enumerate(["license int", "lang:java public", "int -license"]):
+        _driver_query(spark, view.searcher(spark), q, f"drv-view-{i}")
 
 
 def test_cold_bound_over_limit_uses_exact_df(monkeypatch, spark, small_index):
@@ -180,7 +237,7 @@ def test_cold_bound_over_limit_uses_exact_df(monkeypatch, spark, small_index):
     monkeypatch.setattr(kernel, "DRIVER_MAX_POSTINGS", work)
     drv, n = _jobs(spark, "exact-df", lambda: _hits(s.search(term, 10)))
     assert s.last_trace.path == "driver" and drv
-    assert n == 3  # df lookup, postings scan, bucket_stats rows
+    assert n == 0  # df lookup, postings and bucket_stats rows: pyarrow reads
     for bound, reason in ((work - 1, "docs bound"), (df - 1, "postings bound")):
         monkeypatch.setattr(kernel, "DRIVER_MAX_POSTINGS", bound)
         assert _hits(s.search(term, 10)) == drv

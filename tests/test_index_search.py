@@ -223,6 +223,41 @@ def test_build_index_custom_id_cols(spark, tmp_path):
     dcols = set(spark.read.parquet(meta.docs_path).columns)
     assert {"project", "file", "rev", "lang", "sha256"} <= dcols
     assert search(spark, meta, "spark", k=5).count() == 5
+    # no repo column: a repo filter names an unknown field
+    with pytest.raises(ValueError, match="unknown filter field"):
+        search(spark, meta, "repo:p0 spark", k=5)
+
+
+@pytest.mark.parametrize("cogroup", [False, True])
+def test_repo_filter_on_reordered_id_cols(monkeypatch, spark, small_corpus,
+                                          small_index, tmp_path_factory, cogroup):
+    """bucket_stats packs id_cols[0], which is path on a
+    (path, repo, commit) index: its repo filters must read the repo
+    column, and match the default-order index doc for doc."""
+    from solr_spark import kernel
+    from solr_spark.indexer import build_index
+    from solr_spark.kernel import Searcher
+
+    out = str(tmp_path_factory.mktemp("reorder") / "idx")
+    reordered = build_index(
+        spark, spark.read.parquet(small_corpus), out,
+        id_cols=("path", "repo", "commit"), bucket_docs=256, num_partitions=4,
+    )
+    if cogroup:
+        monkeypatch.setattr(kernel, "DRIVER_MAX_POSTINGS", 0)
+
+    def hits(meta, q):
+        rows = Searcher(spark, meta).search(q, 1000, with_fields=True)
+        return sorted((r["repo"], r["path"], r["commit"], r["score"])
+                      for r in rows.collect())
+
+    repos = sorted(r["repo"] for r in
+                   spark.read.parquet(small_corpus).select("repo").distinct().collect())
+    assert len(repos) > 1
+    for repo in repos:
+        want = hits(small_index, f"repo:{repo} license")
+        assert want and {h[0] for h in want} == {repo}, repo
+        assert hits(reordered, f"repo:{repo} license") == want, repo
 
 
 def test_separator_in_id_fails_loudly(spark, tmp_path):

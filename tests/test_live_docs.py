@@ -193,6 +193,31 @@ def test_readers_on_view_with_deletes(spark, view):
         assert sorted(after.collect()) == want, name
 
 
+def test_decode_rows_equals_per_row_decode(spark, small_index):
+    """kernel._decode_rows (one varint pass per stream, a segmented
+    cumsum) yields exactly the per-row decode_postings output on rows of
+    every bucket, df = 1 rows and rows of more than one 128-posting block
+    among them."""
+    from solr_spark.codec import BLOCK_SIZE
+    from solr_spark.kernel import _decode_rows
+
+    pdf = Searcher(spark, small_index)._read("postings")
+    pdf = pdf.sort_values(["bucket", "term"], kind="stable").reset_index(drop=True)
+    assert pdf["bucket"].nunique() == 3
+    assert (pdf["df"] == 1).sum() > 50 and (pdf["df"] > BLOCK_SIZE).sum() > 10
+    lens, d, tf = _decode_rows(pdf, small_index.bucket_docs)
+    assert lens.tolist() == pdf["df"].tolist()
+    want = [
+        decode_postings(r.doc_bytes, r.tf_bytes, int(r.df),
+                        int(r.bucket) * small_index.bucket_docs)
+        for r in pdf.itertuples()
+    ]
+    assert d.tolist() == [int(x) for w in want for x in w[0]]
+    assert tf.tolist() == [int(x) for w in want for x in w[1]]
+    empty = _decode_rows(pdf.iloc[:0], small_index.bucket_docs)
+    assert [len(a) for a in empty] == [0, 0, 0]
+
+
 def test_decode_posting_frame_equals_per_row_decode(spark, small_index):
     """The batched decode yields exactly the per-row decode_postings
     output: same rows, same order, across several arrow batches."""
