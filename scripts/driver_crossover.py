@@ -79,8 +79,8 @@ def main() -> None:
         queries.append(by_df["term"][i])
     queries.append(hot[0])
     queries += [" ".join(hot[:m]) for m in (2, 4, 8, 12, 16, 24, 32, 48, 64)]
-    # a path: filter has no packed column: its docs side is every docs
-    # row of the touched buckets, fetched per query
+    # a path: filter resolves once to a docid mask, which the searcher's
+    # filter cache then serves to every later query
     path = searcher.docs.select("path").limit(1).collect()[0]["path"]
     queries += [f"path:{path} " + " ".join(hot[:m]) for m in (1, 8, 32)]
 
@@ -137,7 +137,7 @@ def main() -> None:
     forced, _ = replay(0)
     kernel.DRIVER_MAX_POSTINGS = default_bound
     warm = at_bound[30:]  # after the perfbench warm-up share
-    packed = [tr for _, _, tr in warm if tr.path == "driver" and tr.buckets]
+    driven = [tr for _, _, tr in warm if tr.path == "driver" and tr.buckets]
     jobs = [j for _, j, _ in warm]
     print(json.dumps({
         "n_docs": meta.n_docs,
@@ -153,8 +153,8 @@ def main() -> None:
             "jobs_per_query_median": statistics.median(jobs),
             "jobs_per_query_max": max(jobs),
             "bucket_cache_hit_rate": round(
-                sum(tr.cached_buckets for tr in packed)
-                / max(1, sum(tr.buckets for tr in packed)), 3),
+                sum(tr.cached_buckets for tr in driven)
+                / max(1, sum(tr.buckets for tr in driven)), 3),
             "bucket_cache_rows": cache_rows,
             "p50_s": round(statistics.median(w for w, _, _ in warm), 4),
             "cogroup_p50_s": round(statistics.median(w for w, _, _ in forced[30:]), 4),

@@ -38,6 +38,8 @@ _LIMIT_RE = re.compile(r"TakeOrderedAndProject\(limit=(\d+)|GlobalLimit (\d+)")
 # carry corpus-sized limits and must be flagged as funnels.
 SMALL_LIMIT_CAP = 10_000
 
+COGROUP = "fts_topk_bm25_cogroup (Searcher.search k=10, lang filter, over the bound)"
+
 
 def _small_limit(line: str) -> bool:
     m = _LIMIT_RE.search(line)
@@ -89,6 +91,7 @@ def corpus_sized_takeordered(df) -> int:
 def main() -> None:
     from solr_spark import gate
     from solr_spark.engine import ensure_index
+    from solr_spark import kernel
     from solr_spark.kernel import Searcher
     from solr_spark.session import get_spark
 
@@ -111,6 +114,11 @@ def main() -> None:
             "spark window merge", k=10
         ),
     }
+    # the same query, filtered, over the driver bound: the postings x
+    # bucket_stats cogroup that unsorted and large queries run
+    bound, kernel.DRIVER_MAX_POSTINGS = kernel.DRIVER_MAX_POSTINGS, 0
+    audits[COGROUP] = searcher.search("lang:en spark window merge", k=10)
+    kernel.DRIVER_MAX_POSTINGS = bound
     for name in [
         "t_minhash_pairs",
         "e_knn_ivf",
@@ -197,8 +205,8 @@ def main() -> None:
             failures.append(f"{name}:corpus_sized_topk")
         if name in NO_SOURCE_SCAN and src_scan:
             failures.append(f"{name}:source_scan")
-        # keep the full plan for the two most instructive entries only
-        if name in ("fts_topk_bm25 (Searcher.search k=10)", "t_minhash_pairs"):
+        # keep the full plan for the most instructive entries only
+        if name in ("fts_topk_bm25 (Searcher.search k=10)", COGROUP, "t_minhash_pairs"):
             out.write("\n```\n" + txt[:6000] + "\n```\n")
 
     out.write(

@@ -25,7 +25,7 @@ from .indexer import IndexMeta, build_index, index_table
 from .kernel import dismax_search, search
 from .qparser import Query, parse
 
-ENGINE_VERSION = "v5"  # bump to invalidate cached gate indexes (v5: bigram flag gone)
+ENGINE_VERSION = "v6"  # bump to invalidate cached gate indexes (v6: bucket_stats keeps only doclens)
 
 
 def documents_as_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -91,9 +91,7 @@ POSTINGS_SCHEMA = (
 # _table_schema)
 _TABLE_SCHEMAS = {
     "postings": POSTINGS_SCHEMA,
-    "bucket_stats": (
-        "bucket bigint, doclens array<bigint>, repos array<string>, langs array<string>"
-    ),
+    "bucket_stats": "bucket bigint, doclens array<bigint>",
     "terms": "term string, df bigint, cf bigint, n_buckets bigint",
 }
 
@@ -204,6 +202,16 @@ def index_table(spark: SparkSession, index, name: str) -> DataFrame:
             *[F.sum(c).alias(c) for c in ("df", "cf", "n_buckets")]
         )
     return table
+
+
+def bucket_local(ids: np.ndarray, bucket_docs: int) -> dict[int, np.ndarray]:
+    """Sorted docids ``ids`` as bucket -> sorted bucket-local docids:
+    the shape of the query kernel's live-docs and filter masks."""
+    buckets, starts = np.unique(ids // bucket_docs, return_index=True)
+    return {
+        int(b): part - int(b) * bucket_docs
+        for b, part in zip(buckets, np.split(ids, starts[1:]))
+    }
 
 
 def _analyze_partitions(
@@ -656,28 +664,14 @@ def write_docs(docs_df: DataFrame, out_path: str, P: int) -> None:
     )
 
 
-def write_bucket_stats(docs_df: DataFrame, out_path: str, P: int,
-                       first_id_col: str = "repo") -> None:
-    """Stage 2b writer: one row per docid bucket with doclen/id/lang as
-    position-indexed arrays (shared by build_index and segment merge so
-    the layout cannot desynchronize)."""
+def write_bucket_stats(docs_df: DataFrame, out_path: str, P: int) -> None:
+    """Stage 2b writer: one row per docid bucket with its doclens as an
+    array indexed by bucket-local docid (shared by build_index and
+    segment merge so the layout cannot desynchronize)."""
     (
         docs_df.groupBy("bucket")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        "docid", "doclen", F.col(first_id_col).alias("repo"), "lang"
-                    )
-                )
-            ).alias("a")
-        )
-        .select(
-            "bucket",
-            F.transform("a", lambda x: x["doclen"]).alias("doclens"),
-            F.transform("a", lambda x: x["repo"]).alias("repos"),
-            F.transform("a", lambda x: x["lang"]).alias("langs"),
-        )
+        .agg(F.array_sort(F.collect_list(F.struct("docid", "doclen"))).alias("a"))
+        .select("bucket", F.transform("a", lambda x: x["doclen"]).alias("doclens"))
         .repartitionByRange(max(P // 4, 1), "bucket")
         .sortWithinPartitions("bucket")
         .write.mode("overwrite")
@@ -904,20 +898,19 @@ def build_index(
         )
     meta.stages["doc_stats"] = round(time.time() - t0, 3)
 
-    # ---- stage 2b: bucket_stats (packed per-bucket doc arrays) -----------
-    # One row per docid bucket carrying doclen/repo/lang as arrays indexed
+    # ---- stage 2b: bucket_stats (per-bucket doclen arrays) ---------------
+    # One row per docid bucket carrying its doclens as an array indexed
     # by local docid (docids are dense, so position == docid - base). The
     # query kernel cogroups postings with THIS table instead of per-row
-    # doc_stats: the per-query exchange moves ~n_docs/bucket_docs packed
-    # rows instead of n_docs individual rows — the docs-side shuffle that
-    # dominated fts latency at scale (the reference's analog is docValues
-    # column pages, SolrIndexSearcher.java:894-986).
+    # doc_stats: the per-query exchange moves ~n_docs/bucket_docs rows
+    # instead of n_docs individual rows — the docs-side shuffle that
+    # dominated fts latency at scale (the reference's analog is the norms
+    # file). Filters never ride this table: the searcher resolves them
+    # to a docid mask from the docs table (kernel.Searcher).
     t0 = time.time()
     bs_out = os.path.join(out_dir, "bucket_stats")
     if not (resume and _done(bs_out)):
-        write_bucket_stats(
-            index_table(spark, meta, "docs"), bs_out, P, first_id_col=id_cols[0]
-        )
+        write_bucket_stats(index_table(spark, meta, "docs"), bs_out, P)
     meta.stages["bucket_stats"] = round(time.time() - t0, 3)
 
     # ---- stage 3: postings (term,bucket)-keyed sorted merge ---------------

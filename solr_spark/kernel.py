@@ -30,6 +30,10 @@ frames, scoring.top_k picks the global winners, and the result is a
 local relation. Unsorted queries, which need every match to stay
 distributed, and over-bound ones run the Spark plan above.
 
+The docs side is always the bucket's bucket_stats row. Deletes and
+filters (the reference's cached filter DocSets) are bucket -> local
+docid masks that the kernel applies to its ``alive`` mask on both paths.
+
 Stage 1 is also the only df source: a postings row carries its
 (term, bucket) df, and a term's df is the sum of its rows. Every index
 has every table, so the searcher probes for none.
@@ -56,7 +60,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .codec import decode_blocks, decode_postings, decode_runs
-from .indexer import IndexMeta, _strip_file_scheme, index_table
+from .indexer import IndexMeta, _strip_file_scheme, bucket_local, index_table
 from .qparser import Query, parse
 from .scoring import accumulate, tfnorm, tfnorm_col, top_k
 from .scoring import idf as idf_fn
@@ -67,17 +71,14 @@ RESULT_SCHEMA = "docid bigint, score double"
 # doc slots (bucket_docs each) of the buckets they touch. Postings are
 # bounded before the scan (by df), the docs side before it is fetched;
 # over the bound the query runs the cogroup. Also the driver-memory bound
-# of one query, and of a searcher's bucket-row cache. Up to this work
-# every measured driver query beat the cogroup's fastest query by over
-# 0.2 s, a floor (a job and a Python-worker stage) that more executors
-# do not lower; at 2.2M work the margin was 0.07 s on a 118-bucket index
+# of one query, and of a searcher's bucket-row and filter caches. Up to
+# this work every measured driver query beat the cogroup's fastest query
+# by over 0.2 s, a floor (a job and a Python-worker stage) that more
+# executors do not lower; at 2.2M work the margin was 0.07 s on a
+# 118-bucket index
 # (BASELINE.md, "Where the driver path and the cogroup cross";
 # scripts/driver_crossover.py).
 DRIVER_MAX_POSTINGS = 1_000_000
-
-
-# filter field -> packed array column in bucket_stats
-_PACKED_FILTER_COLS = {"lang": "langs", "repo": "repos"}
 
 
 def _bucket_kernel(
@@ -85,25 +86,25 @@ def _bucket_kernel(
     weights: dict[str, int],
     required: list[str],
     prohibited: list[str],
-    filters: dict[str, list[str]],
+    keep: dict[int, np.ndarray] | None,
     avgdl: float,
     bucket_docs: int,
     k: int,
     prune: bool,
-    packed: bool = False,
     required_groups: list[list[str]] | None = None,
     dead: dict[int, np.ndarray] | None = None,
 ):
     """Build the per-bucket cogrouped scoring function (pure numpy inside).
+    Its docs side is the bucket's bucket_stats row: the doclens, as an
+    array indexed by bucket-local docid (indexer stage 2b).
 
-    ``packed``: the docs side is the bucket_stats table (one row per
-    bucket, doclen/filter columns as position-indexed arrays) instead of
-    per-row doc stats — see indexer stage 2b.
-
-    ``dead``: the live-docs mask, bucket -> sorted bucket-local docids
-    deleted in it (Lucene's liveDocs). They are cleared from ``alive``
-    as soon as the docs side is loaded, before any branch runs, so no
-    prune threshold, accumulation or count ever sees a deleted doc.
+    ``keep``: the query's filter mask, bucket -> sorted bucket-local
+    docids that pass every filter (a bucket absent from it keeps no
+    doc); ``None`` for an unfiltered query. ``dead``: the live-docs
+    mask, bucket -> sorted bucket-local docids deleted in it (Lucene's
+    liveDocs). Both are applied to ``alive`` as soon as the docs side is
+    loaded, before any branch runs, so no prune threshold, accumulation
+    or count ever sees a filtered-out or deleted doc.
 
     ``required_groups``: MUST groups (each = "match >= 1 of these
     terms") — the SynonymQuery-in-MUST shape. When present, the matching
@@ -122,24 +123,13 @@ def _bucket_kernel(
         B = bucket_docs
 
         dl = np.zeros(B, dtype=np.float64)
+        dls = np.asarray(docs_pdf["doclens"].iloc[0], dtype=np.float64)
+        dl[:len(dls)] = dls
         alive = np.zeros(B, dtype=bool)
-        if packed:
-            row = docs_pdf.iloc[0]
-            dls = np.asarray(row["doclens"], dtype=np.float64)
-            nloc = len(dls)
-            dl[:nloc] = dls
-            ok = np.ones(nloc, dtype=bool)
-            for f_name, vals in filters.items():
-                arr = np.asarray(row[_PACKED_FILTER_COLS[f_name]], dtype=object)
-                ok &= np.isin(arr, np.asarray(vals, dtype=object))
-            alive[:nloc] = ok
-        else:
-            loc_docs = docs_pdf["docid"].to_numpy(np.int64) - base
-            dl[loc_docs] = docs_pdf["doclen"].to_numpy(np.float64)
-            ok = np.ones(len(docs_pdf), dtype=bool)
-            for f_name, vals in filters.items():
-                ok &= docs_pdf[f_name].isin(vals).to_numpy()
-            alive[loc_docs[ok]] = True
+        if keep is None:
+            alive[:len(dls)] = True
+        elif bucket in keep:
+            alive[keep[bucket]] = True
         if dead and bucket in dead:
             alive[dead[bucket]] = False
 
@@ -305,14 +295,17 @@ class QueryTrace:
     ("driver" or "cogroup"), why it took the cogroup (``None``,
     "unsorted", "postings bound", or "docs bound" when the postings fit
     but the docs of the buckets they touch do not), the postings rows
-    fetched into the driver, and the buckets scored there and how many
-    of those the bucket-row cache served (0 on the cogroup path)."""
+    fetched into the driver, the buckets scored there and how many
+    of those the bucket-row cache served (0 on the cogroup path), and
+    how many of the query's filter masks (one per filter field) the
+    filter cache served, on either path."""
 
     path: str = "driver"
     reason: str | None = None
     postings_rows: int = 0
     buckets: int = 0
     cached_buckets: int = 0
+    cached_filters: int = 0
 
 
 class Searcher:
@@ -337,16 +330,18 @@ class Searcher:
     ``inputFiles`` for every later reader in the session, and a
     searcher opened while a frame of its tables is cached raises.
 
-    Two driver caches serve the bounded top-k path of ``search``: the df
-    of every term queried so far, and the ``bucket_stats`` rows of the
-    buckets recent queries touched (one row per bucket: ``bucket_docs``
-    doclens plus the packed filter columns). The bucket-row cache drops
-    its least recently used rows beyond DRIVER_MAX_POSTINGS doc slots
-    (DRIVER_MAX_POSTINGS // bucket_docs rows), so it never holds more
-    than one over-bound query could fetch. Both caches and the mask
-    belong to this searcher alone — a view that adds segments or
-    deletes gets a new searcher. ``last_trace`` is the QueryTrace of
-    the latest ``search``."""
+    Three driver caches serve ``search``: the df of every term queried
+    so far, the ``bucket_stats`` rows (``bucket_docs`` doclens each) of
+    the buckets recent bounded queries touched, and the filter cache
+    (the reference's filterCache): each distinct filter resolved on
+    first use, never at open, to its sorted docids (``_filter_mask``).
+    Each drops its least recently used entries beyond
+    DRIVER_MAX_POSTINGS doc slots, so it never holds more than one
+    over-bound query could fetch; the filter cache always keeps its
+    latest mask. The caches and the live-docs mask belong to this
+    searcher alone — a view that adds segments or deletes gets a new
+    searcher. ``last_trace`` is the QueryTrace of the latest
+    ``search``."""
 
     def __init__(self, spark: SparkSession, meta: IndexMeta, cache: bool = True):
         self.spark = spark
@@ -372,6 +367,7 @@ class Searcher:
         # in-heap part of SolrIndexSearcher; absent terms cache df=0
         self._df_cache: dict[str, int] = {}
         self._bucket_rows: dict[int, pd.DataFrame] = {}
+        self._filter_masks: dict[tuple, np.ndarray] = {}
         self.last_trace: QueryTrace | None = None
         self._local_norms: tuple | None = None
         self._local_postings: dict[str, tuple] = {}
@@ -467,9 +463,11 @@ class Searcher:
         DRIVER_MAX_POSTINGS is scored in the driver with no Spark job:
         one pruned pyarrow read of its postings rows, the kernel per
         touched bucket, the global top k, and a local result relation.
-        Unsorted and over-bound queries run the postings x docs
+        Unsorted and over-bound queries run the postings x bucket_stats
         cogroup. Both paths call one _bucket_kernel closure on the same
-        per-bucket frames, so their results are equal.
+        per-bucket frames, so their results are equal. Filters are the
+        cached docid mask ``_filter_mask`` on both paths; one that
+        matches no doc returns the empty result at once.
 
         df comes from the postings rows: a df-cold query whose terms'
         postings (df <= n_docs each) fit the bound reads its rows once,
@@ -508,6 +506,9 @@ class Searcher:
         all_terms = sorted(set(weights) | query.prohibited)
         if not weights or k <= 0:
             return _empty()
+        keep = self._filter_mask(query.filters) if query.filters else None
+        if keep == {}:
+            return _empty()
         rows = None  # the query's postings rows, once fetched into the driver
         # a df-cold query learns df from its postings scan; df <= n_docs
         # bounds that scan before any df is known
@@ -541,33 +542,12 @@ class Searcher:
             rows = self._fetch_postings(needed)
             trace.postings_rows = len(rows)
 
-        # bucket_stats packs id_cols[0] as ``repos``: a repo filter reads
-        # it only when that column is repo, else the docs rows' own column
-        use_packed = all(
-            f in _PACKED_FILTER_COLS and (f != "repo" or meta.id_cols[0] == "repo")
-            for f in query.filters
-        )
-        doc_cols = None
-        if not use_packed:
-            available = set(self.docs.columns)
-            unknown = sorted(set(query.filters) - available)
-            if unknown:
-                # e.g. 'source': a gate-table alias the engine layer remaps
-                # onto 'repo' — fail with the valid field list instead of an
-                # opaque AnalysisException from the select below
-                raise ValueError(
-                    f"unknown filter field(s) {unknown}; docs table columns: "
-                    f"{sorted(available)}"
-                )
-            doc_cols = ["docid", "bucket", "doclen"] + sorted(query.filters)
         kern = _bucket_kernel(
-            idfs, weights, sorted(query.required), sorted(query.prohibited),
-            {f: list(v) for f, v in query.filters.items()},
+            idfs, weights, sorted(query.required), sorted(query.prohibited), keep,
             meta.avgdl, meta.bucket_docs, k,
             # the conjunction-prune path assumes plain AND over required
             # terms; MUST groups need the general matching mask
             prune and not groups,
-            packed=use_packed,
             required_groups=groups or None,
             dead=self.dead,
         )
@@ -579,7 +559,7 @@ class Searcher:
             # the postings fit, the docs of the buckets they touch do not
             rows, reason = None, "docs bound"
         if rows is not None:
-            top = self._score_in_driver(kern, rows, doc_cols, k)
+            top = self._score_in_driver(kern, rows, k)
             if len(top) == 0:
                 return _empty()
             # a pandas frame becomes a local relation: no job on collect
@@ -588,14 +568,10 @@ class Searcher:
             if not unsorted:
                 trace.path, trace.reason = "cogroup", reason
             postings = self.postings.where(F.col("term").isin(needed))
-            # prune the docs scan to buckets that contain at least one query term
+            # the docs side: one bucket_stats row per bucket that holds at
+            # least one query term, not one row per doc (indexer stage 2b)
             buckets = F.broadcast(postings.select("bucket").distinct())
-            if use_packed:
-                # packed per-bucket arrays: the cogroup's docs side is one row
-                # per touched bucket, not one row per doc (indexer stage 2b)
-                doc_stats = self.bucket_stats.join(buckets, "bucket", "left_semi")
-            else:
-                doc_stats = self.docs.select(*doc_cols).join(buckets, "bucket", "left_semi")
+            doc_stats = self.bucket_stats.join(buckets, "bucket", "left_semi")
             scored = (
                 postings.groupby("bucket")
                 .cogroup(doc_stats.groupby("bucket"))
@@ -630,40 +606,66 @@ class Searcher:
         self._df_cache.update({t: int(df_sums.get(t, 0)) for t in terms})
         return rows
 
+    def _filter_mask(self, filters: dict[str, list[str]]) -> dict[int, np.ndarray]:
+        """The kernel's ``keep`` mask for ``filters``: bucket ->
+        bucket-local docids whose every field holds one of its values
+        (values OR'd within a field, fields AND'd). Each field's docids
+        come from the filter cache, or on a miss from one pyarrow read
+        of the docs table (``_read``: no Spark job). Raises ValueError
+        naming the docs table's columns for a field it lacks."""
+        available = set(self._tables["docs"].schema.names)
+        unknown = sorted(set(filters) - available)
+        if unknown:
+            # e.g. 'source': a gate-table alias the engine layer remaps
+            # onto 'repo'
+            raise ValueError(
+                f"unknown filter field(s) {unknown}; docs table columns: "
+                f"{sorted(available)}"
+            )
+        cache, ids = self._filter_masks, None
+        for f, vals in sorted(filters.items()):
+            key = (f, tuple(sorted(set(vals))))
+            mask = cache.pop(key, None)
+            if mask is None:
+                got = self._read("docs", ds.field(f).isin(list(key[1])), ["docid"])
+                mask = np.sort(got["docid"].to_numpy(np.int64))
+            else:
+                self.last_trace.cached_filters += 1
+            cache[key] = mask  # most recently used last
+            ids = mask if ids is None else np.intersect1d(ids, mask, assume_unique=True)
+        held = sum(len(m) for m in cache.values())
+        while len(cache) > 1 and held > DRIVER_MAX_POSTINGS:
+            held -= len(cache.pop(next(iter(cache))))
+        return bucket_local(ids, self.meta.bucket_docs)
+
     def _read(self, table: str, filter=None, columns: list[str] | None = None) -> pd.DataFrame:
         """The rows of ``table`` matching the pyarrow expression
         ``filter``, read in the driver from the files listed when the
         searcher opened: no Spark job."""
         return self._tables[table].to_table(columns=columns, filter=filter).to_pandas()
 
-    def _score_in_driver(self, kern, rows: pd.DataFrame, doc_cols: list[str] | None,
-                         k: int) -> pd.DataFrame:
+    def _score_in_driver(self, kern, rows: pd.DataFrame, k: int) -> pd.DataFrame:
         """Stages 2-3 in the driver: ``kern`` on each touched bucket's
-        postings rows and the docs frame the cogroup would hand it —
-        the cached bucket_stats row (packed, ``doc_cols`` None) or the
-        bucket's ``doc_cols`` rows — then the global top k over every
+        postings rows and the bucket_stats row the cogroup would hand
+        it, from the bucket-row cache, then the global top k over every
         bucket's winners."""
         post = {int(b): g for b, g in rows.groupby("bucket")}
         buckets = sorted(post)
         self.last_trace.buckets = len(buckets)
-        if doc_cols is None:
-            docs = self._bucket_rows
-            missing = [b for b in buckets if b not in docs]
-            self.last_trace.cached_buckets = len(buckets) - len(missing)
-            if missing:
-                got = self._read("bucket_stats", _isin("bucket", missing))
-                docs.update({int(b): g for b, g in got.groupby("bucket")})
-            for b in buckets:  # most recently used last
-                docs[b] = docs.pop(b, pd.DataFrame())
-            # a query's buckets fit the cap (the docs bound), so only
-            # older rows are dropped
-            cap = max(1, DRIVER_MAX_POSTINGS // self.meta.bucket_docs)
-            for b in list(docs)[:max(0, len(docs) - cap)]:
-                del docs[b]
-        else:
-            got = self._read("docs", _isin("bucket", buckets), doc_cols)
-            docs = {int(b): g for b, g in got.groupby("bucket")}
-        parts = [kern(post[b], docs.get(b, pd.DataFrame())) for b in buckets]
+        docs = self._bucket_rows
+        missing = [b for b in buckets if b not in docs]
+        self.last_trace.cached_buckets = len(buckets) - len(missing)
+        if missing:
+            got = self._read("bucket_stats", _isin("bucket", missing))
+            docs.update({int(b): g for b, g in got.groupby("bucket")})
+        for b in buckets:  # most recently used last
+            docs[b] = docs.pop(b, pd.DataFrame())
+        # a query's buckets fit the cap (the docs bound), so only
+        # older rows are dropped
+        cap = max(1, DRIVER_MAX_POSTINGS // self.meta.bucket_docs)
+        for b in list(docs)[:max(0, len(docs) - cap)]:
+            del docs[b]
+        parts = [kern(post[b], docs[b]) for b in buckets]
         docid, score = top_k(
             np.concatenate([p["docid"].to_numpy(np.int64) for p in parts]),
             np.concatenate([p["score"].to_numpy(np.float64) for p in parts]),

@@ -32,8 +32,10 @@ Deletes are Lucene's liveDocs: any searcher over the view resolves its
 delete keys to docids once (one left-semi join of the docs tables), and
 the scoring kernel clears them from its per-bucket ``alive`` mask before
 any pruning or scoring; DataFrame readers anti-join the same docids
-(kernel.live_rows). The packed bucket_stats path stays on, and the
-statistics keep counting deleted docs until a merge reclaims them.
+(kernel.live_rows). Filters take the same shape: a searcher resolves
+each to a docid mask that the kernel ANDs into ``alive`` beside the
+live-docs mask. The statistics keep counting deleted docs until a
+merge reclaims them.
 """
 
 from __future__ import annotations
@@ -45,7 +47,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .indexer import IndexMeta, build_index, index_table
+from .indexer import IndexMeta, bucket_local, build_index, index_table
 
 
 @dataclass
@@ -105,12 +107,7 @@ class IndexView:
         deleted docs."""
         hit = self.deleted(spark).collect()
         ids = np.sort(np.fromiter((r["docid"] for r in hit), np.int64, len(hit)))
-        B = self.bucket_docs
-        buckets, starts = np.unique(ids // B, return_index=True)
-        return {
-            int(b): part - int(b) * B
-            for b, part in zip(buckets, np.split(ids, starts[1:]))
-        }
+        return bucket_local(ids, self.bucket_docs)
 
     def searcher(self, spark: SparkSession):
         """This view's kernel.Searcher, built on first use: each table read
@@ -284,7 +281,7 @@ def merge_segments(
 
     # 3. stats tables and meta — the SAME writers and finish build_index
     # uses (stages 2b/4/5), so the layouts cannot desynchronize
-    write_bucket_stats(new_docs, meta.bucket_stats_path, P, first_id_col=ids[0])
+    write_bucket_stats(new_docs, meta.bucket_stats_path, P)
     write_term_stats(spark, meta, P)
     return IndexView(segments=[_finish_meta(spark, meta)])
 

@@ -2,11 +2,12 @@
 
 A sorted query whose work — postings plus the doc slots of the buckets
 they touch — fits ``kernel.DRIVER_MAX_POSTINGS`` reads its postings and
-docs rows with pyarrow in the driver and runs the same ``_bucket_kernel``
-closure per touched bucket there; forcing the bound to 0 sends it
-through the postings x docs cogroup instead. Both must return equal
-(docid, score) lists for every query shape, and the driver path must run
-no Spark job.
+bucket_stats rows with pyarrow in the driver and runs the same
+``_bucket_kernel`` closure per touched bucket there; forcing the bound to
+0 sends it through the postings x bucket_stats cogroup instead. Both
+must return equal (docid, score) lists for every query shape, filters
+(a cached docid mask on both paths) included, and the driver path must
+run no Spark job.
 """
 
 import pytest
@@ -60,31 +61,40 @@ def searcher(spark, small_index):
     return Searcher(spark, small_index)
 
 
-def _path_filter_query(searcher):
-    """``license`` restricted to its top hits' paths: ``path`` has no
-    packed column, so the docs side is the per-row docs table."""
-    top = [d for d, _ in _hits(searcher.search("license", 5))]
+def _path_filter_query(searcher, k=5):
+    """``license`` restricted to the paths of its top k hits: a
+    many-valued ``path`` filter."""
+    top = [d for d, _ in _hits(searcher.search("license", k))]
     paths = [r["path"] for r in searcher.docs.where(F.col("docid").isin(top)).collect()]
     return " ".join(f"path:{p}" for p in sorted(paths)) + " license"
 
 
 @pytest.mark.parametrize("q", QUERIES + [
-    "lang:java license",        # packed bucket_stats docs side
-    "path",                     # per-row docs side (query built below)
+    "lang:java license",        # one filter
+    "path",                     # path filter (query built below)
+    "path+lang",                # multi-field AND (query built below)
+    "lang:java lang:py license",  # multi-value OR
+    "lang:java license -public",  # filter + prohibited
+    "lang:zz license",          # a filter that matches no doc
     "license^2 int",            # boosts
     "int^3 -public license",    # boost + prohibited
     "must_group",               # SynonymQuery in a MUST clause
 ])
-def test_driver_equals_cogroup(monkeypatch, searcher, q):
+def test_driver_equals_cogroup(monkeypatch, spark, searcher, q):
     # 4 build partitions: the driver's pyarrow read spans several files
     assert len(searcher._tables["postings"].files) > 1
     if q == "path":
         q = _path_filter_query(searcher)
+    elif q == "path+lang":  # keeps the java docs of the 20 paths
+        q = "lang:java " + _path_filter_query(searcher, 20)
     elif q == "must_group":
         assert MUST_GROUP.required_groups
         q = MUST_GROUP
-    drv, cog = _both(monkeypatch, searcher, q)
+    (drv, cog), n = _jobs(spark, f"eq-{q}", lambda: _both(monkeypatch, searcher, q))
     assert drv == cog, q
+    if q == "lang:zz license":
+        # the empty mask answers at once on both paths
+        assert drv == [] and n == 0
 
 
 @pytest.mark.parametrize("k", [0, 1, 10, 1000])
@@ -207,15 +217,18 @@ def test_bounded_query_runs_no_spark_job(spark, small_index):
 
 
 def test_driver_reads_run_no_spark_job(spark, small_index, dview):
-    """A per-row docs side (``path:``), a bucket-row cache miss and the
-    second query on a two-segment view with deletes read their rows with
-    pyarrow: no Spark job."""
-    q = _path_filter_query(Searcher(spark, small_index))
-    s = Searcher(spark, small_index)
-    _driver_query(spark, s, q, "drv-path")
-    assert not s._bucket_rows  # the path query read docs rows, not bucket rows
+    """Opening a searcher, a bucket-row cache miss, a filter's mask read
+    and its later cache hit, and the second query on a two-segment view
+    with deletes read with pyarrow or not at all: no Spark job."""
+    q = "lang:java " + _path_filter_query(Searcher(spark, small_index), 20)
+    s, n = _jobs(spark, "drv-open", lambda: Searcher(spark, small_index))
+    assert n == 0 and not s._filter_masks  # opening resolves no filter
     _driver_query(spark, s, "license int", "drv-miss")
     assert s.last_trace.cached_buckets == 0
+    _driver_query(spark, s, q, "drv-mask")
+    assert s.last_trace.cached_filters == 0 and len(s._filter_masks) == 2
+    _driver_query(spark, s, q, "drv-mask-hit")
+    assert s.last_trace.cached_filters == 2
     view = IndexView(segments=dview[0].segments, delete_keys=dview[0].delete_keys)
     view.search(spark, "license int", 10).collect()  # resolves the deletes
     assert view.searcher(spark).dead
@@ -244,10 +257,10 @@ def test_cold_bound_over_limit_uses_exact_df(monkeypatch, spark, small_index):
         assert (s.last_trace.path, s.last_trace.reason) == ("cogroup", reason)
 
 
-def test_per_row_docs_side_is_bounded(monkeypatch, searcher):
-    """A ``path:`` query fetches its touched buckets' docs rows into the
-    driver; when those doc slots overflow the bound (its postings still
-    fit), it runs the cogroup with equal results."""
+def test_filtered_query_over_docs_bound(monkeypatch, searcher):
+    """A filtered query fetches its touched buckets' bucket_stats rows
+    into the driver; when those doc slots overflow the bound (its
+    postings still fit), it runs the cogroup with equal results."""
     q = _path_filter_query(searcher)
     drv = _hits(searcher.search(q, 10))
     assert searcher.last_trace.path == "driver" and drv
@@ -288,6 +301,45 @@ def test_bucket_row_cache_is_capped(monkeypatch, spark, tmp_path):
     assert s.last_trace.cached_buckets == 0
     s.search("apple", 10)
     assert s.last_trace.cached_buckets == 1
+
+
+def test_filter_mask_cache_is_capped(monkeypatch, spark, tmp_path):
+    """The filter cache keeps its masks' docids within
+    DRIVER_MAX_POSTINGS, dropping the least recently used mask, but
+    always keeps one; a repeated filter is served from it."""
+    from solr_spark.indexer import build_index
+
+    # three langs over one 4-doc bucket of "apple" docs: 4 docids a mask
+    rows = [("r", f"f{i:05d}", "0", f"l{i % 3}", f"{['apple', 'x', 'y'][i // 4]} x")
+            for i in range(12)]
+    docs = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string"
+    )
+    meta = build_index(spark, docs, str(tmp_path / "fq"), bucket_docs=4,
+                       num_partitions=1)
+    s = Searcher(spark, meta, cache=False)
+    langs = ["l0", "l1", "l2"]
+    want = {}
+    with monkeypatch.context() as m:
+        m.setattr(kernel, "DRIVER_MAX_POSTINGS", 0)
+        for lang in langs:
+            want[lang] = _hits(s.search(f"lang:{lang} apple", 10))
+    # one query's work is 4 postings + 4 doc slots; the cap is 2 masks
+    monkeypatch.setattr(kernel, "DRIVER_MAX_POSTINGS", 8)
+    s = Searcher(spark, meta, cache=False)
+    for i, lang in enumerate(langs + ["l0", "l2"]):
+        assert _hits(s.search(f"lang:{lang} apple", 10)) == want[lang]
+        assert want[lang] and s.last_trace.path == "driver"
+        assert len(s._filter_masks) == min(i + 1, 2)
+        assert [key[1] for key in s._filter_masks] == [
+            (x,) for x in (langs + ["l0", "l2"])[max(0, i - 1):i + 1]]
+    # l0's mask was dropped by the third query, so its second query
+    # missed; l2's was still held
+    assert s.last_trace.cached_filters == 1
+    # a mask over the cap is still kept, alone
+    monkeypatch.setattr(kernel, "DRIVER_MAX_POSTINGS", 1)
+    assert _hits(s.search("lang:l1 apple", 10)) == want["l1"]
+    assert list(s._filter_masks) == [("lang", ("l1",))]
 
 
 def test_absent_term_collects_nothing_without_a_job(spark, small_index):

@@ -231,9 +231,9 @@ def test_build_index_custom_id_cols(spark, tmp_path):
 @pytest.mark.parametrize("cogroup", [False, True])
 def test_repo_filter_on_reordered_id_cols(monkeypatch, spark, small_corpus,
                                           small_index, tmp_path_factory, cogroup):
-    """bucket_stats packs id_cols[0], which is path on a
-    (path, repo, commit) index: its repo filters must read the repo
-    column, and match the default-order index doc for doc."""
+    """A repo filter on a (path, repo, commit) index reads the docs
+    table's repo column, whatever the id_cols order, and matches the
+    default-order index doc for doc."""
     from solr_spark import kernel
     from solr_spark.indexer import build_index
     from solr_spark.kernel import Searcher

@@ -1,9 +1,9 @@
 """Deletes are a live-docs mask inside the scoring kernel.
 
-A view with deletes keeps the packed bucket_stats cogroup; the kernel
-clears deleted docids from its ``alive`` mask before any prune, so every
-query shape drops exactly the deleted docs and the survivors keep their
-exact scores (statistics count deleted docs until a merge)."""
+The kernel clears a view's deleted docids from its ``alive`` mask, beside
+the query's filter mask, before any prune, so every query shape drops
+exactly the deleted docs and the survivors keep their exact scores
+(statistics count deleted docs until a merge)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -42,10 +42,10 @@ def _key(spark, view, docid):
     return tuple(r[c] for c in view.id_cols)
 
 
-def _path_filter_query(spark, view):
-    """``license`` restricted to the paths of its top hits: a ``path``
-    filter has no packed column, so it forces the per-row docs path."""
-    top = [d for d, _ in _hits(view.search(spark, "license", k=5))]
+def _path_filter_query(spark, view, k=5):
+    """``license`` restricted to the paths of its top k hits: a
+    many-valued ``path`` filter."""
+    top = [d for d, _ in _hits(view.search(spark, "license", k=k))]
     docs = spark.read.parquet(*[m.docs_path for m in view.segments])
     paths = [r["path"] for r in docs.where(F.col("docid").isin(top)).collect()]
     return " ".join(f"path:{p}" for p in sorted(paths)) + " license"
@@ -55,14 +55,22 @@ def _path_filter_query(spark, view):
     "license",            # single term: block-max prune
     "+int +license",      # pure AND: conjunction prune
     "license int public",  # OR: accumulate
-    "lang:java license",  # packed filter
-    "path",               # per-row docs path (query built below)
+    "lang:java license",  # one filter
+    "path",               # path filter (query built below)
+    "path+lang",          # multi-field AND (query built below)
+    "lang:java lang:py license",  # multi-value OR
+    "lang:java license -public",  # filter + prohibited
+    "lang:zz license",    # a filter that matches no doc
 ])
 def test_deleted_top_hit_never_returned(spark, view, shape):
-    q = _path_filter_query(spark, view) if shape == "path" else shape
+    q = shape
+    if shape == "path":
+        q = _path_filter_query(spark, view)
+    elif shape == "path+lang":  # keeps the java docs of the 20 paths
+        q = "lang:java " + _path_filter_query(spark, view, 20)
     before = _hits(view.search(spark, q, k=K + 1))
-    assert len(before) >= 2, q
-    victim = before[0][0]
+    assert len(before) >= 2 or (shape == "lang:zz license" and before == []), q
+    victim = (before or _hits(view.search(spark, "license", k=1)))[0][0]
     dview = delete_by_keys(view, [_key(spark, view, victim)])
     after = _hits(dview.search(spark, q, k=K))
     assert victim not in {d for d, _ in after}, q
@@ -82,7 +90,7 @@ def test_deleted_doc_absent_in_unsorted_mode(spark, view):
     assert got == {h for h in every if h[0] != victim}
 
 
-def test_view_with_deletes_keeps_packed_bucket_stats(spark, view):
+def test_view_with_deletes_resolves_its_live_docs_mask(spark, view):
     victim = _hits(view.search(spark, "license", k=1))[0][0]
     dview = delete_by_keys(view, [_key(spark, view, victim)])
     assert dview.frames(spark)[3] is not None
