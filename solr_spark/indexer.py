@@ -205,11 +205,13 @@ def index_table(spark: SparkSession, index, name: str) -> DataFrame:
 
 
 def bucket_local(ids: np.ndarray, bucket_docs: int) -> dict[int, np.ndarray]:
-    """Sorted docids ``ids`` as bucket -> sorted bucket-local docids:
-    the shape of the query kernel's live-docs and filter masks."""
+    """Sorted docids ``ids`` as bucket -> sorted bucket-local docids
+    (int32: 4 bytes a doc, in the driver and in every cogroup task's
+    closure): the shape of the query kernel's live-docs and filter
+    masks."""
     buckets, starts = np.unique(ids // bucket_docs, return_index=True)
     return {
-        int(b): part - int(b) * bucket_docs
+        int(b): (part - int(b) * bucket_docs).astype(np.int32)
         for b, part in zip(buckets, np.split(ids, starts[1:]))
     }
 

@@ -6,10 +6,11 @@ The Spark shape of the reference's two-phase distributed search
   stage 1  parquet scan of postings WHERE term IN (query terms) — term-sorted
            layout makes this a pruned scan (predicate pushdown + row-group
            stats), the analog of the term-dictionary seek
-  stage 2  per-bucket scoring kernel (cogroup postings x doc_stats by docid
-           bucket): numpy dense scatter-add of BM25 contributions, posting
-           intersection with block skipping for conjunctions, block-max
-           pruning for single-term queries (the reference's WAND path,
+  stage 2  per-bucket scoring kernel (cogroup postings x bucket_stats by
+           docid bucket): the _Scorer's numpy dense scatter-add of BM25
+           contributions over the bucket, or posting intersection with
+           block skipping for conjunctions, block-max pruning for
+           single-term queries (the reference's WAND path,
            SolrIndexSearcher.java:1786 minNumFound -> Lucene BMW)
   stage 3  per-bucket top-k heaps -> global orderBy(score desc, docid).limit(k)
            (Spark TakeOrdered == mergeIds' ShardFieldSortedHitQueue,
@@ -24,11 +25,15 @@ reference scores a shard inside its searcher process, and runs no Spark
 job: stage 1 is a pyarrow read of the postings files Spark lists for
 the table (DataFrame.inputFiles, metadata only; the same filesystem
 assumption as build stage 3a, whose tasks read staging files with
-pyarrow), which also yields the exact df; the docs side is read the
-same way; the same kernel runs per touched bucket on the same docs
-frames, scoring.top_k picks the global winners, and the result is a
-local relation. Unsorted queries, which need every match to stay
-distributed, and over-bound ones run the Spark plan above.
+pyarrow), which also yields the exact df, decoded in one pass and kept
+per term in the searcher's postings cache; the doclens are read the
+same way into the bucket-row cache; one _Scorer pass scores the doc
+space of every touched bucket at once (the whole-list vectorized
+scoring of a columnar index), no pruning needed, and the result is a
+local relation. Searcher.local_topk is the same path returning a
+list. Unsorted queries, which need every match to stay distributed,
+and over-bound ones run the Spark plan above, whose kernel is the
+same _Scorer on one bucket.
 
 The docs side is always the bucket's bucket_stats row. Deletes and
 filters (the reference's cached filter DocSets) are bucket -> local
@@ -45,13 +50,15 @@ per-doc output holds them) while df, idf, n_docs, avgdl and the
 term-frequency totals count them until a merge.
 
 Exactness contract: results (docids AND float64 scores) are identical with
-pruning on or off, at any parallelism — tested in
-tests/test_index_search.py::test_prune_equals_noprune.
+pruning on or off, on the driver path or the cogroup, at any parallelism
+— tested in tests/test_index_search.py::test_prune_equals_noprune and
+tests/test_driver_topk.py.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import partial, reduce
 
 import numpy as np
 import pandas as pd
@@ -66,121 +73,146 @@ from .scoring import accumulate, tfnorm, tfnorm_col, top_k
 from .scoring import idf as idf_fn
 
 RESULT_SCHEMA = "docid bigint, score double"
+_NO_HITS = np.empty(0, np.int64), np.empty(0, np.float64)
 
 # Work a sorted top-k query may do in the driver: its postings plus the
 # doc slots (bucket_docs each) of the buckets they touch. Postings are
 # bounded before the scan (by df), the docs side before it is fetched;
 # over the bound the query runs the cogroup. Also the driver-memory bound
-# of one query, and of a searcher's bucket-row and filter caches. Up to
-# this work every measured driver query beat the cogroup's fastest query
-# by over 0.2 s, a floor (a job and a Python-worker stage) that more
-# executors do not lower; at 2.2M work the margin was 0.07 s on a
-# 118-bucket index
-# (BASELINE.md, "Where the driver path and the cogroup cross";
-# scripts/driver_crossover.py).
+# of one query, and of a searcher's postings, bucket-row and filter
+# caches. Up to this work every measured driver query beat the cogroup's
+# fastest query by over 0.2 s, a floor (a job and a Python-worker stage)
+# that more executors do not lower; at 2.2M work the margin was 0.07 s
+# on a 118-bucket index (BASELINE.md, "Where the driver path and the
+# cogroup cross"; scripts/driver_crossover.py).
 DRIVER_MAX_POSTINGS = 1_000_000
 
 
-def _bucket_kernel(
-    idfs: dict[str, float],
-    weights: dict[str, int],
-    required: list[str],
-    prohibited: list[str],
-    keep: dict[int, np.ndarray] | None,
-    avgdl: float,
-    bucket_docs: int,
-    k: int,
-    prune: bool,
-    required_groups: list[list[str]] | None = None,
-    dead: dict[int, np.ndarray] | None = None,
-):
-    """Build the per-bucket cogrouped scoring function (pure numpy inside).
-    Its docs side is the bucket's bucket_stats row: the doclens, as an
-    array indexed by bucket-local docid (indexer stage 2b).
+@dataclass
+class _Scorer:
+    """One query's BM25 scorer over the doc space of some buckets: the
+    driver path scores every bucket a query touches in one pass, and
+    the cogroup's kernel one bucket at a time (``_bucket_kernel``).
 
     ``keep``: the query's filter mask, bucket -> sorted bucket-local
     docids that pass every filter (a bucket absent from it keeps no
     doc); ``None`` for an unfiltered query. ``dead``: the live-docs
     mask, bucket -> sorted bucket-local docids deleted in it (Lucene's
-    liveDocs). Both are applied to ``alive`` as soon as the docs side is
-    loaded, before any branch runs, so no prune threshold, accumulation
-    or count ever sees a filtered-out or deleted doc.
+    liveDocs). Both are applied to ``alive`` when the doc space is
+    built, before any scoring or pruning, so no prune threshold,
+    accumulation or count ever sees a filtered-out or deleted doc.
 
-    ``required_groups``: MUST groups (each = "match >= 1 of these
-    terms") — the SynonymQuery-in-MUST shape. When present, the matching
-    mask requires every group satisfied; the conjunction prune path is
-    disabled upstream for non-singleton groups."""
-    scoring_terms = sorted(weights)          # fixed order -> deterministic fp sums
-    n_req = len(set(required))
-    groups = [set(g) for g in required_groups or []]
+    ``groups``: MUST groups (each = "match >= 1 of these terms") — the
+    SynonymQuery-in-MUST shape; a candidate satisfies every group."""
+
+    weights: dict
+    idfs: dict
+    required: list
+    prohibited: list
+    groups: list
+    keep: dict | None
+    dead: dict
+    avgdl: float
+    bucket_docs: int
+    k: int
+
+    def space(self, buckets: list[int], doclens: list[np.ndarray]) -> tuple:
+        """(dl, alive) over the doc space of ``buckets``: slot
+        ``i * bucket_docs + j`` holds local doc j of bucket
+        ``buckets[i]``, whose doclens are ``doclens[i]``; the space ends
+        with the last bucket's last doc. A slot past a bucket's last doc
+        stays alive, harmlessly: no posting lands there."""
+        B = self.bucket_docs
+        # every bucket but the last spans B slots: pad one that ends early
+        parts = [d if len(d) == B else np.pad(d, (0, B - len(d))) for d in doclens[:-1]]
+        dl = np.concatenate(parts + doclens[-1:]) if parts else doclens[0]  # read only
+        alive = np.ones(dl.size, bool) if self.keep is None else np.zeros(dl.size, bool)
+        for i, b in enumerate(buckets if self.keep is not None or self.dead else ()):
+            if self.keep is not None and b in self.keep:
+                alive[i * B + self.keep[b]] = True
+            if b in self.dead:
+                alive[i * B + self.dead[b]] = False
+        return dl, alive
+
+    def __call__(self, buckets: list[int], doclens: list[np.ndarray], hits: dict) -> tuple:
+        """The top k of ``buckets`` (sorted) as (docids, scores), by
+        (score desc, docid asc). ``hits``: term -> (docids, tfs, ...)
+        of the query terms (prohibited ones too) in those buckets."""
+        B = self.bucket_docs
+        dl, alive = self.space(buckets, doclens)
+        remap = buckets[-1] != len(buckets) - 1  # else buckets == range(n): slot == docid
+        if remap:  # a doc of bucket buckets[i] sits at slot docid - off[i]
+            bk = np.asarray(buckets, np.int64)
+            off = (bk - np.arange(bk.size)) * B
+            hits = {t: (h[0] - off[np.searchsorted(bk, h[0] // B)], h[1])
+                    for t, h in hits.items()}
+        cand, sc = top_k(*accumulate(
+            hits, self.weights, self.idfs, dl, self.avgdl, alive,
+            self.required, self.prohibited, self.groups,
+        ), self.k)
+        return (cand + off[cand // B] if remap else cand), sc
+
+
+def _bucket_kernel(s: _Scorer, prune: bool):
+    """The cogroup's per-bucket function (pure numpy inside): the
+    bucket's postings rows and its bucket_stats row (the doclens, indexed
+    by bucket-local docid; indexer stage 2b) -> its top k. It is the
+    driver's scorer on one bucket, except that with ``prune`` a
+    single-term query takes block-max pruning and a pure conjunction
+    the block-skipping intersection, over the same (dl, alive)
+    (``_Scorer.space``). MUST groups need the general matching mask, so
+    they never prune."""
+    scoring_terms = sorted(s.weights)          # fixed order -> deterministic fp sums
+    n_req = len(set(s.required))
+    prune = prune and not s.groups
+    single = prune and n_req == 0 and len(scoring_terms) == 1
+    conj = prune and n_req >= 2 and n_req == len(scoring_terms)
+    B = s.bucket_docs
 
     def kern(post_pdf: pd.DataFrame, docs_pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame({"docid": np.array([], np.int64), "score": np.array([], np.float64)})
         if len(post_pdf) == 0 or len(docs_pdf) == 0:
             return empty
         bucket = int(post_pdf["bucket"].iloc[0])
-        base = bucket * bucket_docs
-        B = bucket_docs
-
-        dl = np.zeros(B, dtype=np.float64)
-        dls = np.asarray(docs_pdf["doclens"].iloc[0], dtype=np.float64)
-        dl[:len(dls)] = dls
-        alive = np.zeros(B, dtype=bool)
-        if keep is None:
-            alive[:len(dls)] = True
-        elif bucket in keep:
-            alive[keep[bucket]] = True
-        if dead and bucket in dead:
-            alive[dead[bucket]] = False
-
+        base = bucket * B
+        dls = [np.asarray(docs_pdf["doclens"].iloc[0], dtype=np.float64)]
         rows = {r["term"]: r for _, r in post_pdf.iterrows()}
 
         def hit(t):
             r = rows[t]
-            d, tf = decode_postings(r["doc_bytes"], r["tf_bytes"], int(r["df"]), base)
-            return d - base, tf
+            return decode_postings(r["doc_bytes"], r["tf_bytes"], int(r["df"]), base)
 
-        # prohibited terms only kill candidates; dead before any branch,
-        # so the pruned paths' thresholds never count a prohibited doc
-        for t in prohibited:
-            if t in rows:
-                alive[hit(t)[0]] = False
-
-        if prune and n_req == 0 and len(scoring_terms) == 1:
-            t = scoring_terms[0]
-            r = rows.get(t)
-            if r is None:
-                return empty
-            scores = np.zeros(B, dtype=np.float64)
-            matched = np.zeros(B, dtype=bool)
-            _score_single_pruned(r, t, idfs, weights, avgdl, base, dl, alive, scores, matched, k)
-            cand = np.flatnonzero(alive & matched)
-            sc = scores[cand]
-        elif prune and n_req >= 2 and n_req == len(scoring_terms):
-            scores = np.zeros(B, dtype=np.float64)
-            cand = _score_conjunction_pruned(
-                rows, scoring_terms, idfs, weights, avgdl, base, dl, scores
-            )
-            cand = cand[alive[cand]]
-            sc = scores[cand]
+        if not (single or conj):
+            docid, sc = s([bucket], dls, {t: hit(t) for t in rows})
         else:
-            hits = {t: hit(t) for t in scoring_terms if t in rows}
-            cand, sc = accumulate(
-                hits, weights, idfs, dl, avgdl, alive, required, groups=groups
-            )
-        cand, sc = top_k(cand, sc, k)
-        if cand.size == 0:
-            return empty
-        return pd.DataFrame({"docid": (cand + base).astype(np.int64), "score": sc})
+            dl, alive = s.space([bucket], dls)
+            # prohibited terms only kill candidates; dead before any
+            # prune, so no threshold counts a prohibited doc
+            for t in s.prohibited:
+                if t in rows:
+                    alive[hit(t)[0] - base] = False
+            t = scoring_terms[0]
+            if single and t not in rows:
+                return empty
+            cand, sc = top_k(*(
+                _score_single_pruned(rows[t], s.weights[t] * s.idfs[t], s, base, dl, alive)
+                if single else _score_conjunction_pruned(rows, scoring_terms, s, base, dl, alive)
+            ), s.k)
+            docid = cand + base
+        return pd.DataFrame({"docid": docid.astype(np.int64), "score": sc})
 
     return kern
 
 
-def _score_single_pruned(r, t, idfs, weights, avgdl, base, dl, alive, scores, matched, k):
+def _score_single_pruned(r, w, s: _Scorer, base, dl, alive) -> tuple:
     """Single-term block-max pruning: decode blocks in descending bound
     order, stop once the kth-best exact score beats the next block bound.
-    Exact because a skipped block's every posting is <= its bound."""
-    w = weights[t] * idfs[t]
+    Exact because a skipped block's every posting is <= its bound.
+    ``w``: the term's weight x idf. Returns the alive bucket-local
+    candidates (ascending) and their scores."""
+    avgdl, k = s.avgdl, s.k
+    scores = np.zeros(dl.size, dtype=np.float64)
+    matched = np.zeros(dl.size, dtype=bool)
     max_tf = np.asarray(r["block_max_tf"], dtype=np.float64)
     min_dl = np.asarray(r["block_min_dl"], dtype=np.float64)
     bounds = w * tfnorm(max_tf, min_dl, avgdl)
@@ -191,7 +223,6 @@ def _score_single_pruned(r, t, idfs, weights, avgdl, base, dl, alive, scores, ma
     df = int(r["df"])
     keep = np.zeros(len(order), dtype=bool)
     heap_scores: list[float] = []
-    decoded = 0
     for bi in order:
         # strict <: a block bound EQUAL to the kth score may hold an
         # equal-score doc with a smaller docid, which wins the
@@ -208,24 +239,23 @@ def _score_single_pruned(r, t, idfs, weights, avgdl, base, dl, alive, scores, ma
         contrib = w * tfnorm(tf, dl[loc], avgdl)
         scores[loc] += contrib
         matched[loc] = True
-        decoded += 1
         live = contrib[alive[loc]]
         heap_scores = sorted(heap_scores + live.tolist(), reverse=True)[: k]
+    cand = np.flatnonzero(alive & matched)
+    return cand, scores[cand]
 
 
-def _score_conjunction_pruned(
-    rows, terms, idfs, weights, avgdl, base, dl, scores
-) -> np.ndarray:
+def _score_conjunction_pruned(rows, terms, s: _Scorer, base, dl, alive) -> tuple:
     """Pure-AND path: galloping posting-list intersection with block
     skipping. Decode the rarest term fully; for each further term decode
     only blocks whose docid range intersects surviving candidates.
-    Returns the bucket-local docids holding every term (ascending)."""
-    none = np.empty(0, np.int64)
+    Returns the alive bucket-local docids holding every term
+    (ascending) and their scores."""
     infos = []
     for t in terms:
         r = rows.get(t)
         if r is None:
-            return none  # a required term absent from bucket -> no matches
+            return _NO_HITS  # a required term absent from bucket -> no matches
         infos.append((int(r["df"]), t, r))
     infos.sort()
     df0, t0, r0 = infos[0]
@@ -233,7 +263,7 @@ def _score_conjunction_pruned(
     term_hits = {t0: (cand, tf0)}
     for dfi, ti, ri in infos[1:]:
         if cand.size == 0:
-            return none
+            return _NO_HITS
         last = np.asarray(ri["block_last"], dtype=np.int64)
         nb = len(last)
         first = np.empty(nb, dtype=np.int64)
@@ -255,15 +285,15 @@ def _score_conjunction_pruned(
         cand = cand[hit]
         # narrow all previous terms' hit arrays lazily at the end instead
         term_hits[ti] = (d, tf)
-    loc = cand - base
+    cand = cand[alive[cand - base]]
+    loc, sc = cand - base, np.zeros(cand.size, np.float64)
     # alphabetical term order — identical fp accumulation order to the
     # unpruned path (exactness contract: prune on == prune off, bit-for-bit)
     for t in sorted(term_hits):
         d, tf = term_hits[t]
         sel_tf = tf[np.searchsorted(d, cand)]
-        w = weights[t] * idfs[t]
-        scores[loc] += w * tfnorm(sel_tf, dl[loc], avgdl)
-    return loc
+        sc += s.weights[t] * s.idfs[t] * tfnorm(sel_tf, dl[loc], s.avgdl)
+    return loc, sc
 
 
 def _decode_rows(pdf: pd.DataFrame, bucket_docs: int) -> tuple:
@@ -289,20 +319,41 @@ def _isin(col: str, values: list):
     return (f >= min(values)) & (f <= max(values)) & f.isin(values)
 
 
+def _lru(cache: dict, keys: list, fetch, size, keep: int = 0) -> tuple[dict, int]:
+    """The entries of ``keys`` in the LRU dict ``cache`` (most recently
+    used last), ``fetch(missing)`` filling its misses, and how many of
+    them the cache served. After a miss the least recently used entries
+    are dropped while their ``size`` sum exceeds DRIVER_MAX_POSTINGS,
+    down to the ``keep`` most recent, so a cache never holds more than
+    one over-bound query could fetch. A query's own postings and doc
+    slots are within that bound, so its entries always stay."""
+    got = {key: cache.pop(key) for key in keys if key in cache}
+    served = len(got)
+    if served < len(keys):
+        got.update(fetch([key for key in keys if key not in got]))
+    cache.update(got)
+    held = sum(map(size, cache.values())) if served < len(keys) else 0
+    while len(cache) > keep and held > DRIVER_MAX_POSTINGS:
+        held -= size(cache.pop(next(iter(cache))))
+    return got, served
+
+
 @dataclass
 class QueryTrace:
-    """What one ``Searcher.search`` call did: the path that scored it
-    ("driver" or "cogroup"), why it took the cogroup (``None``,
-    "unsorted", "postings bound", or "docs bound" when the postings fit
-    but the docs of the buckets they touch do not), the postings rows
-    fetched into the driver, the buckets scored there and how many
-    of those the bucket-row cache served (0 on the cogroup path), and
-    how many of the query's filter masks (one per filter field) the
+    """What one ``Searcher.search`` or ``local_topk`` call did: the path
+    that scored it ("driver" or "cogroup"), why it took the cogroup
+    (``None``, "unsorted", "postings bound", or "docs bound" when the
+    postings fit but the docs of the buckets they touch do not), the
+    postings rows read into the driver and how many of the query's
+    terms the postings cache served, the buckets scored there and how
+    many of those the bucket-row cache served (0 on the cogroup path),
+    and how many of the query's filter masks (one per filter field) the
     filter cache served, on either path."""
 
     path: str = "driver"
     reason: str | None = None
     postings_rows: int = 0
+    cached_terms: int = 0
     buckets: int = 0
     cached_buckets: int = 0
     cached_filters: int = 0
@@ -323,31 +374,29 @@ class Searcher:
     filesystem assumption of build stage 3a: a bounded query runs no
     Spark job. Postings rows are the only df source. Given delete keys,
     the searcher resolves them once to ``dead``, the live-docs mask
-    (bucket -> sorted bucket-local deleted docids) that every query and
-    the driver-local path apply; an IndexMeta has none and resolves
-    nothing. ``cache`` is accepted for existing callers and changes
-    nothing: Spark caching a table would hide its files from
-    ``inputFiles`` for every later reader in the session, and a
-    searcher opened while a frame of its tables is cached raises.
+    (bucket -> sorted bucket-local deleted docids) that every query
+    applies; an IndexMeta has none and resolves nothing. ``cache`` is
+    accepted for existing callers and changes nothing: Spark caching a
+    table would hide its files from ``inputFiles`` for every later
+    reader in the session, and a searcher opened while a frame of its
+    tables is cached raises.
 
-    Three driver caches serve ``search``: the df of every term queried
-    so far, the ``bucket_stats`` rows (``bucket_docs`` doclens each) of
-    the buckets recent bounded queries touched, and the filter cache
-    (the reference's filterCache): each distinct filter resolved on
-    first use, never at open, to its sorted docids (``_filter_mask``).
-    Each drops its least recently used entries beyond
-    DRIVER_MAX_POSTINGS doc slots, so it never holds more than one
-    over-bound query could fetch; the filter cache always keeps its
-    latest mask. The caches and the live-docs mask belong to this
-    searcher alone — a view that adds segments or deletes gets a new
-    searcher. ``last_trace`` is the QueryTrace of the latest
-    ``search``."""
+    Four driver caches serve the driver path: the df of every term
+    queried so far; the decoded postings of recent query terms, term ->
+    (docids, tfs, buckets); the ``bucket_stats`` doclens of the buckets
+    recent bounded queries touched; and the filter cache (the
+    reference's filterCache), each distinct filter resolved on first
+    use, never at open, to its sorted docids (``_filter_mask``). The
+    last three are LRU (``_lru``), capped at DRIVER_MAX_POSTINGS
+    postings, doc slots or docids. The caches and the live-docs mask
+    belong to this searcher alone — a view that adds segments or deletes
+    gets a new searcher. ``last_trace`` is the QueryTrace of the latest
+    ``search``, ``local_topk`` or ``warm_local``."""
 
     def __init__(self, spark: SparkSession, meta: IndexMeta, cache: bool = True):
         self.spark = spark
         self.meta = meta
         self.dead = meta.dead_docids(spark) if meta.delete_keys else {}
-        self._end_docid = max(m.docid_base + m.n_docs for m in meta.segments)
         self.postings = index_table(spark, meta, "postings")
         self.docs = index_table(spark, meta, "docs")
         self.bucket_stats = index_table(spark, meta, "bucket_stats")
@@ -366,86 +415,36 @@ class Searcher:
         # actually queried, never the vocabulary) — the term-dictionary-
         # in-heap part of SolrIndexSearcher; absent terms cache df=0
         self._df_cache: dict[str, int] = {}
-        self._bucket_rows: dict[int, pd.DataFrame] = {}
+        self._decoded: dict[str, tuple] = {}
+        self._bucket_rows: dict[int, np.ndarray] = {}
         self._filter_masks: dict[tuple, np.ndarray] = {}
         self.last_trace: QueryTrace | None = None
-        self._local_norms: tuple | None = None
-        self._local_postings: dict[str, tuple] = {}
 
     def warm_local(self, terms: list[str]) -> dict:
-        """Load a hot-term working set INTO THE DRIVER PROCESS for
-        millisecond-latency serving (`local_topk`) — the reference's own
-        architecture for interactive queries: Lucene keeps norms and the
-        hot postings resident in the searcher process. Memory bound:
-        one (doclen, live) pair per docid up to the last segment's end
-        (9 bytes × docids — the norms file analog; 10.8 MB at 1.2M docs)
-        plus the decoded postings of exactly the named terms. Deleted
-        docs are not live. The distributed path remains the source of
-        truth; local answers are bit-identical to it for the supported
-        query classes (both score through scoring.accumulate and
-        scoring.top_k)."""
+        """Pre-fill the df, postings and bucket-row caches with ``terms``
+        and the buckets they touch, so that queries over them (``search``
+        or ``local_topk``) read nothing: the reference keeps hot postings
+        and norms resident in the searcher process. The caches keep
+        their bound, so past DRIVER_MAX_POSTINGS postings only the most
+        recently read terms stay. Returns the number of terms and of
+        their postings the cache holds."""
+        self.last_trace = QueryTrace()
         toks = sorted({t.lower() for t in terms})
-        B = self.meta.bucket_docs
-        if self._local_norms is None:
-            pdf = self._read("docs", columns=["docid", "doclen"])
-            # indexed by docid: a delta segment's docids start at its
-            # docid_base, so n_docs alone would be too short
-            dl = np.zeros(self._end_docid, np.float64)
-            live = np.zeros(self._end_docid, bool)
-            ids = pdf["docid"].to_numpy(np.int64)
-            dl[ids] = pdf["doclen"].to_numpy(np.float64)
-            live[ids] = True
-            for bucket, locs in self.dead.items():
-                live[bucket * B + locs] = False
-            self._local_norms = (dl, live)
-        rows = self._fetch_postings(toks)
-        for t in toks:
-            grp = rows[rows["term"] == t].sort_values("bucket")
-            self._local_postings[t] = _decode_rows(grp, B)[1:]
-        return {
-            "terms": len(toks),
-            "postings": int(sum(len(v[0]) for v in self._local_postings.values())),
-        }
+        got = self._postings(toks)
+        self._doclens(sorted({b for h in got.values() for b in h[2]}))
+        return {"terms": len(toks), "postings": sum(
+            len(self._decoded[t][0]) for t in toks if t in self._decoded)}
 
     def local_topk(self, q: "str | Query", k: int = 10) -> list[tuple[int, float]]:
-        """Answer a top-k query from the driver-resident working set
-        (millisecond path). Supported locally: plain term queries
-        (optional / required / prohibited / boosts) whose every term is
-        in the warm_local set; anything else (phrases, multiterm,
-        filters, MUST groups, cold terms) transparently falls back to
-        the distributed `search`. Returns [(docid, score)], score desc,
-        docid asc (empty for k <= 0) — identical values and order to
-        the distributed kernel, which scores and selects through the
-        same scoring.accumulate and scoring.top_k."""
-        query = parse(q) if isinstance(q, str) else q
-        qterms = set(query.scoring) | query.prohibited
-        eligible = (
-            not query.phrases and not query.multiterm and not query.filters
-            and not query.required_groups and qterms
-            and qterms <= set(self._local_postings)
-            and self._local_norms is not None
-        )
-        if not eligible:
-            return [
-                (int(r["docid"]), float(r["score"]))
-                for r in self.search(q, k).collect()
-            ]
-        dfm = {t: self._df_cache.get(t, 0) for t in qterms}
-        for t in query.required:
-            if dfm.get(t, 0) == 0:
-                return []
-        present = [t for t in query.scoring if dfm.get(t, 0) > 0]
-        if not present:
-            return []
-        # clause weight = multiplicity x boost, as in search()
-        weights = {t: query.scoring[t] * query.boosts.get(t, 1.0) for t in present}
-        idfs = {t: float(idf_fn(dfm[t], self.meta.n_docs)) for t in present}
-        dl, live = self._local_norms
-        cand, sc = top_k(*accumulate(
-            self._local_postings, weights, idfs, dl, self.meta.avgdl, live,
-            query.required, query.prohibited,
-        ), k)
-        return [(int(d), float(v)) for d, v in zip(cand, sc)]
+        """``search(q, k)`` as a list [(docid, score)], score desc, docid
+        asc (empty for k <= 0): the same driver scorer, with no Spark
+        frame around it, so a query whose terms and buckets the caches
+        hold (``warm_local``) reads nothing and runs no Spark job. Only
+        a query over the bound collects ``search``'s cogroup."""
+        top = self._top(parse(q) if isinstance(q, str) else q, k)
+        if isinstance(top, DataFrame):
+            return [(int(r["docid"]), float(r["score"])) for r in top.collect()]
+        return list(zip(top[0].tolist(), top[1].tolist()))
 
     def search(self, q: str | Query, k: int = 10, prune: bool = True,
                with_fields: bool = False, unsorted: bool = False) -> DataFrame:
@@ -461,20 +460,44 @@ class Searcher:
 
         A sorted query whose postings and touched buckets' doc slots fit
         DRIVER_MAX_POSTINGS is scored in the driver with no Spark job:
-        one pruned pyarrow read of its postings rows, the kernel per
-        touched bucket, the global top k, and a local result relation.
-        Unsorted and over-bound queries run the postings x bucket_stats
-        cogroup. Both paths call one _bucket_kernel closure on the same
-        per-bucket frames, so their results are equal. Filters are the
-        cached docid mask ``_filter_mask`` on both paths; one that
-        matches no doc returns the empty result at once.
+        its decoded postings from the postings cache (a miss is one
+        pruned pyarrow read and one decode pass), one _Scorer pass over
+        every bucket it touches, and a local result relation. Unsorted
+        and over-bound queries run the postings x bucket_stats cogroup,
+        whose per-bucket kernel scores through the same _Scorer, so
+        their results are equal. ``prune`` steers only the cogroup
+        (block-max and conjunction pruning, exact either way); the
+        driver path scores every posting. Filters are the cached docid
+        mask ``_filter_mask`` on both paths; one that matches no doc
+        returns the empty result at once.
 
         df comes from the postings rows: a df-cold query whose terms'
         postings (df <= n_docs each) fit the bound reads its rows once,
         and learns df from them; any other df-cold query first reads the
         same rows' (term, df) columns alone."""
-        query = parse(q) if isinstance(q, str) else q
-        spark, meta = self.spark, self.meta
+        if unsorted and with_fields:
+            # loud guard: the unsorted component frame deliberately skips
+            # the stored-fields join (it feeds other components, not a
+            # result page) — silently returning (docid, score) would break
+            # callers expecting doc columns
+            raise ValueError("with_fields is not supported with unsorted=True")
+        out = self._top(parse(q) if isinstance(q, str) else q, k, prune, unsorted)
+        if not isinstance(out, DataFrame):
+            # a pandas frame becomes a local relation, and limit(0) folds
+            # to an empty one: no job on collect
+            out = self.spark.createDataFrame(
+                pd.DataFrame({"docid": out[0], "score": out[1]}), RESULT_SCHEMA
+            ) if len(out[0]) else self.spark.createDataFrame([], RESULT_SCHEMA).limit(0)
+        if with_fields:
+            out = out.join(self.docs.drop("bucket", "doclen"), "docid", "left") \
+                .orderBy(F.desc("score"), F.asc("docid"))
+        return out
+
+    def _top(self, query: Query, k: int, prune: bool = True, unsorted: bool = False):
+        """``query``'s top k: (docids, scores) arrays from the driver
+        scorer, or the cogroup's DataFrame when the query is unsorted or
+        over the bound. Sets ``last_trace``."""
+        meta = self.meta
         if unsorted:
             # no global sort → pruning must keep every match; k only feeds
             # the block-max WAND heap, so pin it corpus-sized (no-op prune)
@@ -495,104 +518,63 @@ class Searcher:
             )
         trace = self.last_trace = QueryTrace("cogroup", "unsorted") if unsorted else QueryTrace()
         weights = dict(query.scoring)
-
-        def _empty():
-            # limit(0) folds to an empty LocalRelation: no Spark job
-            e = spark.createDataFrame([], RESULT_SCHEMA).limit(0)
-            if with_fields:
-                e = e.join(self.docs.drop("bucket", "doclen"), "docid", "left")
-            return e
-
         all_terms = sorted(set(weights) | query.prohibited)
         if not weights or k <= 0:
-            return _empty()
+            return _NO_HITS
         keep = self._filter_mask(query.filters) if query.filters else None
         if keep == {}:
-            return _empty()
-        rows = None  # the query's postings rows, once fetched into the driver
-        # a df-cold query learns df from its postings scan; df <= n_docs
-        # bounds that scan before any df is known
+            return _NO_HITS
+        hits = None  # the query's decoded postings, once in the driver
+        # a df-cold query learns df from its postings read; df <= n_docs
+        # bounds that read before any df is known
         cold = [t for t in all_terms if t not in self._df_cache]
         if cold and not unsorted and sum(
             self._df_cache.get(t, meta.n_docs) for t in all_terms
         ) <= DRIVER_MAX_POSTINGS:
-            rows = self._fetch_postings(all_terms)
-            trace.postings_rows = len(rows)
+            hits = self._postings(all_terms)
         elif cold:
             self._fetch_postings(cold, cols=["term", "df"])
         df_map = {t: self._df_cache[t] for t in all_terms}
-        groups = [list(g) for g in (query.required_groups or [])]
+        groups = [set(g) for g in (query.required_groups or [])]
         if groups:
             # a MUST group dies only if EVERY alternative is absent
-            for g in groups:
-                if all(df_map.get(t, 0) == 0 for t in g):
-                    return _empty()
-        else:
-            for t in query.required:
-                if df_map.get(t, 0) == 0:
-                    return _empty()
-        present = [t for t in weights if df_map.get(t, 0) > 0]
+            if any(all(df_map.get(t, 0) == 0 for t in g) for g in groups):
+                return _NO_HITS
+        elif any(df_map.get(t, 0) == 0 for t in query.required):
+            return _NO_HITS
+        present = [t for t in weights if df_map[t] > 0]
         if not present:
-            return _empty()
+            return _NO_HITS
         # clause weight = multiplicity x boost (SolrQueryParser term^boost)
         weights = {t: weights[t] * query.boosts.get(t, 1.0) for t in present}
         idfs = {t: float(idf_fn(df_map[t], meta.n_docs)) for t in present}
-        needed = sorted(set(present) | {t for t in query.prohibited if df_map.get(t, 0) > 0})
-        if rows is None and not unsorted and sum(df_map[t] for t in needed) <= DRIVER_MAX_POSTINGS:
-            rows = self._fetch_postings(needed)
-            trace.postings_rows = len(rows)
-
-        kern = _bucket_kernel(
-            idfs, weights, sorted(query.required), sorted(query.prohibited), keep,
-            meta.avgdl, meta.bucket_docs, k,
-            # the conjunction-prune path assumes plain AND over required
-            # terms; MUST groups need the general matching mask
-            prune and not groups,
-            required_groups=groups or None,
-            dead=self.dead,
-        )
+        needed = sorted(set(present) | {t for t in query.prohibited if df_map[t] > 0})
+        postings = sum(df_map[t] for t in needed)
+        if hits is None and not unsorted and postings <= DRIVER_MAX_POSTINGS:
+            hits = self._postings(needed)
+        scorer = _Scorer(weights, idfs, sorted(query.required), sorted(query.prohibited),
+                         groups, keep, self.dead, meta.avgdl, meta.bucket_docs, k)
         reason = "postings bound"
-        if rows is not None and (
-            rows["df"].sum() + rows["bucket"].nunique() * meta.bucket_docs
-            > DRIVER_MAX_POSTINGS
-        ):
+        if hits is not None:
+            buckets = sorted({b for h in hits.values() for b in h[2]})
+            if postings + len(buckets) * meta.bucket_docs <= DRIVER_MAX_POSTINGS:
+                trace.buckets = len(buckets)
+                return scorer(buckets, self._doclens(buckets), hits)
             # the postings fit, the docs of the buckets they touch do not
-            rows, reason = None, "docs bound"
-        if rows is not None:
-            top = self._score_in_driver(kern, rows, k)
-            if len(top) == 0:
-                return _empty()
-            # a pandas frame becomes a local relation: no job on collect
-            out = spark.createDataFrame(top, RESULT_SCHEMA)
-        else:
-            if not unsorted:
-                trace.path, trace.reason = "cogroup", reason
-            postings = self.postings.where(F.col("term").isin(needed))
-            # the docs side: one bucket_stats row per bucket that holds at
-            # least one query term, not one row per doc (indexer stage 2b)
-            buckets = F.broadcast(postings.select("bucket").distinct())
-            doc_stats = self.bucket_stats.join(buckets, "bucket", "left_semi")
-            scored = (
-                postings.groupby("bucket")
-                .cogroup(doc_stats.groupby("bucket"))
-                .applyInPandas(kern, RESULT_SCHEMA)
-            )
-            if unsorted:
-                if with_fields:
-                    # loud guard: the unsorted component frame deliberately
-                    # skips the stored-fields join (it feeds other components,
-                    # not a result page) — silently returning (docid, score)
-                    # would break callers expecting doc columns
-                    raise ValueError("with_fields is not supported with unsorted=True")
-                return scored
-            out = scored.orderBy(F.desc("score"), F.asc("docid")).limit(k)
-        if with_fields:
-            docs_full = self.docs.drop("bucket", "doclen")
-            out = (
-                out.join(docs_full, "docid", "left")
-                .orderBy(F.desc("score"), F.asc("docid"))
-            )
-        return out
+            reason = "docs bound"
+        if not unsorted:
+            trace.path, trace.reason = "cogroup", reason
+        rows = self.postings.where(F.col("term").isin(needed))
+        # the docs side: one bucket_stats row per bucket that holds at
+        # least one query term, not one row per doc (indexer stage 2b)
+        buckets = F.broadcast(rows.select("bucket").distinct())
+        doc_stats = self.bucket_stats.join(buckets, "bucket", "left_semi")
+        scored = (
+            rows.groupby("bucket")
+            .cogroup(doc_stats.groupby("bucket"))
+            .applyInPandas(_bucket_kernel(scorer, prune), RESULT_SCHEMA)
+        )
+        return scored if unsorted else scored.orderBy(F.desc("score"), F.asc("docid")).limit(k)
 
     def _fetch_postings(self, terms: list[str], cols: list[str] | None = None) -> pd.DataFrame:
         """Every postings row of ``terms``, read in the driver with
@@ -605,6 +587,44 @@ class Searcher:
         df_sums = rows.groupby("term")["df"].sum()
         self._df_cache.update({t: int(df_sums.get(t, 0)) for t in terms})
         return rows
+
+    def _postings(self, terms: list[str]) -> dict:
+        """term -> (docids, tfs, sorted buckets) for those of ``terms``
+        the index holds, from the postings cache. The misses are one
+        ``_fetch_postings`` read, decoded by one ``_decode_rows`` pass."""
+
+        def read(missing):
+            rows = self._fetch_postings(missing).sort_values(["term", "bucket"],
+                                                             ignore_index=True)
+            self.last_trace.postings_rows += len(rows)
+            lens, d, tf = _decode_rows(rows, self.meta.bucket_docs)
+            ends, bks = np.cumsum(lens), rows["bucket"].tolist()
+            out = {}
+            for t, ix in rows.groupby("term").indices.items():
+                lo, hi = ends[ix[0]] - lens[ix[0]], ends[ix[-1]]
+                # copies, so a cached term does not pin the whole read's
+                # arrays; float tfs, as scoring.tfnorm takes them
+                out[t] = (d[lo:hi].copy(), tf[lo:hi].astype(np.float64),
+                          bks[ix[0]:ix[-1] + 1])
+            return out
+
+        got, served = _lru(self._decoded, terms, read, lambda h: len(h[0]))
+        self.last_trace.cached_terms += served
+        return got
+
+    def _doclens(self, buckets: list[int]) -> list[np.ndarray]:
+        """The doclens of each of ``buckets``, from the bucket-row cache;
+        the misses are one pyarrow read of ``bucket_stats``."""
+
+        def read(missing):
+            got = self._read("bucket_stats", _isin("bucket", missing))
+            return {int(b): np.asarray(d, np.float64)
+                    for b, d in zip(got["bucket"], got["doclens"])}
+
+        B = self.meta.bucket_docs
+        got, self.last_trace.cached_buckets = _lru(
+            self._bucket_rows, buckets, read, lambda _: B)
+        return [got[b] for b in buckets]
 
     def _filter_mask(self, filters: dict[str, list[str]]) -> dict[int, np.ndarray]:
         """The kernel's ``keep`` mask for ``filters``: bucket ->
@@ -622,20 +642,16 @@ class Searcher:
                 f"unknown filter field(s) {unknown}; docs table columns: "
                 f"{sorted(available)}"
             )
-        cache, ids = self._filter_masks, None
-        for f, vals in sorted(filters.items()):
-            key = (f, tuple(sorted(set(vals))))
-            mask = cache.pop(key, None)
-            if mask is None:
-                got = self._read("docs", ds.field(f).isin(list(key[1])), ["docid"])
-                mask = np.sort(got["docid"].to_numpy(np.int64))
-            else:
-                self.last_trace.cached_filters += 1
-            cache[key] = mask  # most recently used last
-            ids = mask if ids is None else np.intersect1d(ids, mask, assume_unique=True)
-        held = sum(len(m) for m in cache.values())
-        while len(cache) > 1 and held > DRIVER_MAX_POSTINGS:
-            held -= len(cache.pop(next(iter(cache))))
+
+        def read(missing):
+            return {key: np.sort(self._read(
+                "docs", ds.field(key[0]).isin(list(key[1])), ["docid"]
+            )["docid"].to_numpy(np.int64)) for key in missing}
+
+        keys = [(f, tuple(sorted(set(vals)))) for f, vals in sorted(filters.items())]
+        # the latest mask stays even when it alone is over the bound
+        masks, self.last_trace.cached_filters = _lru(self._filter_masks, keys, read, len, 1)
+        ids = reduce(partial(np.intersect1d, assume_unique=True), masks.values())
         return bucket_local(ids, self.meta.bucket_docs)
 
     def _read(self, table: str, filter=None, columns: list[str] | None = None) -> pd.DataFrame:
@@ -643,35 +659,6 @@ class Searcher:
         ``filter``, read in the driver from the files listed when the
         searcher opened: no Spark job."""
         return self._tables[table].to_table(columns=columns, filter=filter).to_pandas()
-
-    def _score_in_driver(self, kern, rows: pd.DataFrame, k: int) -> pd.DataFrame:
-        """Stages 2-3 in the driver: ``kern`` on each touched bucket's
-        postings rows and the bucket_stats row the cogroup would hand
-        it, from the bucket-row cache, then the global top k over every
-        bucket's winners."""
-        post = {int(b): g for b, g in rows.groupby("bucket")}
-        buckets = sorted(post)
-        self.last_trace.buckets = len(buckets)
-        docs = self._bucket_rows
-        missing = [b for b in buckets if b not in docs]
-        self.last_trace.cached_buckets = len(buckets) - len(missing)
-        if missing:
-            got = self._read("bucket_stats", _isin("bucket", missing))
-            docs.update({int(b): g for b, g in got.groupby("bucket")})
-        for b in buckets:  # most recently used last
-            docs[b] = docs.pop(b, pd.DataFrame())
-        # a query's buckets fit the cap (the docs bound), so only
-        # older rows are dropped
-        cap = max(1, DRIVER_MAX_POSTINGS // self.meta.bucket_docs)
-        for b in list(docs)[:max(0, len(docs) - cap)]:
-            del docs[b]
-        parts = [kern(post[b], docs[b]) for b in buckets]
-        docid, score = top_k(
-            np.concatenate([p["docid"].to_numpy(np.int64) for p in parts]),
-            np.concatenate([p["score"].to_numpy(np.float64) for p in parts]),
-            k,
-        )
-        return pd.DataFrame({"docid": docid, "score": score})
 
 
 def search(

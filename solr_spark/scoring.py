@@ -17,10 +17,11 @@ Ties broken by ascending docid (mergeIds queue semantics,
 solr/core/src/java/org/apache/solr/handler/component/
 ShardFieldSortedHitQueue.java).
 
-The formula has one numpy form (idf, tfnorm, accumulate, top_k — used
-by the executor bucket kernel and the driver-local path alike) and one
-Catalyst form (idf_col, tfnorm_col — phrase clauses and per-term
-contribution columns). bm25_pandas_oracle is the independent reference.
+The formula has one numpy form (idf, tfnorm, accumulate, top_k — which
+kernel._Scorer calls on the driver path and, one bucket at a time, in
+the cogroup's kernel) and one Catalyst form (idf_col, tfnorm_col —
+phrase clauses and per-term contribution columns). bm25_pandas_oracle
+is the independent reference.
 """
 
 from __future__ import annotations
@@ -72,10 +73,11 @@ def accumulate(
     prohibited=(),
     groups=(),
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Score one docid space (a bucket, or the whole index on the driver).
+    """Score one docid space (the touched buckets of a query, or one
+    bucket in the cogroup).
 
-    ``hits``: term -> (docid indices into ``dl``/``alive``, tfs) for the
-    terms present in this space; ``weights``: term -> multiplicity x
+    ``hits``: term -> (docid indices into ``dl``/``alive``, tfs, ...) for
+    the terms present in this space; ``weights``: term -> multiplicity x
     boost of the scoring clauses. Terms are summed in sorted order, so
     the float accumulation order is fixed for every caller.
 
@@ -92,7 +94,7 @@ def accumulate(
         hit = hits.get(t)
         if hit is None:
             continue
-        d, tf = hit
+        d, tf = hit[0], hit[1]
         w = weights[t] * idfs[t]
         scores[d] += w * tfnorm(tf, dl[d], avgdl)
         matched[d] = True

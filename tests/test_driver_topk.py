@@ -1,15 +1,17 @@
 """Bounded sorted top-k queries are scored in the driver.
 
 A sorted query whose work — postings plus the doc slots of the buckets
-they touch — fits ``kernel.DRIVER_MAX_POSTINGS`` reads its postings and
-bucket_stats rows with pyarrow in the driver and runs the same
-``_bucket_kernel`` closure per touched bucket there; forcing the bound to
-0 sends it through the postings x bucket_stats cogroup instead. Both
-must return equal (docid, score) lists for every query shape, filters
-(a cached docid mask on both paths) included, and the driver path must
-run no Spark job.
+they touch — fits ``kernel.DRIVER_MAX_POSTINGS`` takes its decoded
+postings and bucket_stats doclens from the searcher's caches (a miss is
+a pyarrow read in the driver) and scores every touched bucket in one
+``_Scorer`` pass; forcing the bound to 0 sends it through the postings x
+bucket_stats cogroup instead, whose per-bucket kernel scores through the
+same ``_Scorer``. Both must return equal (docid, score) lists for every
+query shape, filters (a cached docid mask on both paths) included, and
+the driver path must run no Spark job.
 """
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -43,7 +45,8 @@ def _jobs(spark, tag, fn):
 
 
 def _both(monkeypatch, searcher, q, k=10, prune=True):
-    """(driver hits, cogroup hits) of one query on one searcher."""
+    """(driver hits, cogroup hits) of one query on one searcher.
+    ``prune`` reaches only the cogroup: the driver scores every posting."""
     drv = _hits(searcher.search(q, k, prune))
     drv_trace = searcher.last_trace
     with monkeypatch.context() as m:
@@ -201,19 +204,49 @@ def _driver_query(spark, s, q, tag):
     assert n == 0 and rows, (tag, q)
     assert "LocalTableScan" in plan, (tag, q)
     assert "FlatMapCoGroupsInPandas" not in plan and "TakeOrdered" not in plan
-    assert s.last_trace.path == "driver"
-    assert s.last_trace.postings_rows > 0 and s.last_trace.buckets > 0
+    assert s.last_trace.path == "driver" and s.last_trace.buckets > 0
+    # the postings were read, or the postings cache served them
+    assert s.last_trace.postings_rows > 0 or s.last_trace.cached_terms > 0
     return rows
 
 
 def test_bounded_query_runs_no_spark_job(spark, small_index):
     s = Searcher(spark, small_index)
-    s.search("license int", 10).collect()  # fills the df and bucket-row caches
+    s.search("license int", 10).collect()  # fills the df, postings and bucket-row caches
     assert len(_driver_query(spark, s, "license int", "drv-warm")) == 10
+    assert (s.last_trace.postings_rows, s.last_trace.cached_terms) == (0, 2)
+    assert s.last_trace.cached_buckets == s.last_trace.buckets
     # df-cold, under the bound: the one postings read also yields df
     assert "public" not in s._df_cache
     _driver_query(spark, s, "public", "drv-cold")
     assert s._df_cache["public"] > 0
+    assert s.last_trace.postings_rows > 0 and s.last_trace.cached_terms == 0
+
+
+def test_warm_local_topk_runs_no_spark_job(spark, small_index):
+    """After warm_local, local_topk reads nothing: every term and bucket
+    comes from the caches, and no Spark job runs."""
+    s = Searcher(spark, small_index)
+    info = s.warm_local(["License", "int", "public", "-"])
+    assert info["terms"] == 4 and info["postings"] == sum(
+        s._df_cache[t] for t in ("license", "int", "public"))
+    for q in ["license int", "+license +int -public", "lang:java license"]:
+        s.local_topk(q, 10)  # the lang: filter resolves its mask once
+        got, n = _jobs(spark, f"local-{q}", lambda: s.local_topk(q, 10))
+        tr = s.last_trace
+        assert n == 0 and got and tr.path == "driver", q
+        assert tr.postings_rows == 0 and tr.cached_terms == len(parse(q).scoring) + len(
+            parse(q).prohibited), q
+        assert tr.buckets > 0 and tr.cached_buckets == tr.buckets, q
+        assert got == _hits(s.search(q, 10)), q
+
+
+def test_local_topk_over_the_bound_collects_the_cogroup(monkeypatch, searcher):
+    want = searcher.local_topk("license int", 10)
+    monkeypatch.setattr(kernel, "DRIVER_MAX_POSTINGS", 0)
+    assert searcher.local_topk("license int", 10) == want
+    assert (searcher.last_trace.path, searcher.last_trace.reason) == (
+        "cogroup", "postings bound")
 
 
 def test_driver_reads_run_no_spark_job(spark, small_index, dview):
@@ -303,6 +336,56 @@ def test_bucket_row_cache_is_capped(monkeypatch, spark, tmp_path):
     assert s.last_trace.cached_buckets == 1
 
 
+def test_postings_cache_is_capped(monkeypatch, spark, tmp_path):
+    """The postings cache keeps at most DRIVER_MAX_POSTINGS decoded
+    postings, dropping the least recently used terms but never the
+    latest query's; warm_local past the cap keeps only the cap."""
+    from solr_spark.indexer import build_index
+
+    words = ["apple", "banana", "cherry"]  # 4 postings a word, one bucket
+    rows = [("r", f"f{i:05d}", "0", "en", f"{words[i % 3]} pad") for i in range(12)]
+    docs = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string"
+    )
+    meta = build_index(spark, docs, str(tmp_path / "pc"), bucket_docs=16,
+                       num_partitions=1)
+    s = Searcher(spark, meta, cache=False)
+    want = {}
+    with monkeypatch.context() as m:
+        m.setattr(kernel, "DRIVER_MAX_POSTINGS", 0)
+        for w in words:
+            want[w] = _hits(s.search(w, 10))
+
+    def held():
+        return sum(len(h[0]) for h in s._decoded.values())
+
+    # a word's work is 4 postings + 16 doc slots; the cap is 20 postings
+    monkeypatch.setattr(kernel, "DRIVER_MAX_POSTINGS", 20)
+    s = Searcher(spark, meta, cache=False)
+    for w in words + ["apple"]:
+        assert _hits(s.search(w, 10)) == want[w] and len(want[w]) == 4
+        assert s.last_trace.path == "driver"
+    assert (s.last_trace.postings_rows, s.last_trace.cached_terms) == (0, 1)
+    assert list(s._decoded) == ["banana", "cherry", "apple"] and held() == 12
+    # pad's 12 postings are read (its docs overflow the bound), and
+    # banana, least recently used, is dropped
+    s.search("pad", 10)
+    assert s.last_trace.reason == "docs bound"
+    assert list(s._decoded) == ["cherry", "apple", "pad"] and held() == 20
+    # banana is read again, and cherry dropped
+    assert _hits(s.search("banana", 10)) == want["banana"]
+    assert s.last_trace.postings_rows == 1 and s.last_trace.cached_terms == 0
+    assert list(s._decoded) == ["apple", "pad", "banana"] and held() == 20
+    # the latest query's terms stay, whatever was used before
+    assert _hits(s.search("cherry apple", 10)) == _hits(s.search("apple cherry", 10))
+    assert list(s._decoded)[-2:] == ["apple", "cherry"] and held() <= 20
+    # warm_local past the cap keeps only the cap
+    monkeypatch.setattr(kernel, "DRIVER_MAX_POSTINGS", 8)
+    s = Searcher(spark, meta, cache=False)
+    assert s.warm_local(words) == {"terms": 3, "postings": 8}
+    assert list(s._decoded) == ["banana", "cherry"]
+
+
 def test_filter_mask_cache_is_capped(monkeypatch, spark, tmp_path):
     """The filter cache keeps its masks' docids within
     DRIVER_MAX_POSTINGS, dropping the least recently used mask, but
@@ -340,6 +423,26 @@ def test_filter_mask_cache_is_capped(monkeypatch, spark, tmp_path):
     monkeypatch.setattr(kernel, "DRIVER_MAX_POSTINGS", 1)
     assert _hits(s.search("lang:l1 apple", 10)) == want["l1"]
     assert list(s._filter_masks) == [("lang", ("l1",))]
+
+
+def test_filter_mask_ships_4_bytes_a_matching_doc(searcher, small_index):
+    """A filter mask rides in the pickled cogroup closure at 4 bytes per
+    matching doc (int32 bucket-local docids), plus a small header per
+    bucket."""
+    from pyspark import cloudpickle
+
+    searcher.search("lang:java license", 10)
+    keep = searcher._filter_mask({"lang": ["java"]})
+    n = sum(len(v) for v in keep.values())
+    assert n > 100 and all(v.dtype == np.int32 for v in keep.values())
+
+    def closure_bytes(mask):
+        s = kernel._Scorer({"license": 1.0}, {"license": 1.0}, [], [], [], mask,
+                           searcher.dead, small_index.avgdl, small_index.bucket_docs, 10)
+        return len(cloudpickle.dumps(kernel._bucket_kernel(s, True)))
+
+    extra = closure_bytes(keep) - closure_bytes(None)
+    assert 4 * n <= extra <= 4 * n + 64 * len(keep), (n, len(keep), extra)
 
 
 def test_absent_term_collects_nothing_without_a_job(spark, small_index):

@@ -86,11 +86,17 @@ def test_filter_query(spark, small_index, oracle_corpus):
         assert r["score"] == pytest.approx(s, abs=1e-9)
 
 
-def test_prune_equals_noprune(spark, small_index):
-    """WAND-on == WAND-off (FIXTURES.md §4)."""
+def test_prune_equals_noprune(monkeypatch, spark, small_index):
+    """WAND-on == WAND-off (FIXTURES.md §4). Pruning runs only in the
+    cogroup, so the driver path's bound is forced to 0."""
+    from solr_spark import kernel
+
+    monkeypatch.setattr(kernel, "DRIVER_MAX_POSTINGS", 0)
+    s = kernel.Searcher(spark, small_index)
     for q in ["license", "int", f"+license +{RARE1}", "+int +license +public"]:
-        a = search(spark, small_index, q, k=10, prune=True).collect()
-        b = search(spark, small_index, q, k=10, prune=False).collect()
+        a = s.search(q, k=10, prune=True).collect()
+        assert s.last_trace.path == "cogroup", q
+        b = s.search(q, k=10, prune=False).collect()
         assert [(r["docid"], r["score"]) for r in a] == [(r["docid"], r["score"]) for r in b]
 
 
@@ -169,14 +175,15 @@ def test_synonym_expansion_equals_disjunction(spark, small_index):
     ]
 
 
-def test_wand_prune_exact_on_score_ties(spark, tmp_path):
+def test_wand_prune_exact_on_score_ties(monkeypatch, spark, tmp_path):
     """The strict-< skip condition: a later block whose bound EQUALS the
     kth score can hold an equal-score SMALLER-docid doc that wins the
     (score desc, docid asc) tie. Construct one bucket with >BLOCK_SIZE
     postings where a high-bound block decodes first and the low blocks
-    tie its tail scores — pruned must equal unpruned exactly."""
+    tie its tail scores — pruned must equal unpruned exactly. Pruning
+    runs only in the cogroup, so the driver path's bound is forced to 0."""
+    from solr_spark import kernel
     from solr_spark.indexer import build_index
-    from solr_spark.kernel import search
 
     # 300 docs in ONE bucket (bucket_docs=512): doc 150 has tf=2 (block 1
     # gets the highest bound and decodes first); every other doc scores
@@ -191,14 +198,17 @@ def test_wand_prune_exact_on_score_ties(spark, tmp_path):
     meta = build_index(
         spark, docs, str(tmp_path / "tieidx"), bucket_docs=512, num_partitions=1
     )
+    monkeypatch.setattr(kernel, "DRIVER_MAX_POSTINGS", 0)
+    s = kernel.Searcher(spark, meta)
     for k in (2, 5, 130):
         pruned = [
             (r["docid"], r["score"])
-            for r in search(spark, meta, "spark", k=k, prune=True).collect()
+            for r in s.search("spark", k=k, prune=True).collect()
         ]
+        assert s.last_trace.path == "cogroup", k
         unpruned = [
             (r["docid"], r["score"])
-            for r in search(spark, meta, "spark", k=k, prune=False).collect()
+            for r in s.search("spark", k=k, prune=False).collect()
         ]
         assert pruned == unpruned, k
         # the tie must be broken toward the LOWEST docids
@@ -382,13 +392,16 @@ def test_fuzzy_candidates_equal_brute_levenshtein(spark, small_index):
         assert got == scan, (pattern, k, got ^ scan)
 
 
-def test_local_topk_identical_to_distributed(spark, small_index):
+def test_local_topk_identical_to_distributed(monkeypatch, spark, small_index):
     """The driver-resident millisecond path must return the SAME
-    (docid, score) list as the distributed kernel for every supported
-    query shape, and silently fall back for unsupported/cold ones."""
+    (docid, score) list as search and as the cogroup for every query
+    shape, filters, MUST groups and boosts included, at any k, and read
+    what the warm caches lack."""
     import time
 
+    from solr_spark import kernel
     from solr_spark.kernel import Searcher
+    from solr_spark.qparser import expand_synonyms
 
     s = Searcher(spark, small_index)
     s.warm_local(["license", "int", "public", RARE1, "getfoobar", "the"])
@@ -397,15 +410,27 @@ def test_local_topk_identical_to_distributed(spark, small_index):
                        ("license", "int", "public", RARE1.lower(), "getfoobar", "the")
                        for t in q.lower().split())]
     assert len(local_qs) >= 4
+    local_qs += [
+        "lang:java license", "lang:java lang:py license -public",
+        "license^2 int", "int^3 -public license",
+        expand_synonyms(parse("+license int"), {"license": ["public"]}),
+    ]
+
+    def hits(df):
+        return [(int(r["docid"]), float(r["score"])) for r in df.collect()]
+
     for q in local_qs:
-        dist = [(int(r["docid"]), float(r["score"]))
-                for r in s.search(q, 10).collect()]
-        assert s.local_topk(q, 10) == dist, q
-    # cold term -> transparent fallback to the distributed path
+        for k in (0, 1, 10, 1000):
+            dist = hits(s.search(q, k))
+            with monkeypatch.context() as m:
+                m.setattr(kernel, "DRIVER_MAX_POSTINGS", 0)
+                assert hits(s.search(q, k)) == dist, (q, k)
+            assert s.local_topk(q, k) == dist, (q, k)
+            assert s.last_trace.path == "driver", (q, k)
+    # a cold term is read, then served like the warm ones
     fb = s.local_topk("getvalueimpl", 5)
-    dist = [(int(r["docid"]), float(r["score"]))
-            for r in s.search("getvalueimpl", 5).collect()]
-    assert fb == dist
+    assert s.last_trace.postings_rows > 0
+    assert fb == hits(s.search("getvalueimpl", 5))
     # and the warm path is actually local: no Spark job, sub-10ms
     t0 = time.time()
     s.local_topk("+license +int", 10)

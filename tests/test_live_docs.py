@@ -97,21 +97,30 @@ def test_view_with_deletes_resolves_its_live_docs_mask(spark, view):
     dead = dview.dead_docids(spark)
     B = view.bucket_docs
     assert {b: list(v) for b, v in dead.items()} == {victim // B: [victim % B]}
+    assert all(v.dtype == "int32" for v in dead.values())  # 4 bytes a deleted doc
     # a new view never reuses the old view's searcher
     assert dview.searcher(spark) is not view.searcher(spark)
     assert view.searcher(spark).dead == {}
 
 
-def test_local_topk_on_view_carries_the_mask(spark, view):
+def test_local_topk_on_view_carries_the_mask(monkeypatch, spark, view):
+    from solr_spark.qparser import expand_synonyms, parse
+
     terms = ["license", "int", "public"]
     victim = _hits(view.search(spark, "license", k=1))[0][0]
     dview = delete_by_keys(view, [_key(spark, view, victim)])
     s = dview.searcher(spark)
     s.warm_local(terms)
-    for q in ["license", "license int public", "+int +license", "int -public"]:
-        dist = _hits(s.search(q, K))
-        assert s.local_topk(q, K) == dist, q
-        assert victim not in {d for d, _ in dist}, q
+    for q in ["license", "license int public", "+int +license", "int -public",
+              "lang:java license", "license^2 int -public",
+              expand_synonyms(parse("+license int"), {"license": ["public"]})]:
+        for k in (0, 1, K, 1000):
+            dist = _hits(s.search(q, k))
+            with monkeypatch.context() as m:
+                m.setattr(kernel, "DRIVER_MAX_POSTINGS", 0)
+                assert _hits(s.search(q, k)) == dist, (q, k)
+            assert s.local_topk(q, k) == dist, (q, k)
+            assert victim not in {d for d, _ in dist}, (q, k)
 
 
 def test_local_topk_on_delta_segment(spark, view):
